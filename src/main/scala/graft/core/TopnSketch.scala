@@ -1,8 +1,8 @@
 package graft.core
 
-import java.io.{ByteArrayOutputStream, DataOutputStream}
 import java.nio.charset.StandardCharsets
 
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -11,8 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
  * Semantics re-derived from the reference extension (citusdata/postgresql-topn,
  * `topn.c`) but implemented from scratch for the JVM:
  *
- *  - Counters live in a hash map `item -> frequency` (reference:
- *    topn.c:100-106 `TopnAggState` over a PG HTAB).
+ *  - Counters map `item -> frequency` (reference: topn.c:100-106
+ *    `TopnAggState` over a PG HTAB).
  *  - Items are UTF-8 strings truncated to at most 255 bytes on ingest, never
  *    splitting a code point (reference: topn.c:51 `MAX_KEYSIZE 256`,
  *    topn.c:337-338 `text_to_cstring_buffer`).
@@ -27,29 +27,57 @@ import org.apache.spark.unsafe.types.UTF8String
  *        evict-half step is the approximation knob.
  *  - Ordering for prune and report is deterministic in this engine:
  *    frequency descending, then item ascending in UTF-8 byte order
- *    (`UTF8String.compareTo` binary order == code point order). The
- *    reference leaves ties unspecified (topn.c:817-834 returns 0 on equal
- *    frequency + unstable qsort); we pin a total order so results are
- *    stable under Spark's nondeterministic shuffle order (SURVEY §2.8.1).
+ *    (`UTF8String.binaryCompare`, which is code point order). The reference
+ *    leaves ties unspecified (topn.c:817-834 returns 0 on equal frequency +
+ *    unstable qsort); we pin a total order so results are stable under
+ *    Spark's nondeterministic shuffle order (SURVEY §2.8.1).
+ *
+ * Layout: one flat open-addressing table. Entries sit in insertion order in
+ * three parallel arrays (`keys`, `counts`, and each key's `hashes`, computed
+ * once on entry); a power-of-two `index` of entry positions, probed
+ * linearly and kept at load <= 0.5, finds them. An add hashes its key once
+ * and probes once; a hit adds in place and allocates nothing. Entries are
+ * never deleted one at a time, so the index needs no tombstones.
+ *
+ * Prune (both policies): the keep-th largest count `t` is found by
+ * quickselect on a primitive copy of `counts`; every entry above `t` stays,
+ * and among the entries at exactly `t` the smallest keys stay, chosen by a
+ * second quickselect over their positions. The arrays are compacted in
+ * place (surviving entries keep their insertion order) and the index is
+ * rebuilt from the cached hashes. The kept set is exactly the canonical
+ * order's first `keep` entries, without sorting.
+ *
+ * Merge walks the other state's entries in ITS insertion order and shares
+ * its keys (they are owned and never mutated). When a merge prunes
+ * partway through, the kept set therefore depends on that order; every
+ * order keeps the undercount and [[lossBound]] guarantees.
  *
  * Keys are held as `UTF8String` so the Spark hot paths (aggregate update
  * from a scanned column, merge from MapData, finalize to MapData, byte
- * serialization) run with ZERO `java.lang.String` conversions or copies
- * beyond the defensive clone on first insert (scan buffers are reused, so
- * an inserted key must own its bytes). `java.lang.String` convenience
- * overloads remain for tests and the streaming state.
+ * serialization) run with ZERO `java.lang.String` conversions. A key
+ * inserted from outside is copied first: scan buffers are reused, and
+ * `UTF8String.clone()` returns the caller's own array when the string
+ * spans it exactly. `java.lang.String` convenience overloads remain for
+ * tests and the streaming state.
  *
  * NOT thread-safe (used inside a single aggregation buffer).
  */
-final class TopnState private (
-    private var counters: java.util.HashMap[UTF8String, java.lang.Long]) extends Serializable {
+final class TopnState private (initialCapacity: Int) extends Serializable {
 
   import TopnState._
+
+  private var keys = new Array[UTF8String](initialCapacity)
+  private var counts = new Array[Long](initialCapacity)
+  private var hashes = new Array[Int](initialCapacity)
+  /** Number of live entries: positions `[0, used)` of the three arrays. */
+  private var used = 0
+  /** Slot -> entry position + 1, 0 when free; twice the entry capacity. */
+  private var index = new Array[Int](2 * initialCapacity)
 
   /** Cumulative eviction-loss bound (see [[lossBound]]). */
   private var evictLoss: Long = 0L
 
-  def size: Int = counters.size
+  def size: Int = used
 
   /**
    * Guaranteed count-interval half-width: for ANY item x,
@@ -74,37 +102,26 @@ final class TopnState private (
     evictLoss = saturatingAdd(evictLoss, math.max(0L, b))
   }
 
-  /** Raw view for tests / materialization. Does not copy. */
-  private[graft] def underlying: java.util.HashMap[UTF8String, java.lang.Long] = counters
-
   /** String view for tests. */
   private[graft] def toStringMap: Map[String, Long] = {
     val b = Map.newBuilder[String, Long]
-    val it = counters.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      b += ((e.getKey.toString, e.getValue.longValue))
+    var i = 0
+    while (i < used) {
+      b += ((keys(i).toString, counts(i)))
+      i += 1
     }
     b.result()
   }
 
   /**
    * Add `count` occurrences of `item` (which may be a transient,
-   * buffer-backed UTF8String — it is truncated/cloned only if actually
+   * buffer-backed UTF8String — it is truncated/copied only if actually
    * inserted as a new key). Applies prune policy B.
    * Reference: topn.c:393-449 `topn_add_trans`.
    */
   def add(rawItem: UTF8String, count: Long, numCounters: Int): Unit = {
     val item = truncateUtf8(rawItem, MaxKeyBytes)
-    val prev = counters.get(item)
-    if (prev == null) {
-      counters.put(item.clone(), count)
-      if (counters.size > UnionFactor * numCounters) {
-        pruneToHalf()
-      }
-    } else {
-      counters.put(item, saturatingAdd(prev.longValue, count))
-    }
+    upsert(item, item.hashCode, count, numCounters, copyKey = true)
   }
 
   def add(rawItem: UTF8String, numCounters: Int): Unit = add(rawItem, 1L, numCounters)
@@ -126,73 +143,178 @@ final class TopnState private (
     if (item.numBytes > MaxKeyBytes + 1) {
       throw graft.GraftErrors.sketchKeyTooLong(MaxKeyBytes + 1)
     }
-    val prev = counters.get(item)
-    if (prev == null) {
-      counters.put(item.clone(), freq)
-      if (counters.size > UnionFactor * numCounters) {
-        pruneToHalf()
-      }
-    } else {
-      counters.put(item, saturatingAdd(prev.longValue, freq))
-    }
+    upsert(item, item.hashCode, freq, numCounters, copyKey = true)
   }
 
   def mergeEntry(item: String, freq: Long, numCounters: Int): Unit =
     mergeEntry(UTF8String.fromString(item), freq, numCounters)
 
-  /** Merge another in-flight state into this one (aggregate COMBINEFUNC).
-    * Reference: topn.c:588-625 `topn_union_internal` -> `MergeTopn`.
-    * Keys from another state are already owned -> no clone needed, but
-    * `mergeEntry` clones only on new-key insert anyway (clone of an owned
-    * key is a cheap 1-level copy). */
+  /** Merge another in-flight state into this one (aggregate COMBINEFUNC),
+    * walking `other` in its insertion order with its cached hashes; its
+    * keys are owned, so they are shared, not copied.
+    * Reference: topn.c:588-625 `topn_union_internal` -> `MergeTopn`. */
   def merge(other: TopnState, numCounters: Int): Unit = {
-    val it = other.counters.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      mergeEntry(e.getKey, e.getValue.longValue, numCounters)
+    val n = other.used
+    var i = 0
+    while (i < n) {
+      upsert(other.keys(i), other.hashes(i), other.counts(i), numCounters, copyKey = false)
+      i += 1
     }
     // each side's prior losses are independent undercounts of the merged
-    // stream; merge-time policy-B prunes accrue via mergeEntry as usual
+    // stream; merge-time policy-B prunes accrue via upsert as usual
     addLossBound(other.evictLoss)
   }
 
-  /** Policy B: keep the `size/2` most frequent entries. */
-  private def pruneToHalf(): Unit = pruneTo(counters.size / 2)
+  /** The index slot holding `item`, or the free slot where it belongs. */
+  private def slotOf(item: UTF8String, h: Int): Int = {
+    val mask = index.length - 1
+    var s = h & mask
+    var e = index(s)
+    while (e != 0 && !(hashes(e - 1) == h && keys(e - 1).equals(item))) {
+      s = (s + 1) & mask
+      e = index(s)
+    }
+    s
+  }
+
+  /** Add `count` to `item`'s counter, inserting it if new (policy B). */
+  private def upsert(item: UTF8String, h: Int, count: Long, numCounters: Int,
+      copyKey: Boolean): Unit = {
+    val s = slotOf(item, h)
+    val e = index(s)
+    if (e != 0) {
+      counts(e - 1) = saturatingAdd(counts(e - 1), count)
+    } else {
+      append(s, if (copyKey) item.copy() else item, h, count)
+      if (used > UnionFactor * numCounters) pruneTo(used / 2)
+    }
+  }
+
+  /** Append a new entry whose free index slot is `slot`. */
+  private def append(slot: Int, key: UTF8String, h: Int, count: Long): Unit = {
+    keys(used) = key
+    counts(used) = count
+    hashes(used) = h
+    used += 1
+    index(slot) = used
+    if (used == keys.length) {
+      val cap = 2 * keys.length
+      keys = java.util.Arrays.copyOf(keys, cap)
+      counts = java.util.Arrays.copyOf(counts, cap)
+      hashes = java.util.Arrays.copyOf(hashes, cap)
+      index = new Array[Int](2 * cap)
+      rebuildIndex()
+    }
+  }
+
+  /** Re-insert entries `[0, used)` into the cleared index. Keys are
+    * distinct, so each probe stops at the first free slot. */
+  private def rebuildIndex(): Unit = {
+    val mask = index.length - 1
+    var i = 0
+    while (i < used) {
+      var s = hashes(i) & mask
+      while (index(s) != 0) s = (s + 1) & mask
+      index(s) = i + 1
+      i += 1
+    }
+  }
 
   /** Policy A: keep at most the `n` most frequent entries (no-op if within
     * budget). Reference: topn.c:869-908 with itemLimit == remaining == n. */
   def prune(n: Int): Unit = {
-    if (counters.size > n) pruneTo(n)
+    if (used > n) pruneTo(n)
   }
 
-  private def pruneTo(remaining: Int): Unit = {
-    val arr = sortedEntries()
-    val next = new java.util.HashMap[UTF8String, java.lang.Long](
-      hashCapacity(remaining), 0.75f)
-    var i = 0
-    val keep = math.min(remaining, arr.length)
-    while (i < keep) {
-      next.put(arr(i)._1, arr(i)._2)
-      i += 1
+  /** Keep the first `keep < used` entries of the canonical order. */
+  private def pruneTo(keep: Int): Unit = {
+    val n = used
+    // the discarded entry first in canonical order: its count bounds any
+    // single item's loss in THIS prune (see lossBound)
+    var lost = Long.MinValue
+    var w = 0
+    if (keep <= 0) {
+      var i = 0
+      while (i < n) { lost = math.max(lost, counts(i)); i += 1 }
+    } else {
+      val t = selectLong(java.util.Arrays.copyOf(counts, n), n - keep)
+      var above = 0
+      var ties = 0
+      var i = 0
+      while (i < n) {
+        val c = counts(i)
+        if (c > t) above += 1
+        else if (c == t) ties += 1
+        else lost = math.max(lost, c)
+        i += 1
+      }
+      // ties >= 1 (t itself) and keep - above of them fit
+      val keepTies = keep - above
+      var keptTie: Array[Boolean] = null
+      if (keepTies < ties) {
+        lost = t
+        val pos = new Array[Int](ties)
+        var j = 0
+        i = 0
+        while (i < n) {
+          if (counts(i) == t) { pos(j) = i; j += 1 }
+          i += 1
+        }
+        selectByKey(pos, keepTies - 1)
+        keptTie = new Array[Boolean](n)
+        j = 0
+        while (j < keepTies) { keptTie(pos(j)) = true; j += 1 }
+      }
+      i = 0
+      while (i < n) {
+        val c = counts(i)
+        if (c > t || (c == t && (keptTie == null || keptTie(i)))) {
+          keys(w) = keys(i)
+          counts(w) = c
+          hashes(w) = hashes(i)
+          w += 1
+        }
+        i += 1
+      }
     }
-    // eviction-loss accounting (see lossBound): the largest discarded
-    // frequency bounds any single item's loss in THIS prune; canonical
-    // order puts it at arr(keep)
-    if (keep < arr.length) {
-      evictLoss = saturatingAdd(evictLoss, math.max(0L, arr(keep)._2.longValue))
+    java.util.Arrays.fill(keys.asInstanceOf[Array[AnyRef]], w, n, null)
+    used = w
+    java.util.Arrays.fill(index, 0)
+    rebuildIndex()
+    evictLoss = saturatingAdd(evictLoss, math.max(0L, lost))
+  }
+
+  /** Reorder `pos` so its first `k + 1` positions hold the smallest keys
+    * (UTF-8 byte order; keys are distinct). Quickselect. */
+  private def selectByKey(pos: Array[Int], k: Int): Unit = {
+    var lo = 0
+    var hi = pos.length - 1
+    while (lo < hi) {
+      val p = keys(pos((lo + hi) >>> 1))
+      var i = lo
+      var j = hi
+      while (i <= j) {
+        while (keys(pos(i)).binaryCompare(p) < 0) i += 1
+        while (keys(pos(j)).binaryCompare(p) > 0) j -= 1
+        if (i <= j) {
+          val x = pos(i); pos(i) = pos(j); pos(j) = x
+          i += 1
+          j -= 1
+        }
+      }
+      if (k <= j) hi = j
+      else if (k >= i) lo = i
+      else return
     }
-    counters = next
   }
 
   /** Entries in canonical order: frequency desc, then item asc (UTF-8
     * binary order). */
   def sortedEntries(): Array[(UTF8String, java.lang.Long)] = {
-    val arr = new Array[(UTF8String, java.lang.Long)](counters.size)
+    val arr = new Array[(UTF8String, java.lang.Long)](used)
     var i = 0
-    val it = counters.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      arr(i) = (e.getKey, e.getValue)
+    while (i < used) {
+      arr(i) = (keys(i), java.lang.Long.valueOf(counts(i)))
       i += 1
     }
     java.util.Arrays.sort(arr, EntryOrdering)
@@ -213,7 +335,7 @@ final class TopnState private (
       // wording mirrors the reference, topn.c:231-232
       throw graft.GraftErrors.kExceedsCounters(k, numCounters)
     }
-    sortedEntries().take(math.min(k, counters.size))
+    sortedEntries().take(math.min(k, used))
       .map(e => (e._1.toString, e._2.longValue))
   }
 
@@ -222,25 +344,31 @@ final class TopnState private (
    * varint entryCount, then per entry: varint keyByteLen, key UTF-8 bytes,
    * zigzag-varint frequency; then a trailing zigzag-varint [[lossBound]]
    * (read-if-present on deserialize, so pre-bound payloads — e.g. an old
-   * streaming checkpoint — load with bound 0). (The reference ships fixed
-   * 264-byte records, topn.c:509-542; we use a denser framing — format is
-   * ours to define.)
+   * streaming checkpoint — load with bound 0). Entries go out in insertion
+   * order. (The reference ships fixed 264-byte records, topn.c:509-542; we
+   * use a denser framing — format is ours to define.)
    */
   def serialize(): Array[Byte] = {
-    val bos = new ByteArrayOutputStream(16 + counters.size * 24)
-    val out = new DataOutputStream(bos)
-    writeVarLong(out, counters.size.toLong)
-    val it = counters.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val kb = e.getKey.getBytes
-      writeVarLong(out, kb.length.toLong)
-      out.write(kb)
-      writeVarLong(out, zigzag(e.getValue.longValue))
+    var total = varLongSize(used.toLong) + varLongSize(zigzag(evictLoss))
+    var i = 0
+    while (i < used) {
+      val nb = keys(i).numBytes
+      total += varLongSize(nb.toLong) + nb + varLongSize(zigzag(counts(i)))
+      i += 1
     }
-    writeVarLong(out, zigzag(evictLoss))
-    out.flush()
-    bos.toByteArray
+    val out = new Array[Byte](total)
+    var pos = writeVarLong(out, 0, used.toLong)
+    i = 0
+    while (i < used) {
+      val k = keys(i)
+      pos = writeVarLong(out, pos, k.numBytes.toLong)
+      k.writeToMemory(out, Platform.BYTE_ARRAY_OFFSET + pos)
+      pos += k.numBytes
+      pos = writeVarLong(out, pos, zigzag(counts(i)))
+      i += 1
+    }
+    writeVarLong(out, pos, zigzag(evictLoss))
+    out
   }
 }
 
@@ -253,16 +381,13 @@ object TopnState {
     * topn.c:51, truncation to 255 payload bytes at topn.c:337-338). */
   val MaxKeyBytes = 255
 
-  /** Hash sized like the reference's `(n / 0.75) + 1` (topn.c:735). */
-  private def hashCapacity(n: Int): Int =
-    math.max(8, (n / 0.75).toInt + 1)
+  /** Entry capacity for `n` entries: a power of two above `n`, >= 8. */
+  private def capacityFor(n: Int): Int =
+    math.max(8, Integer.highestOneBit(math.max(1, n)) << 1)
 
-  def empty(numCounters: Int): TopnState =
-    new TopnState(new java.util.HashMap[UTF8String, java.lang.Long](
-      hashCapacity(numCounters), 0.75f))
+  def empty(numCounters: Int): TopnState = new TopnState(capacityFor(numCounters))
 
-  def empty(): TopnState =
-    new TopnState(new java.util.HashMap[UTF8String, java.lang.Long](16, 0.75f))
+  def empty(): TopnState = new TopnState(16)
 
   /** Saturating signed add (reference: topn.c:997-1009, upper bound only;
     * we also guard the lower bound since typed maps may carry negatives). */
@@ -300,9 +425,11 @@ object TopnState {
     s.getBytes(StandardCharsets.UTF_8).length
 
   /** Compare by UTF-8 byte order (== code point order), matching both
-    * Spark's and DuckDB's string ORDER BY. */
+    * Spark's and DuckDB's string ORDER BY. `binaryCompare`, not
+    * `compareTo`: Spark's `compareTo` reads a system property per call and
+    * throws under `spark.testing`. */
   def utf8Compare(a: String, b: String): Int =
-    UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+    UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
 
   /** Canonical report order: frequency desc, then item asc (binary). */
   val EntryOrdering: java.util.Comparator[(UTF8String, java.lang.Long)] =
@@ -310,20 +437,55 @@ object TopnState {
       override def compare(x: (UTF8String, java.lang.Long),
           y: (UTF8String, java.lang.Long)): Int = {
         val c = java.lang.Long.compare(y._2.longValue, x._2.longValue)
-        if (c != 0) c else x._1.compareTo(y._1)
+        if (c != 0) c else x._1.binaryCompare(y._1)
       }
     }
+
+  /** The `k`-th smallest (0-based) of `a`, which it reorders. Three-way
+    * partitions, so long runs of equal counts (Zipf tails) stay linear. */
+  private def selectLong(a: Array[Long], k: Int): Long = {
+    var lo = 0
+    var hi = a.length - 1
+    while (lo < hi) {
+      val p = a((lo + hi) >>> 1)
+      // [lo, lt) < p, [lt, i) == p, (gt, hi] > p
+      var lt = lo
+      var i = lo
+      var gt = hi
+      while (i <= gt) {
+        val v = a(i)
+        if (v < p) { a(i) = a(lt); a(lt) = v; lt += 1; i += 1 }
+        else if (v > p) { a(i) = a(gt); a(gt) = v; gt -= 1 }
+        else i += 1
+      }
+      if (k < lt) hi = lt - 1
+      else if (k > gt) lo = gt + 1
+      else return p
+    }
+    a(lo)
+  }
 
   private def zigzag(v: Long): Long = (v << 1) ^ (v >> 63)
   private def unzigzag(v: Long): Long = (v >>> 1) ^ -(v & 1L)
 
-  private def writeVarLong(out: DataOutputStream, value: Long): Unit = {
+  private def varLongSize(value: Long): Int = {
+    var v = value >>> 7
+    var n = 1
+    while (v != 0L) { v >>>= 7; n += 1 }
+    n
+  }
+
+  /** Write `value` as a varint at `pos`; returns the position after it. */
+  private def writeVarLong(out: Array[Byte], pos: Int, value: Long): Int = {
     var v = value
+    var p = pos
     while ((v & ~0x7FL) != 0L) {
-      out.writeByte(((v & 0x7F) | 0x80).toInt)
+      out(p) = ((v & 0x7F) | 0x80).toByte
       v >>>= 7
+      p += 1
     }
-    out.writeByte(v.toInt)
+    out(p) = v.toByte
+    p + 1
   }
 
   def deserialize(bytes: Array[Byte]): TopnState = {
@@ -341,15 +503,18 @@ object TopnState {
       result
     }
     val n = readVarLong().toInt
-    val st = new TopnState(new java.util.HashMap[UTF8String, java.lang.Long](
-      hashCapacity(n), 0.75f))
+    val st = new TopnState(capacityFor(n))
     var i = 0
     while (i < n) {
       val klen = readVarLong().toInt
-      val key = UTF8String.fromBytes(bytes, pos, klen).clone()
+      val key = UTF8String.fromBytes(java.util.Arrays.copyOfRange(bytes, pos, pos + klen))
       pos += klen
       val freq = unzigzag(readVarLong())
-      st.underlying.put(key, java.lang.Long.valueOf(freq))
+      val h = key.hashCode
+      val s = st.slotOf(key, h)
+      // a repeated key overwrites, as a map load would
+      if (st.index(s) != 0) st.counts(st.index(s) - 1) = freq
+      else st.append(s, key, h, freq)
       i += 1
     }
     if (pos < bytes.length) {

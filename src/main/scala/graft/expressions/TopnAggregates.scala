@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, MapData}
+import org.apache.spark.sql.catalyst.util.MapData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -40,18 +40,8 @@ abstract class TopnAggregateBase
    * frequent first (reference `topn_pack`, topn.c:632-664). Empty/all-null
    * group yields `{}`, never NULL.
    */
-  final override def eval(buffer: TopnState): Any = {
-    val entries = buffer.pack(numCounters)
-    val keys = new Array[Any](entries.length)
-    val values = new Array[Any](entries.length)
-    var i = 0
-    while (i < entries.length) {
-      keys(i) = entries(i)._1
-      values(i) = entries(i)._2.longValue
-      i += 1
-    }
-    ArrayBasedMapData(keys, values)
-  }
+  final override def eval(buffer: TopnState): Any =
+    TopnExprUtils.toMapData(buffer.pack(numCounters))
 
   final override def serialize(buffer: TopnState): Array[Byte] = buffer.serialize()
 

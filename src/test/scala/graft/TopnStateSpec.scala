@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+
 import graft.core.TopnState
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Properties}
 
@@ -79,6 +82,62 @@ class TopnStateSpec extends AnyFunSuite {
       .foreach { case (k, v) => st.mergeEntry(k, v, 100) }
     val back = TopnState.deserialize(st.serialize())
     assert(entries(back) === entries(st))
+  }
+
+  test("an inserted key owns its bytes even when the caller reuses its buffer") {
+    // UTF8String.clone() hands back the caller's array when the string
+    // spans it exactly; a scan buffer reused after the add must not
+    // rewrite the stored key (or its cached hash)
+    val buf = "abc".getBytes(StandardCharsets.UTF_8)
+    val st = TopnState.empty()
+    st.add(UTF8String.fromBytes(buf), 10)
+    val mbuf = "def".getBytes(StandardCharsets.UTF_8)
+    st.mergeEntry(UTF8String.fromBytes(mbuf), 2L, 10)
+    buf(0) = 'z'.toByte
+    mbuf(0) = 'z'.toByte
+    assert(entries(st) === Map("abc" -> 1L, "def" -> 2L))
+    st.add("abc", 10)
+    st.mergeEntry("def", 1L, 10)
+    assert(entries(st) === Map("abc" -> 2L, "def" -> 3L))
+  }
+
+  test("wire compatibility: payloads of the HashMap-backed serializer still load") {
+    // bytes written by the serializer that preceded the flat table, for
+    // {a: 3, bb: Long.MaxValue, é中: -7} with loss bound 5; streaming
+    // checkpoints (runningTopK state) hold exactly this framing
+    val withBound = Array[Byte](3, 2, 98, 98, -2, -1, -1, -1, -1, -1, -1, -1, -1, 1,
+      1, 97, 6, 5, -61, -87, -28, -72, -83, 13, 10)
+    val a = TopnState.deserialize(withBound)
+    assert(entries(a) === Map("a" -> 3L, "bb" -> Long.MaxValue, "é中" -> -7L))
+    assert(a.lossBound === 5L)
+    // a payload from before the trailing bound existed loads with bound 0
+    val noBound = Array[Byte](2, 1, 120, 2, 2, 121, 122, -40, 4)
+    val b = TopnState.deserialize(noBound)
+    assert(entries(b) === Map("x" -> 1L, "yz" -> 300L))
+    assert(b.lossBound === 0L)
+    // the framing is unchanged: same length, and it reads back the same
+    val again = a.serialize()
+    assert(again.length === withBound.length)
+    assert(entries(TopnState.deserialize(again)) === entries(a))
+  }
+
+  test("sketch ordering works with spark.testing set (no UTF8String.compareTo)") {
+    val prev = System.getProperty("spark.testing")
+    System.setProperty("spark.testing", "true")
+    try {
+      val st = TopnState.empty()
+      Seq("c", "a", "b", "a", "d", "b").foreach(st.add(_, 10))
+      assert(st.pack(3).map(e => (e._1.toString, e._2.longValue)).toSeq ===
+        Seq(("a", 2L), ("b", 2L), ("c", 1L)))
+      val tied = Array[(UTF8String, java.lang.Long)](
+        (UTF8String.fromString("y"), 1L), (UTF8String.fromString("x"), 1L))
+      java.util.Arrays.sort(tied, TopnState.EntryOrdering)
+      assert(tied.map(_._1.toString).toSeq === Seq("x", "y"))
+      assert(TopnState.utf8Compare("a", "b") < 0)
+    } finally {
+      if (prev == null) System.clearProperty("spark.testing")
+      else System.setProperty("spark.testing", prev)
+    }
   }
 
   test("utf8Compare matches UTF-8 byte order including supplementary chars") {
@@ -191,6 +250,68 @@ object TopnStateProps extends Properties("TopnState") {
         .forall(k => truth(k) <= bound)
       val exactWhenUnpruned = bound > 0 || reported == truth
       presentOk && absentOk && exactWhenUnpruned
+    }
+
+  /** The reference semantics, naively: an immutable map and a full
+    * canonical sort on every prune. */
+  private final class Model(n: Int) {
+    var counts = Map.empty[String, Long]
+    var bound = 0L
+    def sorted: Seq[(String, Long)] = counts.toSeq.sortWith { (x, y) =>
+      x._2 > y._2 || (x._2 == y._2 && java.util.Arrays.compareUnsigned(
+        x._1.getBytes(StandardCharsets.UTF_8), y._1.getBytes(StandardCharsets.UTF_8)) < 0)
+    }
+    private def pruneTo(keep: Int): Unit = {
+      val s = sorted
+      bound = TopnState.saturatingAdd(bound, math.max(0L, s(keep)._2))
+      counts = s.take(keep).toMap
+    }
+    private def upsert(k: String, c: Long): Unit = counts.get(k) match {
+      case Some(v) => counts += k -> TopnState.saturatingAdd(v, c)
+      case None =>
+        counts += k -> c
+        if (counts.size > TopnState.UnionFactor * n) pruneTo(counts.size / 2)
+    }
+    def add(k: String, c: Long): Unit = upsert(TopnState.truncateUtf8(k, TopnState.MaxKeyBytes), c)
+    def mergeEntry(k: String, c: Long): Unit = upsert(k, c)
+    def pack(): Seq[(String, Long)] = {
+      if (counts.size > n) pruneTo(n)
+      sorted
+    }
+  }
+
+  private val keyGen: Gen[String] = Gen.frequency(
+    8 -> Gen.oneOf("a", "b", "c", "d", "e", "f", "g", "h", "é", "中", "ab", ""),
+    3 -> Gen.chooseNum(0, 40).map(i => s"k$i"),
+    // 256 bytes: kept whole by mergeEntry, truncated by add
+    1 -> Gen.oneOf("x" * 256, "y" * 256),
+    // over 255 bytes, distinct only past the cut: add folds them together
+    1 -> Gen.oneOf("x" * 300 + "1", "x" * 300 + "2", "中" * 90, "中" * 86 + "a"))
+
+  private val weightGen: Gen[Long] = Gen.frequency(
+    8 -> Gen.chooseNum(1L, 5L),
+    2 -> Gen.chooseNum(-5L, 0L),
+    1 -> Gen.oneOf(Long.MaxValue, Long.MinValue, Long.MaxValue / 2, Long.MinValue / 2))
+
+  // (isAdd, key, weight)
+  private val opGen: Gen[(Boolean, String, Long)] =
+    Gen.zip(Gen.oneOf(true, false), keyGen, weightGen)
+
+  property("flat table equals a naive map-and-sort model: contents, lossBound, serde, pack") =
+    Prop.forAll(Gen.chooseNum(1, 4), Gen.listOf(opGen)) { (n, ops) =>
+      val st = TopnState.empty()
+      val model = new Model(n)
+      ops.foreach { case (isAdd, k, w) =>
+        if (isAdd) { st.add(k, w, n); model.add(k, w) }
+        else if (TopnState.utf8Length(k) <= TopnState.MaxKeyBytes + 1) {
+          st.mergeEntry(k, w, n); model.mergeEntry(k, w)
+        }
+      }
+      val back = TopnState.deserialize(st.serialize())
+      val same = st.toStringMap == model.counts && st.lossBound == model.bound &&
+        back.toStringMap == model.counts && back.lossBound == model.bound
+      val packed = st.pack(n).map(e => (e._1.toString, e._2.longValue)).toSeq
+      same && packed == model.pack() && st.lossBound == model.bound
     }
 
   property("serialize/deserialize round-trip") =
