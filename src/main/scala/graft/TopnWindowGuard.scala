@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicBoolean
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.logical.Window
@@ -68,7 +70,7 @@ object TopnWindowGuard {
           })
         case _ => false
       }
-    } catch { case _: Throwable => false }
+    } catch { case NonFatal(_) => false }
     if (cliff && fired.compareAndSet(false, true)) {
       log.warn(
         "Topn aggregate over an UNPARTITIONED window detected: every row " +

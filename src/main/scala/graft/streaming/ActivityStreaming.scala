@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
  * [[graft.operators.Sessions.retentionCohorts]] deliverable maintained
  * one micro-batch at a time under the manifest commit protocol the
  * rollup/session/shard/PQ maintainers share
- * ([[TopnStreaming.maintainRollup]] has the full protocol argument).
+ * ([[CommitStore]] has the full protocol argument).
  *
  * Retention state is MONOTONE — the store is the set of distinct
  * `(key, period)` activity pairs, and new events can only ADD pairs —
@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
  * ingested so far, row for row — StreamingSpec pins the equality with
  * keys whose first activity and returns straddle batch boundaries.
  *
- * Store layout ([[ShardStreaming]]'s crash argument applies verbatim —
+ * Store layout ([[CommitStore]]'s crash argument applies verbatim —
  * data first, manifest LAST via temp+rename, replays return before
  * writing):
  * {{{
@@ -42,28 +42,10 @@ import org.apache.spark.sql.functions._
  */
 object ActivityStreaming {
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Committed-chain length past which the chain readers WARN that read
-    * planning is paying per-batch file overhead — the signal to run the
-    * store's `compactStore`. Advisory only; reads stay correct at any
-    * length ([[ScoreStreaming.CompactionAdviceLength]] originated the
-    * doctrine; shared here so every maintainer's reader advises). */
-  private[streaming] val CompactionAdviceLength = 64
-
-  /** One WARN when a committed chain has outgrown the advice length. */
-  private[streaming] def adviseCompaction(
-      batches: Int, storePath: String, maintainer: String): Unit =
-    if (batches > CompactionAdviceLength) {
-      log.warn(s"$maintainer store at $storePath holds $batches committed " +
-        "batches — read planning pays per-batch file overhead; consider " +
-        s"$maintainer.compactStore to fold the chain")
-    }
-
   /** Start the maintenance stream. `events` is a STREAMING DataFrame;
     * arrival order is unconstrained. `filesPerBatch` caps each batch
-    * directory's parquet file count (see [[writeBatchDir]]). Read the
-    * store with [[committedRetention]] / [[committedPairs]]. */
+    * directory's parquet file count (see [[CommitStore.writeBatchDir]]).
+    * Read the store with [[committedRetention]] / [[committedPairs]]. */
   def maintainActivity(
       events: DataFrame,
       storePath: String,
@@ -73,7 +55,7 @@ object ActivityStreaming {
       checkpointLocation: Option[String] = None,
       filesPerBatch: Int = 1)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = TopnStreaming.scopeOf(checkpointLocation)
+    val scope = CommitStore.scopeOf(checkpointLocation)
     val writer = events.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -105,26 +87,26 @@ object ActivityStreaming {
       s"activityBatch: key columns $keyCols collide with internal names " +
         "('period_idx' / '__graft_*'); rename them")
     val spark = batch.sparkSession
-    val (fs, root) = TopnStreaming.fsOf(spark, storePath)
-    TopnStreaming.checkScope(fs, root, scope)
-    TopnStreaming.checkStamp(fs, root, "_graft_params",
+    val (fs, root) = CommitStore.fsOf(spark, storePath)
+    CommitStore.checkScope(fs, root, scope)
+    CommitStore.checkStamp(fs, root, "_graft_params",
       s"periodSeconds=$periodSeconds,keys=${keyCols.mkString("+")}",
       (stored, given) =>
         s"activity store at $root was maintained with '$stored' but this " +
           s"stream uses '$given' — period ordinals are incompatible; " +
           "resume with the original parameters or start a new store path")
-    val committed = TopnStreaming.committedVersion(spark, storePath)
+    val committed = CommitStore.committedVersion(spark, storePath)
     if (committed.exists(batchId <= _)) return // replay of a committed batch
     if (batch.isEmpty) return // no events, state unchanged
 
-    writeBatchDir(
+    CommitStore.writeBatchDir(
       batch
         .select((keyCols.map(col) :+
           Sessions.periodIndex(batch, tsCol, periodSeconds)
             .as("period_idx")): _*)
         .distinct(),
       filesPerBatch, s"$storePath/data/b=$batchId/pairs")
-    writeCommitMarker(fs, root, batchId)
+    CommitStore.commitBatch(fs, root, batchId)
   }
 
   /** The committed distinct activity pairs `(keyCols..., period_idx)`.
@@ -142,10 +124,10 @@ object ActivityStreaming {
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       advise: Boolean): DataFrame = {
-    val ids = committedIds(spark, storePath)
+    val ids = CommitStore.committedIds(spark, storePath)
     if (ids.isEmpty) return spark.emptyDataFrame
-    if (advise) adviseCompaction(ids.size, storePath, "ActivityStreaming")
-    readChain(spark, ids.map(id => s"$storePath/data/b=$id/pairs"))
+    if (advise) CommitStore.adviseCompaction(ids.size, storePath, "ActivityStreaming")
+    CommitStore.readChain(spark, ids.map(id => s"$storePath/data/b=$id/pairs"))
       .distinct()
   }
 
@@ -159,8 +141,8 @@ object ActivityStreaming {
       storePath: String,
       keyCols: Seq[String],
       periodSeconds: Long): DataFrame = {
-    val (fs, root) = TopnStreaming.fsOf(spark, storePath)
-    TopnStreaming.checkStamp(fs, root, "_graft_params",
+    val (fs, root) = CommitStore.fsOf(spark, storePath)
+    CommitStore.checkStamp(fs, root, "_graft_params",
       s"periodSeconds=$periodSeconds,keys=${keyCols.mkString("+")}",
       (stored, given) =>
         s"activity store at $root was maintained with '$stored' but this " +
@@ -180,150 +162,17 @@ object ActivityStreaming {
    * before writing, the next real batch appends. Run it when the
    * chain's file count (one directory per batch) starts to dominate
    * read planning. `files` > 1 parallelizes the fold's write (see
-   * [[writeFoldDir]]) — the knob that matters when the folded history
-   * is large.
+   * [[CommitStore.writeFoldDir]]) — the knob that matters when the folded
+   * history is large.
    */
   def compactStore(
       spark: org.apache.spark.sql.SparkSession,
       srcPath: String,
       dstPath: String,
-      files: Int = 1): Unit = {
-    val ids = committedIds(spark, srcPath)
-    require(ids.nonEmpty, s"compactStore: no committed batches at $srcPath")
-    require(committedIds(spark, dstPath).isEmpty,
-      s"compactStore: $dstPath already holds a committed activity store")
-    val v = ids.max
-    val (fs, root) = TopnStreaming.fsOf(spark, srcPath)
-    val (dfs, droot) = TopnStreaming.fsOf(spark, dstPath)
-    // stamps FIRST: a destination pinned to another stream fails before
-    // any data lands there (copyStamps enforces write-once); the commit
-    // marker still goes last, so a crash mid-fold leaves no committed dst
-    copyStamps(fs, root, dfs, droot)
-    writeFoldDir(committedPairs(spark, srcPath, advise = false), files,
-      s"$dstPath/data/b=$v/pairs")
-    writeCommitMarker(dfs, droot, v)
-  }
-
-  /** Per-batch data-directory writer shared by the maintainers:
-    * `filesPerBatch` caps the directory's parquet file count (coalesce —
-    * a CAP, not a floor; no shuffle). 1, the default everywhere, keeps
-    * micro-batch stores compact; raise it when a batch is large enough
-    * that one writer task is the throughput ceiling (the firehose
-    * regime). */
-  private[streaming] def writeBatchDir(
-      df: DataFrame, filesPerBatch: Int, path: String): Unit = {
-    require(filesPerBatch >= 1,
-      s"filesPerBatch must be >= 1 (got $filesPerBatch)")
-    df.coalesce(filesPerBatch).write.mode("overwrite").parquet(path)
-  }
-
-  /** Fold writer for compaction/migration: `files` == 1 keeps the classic
-    * single-file fold (byte-compatible with every store written so far);
-    * `files` > 1 REPARTITIONS on every column — a deterministic
-    * row-to-file assignment, stable across retries — so the fold's final
-    * stage and its write run with `files` parallel tasks instead of one.
-    * Compacting a long chain is exactly where the one-writer ceiling
-    * bites at scale (the whole committed history flows through the
-    * fold), so unlike the per-batch cap this path buys parallelism with
-    * one extra shuffle. */
-  private[streaming] def writeFoldDir(
-      df: DataFrame, files: Int, path: String): Unit = {
-    require(files >= 1, s"files must be >= 1 (got $files)")
-    val out =
-      if (files == 1) df.coalesce(1)
-      else df.repartition(files, df.columns.toSeq.map(col): _*)
-    out.write.mode("overwrite").parquet(path)
-  }
-
-  /** One multi-root parquet read over a committed chain: a SINGLE scan
-    * node whatever the chain length. The per-batch read-then-unionAll
-    * spelling builds O(batches) plan nodes, and on a long-lived store
-    * plan construction itself becomes the reader's bottleneck — the
-    * file listing work is identical either way, the plan size is not.
-    * Row order across roots is unspecified (as with union); no caller
-    * depends on it. REQUIRES a schema-stable chain: unlike union, a
-    * multi-root read performs no type coercion — every maintainer pins
-    * its written types per batch (SessionStreaming casts the merge-
-    * widened value_sum back to the batch-kernel decimal for exactly
-    * this reason). */
-  private[streaming] def readChain(
-      spark: org.apache.spark.sql.SparkSession,
-      paths: Seq[String]): org.apache.spark.sql.DataFrame =
-    spark.read.parquet(paths: _*)
-
-  /** Batch ids with a committed manifest, ascending. */
-  private[streaming] def committedIds(
-      spark: org.apache.spark.sql.SparkSession, storePath: String): Seq[Long] = {
-    val (fs, root) = TopnStreaming.fsOf(spark, storePath)
-    val dir = new org.apache.hadoop.fs.Path(root, "_manifests")
-    if (!fs.exists(dir)) return Seq.empty
-    fs.listStatus(dir).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("m=")) scala.util.Try(n.stripPrefix("m=").toLong).toOption
-      else None
-    }.sorted
-  }
-
-  /** Copy the write-once stamp files verbatim (compaction keeps the
-    * stream's identity and parameter pins). The stamps are WRITE-ONCE at
-    * the destination too: a droot that already carries a DIFFERENT stamp
-    * (a store initialized but never committed, or another stream's path)
-    * fails loudly instead of having its identity pins silently clobbered
-    * — mirroring [[TopnStreaming.checkStamp]]'s semantics. An equal
-    * existing stamp is a no-op (idempotent compaction retry). */
-  private[streaming] def copyStamps(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      dfs: org.apache.hadoop.fs.FileSystem,
-      droot: org.apache.hadoop.fs.Path): Unit =
-    Seq("_graft_scope", "_graft_params").foreach { stamp =>
-      val src = new org.apache.hadoop.fs.Path(root, stamp)
-      if (fs.exists(src)) {
-        def readAll(f: org.apache.hadoop.fs.FileSystem,
-            p: org.apache.hadoop.fs.Path): Array[Byte] = {
-          val len = f.getFileStatus(p).getLen.toInt
-          val buf = new Array[Byte](len)
-          val in = f.open(p)
-          try in.readFully(0, buf) finally in.close()
-          buf
-        }
-        val buf = readAll(fs, src)
-        val dst = new org.apache.hadoop.fs.Path(droot, stamp)
-        if (dfs.exists(dst)) {
-          if (!java.util.Arrays.equals(readAll(dfs, dst), buf)) {
-            throw new IllegalStateException(
-              s"compactStore: destination $droot already carries a " +
-                s"different $stamp pin — it belongs to another stream " +
-                "(or was initialized under other parameters); compact " +
-                "into a fresh path instead of overwriting its identity")
-          }
-        } else {
-          val out = dfs.create(dst, false)
-          try out.write(buf) finally out.close()
-        }
-      }
+      files: Int = 1): Unit =
+    CommitStore.foldInto(spark, srcPath, dstPath, "compactStore", "activity") {
+      (_, v) => CommitStore.writeFoldDir(
+        committedPairs(spark, srcPath, advise = false), files,
+        s"$dstPath/data/b=$v/pairs")
     }
-
-  /** Atomic commit marker for batch `batchId` (temp+rename; replays
-    * return before writing, a zombie's concurrent commit is
-    * byte-identical). */
-  private[streaming] def writeCommitMarker(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      batchId: Long): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(root, "_manifests")
-    fs.mkdirs(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir,
-      s".m=$batchId.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(s"b=$batchId".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(dir, s"m=$batchId")
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      if (!fs.exists(dst)) {
-        throw new java.io.IOException(s"could not commit manifest $dst")
-      }
-    }
-  }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
  * [[graft.operators.Sessions.funnelCounts]] deliverable maintained one
  * micro-batch at a time under the manifest commit protocol the
  * rollup/session/shard/PQ maintainers share
- * ([[TopnStreaming.maintainRollup]] has the full protocol argument).
+ * ([[CommitStore]] has the full protocol argument).
  *
  * The invariant that makes incremental funnels exact: each key's state
  * is its earliest in-order completion time per step (`t0 .. tN`), and
@@ -53,7 +53,7 @@ import org.apache.spark.sql.functions._
  * conversions that STRADDLE batch boundaries (step i committed, step
  * i+1 arriving batches later) and chains completing inside one batch.
  *
- * Store layout ([[ShardStreaming]]'s crash argument applies verbatim —
+ * Store layout ([[CommitStore]]'s crash argument applies verbatim —
  * data first, manifest LAST via temp+rename, replays return before
  * writing):
  * {{{
@@ -83,7 +83,7 @@ object FunnelStreaming {
       watermarkSeconds: Long = 0L,
       filesPerBatch: Int = 1)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = TopnStreaming.scopeOf(checkpointLocation)
+    val scope = CommitStore.scopeOf(checkpointLocation)
     val writer = events.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -121,16 +121,16 @@ object FunnelStreaming {
       s"funnelBatch: key columns $keyCols collide with internal " +
         "'__graft_*' names; rename them")
     val spark = batch.sparkSession
-    val (fs, root) = TopnStreaming.fsOf(spark, storePath)
-    TopnStreaming.checkScope(fs, root, scope)
-    TopnStreaming.checkStamp(fs, root, "_graft_params",
+    val (fs, root) = CommitStore.fsOf(spark, storePath)
+    CommitStore.checkScope(fs, root, scope)
+    CommitStore.checkStamp(fs, root, "_graft_params",
       paramsOf(keyCols, steps, watermarkSeconds),
       (stored, given) =>
         s"funnel store at $root was maintained with '$stored' but this " +
           s"stream uses '$given' — step ordinals and state columns are " +
           "incompatible; resume with the original parameters or start a " +
           "new store path")
-    val committed = TopnStreaming.committedVersion(spark, storePath)
+    val committed = CommitStore.committedVersion(spark, storePath)
     if (committed.exists(batchId <= _)) return // replay of a committed batch
     if (batch.isEmpty) return // no events: state unchanged, and the
     // high-water mark is EVENT time, so the cut cannot advance either
@@ -202,7 +202,7 @@ object FunnelStreaming {
     val stateCols =
       keyCols.map(col) ++ steps.indices.map(i => col(s"__graft_t$i")) :+
         greatest(col(HwCol), col("__graft_bmax")).as(HwCol)
-    ActivityStreaming.writeBatchDir(
+    CommitStore.writeBatchDir(
       updated.select((stateCols :+ lit(batchId).as(DeltaBatchCol)): _*),
       filesPerBatch, s"$storePath/data/b=$batchId/state")
     // watermark tier: pending snapshot (latest wins) + hwm row, data
@@ -211,7 +211,7 @@ object FunnelStreaming {
       StreamWatermark.write(spark, storePath, batchId, pending, hwm,
         filesPerBatch)
     }
-    ActivityStreaming.writeCommitMarker(fs, root, batchId)
+    CommitStore.commitBatch(fs, root, batchId)
   }
 
   /** Current per-key state: the delta chain folded with a per-key
@@ -219,7 +219,7 @@ object FunnelStreaming {
   private[graft] def committedState(
       spark: org.apache.spark.sql.SparkSession, storePath: String)
       : Option[DataFrame] = {
-    val ids = ActivityStreaming.committedIds(spark, storePath)
+    val ids = CommitStore.committedIds(spark, storePath)
     if (ids.isEmpty) None
     else Some(committedStateFromIds(spark, storePath, ids))
   }
@@ -236,7 +236,7 @@ object FunnelStreaming {
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       ids: Seq[Long]): DataFrame = {
-    val all = ActivityStreaming.readChain(spark,
+    val all = CommitStore.readChain(spark,
       ids.map(id => s"$storePath/data/b=$id/state"))
     val dataCols = all.columns.filter(_ != DeltaBatchCol)
     val keyCols = dataCols.takeWhile(c => !c.startsWith("__graft_"))
@@ -261,8 +261,8 @@ object FunnelStreaming {
       keyCols: Seq[String],
       steps: Seq[String],
       watermarkSeconds: Long = 0L): DataFrame = {
-    val (fs, root) = TopnStreaming.fsOf(spark, storePath)
-    TopnStreaming.checkStamp(fs, root, "_graft_params",
+    val (fs, root) = CommitStore.fsOf(spark, storePath)
+    CommitStore.checkStamp(fs, root, "_graft_params",
       paramsOf(keyCols, steps, watermarkSeconds),
       (stored, given) =>
         s"funnel store at $root was maintained with '$stored' but this " +
@@ -270,8 +270,8 @@ object FunnelStreaming {
           "what this report would claim")
     // ONE commit-marker listing serves both the advisory and the state
     // fold (the per-read double listing was the r17 ADVICE item)
-    val ids = ActivityStreaming.committedIds(spark, storePath)
-    ActivityStreaming.adviseCompaction(ids.size, storePath, "FunnelStreaming")
+    val ids = CommitStore.committedIds(spark, storePath)
+    CommitStore.adviseCompaction(ids.size, storePath, "FunnelStreaming")
     if (ids.isEmpty) spark.emptyDataFrame
     else Sessions.countsFromTimes(
       committedStateFromIds(spark, storePath, ids), steps)
@@ -284,30 +284,21 @@ object FunnelStreaming {
    * scope and params copied so the SAME stream resumes against
    * `dstPath`. Run it when the chain's file count starts to dominate
    * read planning. `files` > 1 parallelizes the fold's write
-   * ([[ActivityStreaming.writeFoldDir]]).
+   * ([[CommitStore.writeFoldDir]]).
    */
   def compactStore(
       spark: org.apache.spark.sql.SparkSession,
       srcPath: String,
       dstPath: String,
-      files: Int = 1): Unit = {
-    val ids = ActivityStreaming.committedIds(spark, srcPath)
-    require(ids.nonEmpty, s"compactStore: no committed batches at $srcPath")
-    require(ActivityStreaming.committedIds(spark, dstPath).isEmpty,
-      s"compactStore: $dstPath already holds a committed funnel store")
-    val v = ids.max
-    val (fs, root) = TopnStreaming.fsOf(spark, srcPath)
-    val (dfs, droot) = TopnStreaming.fsOf(spark, dstPath)
-    // stamps FIRST: a destination pinned to another stream fails before
-    // any data lands there (copyStamps enforces write-once)
-    ActivityStreaming.copyStamps(fs, root, dfs, droot)
-    ActivityStreaming.writeFoldDir(
-      committedState(spark, srcPath).get.withColumn(DeltaBatchCol, lit(v)),
-      files, s"$dstPath/data/b=$v/state")
-    // a watermark-tier store also carries its buffered tail + hwm
-    StreamWatermark.compactInto(spark, srcPath, dstPath, v, files)
-    ActivityStreaming.writeCommitMarker(dfs, droot, v)
-  }
+      files: Int = 1): Unit =
+    CommitStore.foldInto(spark, srcPath, dstPath, "compactStore", "funnel") {
+      (_, v) =>
+        CommitStore.writeFoldDir(
+          committedState(spark, srcPath).get.withColumn(DeltaBatchCol, lit(v)),
+          files, s"$dstPath/data/b=$v/state")
+        // a watermark-tier store also carries its buffered tail + hwm
+        StreamWatermark.compactInto(spark, srcPath, dstPath, v, files)
+    }
 
   private def paramsOf(
       keyCols: Seq[String], steps: Seq[String], watermarkSeconds: Long): String =

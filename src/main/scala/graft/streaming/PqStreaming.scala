@@ -41,25 +41,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
  */
 object PqStreaming {
 
-  private def fsOf(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def markerDir(root: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(root, "_committed")
-
   /** Ids of committed batches (empty before the first commit). */
-  def committedBatches(spark: SparkSession, storePath: String): Seq[Long] = {
-    val (fs, root) = fsOf(spark, storePath)
-    val dir = markerDir(root)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("b=")) scala.util.Try(n.stripPrefix("b=").toLong).toOption
-      else None
-    }.sorted
-  }
+  def committedBatches(spark: SparkSession, storePath: String): Seq[Long] =
+    CommitStore.committedMarkers(spark, storePath)
 
   /** One micro-batch of the append protocol (exposed for deterministic
     * crash-path testing; [[maintainIndex]] drives it from foreachBatch). */
@@ -72,33 +56,14 @@ object PqStreaming {
       ivf: IVF.Model,
       storePath: String): Unit = {
     val spark = batch.sparkSession
-    val (fs, root) = fsOf(spark, storePath)
+    val (fs, root) = CommitStore.fsOf(spark, storePath)
     if (committedBatches(spark, storePath).contains(batchId)) return
     if (batch.isEmpty) return
 
     Pq.index(batch, idCol, vecCol, pq, ivf)
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$storePath/data/b=$batchId")
-    commitMarker(fs, root, batchId)
-  }
-
-  /** The atomic commit: rename of an empty marker file. */
-  private def commitMarker(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      batchId: Long): Unit = {
-    val dir = markerDir(root)
-    fs.mkdirs(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir,
-      s".b=$batchId.tmp-${java.util.UUID.randomUUID()}")
-    fs.create(tmp, true).close()
-    val dst = new org.apache.hadoop.fs.Path(dir, s"b=$batchId")
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      if (!fs.exists(dst)) {
-        throw new java.io.IOException(s"could not commit index batch $dst")
-      }
-    }
+    CommitStore.commitMarker(fs, root, batchId)
   }
 
   /** The committed index: union of committed batch directories, schema
@@ -155,8 +120,8 @@ object PqStreaming {
       spark: SparkSession,
       storePath: String,
       rebuiltPath: String): Unit = {
-    val (fs, root) = fsOf(spark, storePath)
-    val (rfs, rroot) = fsOf(spark, rebuiltPath)
+    val (fs, root) = CommitStore.fsOf(spark, storePath)
+    val (rfs, rroot) = CommitStore.fsOf(spark, rebuiltPath)
     requireDisjointTarget(fs.makeQualified(root), rfs.makeQualified(rroot),
       "rebuildIndex", storePath)
     // an empty source means nothing to rebuild — stamping a retire pointer
@@ -174,7 +139,7 @@ object PqStreaming {
         .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$rebuiltPath/data/b=0")
-      commitMarker(rfs, rroot, 0L)
+      CommitStore.commitMarker(rfs, rroot, 0L)
     }
     writeRetirePointer(fs, root, rebuiltPath)
   }
@@ -192,23 +157,12 @@ object PqStreaming {
       attempts: Int = 3): Unit = {
     val dst = new org.apache.hadoop.fs.Path(root, "_retired")
     if (fs.exists(dst)) {
-      val buf = new Array[Byte](fs.getFileStatus(dst).getLen.toInt)
-      val in = fs.open(dst)
-      try in.readFully(buf) finally in.close()
-      if (new String(buf, java.nio.charset.StandardCharsets.UTF_8) == rebuiltPath) {
-        return
-      }
+      if (CommitStore.readText(fs, dst) == rebuiltPath) return
       fs.delete(dst, false)
     }
-    val tmp = new org.apache.hadoop.fs.Path(root,
-      s"._retired.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    out.write(rebuiltPath.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      // a concurrent writer may have won the rename with a DIFFERENT
-      // target — re-enter (bounded): content equality returns, a mismatch
+    if (!CommitStore.publish(fs, dst, rebuiltPath, "write retire pointer")) {
+      // a concurrent writer won the rename, maybe with a DIFFERENT target
+      // — re-enter (bounded): content equality returns, a mismatch
       // repoints, so this caller never proceeds as if ITS pointer landed
       if (attempts <= 1) {
         throw new java.io.IOException(s"could not write retire pointer $dst")
@@ -240,8 +194,8 @@ object PqStreaming {
       newPq: Pq.Model,
       newIvf: IVF.Model,
       rebuiltPath: String): Unit = {
-    val (fs, root) = fsOf(spark, storePath)
-    val (rfs, rroot) = fsOf(spark, rebuiltPath)
+    val (fs, root) = CommitStore.fsOf(spark, storePath)
+    val (rfs, rroot) = CommitStore.fsOf(spark, rebuiltPath)
     requireDisjointTarget(fs.makeQualified(root), rfs.makeQualified(rroot),
       "reencodeStore", storePath)
     // the claim includes a MODEL fingerprint: a retry of this exact
@@ -257,7 +211,7 @@ object PqStreaming {
         .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$rebuiltPath/data/b=0")
-      commitMarker(rfs, rroot, 0L)
+      CommitStore.commitMarker(rfs, rroot, 0L)
     }
     writeRetirePointer(fs, root, rebuiltPath)
   }
@@ -291,61 +245,31 @@ object PqStreaming {
         "is unsafe for concurrent readers)")
   }
 
-  /** Bind a rebuild/re-encode target path to one producing operation via a
-    * write-once `_graft_rebuild_src` stamp (temp+rename): absent -> claim
-    * it; present and equal -> our own crash-retry, proceed; present and
-    * different -> fail fast. A FAILED rename re-enters the exists-branch
-    * (bounded retries): a concurrent claimant may have won the race with a
-    * DIFFERENT claim, and only content equality — never bare existence —
-    * makes this call's claim recorded. */
+  /** Bind a rebuild/re-encode target path to one producing operation via
+    * a write-once `_graft_rebuild_src` stamp: absent -> claim it; present
+    * and equal -> our own crash-retry, proceed; present and different (a
+    * concurrent claimant's included) -> fail fast. */
   private def claimRebuildTarget(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path,
       claim: String,
-      op: String,
-      attempts: Int = 3): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(root, "_graft_rebuild_src")
-    if (fs.exists(dst)) {
-      val buf = new Array[Byte](fs.getFileStatus(dst).getLen.toInt)
-      val in = fs.open(dst)
-      try in.readFully(buf) finally in.close()
-      val existing = new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-      require(existing == claim,
+      op: String): Unit =
+    CommitStore.checkStamp(fs, root, "_graft_rebuild_src", claim,
+      (existing, _) =>
         s"$op target $root was produced by '$existing' and cannot be reused " +
           s"for '$claim' — every rebuild/re-encode needs a FRESH path " +
           "(reusing one would point retired readers at codes built by a " +
-          "different operation or different models)")
-      return
-    }
-    fs.mkdirs(root)
-    val tmp = new org.apache.hadoop.fs.Path(root,
-      s"._graft_rebuild_src.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    out.write(claim.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      if (attempts <= 1) {
-        throw new java.io.IOException(s"could not claim rebuild target $dst")
-      }
-      claimRebuildTarget(fs, root, claim, op, attempts - 1)
-    }
-  }
+          "different operation or different models)",
+      fail = m => new IllegalArgumentException(s"requirement failed: $m"))
 
   /** Where a retired store points (None for a live store): the fresh path
     * written by [[rebuildIndex]]. New queries should follow it; old
     * readers keep working against the retired store's committed state. */
   def retiredTo(spark: SparkSession, storePath: String): Option[String] = {
-    val (fs, root) = fsOf(spark, storePath)
+    val (fs, root) = CommitStore.fsOf(spark, storePath)
     val p = new org.apache.hadoop.fs.Path(root, "_retired")
     def readOnce(): Option[String] =
-      if (!fs.exists(p)) None
-      else {
-        val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        val in = fs.open(p)
-        try in.readFully(buf) finally in.close()
-        Some(new String(buf, java.nio.charset.StandardCharsets.UTF_8))
-      }
+      if (!fs.exists(p)) None else Some(CommitStore.readText(fs, p))
     // one retry: a concurrent REPOINT (not the common same-target re-stamp,
     // which never deletes) has a brief delete->rename window
     try readOnce()

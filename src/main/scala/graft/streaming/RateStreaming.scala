@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
  * with a key whose spike is SPLIT across batches (each fragment
  * unremarkable, only the summed total anomalous).
  *
- * Store layout ([[ShardStreaming]]'s crash argument applies verbatim —
+ * Store layout ([[CommitStore]]'s crash argument applies verbatim —
  * data first, manifest LAST via temp+rename, replays return before
  * writing):
  * {{{
@@ -40,7 +40,7 @@ object RateStreaming {
   /** Start the maintenance stream. `events` is a STREAMING DataFrame;
     * arrival order is unconstrained. `filesPerBatch` caps each batch
     * directory's parquet file count
-    * ([[ActivityStreaming.writeBatchDir]]). Read the store with
+    * ([[CommitStore.writeBatchDir]]). Read the store with
     * [[committedCounts]] / [[committedAnomalies]]. */
   def maintainPeriodCounts(
       events: DataFrame,
@@ -51,7 +51,7 @@ object RateStreaming {
       checkpointLocation: Option[String] = None,
       filesPerBatch: Int = 1)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = TopnStreaming.scopeOf(checkpointLocation)
+    val scope = CommitStore.scopeOf(checkpointLocation)
     val writer = events.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -84,19 +84,19 @@ object RateStreaming {
       s"rateBatch: key columns $keyCols collide with internal names " +
         "('period_idx' / 'n_events' / '__graft_*'); rename them")
     val spark = batch.sparkSession
-    val (fs, root) = TopnStreaming.fsOf(spark, storePath)
-    TopnStreaming.checkScope(fs, root, scope)
-    TopnStreaming.checkStamp(fs, root, "_graft_params",
+    val (fs, root) = CommitStore.fsOf(spark, storePath)
+    CommitStore.checkScope(fs, root, scope)
+    CommitStore.checkStamp(fs, root, "_graft_params",
       s"periodSeconds=$periodSeconds,keys=${keyCols.mkString("+")}",
       (stored, given) =>
         s"rate store at $root was maintained with '$stored' but this " +
           s"stream uses '$given' — period ordinals are incompatible; " +
           "resume with the original parameters or start a new store path")
-    val committed = TopnStreaming.committedVersion(spark, storePath)
+    val committed = CommitStore.committedVersion(spark, storePath)
     if (committed.exists(batchId <= _)) return // replay of a committed batch
     if (batch.isEmpty) return // no events, state unchanged
 
-    ActivityStreaming.writeBatchDir(
+    CommitStore.writeBatchDir(
       batch
         .select((keyCols.map(col) :+
           Sessions.periodIndex(batch, tsCol, periodSeconds)
@@ -104,7 +104,7 @@ object RateStreaming {
         .groupBy((keyCols.map(col) :+ col("period_idx")): _*)
         .agg(count(lit(1)).as("n_events")),
       filesPerBatch, s"$storePath/data/b=$batchId/counts")
-    ActivityStreaming.writeCommitMarker(fs, root, batchId)
+    CommitStore.commitBatch(fs, root, batchId)
   }
 
   /** The committed exact per-(key, period) counts — the chain's partial
@@ -120,12 +120,12 @@ object RateStreaming {
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       advise: Boolean): DataFrame = {
-    val ids = ActivityStreaming.committedIds(spark, storePath)
+    val ids = CommitStore.committedIds(spark, storePath)
     if (ids.isEmpty) return spark.emptyDataFrame
     if (advise) {
-      ActivityStreaming.adviseCompaction(ids.size, storePath, "RateStreaming")
+      CommitStore.adviseCompaction(ids.size, storePath, "RateStreaming")
     }
-    val all = ActivityStreaming.readChain(spark,
+    val all = CommitStore.readChain(spark,
       ids.map(id => s"$storePath/data/b=$id/counts"))
     val keyCols = all.columns.takeWhile(_ != "period_idx")
     all
@@ -144,8 +144,8 @@ object RateStreaming {
       periodSeconds: Long,
       k: Int = 3): DataFrame = {
     require(k >= 1, s"committedAnomalies: k must be >= 1, got $k")
-    val (fs, root) = TopnStreaming.fsOf(spark, storePath)
-    TopnStreaming.checkStamp(fs, root, "_graft_params",
+    val (fs, root) = CommitStore.fsOf(spark, storePath)
+    CommitStore.checkStamp(fs, root, "_graft_params",
       s"periodSeconds=$periodSeconds,keys=${keyCols.mkString("+")}",
       (stored, given) =>
         s"rate store at $root was maintained with '$stored' but this " +
@@ -166,26 +166,16 @@ object RateStreaming {
    * params copied so the SAME stream resumes against `dstPath`. Run it
    * when the chain's file count starts to dominate read planning.
    * `files` > 1 parallelizes the fold's write
-   * ([[ActivityStreaming.writeFoldDir]]).
+   * ([[CommitStore.writeFoldDir]]).
    */
   def compactStore(
       spark: org.apache.spark.sql.SparkSession,
       srcPath: String,
       dstPath: String,
-      files: Int = 1): Unit = {
-    val ids = ActivityStreaming.committedIds(spark, srcPath)
-    require(ids.nonEmpty, s"compactStore: no committed batches at $srcPath")
-    require(ActivityStreaming.committedIds(spark, dstPath).isEmpty,
-      s"compactStore: $dstPath already holds a committed rate store")
-    val v = ids.max
-    val (fs, root) = TopnStreaming.fsOf(spark, srcPath)
-    val (dfs, droot) = TopnStreaming.fsOf(spark, dstPath)
-    // stamps FIRST: a destination pinned to another stream fails before
-    // any data lands there (copyStamps enforces write-once)
-    ActivityStreaming.copyStamps(fs, root, dfs, droot)
-    ActivityStreaming.writeFoldDir(
-      committedCounts(spark, srcPath, advise = false), files,
-      s"$dstPath/data/b=$v/counts")
-    ActivityStreaming.writeCommitMarker(dfs, droot, v)
-  }
+      files: Int = 1): Unit =
+    CommitStore.foldInto(spark, srcPath, dstPath, "compactStore", "rate") {
+      (_, v) => CommitStore.writeFoldDir(
+        committedCounts(spark, srcPath, advise = false), files,
+        s"$dstPath/data/b=$v/counts")
+    }
 }

@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
  * resuming the stream (or reading a report) with a different model
  * fails fast instead of silently mixing incomparable scores.
  *
- * Store layout ([[ShardStreaming]]'s crash argument applies verbatim —
+ * Store layout ([[CommitStore]]'s crash argument applies verbatim —
  * data first, manifest LAST via temp+rename, replays return before
  * writing):
  * {{{
@@ -50,14 +50,6 @@ import org.apache.spark.sql.functions._
  * }}}
  */
 object ScoreStreaming {
-
-  /** Committed-chain length past which [[committedPredictions]] WARNs
-    * that read planning is paying per-batch file overhead — the signal
-    * to run [[compactStore]]. Advisory only; reads stay correct at any
-    * length. Shared doctrine: every maintainer's reader advises via
-    * [[ActivityStreaming.adviseCompaction]]. */
-  private[graft] val CompactionAdviceLength =
-    ActivityStreaming.CompactionAdviceLength
 
   /** Start the serving stream. `docs` is a STREAMING DataFrame of
     * (idCol, textCol) rows; the model is frozen for the stream's life.
@@ -74,7 +66,7 @@ object ScoreStreaming {
       checkpointLocation: Option[String] = None,
       filesPerBatch: Int = 1)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = TopnStreaming.scopeOf(checkpointLocation)
+    val scope = CommitStore.scopeOf(checkpointLocation)
     val fp = modelFingerprint(model)
     val writer = docs.writeStream
       .outputMode("append")
@@ -115,7 +107,7 @@ object ScoreStreaming {
       filesPerBatch: Int = 1,
       stateTtl: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = TopnStreaming.scopeOf(checkpointLocation)
+    val scope = CommitStore.scopeOf(checkpointLocation)
     val fp = modelFingerprint(model)
     val writer = TopnStreaming
       .streamingFirstById(docs, idCol, textCol, stateTtl)
@@ -188,55 +180,44 @@ object ScoreStreaming {
       srcPath: String,
       dstPath: String,
       model: MultiModel,
-      files: Int = 1): Unit = {
-    val ids = ActivityStreaming.committedIds(spark, srcPath)
-    require(ids.nonEmpty, s"migrateStore: no committed batches at $srcPath")
-    require(ActivityStreaming.committedIds(spark, dstPath).isEmpty,
-      s"migrateStore: $dstPath already holds a committed score store")
-    val (fs, root) = TopnStreaming.fsOf(spark, srcPath)
-    // the stamp must EXIST before checkStamp runs — its absent path
-    // would write the presented spelling onto the SOURCE, mutating the
-    // store this function must only read
-    require(fs.exists(new org.apache.hadoop.fs.Path(root, "_graft_params")),
-      s"migrateStore: $root has committed batches but no params stamp — " +
-        "not a score store")
-    // the v1 stamp must match the presented model's LEGACY fingerprint —
-    // checkStamp's equality path does the comparison and its mismatch
-    // path the refusal; a v2 source fails here too (its stamp starts
-    // with "v=2," which the v1 spelling never does)
-    TopnStreaming.checkStamp(fs, root, "_graft_params",
-      paramsV1Of(model, fingerprintV1(model)),
-      (stored, given) =>
-        s"migrateStore: store at $root was maintained with '$stored' " +
-          s"but the presented model fingerprints as '$given' — refusing " +
-          "to re-stamp a store under a model that did not write it " +
-          "(for a v2 store, use compactStore)")
-    val v = ids.max
-    val (dfs, droot) = TopnStreaming.fsOf(spark, dstPath)
-    // v2 identity first (fail before data, like compactStore): scope
-    // copied verbatim, params re-stamped under the v2 fingerprint
-    Seq(("_graft_scope", None),
-        ("_graft_params", Some(paramsOf(model, modelFingerprint(model)))))
-      .foreach { case (stamp, value) =>
-        val src = new org.apache.hadoop.fs.Path(root, stamp)
-        val content = value.getOrElse {
-          val len = fs.getFileStatus(src).getLen.toInt
-          val buf = new Array[Byte](len)
-          val in = fs.open(src)
-          try in.readFully(0, buf) finally in.close()
-          new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-        }
-        TopnStreaming.checkStamp(dfs, droot, stamp, content,
+      files: Int = 1): Unit =
+    CommitStore.foldInto(spark, srcPath, dstPath, "migrateStore", "score",
+      stamp = (fs, root, dfs, droot) => {
+        // the stamp must EXIST before checkStamp runs — its absent path
+        // would write the presented spelling onto the SOURCE, mutating the
+        // store this function must only read
+        require(fs.exists(new org.apache.hadoop.fs.Path(root, "_graft_params")),
+          s"migrateStore: $root has committed batches but no params stamp — " +
+            "not a score store")
+        // the v1 stamp must match the presented model's LEGACY fingerprint —
+        // checkStamp's equality path does the comparison and its mismatch
+        // path the refusal; a v2 source fails here too (its stamp starts
+        // with "v=2," which the v1 spelling never does)
+        CommitStore.checkStamp(fs, root, "_graft_params",
+          paramsV1Of(model, fingerprintV1(model)),
           (stored, given) =>
-            s"migrateStore: destination $droot already carries a " +
-              s"different $stamp pin ('$stored' vs '$given') — it " +
-              "belongs to another stream; migrate into a fresh path")
-      }
-    ActivityStreaming.writeFoldDir(
-      committedPredictions(spark, srcPath, advise = false),
-      files, s"$dstPath/data/b=$v/preds")
-    ActivityStreaming.writeCommitMarker(dfs, droot, v)
-  }
+            s"migrateStore: store at $root was maintained with '$stored' " +
+              s"but the presented model fingerprints as '$given' — refusing " +
+              "to re-stamp a store under a model that did not write it " +
+              "(for a v2 store, use compactStore)")
+        // v2 identity first (fail before data, like compactStore): scope
+        // copied verbatim, params re-stamped under the v2 fingerprint
+        Seq(
+          "_graft_scope" -> CommitStore.readText(fs,
+            new org.apache.hadoop.fs.Path(root, "_graft_scope")),
+          "_graft_params" -> paramsOf(model, modelFingerprint(model)))
+          .foreach { case (stamp, content) =>
+            CommitStore.checkStamp(dfs, droot, stamp, content,
+              (stored, given) =>
+                s"migrateStore: destination $droot already carries a " +
+                  s"different $stamp pin ('$stored' vs '$given') — it " +
+                  "belongs to another stream; migrate into a fresh path")
+          }
+      }) {
+      (_, v) => CommitStore.writeFoldDir(
+        committedPredictions(spark, srcPath, advise = false),
+        files, s"$dstPath/data/b=$v/preds")
+    }
 
   /** One micro-batch of the protocol (exposed for deterministic
     * crash-path testing; [[maintainPredictions]] drives it).
@@ -261,16 +242,16 @@ object ScoreStreaming {
         "n_tokens").contains(idCol) && !idCol.startsWith("__graft_"),
       s"scoreBatch: id column '$idCol' collides with an output name")
     val spark = batch.sparkSession
-    val (fs, root) = TopnStreaming.fsOf(spark, storePath)
-    TopnStreaming.checkScope(fs, root, scope)
-    TopnStreaming.checkStamp(fs, root, "_graft_params",
+    val (fs, root) = CommitStore.fsOf(spark, storePath)
+    CommitStore.checkScope(fs, root, scope)
+    CommitStore.checkStamp(fs, root, "_graft_params",
       paramsOf(model, modelFp),
       (stored, given) =>
         s"score store at $root was maintained with '$stored' but this " +
           s"stream serves '$given' — a different model's scores are not " +
           "comparable; resume with the original model or start a new " +
           "store path")
-    val committed = TopnStreaming.committedVersion(spark, storePath)
+    val committed = CommitStore.committedVersion(spark, storePath)
     if (committed.exists(batchId <= _)) return // replay of a committed batch
     if (batch.isEmpty) return // no documents, state unchanged
 
@@ -298,14 +279,14 @@ object ScoreStreaming {
       }
       val preds = Classifier.calibrateScores(
         Classifier.scoreMulti(model, batch, idCol, textCol))
-      ActivityStreaming.writeBatchDir(
+      CommitStore.writeBatchDir(
         preds
           .join(toks.select(col("doc_id"), col("n_tokens")), "doc_id")
           .select(col("doc_id"), col("cls_pred"), col("score_e6"),
             col("margin_e6"), col("share_bp"), col("n_tokens")),
         filesPerBatch, s"$storePath/data/b=$batchId/preds")
     } finally toks.unpersist(blocking = false)
-    ActivityStreaming.writeCommitMarker(fs, root, batchId)
+    CommitStore.commitBatch(fs, root, batchId)
   }
 
   /** Every committed prediction — the union of the batch chain; equal to
@@ -323,12 +304,12 @@ object ScoreStreaming {
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       advise: Boolean): DataFrame = {
-    val ids = ActivityStreaming.committedIds(spark, storePath)
+    val ids = CommitStore.committedIds(spark, storePath)
     if (ids.isEmpty) return spark.emptyDataFrame
     if (advise) {
-      ActivityStreaming.adviseCompaction(ids.size, storePath, "ScoreStreaming")
+      CommitStore.adviseCompaction(ids.size, storePath, "ScoreStreaming")
     }
-    ActivityStreaming.readChain(spark,
+    CommitStore.readChain(spark,
       ids.map(id => s"$storePath/data/b=$id/preds"))
   }
 
@@ -342,8 +323,8 @@ object ScoreStreaming {
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       model: MultiModel): DataFrame = {
-    val (fs, root) = TopnStreaming.fsOf(spark, storePath)
-    TopnStreaming.checkStamp(fs, root, "_graft_params",
+    val (fs, root) = CommitStore.fsOf(spark, storePath)
+    CommitStore.checkStamp(fs, root, "_graft_params",
       paramsOf(model, modelFingerprint(model)),
       (stored, given) =>
         s"score store at $root was maintained with '$stored' but this " +
@@ -363,7 +344,7 @@ object ScoreStreaming {
    * scope and params copied so the SAME stream resumes against
    * `dstPath`. Run it when the chain's file count starts to dominate
    * read planning. `files` > 1 parallelizes the fold's write
-   * ([[ActivityStreaming.writeFoldDir]]) — at firehose scale the
+   * ([[CommitStore.writeFoldDir]]) — at firehose scale the
    * compaction of a long chain is exactly when one writer task is the
    * ceiling.
    */
@@ -371,21 +352,10 @@ object ScoreStreaming {
       spark: org.apache.spark.sql.SparkSession,
       srcPath: String,
       dstPath: String,
-      files: Int = 1): Unit = {
-    val ids = ActivityStreaming.committedIds(spark, srcPath)
-    require(ids.nonEmpty, s"compactStore: no committed batches at $srcPath")
-    require(ActivityStreaming.committedIds(spark, dstPath).isEmpty,
-      s"compactStore: $dstPath already holds a committed score store")
-    val v = ids.max
-    val (fs, root) = TopnStreaming.fsOf(spark, srcPath)
-    val (dfs, droot) = TopnStreaming.fsOf(spark, dstPath)
-    // stamps FIRST: a destination pinned to another stream fails before
-    // any data lands there (copyStamps enforces write-once); the commit
-    // marker still goes last, so a crash mid-fold leaves no committed dst
-    ActivityStreaming.copyStamps(fs, root, dfs, droot)
-    ActivityStreaming.writeFoldDir(
-      committedPredictions(spark, srcPath, advise = false),
-      files, s"$dstPath/data/b=$v/preds")
-    ActivityStreaming.writeCommitMarker(dfs, droot, v)
-  }
+      files: Int = 1): Unit =
+    CommitStore.foldInto(spark, srcPath, dstPath, "compactStore", "score") {
+      (_, v) => CommitStore.writeFoldDir(
+        committedPredictions(spark, srcPath, advise = false),
+        files, s"$dstPath/data/b=$v/preds")
+    }
 }

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
  * ever-growing store of per-key gap sessions — the
  * [[graft.operators.Sessions.stats]] deliverable maintained one
  * micro-batch at a time under the manifest commit protocol the
- * rollup/shard/PQ maintainers share ([[TopnStreaming.maintainRollup]]
- * has the full protocol argument).
+ * rollup/shard/PQ maintainers share ([[CommitStore]] has the full
+ * protocol argument).
  *
  * The invariant that makes incremental sessionization exact: under
  * per-key ts-ordered arrival (the kafka-partition-per-key reality; the
@@ -56,7 +56,7 @@ import org.apache.spark.sql.functions._
  * [[committedSessions]] then reports the MATURED prefix — buffered
  * events join once the watermark passes them.
  *
- * Store layout ([[ShardStreaming]]'s crash argument applies verbatim —
+ * Store layout ([[CommitStore]]'s crash argument applies verbatim —
  * data first, manifest LAST via temp+rename, replays return before
  * writing):
  * {{{
@@ -87,7 +87,7 @@ object SessionStreaming {
       watermarkSeconds: Long = 0L,
       filesPerBatch: Int = 1)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = TopnStreaming.scopeOf(checkpointLocation)
+    val scope = CommitStore.scopeOf(checkpointLocation)
     val writer = events.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -116,9 +116,9 @@ object SessionStreaming {
     require(watermarkSeconds >= 0L,
       s"sessionBatch: watermarkSeconds must be >= 0, got $watermarkSeconds")
     val spark = batch.sparkSession
-    val (fs, root) = TopnStreaming.fsOf(spark, storePath)
-    TopnStreaming.checkScope(fs, root, scope)
-    TopnStreaming.checkStamp(fs, root, "_graft_params",
+    val (fs, root) = CommitStore.fsOf(spark, storePath)
+    CommitStore.checkScope(fs, root, scope)
+    CommitStore.checkStamp(fs, root, "_graft_params",
       s"gapSeconds=$gapSeconds,keys=${keyCols.mkString("+")}," +
         s"value=${valueCol.getOrElse("-")}" +
         StreamWatermark.paramsSuffix(watermarkSeconds),
@@ -127,7 +127,7 @@ object SessionStreaming {
           s"stream uses '$given' — session boundaries and schemas are " +
           "incompatible; resume with the original parameters or start a " +
           "new store path")
-    val committed = TopnStreaming.committedVersion(spark, storePath)
+    val committed = CommitStore.committedVersion(spark, storePath)
     if (committed.exists(batchId <= _)) return // replay of a committed batch
     if (batch.isEmpty) return // no events: state unchanged, and the
     // high-water mark is EVENT time, so the cut cannot advance either
@@ -266,9 +266,9 @@ object SessionStreaming {
           - when(col("__graft_merged"), 1L).otherwise(0L))
       .select((storeCols.map(col) :+ lit(batchId).as(DeltaBatchCol)): _*)
 
-    ActivityStreaming.writeBatchDir(closed, filesPerBatch,
+    CommitStore.writeBatchDir(closed, filesPerBatch,
       s"$storePath/data/b=$batchId/closed")
-    ActivityStreaming.writeBatchDir(openDelta, filesPerBatch,
+    CommitStore.writeBatchDir(openDelta, filesPerBatch,
       s"$storePath/data/b=$batchId/open")
     // watermark tier: pending snapshot (latest wins) + hwm row, data
     // before the marker like everything else
@@ -276,20 +276,7 @@ object SessionStreaming {
       StreamWatermark.write(spark, storePath, batchId, pending, hwm,
         filesPerBatch)
     }
-    writeCommitMarker(fs, root, batchId)
-  }
-
-  /** Batch ids with a committed manifest, ascending. */
-  private def committedIds(
-      spark: org.apache.spark.sql.SparkSession, storePath: String): Seq[Long] = {
-    val (fs, root) = TopnStreaming.fsOf(spark, storePath)
-    val dir = new org.apache.hadoop.fs.Path(root, "_manifests")
-    if (!fs.exists(dir)) return Seq.empty
-    fs.listStatus(dir).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("m=")) scala.util.Try(n.stripPrefix("m=").toLong).toOption
-      else None
-    }.sorted
+    CommitStore.commitBatch(fs, root, batchId)
   }
 
   /** Current open session per key: the delta chain folded with a per-key
@@ -297,9 +284,9 @@ object SessionStreaming {
   private[graft] def committedOpenState(
       spark: org.apache.spark.sql.SparkSession, storePath: String)
       : Option[DataFrame] = {
-    val ids = committedIds(spark, storePath)
+    val ids = CommitStore.committedIds(spark, storePath)
     if (ids.isEmpty) return None
-    Some(foldOpen(ActivityStreaming.readChain(spark,
+    Some(foldOpen(CommitStore.readChain(spark,
       ids.map(id => s"$storePath/data/b=$id/open"))))
   }
 
@@ -323,10 +310,10 @@ object SessionStreaming {
     * row. Empty-schema DataFrame before the first commit. */
   def committedSessions(
       spark: org.apache.spark.sql.SparkSession, storePath: String): DataFrame = {
-    val ids = committedIds(spark, storePath)
+    val ids = CommitStore.committedIds(spark, storePath)
     if (ids.isEmpty) return spark.emptyDataFrame
-    ActivityStreaming.adviseCompaction(ids.size, storePath, "SessionStreaming")
-    val closed = ActivityStreaming.readChain(spark,
+    CommitStore.adviseCompaction(ids.size, storePath, "SessionStreaming")
+    val closed = CommitStore.readChain(spark,
       ids.map(id => s"$storePath/data/b=$id/closed"))
     committedOpenState(spark, storePath)
       .map(o => closed.unionByName(o.select(closed.columns.map(col): _*)))
@@ -347,36 +334,24 @@ object SessionStreaming {
       spark: org.apache.spark.sql.SparkSession,
       srcPath: String,
       dstPath: String,
-      files: Int = 1): Unit = {
-    val ids = committedIds(spark, srcPath)
-    require(ids.nonEmpty, s"compactStore: no committed batches at $srcPath")
-    require(committedIds(spark, dstPath).isEmpty,
-      s"compactStore: $dstPath already holds a committed session store")
-    val v = ids.max
-    val (fs, root) = TopnStreaming.fsOf(spark, srcPath)
-    val (dfs, droot) = TopnStreaming.fsOf(spark, dstPath)
-    // stamps FIRST: a destination pinned to another stream fails before
-    // any data lands there (copyStamps enforces write-once); the commit
-    // marker still goes last, so a crash mid-fold leaves no committed dst
-    ActivityStreaming.copyStamps(fs, root, dfs, droot)
-    val closed = ActivityStreaming.readChain(spark,
-      ids.map(id => s"$srcPath/data/b=$id/closed"))
-    val open = committedOpenState(spark, srcPath).get
-      .withColumn(DeltaBatchCol, lit(v))
-    ActivityStreaming.writeFoldDir(closed, files,
-      s"$dstPath/data/b=$v/closed")
-    ActivityStreaming.writeFoldDir(open, files,
-      s"$dstPath/data/b=$v/open")
-    // a watermark-tier store also carries its buffered tail + hwm
-    StreamWatermark.compactInto(spark, srcPath, dstPath, v, files)
-    writeCommitMarker(dfs, droot, v)
-  }
+      files: Int = 1): Unit =
+    CommitStore.foldInto(spark, srcPath, dstPath, "compactStore", "session") {
+      (ids, v) =>
+        val closed = CommitStore.readChain(spark,
+          ids.map(id => s"$srcPath/data/b=$id/closed"))
+        val open = committedOpenState(spark, srcPath).get
+          .withColumn(DeltaBatchCol, lit(v))
+        CommitStore.writeFoldDir(closed, files, s"$dstPath/data/b=$v/closed")
+        CommitStore.writeFoldDir(open, files, s"$dstPath/data/b=$v/open")
+        // a watermark-tier store also carries its buffered tail + hwm
+        StreamWatermark.compactInto(spark, srcPath, dstPath, v, files)
+    }
 
   /**
    * Migrate a session store written BEFORE the schema-stable `value_sum`
    * pin (the batch-kernel cast in [[sessionBatch]]) to a fresh store at
    * `dstPath` readable by today's coercion-free multi-root
-   * [[ActivityStreaming.readChain]]. Legacy stores with a value column
+   * [[CommitStore.readChain]]. Legacy stores with a value column
    * carry per-batch WIDENED decimal `value_sum` schemas — every merge of
    * an open session added one digit of precision — so the modern reader
    * refuses the chain and [[sessionBatch]] would append the narrower
@@ -406,80 +381,48 @@ object SessionStreaming {
       srcPath: String,
       dstPath: String,
       files: Int = 1,
-      valueType: Option[org.apache.spark.sql.types.DataType] = None): Unit = {
-    val ids = committedIds(spark, srcPath)
-    require(ids.nonEmpty, s"migrateStore: no committed batches at $srcPath")
-    require(committedIds(spark, dstPath).isEmpty,
-      s"migrateStore: $dstPath already holds a committed session store")
-    val v = ids.max
-    val (fs, root) = TopnStreaming.fsOf(spark, srcPath)
-    val (dfs, droot) = TopnStreaming.fsOf(spark, dstPath)
-    ActivityStreaming.copyStamps(fs, root, dfs, droot)
-    // coercing per-batch fold — the pre-multi-root reader's spelling
-    def chain(leaf: String): DataFrame = ids
-      .map(id => spark.read.parquet(s"$srcPath/data/b=$id/$leaf"))
-      .reduce(_.unionByName(_))
-    // batch-kernel value type: explicit override, else the narrowest
-    // written type across the chain (merges only ever widened, so any
-    // surviving unwidened leaf IS the kernel — see the fine print above);
-    // stores without a value column skip the cast
-    val kernel: Option[org.apache.spark.sql.types.DataType] =
-      valueType.orElse {
-        val seen = ids.flatMap { id =>
-          spark.read.parquet(s"$srcPath/data/b=$id/closed")
-            .schema.find(_.name == "value_sum").map(_.dataType)
+      valueType: Option[org.apache.spark.sql.types.DataType] = None): Unit =
+    CommitStore.foldInto(spark, srcPath, dstPath, "migrateStore", "session") {
+      (ids, v) =>
+        // coercing per-batch fold — the pre-multi-root reader's spelling
+        def chain(leaf: String): DataFrame = ids
+          .map(id => spark.read.parquet(s"$srcPath/data/b=$id/$leaf"))
+          .reduce(_.unionByName(_))
+        // batch-kernel value type: explicit override, else the narrowest
+        // written type across the chain (merges only ever widened, so any
+        // surviving unwidened leaf IS the kernel — see the fine print
+        // above); stores without a value column skip the cast
+        val kernel: Option[org.apache.spark.sql.types.DataType] =
+          valueType.orElse {
+            val seen = ids.flatMap { id =>
+              spark.read.parquet(s"$srcPath/data/b=$id/closed")
+                .schema.find(_.name == "value_sum").map(_.dataType)
+            }
+            seen.sortBy {
+              case d: org.apache.spark.sql.types.DecimalType => d.precision
+              case _ => Int.MaxValue
+            }.headOption
+          }
+        // the fail-loudly-on-overflow guarantee is enforced IN the plan,
+        // not assumed from session defaults: Column.cast follows
+        // spark.sql.ansi.enabled, so under ansi=false an overflowing legacy
+        // value would be silently NULLed mid-migration — build the Cast
+        // expression with ANSI eval mode explicitly
+        def atKernel(df: DataFrame): DataFrame = kernel match {
+          case Some(t) => df.withColumn("value_sum",
+            org.apache.spark.sql.graftshim.GraftShim.column(
+              org.apache.spark.sql.catalyst.expressions.Cast(
+                org.apache.spark.sql.graftshim.GraftShim.expression(
+                  col("value_sum")),
+                t, None,
+                org.apache.spark.sql.catalyst.expressions.EvalMode.ANSI)))
+          case None    => df
         }
-        seen.sortBy {
-          case d: org.apache.spark.sql.types.DecimalType => d.precision
-          case _ => Int.MaxValue
-        }.headOption
-      }
-    // the fail-loudly-on-overflow guarantee is enforced IN the plan, not
-    // assumed from session defaults: Column.cast follows
-    // spark.sql.ansi.enabled, so under ansi=false an overflowing legacy
-    // value would be silently NULLed mid-migration (the r17 ADVICE item)
-    // — build the Cast expression with ANSI eval mode explicitly instead
-    def atKernel(df: DataFrame): DataFrame = kernel match {
-      case Some(t) => df.withColumn("value_sum",
-        org.apache.spark.sql.graftshim.GraftShim.column(
-          org.apache.spark.sql.catalyst.expressions.Cast(
-            org.apache.spark.sql.graftshim.GraftShim.expression(
-              col("value_sum")),
-            t, None,
-            org.apache.spark.sql.catalyst.expressions.EvalMode.ANSI)))
-      case None    => df
+        val closed = atKernel(chain("closed"))
+        val open = atKernel(foldOpen(chain("open")))
+          .withColumn(DeltaBatchCol, lit(v))
+        CommitStore.writeFoldDir(closed, files, s"$dstPath/data/b=$v/closed")
+        CommitStore.writeFoldDir(open, files, s"$dstPath/data/b=$v/open")
+        StreamWatermark.compactInto(spark, srcPath, dstPath, v, files)
     }
-    val closed = atKernel(chain("closed"))
-    val open = atKernel(foldOpen(chain("open")))
-      .withColumn(DeltaBatchCol, lit(v))
-    ActivityStreaming.writeFoldDir(closed, files,
-      s"$dstPath/data/b=$v/closed")
-    ActivityStreaming.writeFoldDir(open, files,
-      s"$dstPath/data/b=$v/open")
-    StreamWatermark.compactInto(spark, srcPath, dstPath, v, files)
-    writeCommitMarker(dfs, droot, v)
-  }
-
-  /** Atomic commit marker for batch `batchId` (temp+rename; replays
-    * return before writing, a zombie's concurrent commit is
-    * byte-identical). */
-  private def writeCommitMarker(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      batchId: Long): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(root, "_manifests")
-    fs.mkdirs(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir,
-      s".m=$batchId.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(s"b=$batchId".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(dir, s"m=$batchId")
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      if (!fs.exists(dst)) {
-        throw new java.io.IOException(s"could not commit manifest $dst")
-      }
-    }
-  }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
  * [[graft.pipeline.Sampling.packMaskedTokenIds]] deliverable emitted
  * incrementally, one micro-batch at a time, under the same manifest
  * commit protocol the rollup/cluster/PQ maintainers use
- * ([[TopnStreaming.maintainRollup]] doc has the full protocol argument).
+ * ([[CommitStore]] has the full protocol argument).
  *
  * The layout invariant that makes incremental packing exact: every
  * window coordinate (seq id, in-window offset, loss interval) is a pure
@@ -60,7 +60,7 @@ object ShardStreaming {
       seqLen: Long,
       checkpointLocation: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = TopnStreaming.scopeOf(checkpointLocation)
+    val scope = CommitStore.scopeOf(checkpointLocation)
     val writer = docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -84,14 +84,14 @@ object ShardStreaming {
       seqLen: Long,
       scope: String): Unit = {
     val spark = batch.sparkSession
-    val (fs, root) = TopnStreaming.fsOf(spark, shardPath)
-    TopnStreaming.checkScope(fs, root, scope)
-    TopnStreaming.checkStamp(fs, root, "_graft_params", s"seqLen=$seqLen",
+    val (fs, root) = CommitStore.fsOf(spark, shardPath)
+    CommitStore.checkScope(fs, root, scope)
+    CommitStore.checkStamp(fs, root, "_graft_params", s"seqLen=$seqLen",
       (stored, given) =>
         s"shard store at $root was packed with '$stored' but this stream " +
           s"uses '$given' — window layouts are incompatible; resume with " +
           "the original seqLen or start a new shard path")
-    val committed = TopnStreaming.committedVersion(spark, shardPath)
+    val committed = CommitStore.committedVersion(spark, shardPath)
     if (committed.exists(batchId <= _)) return // replay of a committed batch
     if (batch.isEmpty) return // nothing to lay out, offset unchanged
     val offset = committedOffset(spark, shardPath)
@@ -104,7 +104,7 @@ object ShardStreaming {
     // recompute differently)
     val written = spark.read.parquet(s"$shardPath/data/b=$batchId")
       .agg(coalesce(sum(col("n_tokens")), lit(0L))).head.getLong(0)
-    writeOffsetManifest(fs, root, batchId, offset + written)
+    CommitStore.commit(fs, root, batchId, (offset + written).toString)
   }
 
   /** [[maintainPackedShards]] for MULTI-TURN CHAT corpora: the ingest
@@ -125,7 +125,7 @@ object ShardStreaming {
       seqLen: Long,
       checkpointLocation: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = TopnStreaming.scopeOf(checkpointLocation)
+    val scope = CommitStore.scopeOf(checkpointLocation)
     val writer = docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -149,14 +149,14 @@ object ShardStreaming {
       seqLen: Long,
       scope: String): Unit = {
     val spark = batch.sparkSession
-    val (fs, root) = TopnStreaming.fsOf(spark, shardPath)
-    TopnStreaming.checkScope(fs, root, scope)
-    TopnStreaming.checkStamp(fs, root, "_graft_params", s"seqLen=$seqLen",
+    val (fs, root) = CommitStore.fsOf(spark, shardPath)
+    CommitStore.checkScope(fs, root, scope)
+    CommitStore.checkStamp(fs, root, "_graft_params", s"seqLen=$seqLen",
       (stored, given) =>
         s"shard store at $root was packed with '$stored' but this stream " +
           s"uses '$given' — window layouts are incompatible; resume with " +
           "the original seqLen or start a new shard path")
-    val committed = TopnStreaming.committedVersion(spark, shardPath)
+    val committed = CommitStore.committedVersion(spark, shardPath)
     if (committed.exists(batchId <= _)) return // replay of a committed batch
     if (batch.isEmpty) return // nothing to lay out, offset unchanged
     val offset = committedOffset(spark, shardPath)
@@ -165,45 +165,16 @@ object ShardStreaming {
       .write.mode("overwrite").parquet(s"$shardPath/data/b=$batchId")
     val written = spark.read.parquet(s"$shardPath/data/b=$batchId")
       .agg(coalesce(sum(col("n_tokens")), lit(0L))).head.getLong(0)
-    writeOffsetManifest(fs, root, batchId, offset + written)
+    CommitStore.commit(fs, root, batchId, (offset + written).toString)
   }
 
   /** Total committed stream tokens (0 before the first commit). */
   def committedOffset(
       spark: org.apache.spark.sql.SparkSession, shardPath: String): Long = {
-    val (fs, root) = TopnStreaming.fsOf(spark, shardPath)
-    TopnStreaming.committedVersion(spark, shardPath).map { v =>
-      val p = new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(root, "_manifests"), s"m=$v")
-      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(0, buf) finally in.close()
-      new String(buf, java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-    }.getOrElse(0L)
-  }
-
-  private def writeOffsetManifest(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      batchId: Long,
-      totalTokens: Long): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(root, "_manifests")
-    fs.mkdirs(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir,
-      s".m=$batchId.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(totalTokens.toString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(dir, s"m=$batchId")
-    // dst never exists (replays return before writing); a zombie driver's
-    // concurrent commit is byte-identical (deterministic content)
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      if (!fs.exists(dst)) {
-        throw new java.io.IOException(s"could not commit manifest $dst")
-      }
-    }
+    val (fs, root) = CommitStore.fsOf(spark, shardPath)
+    CommitStore.committedVersion(spark, shardPath)
+      .map(CommitStore.readManifest(fs, root, _).trim.toLong)
+      .getOrElse(0L)
   }
 
   /** The committed training windows, batch-split rows stitched:
@@ -213,17 +184,10 @@ object ShardStreaming {
     * before the first commit. */
   def committedPackedShards(
       spark: org.apache.spark.sql.SparkSession, shardPath: String): DataFrame = {
-    val (fs, root) = TopnStreaming.fsOf(spark, shardPath)
-    val dir = new org.apache.hadoop.fs.Path(root, "_manifests")
-    if (!fs.exists(dir)) return spark.emptyDataFrame
-    val ids = fs.listStatus(dir).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("m=")) scala.util.Try(n.stripPrefix("m=").toLong).toOption
-      else None
-    }
+    val ids = CommitStore.committedIds(spark, shardPath)
     if (ids.isEmpty) return spark.emptyDataFrame
-    val all = ActivityStreaming.readChain(spark,
-      ids.sorted.map(id => s"$shardPath/data/b=$id"))
+    val all = CommitStore.readChain(spark,
+      ids.map(id => s"$shardPath/data/b=$id"))
     // a window split across batches is several rows with one seq_id,
     // disjoint [row_base, row_base + n_tokens) spans: concatenate in
     // row_base order (leading-field struct sort; bases are distinct

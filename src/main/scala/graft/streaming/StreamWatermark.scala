@@ -35,9 +35,9 @@ private[graft] object StreamWatermark {
     * loudly instead. */
   private def latestTierBatch(
       spark: SparkSession, storePath: String): Option[Long] = {
-    val ids = ActivityStreaming.committedIds(spark, storePath)
+    val ids = CommitStore.committedIds(spark, storePath)
     if (ids.isEmpty) return None
-    val (fs, root) = TopnStreaming.fsOf(spark, storePath)
+    val (fs, root) = CommitStore.fsOf(spark, storePath)
     def has(id: Long, leaf: String): Boolean =
       fs.exists(new org.apache.hadoop.fs.Path(root, s"data/b=$id/$leaf"))
     ids.sorted.reverse
@@ -130,7 +130,7 @@ private[graft] object StreamWatermark {
 
   /** Write this batch's buffer snapshot + hwm (before the commit marker).
     * `files` caps the pending snapshot's file count
-    * ([[ActivityStreaming.writeBatchDir]] — the buffer is bounded by the
+    * ([[CommitStore.writeBatchDir]] — the buffer is bounded by the
     * disorder window times the ingest rate, so at firehose scale it
     * deserves the same ceiling lift as the data directories); the hwm
     * leaf is one row and stays one file. */
@@ -141,7 +141,7 @@ private[graft] object StreamWatermark {
       pending: DataFrame,
       hwmUs: Long,
       files: Int = 1): Unit = {
-    ActivityStreaming.writeBatchDir(pending, files,
+    CommitStore.writeBatchDir(pending, files,
       s"$storePath/data/b=$batchId/pending")
     spark.range(1).select(lit(hwmUs).as("hwm_us"))
       .coalesce(1).write.mode("overwrite")

@@ -68,45 +68,23 @@ object TopnStreaming {
    * Returns the StreamingQuery; the caller owns its lifecycle. Read the
    * maintained table with [[committedRollup]].
    *
-   * Crash safety — the manifest commit protocol. Layout:
-   * {{{
-   *   rollupPath/_graft_scope          checkpoint identity (written once)
-   *   rollupPath/_manifests/m=<id>     one manifest per committed batch
-   *   rollupPath/data/b=<id>/          parquet: periods TOUCHED by batch id,
-   *                                    fully merged as of that batch
-   * }}}
-   *  - a batch writes ONLY its touched periods (merged with their previous
-   *    state) into a fresh `data/b=<batchId>` directory — per-batch work is
-   *    O(touched periods), not O(rollup history);
-   *  - the manifest maps every live period to the data directory holding
-   *    its current rows; it is written to a NEW file via temp+rename, so
-   *    the single atomic rename IS the commit point (no torn pointer, no
-   *    _SUCCESS races);
-   *  - the committed state is the highest-numbered manifest
-   *    ([[committedVersion]]); a replayed batch (id <= it) is skipped; a
-   *    batch that crashed mid-write left no manifest, so its replay
-   *    recomputes the SAME data directory from the SAME predecessors —
-   *    never a double count;
+   * Crash safety is the manifest commit protocol of [[CommitStore]] (its
+   * header has the layout, commit point, replay rule, GC rule and scope
+   * binding). What is particular to the rollup:
+   *  - `rollupPath/_manifests/m=<id>` maps every live period to the data
+   *    directory holding its current rows; a batch writes ONLY its touched
+   *    periods (merged with their previous state) into a fresh
+   *    `data/b=<batchId>` directory — per-batch work is O(touched
+   *    periods), not O(rollup history);
    *  - `period` is stored as an ordinary STRING data column (not a
    *    partition directory), so no partition-value type inference can
    *    fork date- or number-shaped periods;
    *  - empty batches commit nothing and touch nothing;
-   *  - data directories referenced by neither the new nor the previous
-   *    manifest are deleted after each commit (the previous manifest's
-   *    window protects readers mid-scan). A directory whose periods were
-   *    partially re-touched by later batches keeps its stale rows on disk
-   *    (readers filter them by the manifest's period map) until its last
-   *    referenced period moves — bounded read amplification in exchange
-   *    for never rewriting untouched periods.
-   *
-   * Restart discipline: batch ids are meaningful only within one streaming
-   * checkpoint. A `_graft_scope` file records the checkpoint identity;
-   * resuming the rollup under a DIFFERENT checkpoint fails fast with
-   * guidance instead of silently skipping or double-counting replayed
-   * batches. Without `checkpointLocation` the scope is unique per
-   * `maintainRollup` call, so a checkpoint-less rollup cannot be resumed
-   * (there is no safe way to resume one — the source would replay from
-   * scratch).
+   *  - a directory whose periods were partially re-touched by later
+   *    batches keeps its stale rows on disk (readers filter them by the
+   *    manifest's period map) until its last referenced period moves —
+   *    bounded read amplification in exchange for never rewriting
+   *    untouched periods.
    */
   def maintainRollup(
       events: DataFrame,
@@ -117,7 +95,7 @@ object TopnStreaming {
       numCounters: Int = GraftConf.DefaultNumberOfCounters,
       checkpointLocation: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = scopeOf(checkpointLocation)
+    val scope = CommitStore.scopeOf(checkpointLocation)
     val writer = events.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -129,99 +107,61 @@ object TopnStreaming {
     writer.start()
   }
 
-  private[streaming] def scopeOf(checkpointLocation: Option[String]): String =
-    checkpointLocation
-      .map(c => java.security.MessageDigest.getInstance("MD5")
-        .digest(c.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map("%02x".format(_)).mkString)
-      // no checkpoint -> no safe resume; a fresh scope per call makes any
-      // restart over the same rollup fail fast instead of dropping batches
-      .getOrElse(s"ephemeral-${java.util.UUID.randomUUID()}")
-
-  private[streaming] def fsOf(spark: org.apache.spark.sql.SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
   /** Rollup key for rows whose period expression evaluates to null. */
   val NullPeriodKey = "__GRAFT_NULL_PERIOD__"
-
-  private def manifestDir(root: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(root, "_manifests")
 
   /** Highest-numbered committed manifest id. None before the first commit.
     * Fails fast on a rollup written by the pre-manifest layout (v=<id>
     * directories) instead of silently reading it as empty. */
   def committedVersion(
-      spark: org.apache.spark.sql.SparkSession, rollupPath: String): Option[Long] = {
-    val (fs, root) = fsOf(spark, rollupPath)
-    val dir = manifestDir(root)
-    if (!fs.exists(dir)) {
-      if (fs.exists(root) && fs.listStatus(root).exists(st =>
-          st.isDirectory && st.getPath.getName.startsWith("v="))) {
-        throw new IllegalStateException(
-          s"rollup at $root uses the legacy v=<id> directory layout; this " +
-            "version reads manifest-committed rollups only. Migrate by " +
-            "reading the newest v= directory and seeding a new rollup path " +
-            "from it (or re-run the stream from scratch).")
-      }
-      None
-    }
-    else {
-      val ids = fs.listStatus(dir).toSeq.flatMap { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("m="))
-          scala.util.Try(name.stripPrefix("m=").toLong).toOption
-        else None
-      }
-      if (ids.isEmpty) None else Some(ids.max)
-    }
-  }
+      spark: org.apache.spark.sql.SparkSession, rollupPath: String): Option[Long] =
+    CommitStore.committedVersion(spark, rollupPath)
 
   /** Manifest contents: period -> id of the data directory holding its
     * current rows. Lines are `<dirId>\t<urlencoded period>`. */
   private def readManifest(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path,
-      version: Long): Map[String, Long] = {
-    val p = new org.apache.hadoop.fs.Path(manifestDir(root), s"m=$version")
-    val len = fs.getFileStatus(p).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = fs.open(p)
-    try in.readFully(0, buf) finally in.close()
-    new String(buf, java.nio.charset.StandardCharsets.UTF_8)
+      version: Long): Map[String, Long] =
+    CommitStore.readManifest(fs, root, version)
       .split("\n").iterator.filter(_.nonEmpty).map { line =>
         val Array(ver, enc) = line.split("\t", 2)
         java.net.URLDecoder.decode(enc, "UTF-8") -> ver.toLong
       }.toMap
-  }
 
   private def writeManifest(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path,
       version: Long,
-      entries: Map[String, Long]): Unit = {
-    val dir = manifestDir(root)
-    fs.mkdirs(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir,
-      s".m=$version.tmp-${java.util.UUID.randomUUID()}")
-    val body = entries.toSeq.sorted.map { case (period, ver) =>
-      s"$ver\t${java.net.URLEncoder.encode(period, "UTF-8")}"
-    }.mkString("\n")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(dir, s"m=$version")
-    // dst never exists (replays return before writing); rename is atomic.
-    // If a concurrent zombie driver committed the same batch first, its
-    // manifest is byte-identical (deterministic content) — accept it, but
-    // never leave the tmp file behind.
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      if (!fs.exists(dst)) {
-        throw new java.io.IOException(s"could not commit manifest $dst")
+      entries: Map[String, Long]): Unit =
+    CommitStore.commit(fs, root, version,
+      entries.toSeq.sorted.map { case (period, ver) =>
+        s"$ver\t${java.net.URLEncoder.encode(period, "UTF-8")}"
+      }.mkString("\n"))
+
+  /** Commit batch `batchId` as `manifest` with the `touched` keys moved to
+    * its data directory, then garbage-collect: drop data dirs referenced by
+    * neither the new nor the previous manifest (readers of the previous
+    * committed state stay safe), and manifests older than the previous
+    * one. */
+  private def commitTouched(
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path,
+      batchId: Long,
+      committed: Option[Long],
+      manifest: Map[String, Long],
+      touched: Set[String]): Unit = {
+    val newManifest = manifest ++ touched.iterator.map(_ -> batchId)
+    writeManifest(fs, root, batchId, newManifest)
+    val live = newManifest.values.toSet ++ manifest.values.toSet
+    val dataRoot = new org.apache.hadoop.fs.Path(root, "data")
+    if (fs.exists(dataRoot)) {
+      fs.listStatus(dataRoot).toSeq.filter(_.isDirectory).foreach { st =>
+        scala.util.Try(st.getPath.getName.stripPrefix("b=").toLong).toOption
+          .foreach { id => if (!live.contains(id)) fs.delete(st.getPath, true) }
       }
     }
+    CommitStore.dropManifestsBelow(fs, root, committed.getOrElse(batchId))
   }
 
   /** Assemble the table for a manifest: union of the referenced data dirs,
@@ -241,7 +181,7 @@ object TopnStreaming {
     * path did not exist yet). */
   def committedRollup(
       spark: org.apache.spark.sql.SparkSession, rollupPath: String): DataFrame = {
-    val (fs, root) = fsOf(spark, rollupPath)
+    val (fs, root) = CommitStore.fsOf(spark, rollupPath)
     committedVersion(spark, rollupPath)
       .flatMap(v => manifestTable(spark, rollupPath, readManifest(fs, root, v)))
       .getOrElse(spark.emptyDataFrame)
@@ -260,8 +200,8 @@ object TopnStreaming {
       numCounters: Int,
       scope: String): Unit = {
     val spark = batch.sparkSession
-    val (fs, root) = fsOf(spark, rollupPath)
-    checkScope(fs, root, scope)
+    val (fs, root) = CommitStore.fsOf(spark, rollupPath)
+    CommitStore.checkScope(fs, root, scope)
 
     val committed = committedVersion(spark, rollupPath)
     if (committed.exists(batchId <= _)) return // replay of a committed batch
@@ -303,26 +243,7 @@ object TopnStreaming {
       merged.write.mode("overwrite").parquet(s"$rollupPath/data/b=$batchId")
 
       // the atomic commit: one rename of the new manifest file
-      val newManifest = manifest ++ touched.iterator.map(_ -> batchId)
-      writeManifest(fs, root, batchId, newManifest)
-
-      // drop data dirs referenced by neither the new nor the previous
-      // manifest (readers of the previous committed state stay safe), and
-      // manifests older than the previous one
-      val live = newManifest.values.toSet ++ manifest.values.toSet
-      val dataRoot = new org.apache.hadoop.fs.Path(root, "data")
-      if (fs.exists(dataRoot)) {
-        fs.listStatus(dataRoot).toSeq.filter(_.isDirectory).foreach { st =>
-          scala.util.Try(st.getPath.getName.stripPrefix("b=").toLong).toOption
-            .foreach { id => if (!live.contains(id)) fs.delete(st.getPath, true) }
-        }
-      }
-      fs.listStatus(manifestDir(root)).toSeq.foreach { st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("m=").toLong).toOption
-          .foreach { id =>
-            if (id < committed.getOrElse(batchId)) fs.delete(st.getPath, false)
-          }
-      }
+      commitTouched(fs, root, batchId, committed, manifest, touched)
     } finally delta.unpersist()
   }
 
@@ -368,7 +289,7 @@ object TopnStreaming {
       checkpointLocation: Option[String] = None,
       numBuckets: Int = 64)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = scopeOf(checkpointLocation)
+    val scope = CommitStore.scopeOf(checkpointLocation)
     val writer = pairs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -397,9 +318,9 @@ object TopnStreaming {
       commitOnEmpty: Boolean = false): Unit = {
     require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
     val spark = batch.sparkSession
-    val (fs, root) = fsOf(spark, labelsPath)
-    checkScope(fs, root, scope)
-    checkStamp(fs, root, "_graft_cluster_buckets", numBuckets.toString,
+    val (fs, root) = CommitStore.fsOf(spark, labelsPath)
+    CommitStore.checkScope(fs, root, scope)
+    CommitStore.checkStamp(fs, root, "_graft_cluster_buckets", numBuckets.toString,
       (stored, given) =>
         s"labels at $root were bucketed with numBuckets=$stored; this query " +
           s"uses numBuckets=$given. Bucket membership is a pure function of " +
@@ -437,12 +358,10 @@ object TopnStreaming {
       val touched = delta.select(BucketCol).distinct()
         .collect().map(_.getString(0)).toSet
 
-      if (touched.isEmpty) {
-        // pairs were all self-loops or internal to existing clusters: no
-        // label moved. Commit the unchanged manifest so the batch id still
-        // advances (replay detection stays exact), write no data.
-        writeManifest(fs, root, batchId, manifest)
-      } else {
+      // pairs that were all self-loops or internal to existing clusters
+      // move no label: the unchanged manifest still commits so the batch id
+      // advances (replay detection stays exact), and no data is written
+      if (touched.nonEmpty) {
         // previous state of ONLY the touched buckets; changed docs' old
         // rows are replaced, the bucket's other rows carry over
         val oldTouched = manifestTable(spark, labelsPath,
@@ -454,28 +373,8 @@ object TopnStreaming {
               .unionByName(delta)
         }
         merged.write.mode("overwrite").parquet(s"$labelsPath/data/b=$batchId")
-        writeManifest(fs, root, batchId,
-          manifest ++ touched.iterator.map(_ -> batchId))
       }
-
-      // drop data dirs referenced by neither the new nor the previous
-      // manifest (readers of the previous committed state stay safe), and
-      // manifests older than the previous one
-      val newManifest = readManifest(fs, root, batchId)
-      val live = newManifest.values.toSet ++ manifest.values.toSet
-      val dataRoot = new org.apache.hadoop.fs.Path(root, "data")
-      if (fs.exists(dataRoot)) {
-        fs.listStatus(dataRoot).toSeq.filter(_.isDirectory).foreach { st =>
-          scala.util.Try(st.getPath.getName.stripPrefix("b=").toLong).toOption
-            .foreach { id => if (!live.contains(id)) fs.delete(st.getPath, true) }
-        }
-      }
-      fs.listStatus(manifestDir(root)).toSeq.foreach { st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("m=").toLong).toOption
-          .foreach { id =>
-            if (id < committed.getOrElse(batchId)) fs.delete(st.getPath, false)
-          }
-      }
+      commitTouched(fs, root, batchId, committed, manifest, touched)
     } finally delta.unpersist()
   }
 
@@ -483,7 +382,7 @@ object TopnStreaming {
     * DataFrame before the first commit. */
   def committedClusters(
       spark: org.apache.spark.sql.SparkSession, labelsPath: String): DataFrame = {
-    val (fs, root) = fsOf(spark, labelsPath)
+    val (fs, root) = CommitStore.fsOf(spark, labelsPath)
     committedVersion(spark, labelsPath)
       .flatMap(v => manifestTable(spark, labelsPath,
         readManifest(fs, root, v), BucketCol))
@@ -531,7 +430,7 @@ object TopnStreaming {
       numBuckets: Int = 64,
       tileSize: Int = 10000)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = scopeOf(checkpointLocation)
+    val scope = CommitStore.scopeOf(checkpointLocation)
     val writer = vectors.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -624,7 +523,7 @@ object TopnStreaming {
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       beforeBatch: Long): Option[DataFrame] = {
-    val (fs, root) = fsOf(spark, s"$storePath/vectors")
+    val (fs, root) = CommitStore.fsOf(spark, s"$storePath/vectors")
     if (!fs.exists(root)) return None
     val dirs = fs.listStatus(root).toSeq.filter(_.isDirectory).flatMap { st =>
       scala.util.Try(st.getPath.getName.stripPrefix("b=").toLong).toOption
@@ -633,7 +532,7 @@ object TopnStreaming {
     if (dirs.isEmpty) None
     // union, not a multi-root read: the roots are partition-style `b=N`
     // directories, which multi-root partition discovery rejects as a
-    // conflicting structure (ActivityStreaming.readChain's callers read
+    // conflicting structure (CommitStore.readChain's callers read
     // non-partition-named leaves); the vectors chain is bounded by the
     // snapshot fold, so the O(batches) plan is acceptable here
     else Some(dirs.map(spark.read.parquet(_)).reduce(_ unionByName _))
@@ -662,62 +561,6 @@ object TopnStreaming {
       .select(col("doc_id"), col("cell"),
         coalesce(col("__graft_cc_id"), col("doc_id")).as("cluster_id"))
       .withColumn("keep", col("doc_id") === col("cluster_id"))
-  }
-
-  /** First writer records the scope (temp+rename, so never torn); later
-    * batches must match it. Catches the "fresh checkpoint over an existing
-    * rollup" operator error, where batch ids restart at 0 and would be
-    * silently skipped as replays (data loss) or re-merged (double count). */
-  private[streaming] def checkScope(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      scope: String): Unit =
-    checkStamp(fs, root, "_graft_scope", scope,
-      (stored, given) =>
-        s"rollup at $root was maintained under a different streaming " +
-          s"checkpoint (scope $stored, this query: $given). Batch ids are " +
-          "only meaningful within one checkpoint; continuing would " +
-          "double-count or silently drop replayed batches. Resume with the " +
-          "original checkpointLocation, or start a NEW rollup path (and " +
-          "optionally seed it from the old one with topn_union).")
-
-  /** Write-once stamp file under `root`: the first writer records `value`
-    * (temp+rename, so never torn); later calls must present the same value
-    * or fail with `mismatch(stored, given)`. */
-  private[streaming] def checkStamp(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      fileName: String,
-      value: String,
-      mismatch: (String, String) => String,
-      attemptsLeft: Int = 3): Unit = {
-    val stampPath = new org.apache.hadoop.fs.Path(root, fileName)
-    if (fs.exists(stampPath)) {
-      val len = fs.getFileStatus(stampPath).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = fs.open(stampPath)
-      try in.readFully(0, buf) finally in.close()
-      val stored = new String(buf, java.nio.charset.StandardCharsets.UTF_8).trim
-      if (stored != value) {
-        throw new IllegalStateException(mismatch(stored, value))
-      }
-    } else if (attemptsLeft <= 0) {
-      throw new java.io.IOException(
-        s"could not establish stamp at $stampPath (rename kept failing)")
-    } else {
-      val tmp = new org.apache.hadoop.fs.Path(root,
-        s"$fileName.tmp-${java.util.UUID.randomUUID()}")
-      fs.mkdirs(root)
-      val out = fs.create(tmp, true)
-      try out.write(value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (!fs.rename(tmp, stampPath)) {
-        // concurrent first-writer may have won the rename: re-check, with
-        // bounded retries in case rename fails for transient reasons
-        fs.delete(tmp, false)
-        checkStamp(fs, root, fileName, value, mismatch, attemptsLeft - 1)
-      }
-    }
   }
 
   case class KeyedItem(key: String, item: String)

@@ -1,0 +1,105 @@
+package graft
+
+import java.nio.charset.StandardCharsets.UTF_8
+
+import graft.streaming.CommitStore
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
+import org.scalatest.funsuite.AnyFunSuite
+
+/**
+ * The streaming stores' commit primitives, on the local filesystem: the
+ * atomic publish, the write-once stamp and the manifest listing. A
+ * rename that refuses an existing destination (HDFS semantics; the local
+ * filesystem replaces it instead) is modelled by a filter filesystem.
+ */
+class CommitStoreSpec extends AnyFunSuite {
+
+  private val local = FileSystem.getLocal(new Configuration())
+
+  private def tmpRoot(prefix: String): Path =
+    new Path(java.nio.file.Files.createTempDirectory(prefix).toString, "s")
+
+  private def names(fs: FileSystem, dir: Path): Seq[String] =
+    fs.listStatus(dir).toSeq.map(_.getPath.getName).sorted
+
+  private def write(fs: FileSystem, p: Path, body: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(body.getBytes(UTF_8)) finally out.close()
+  }
+
+  /** HDFS rename semantics: never replace an existing destination. When
+    * `rival` is set, a concurrent writer publishes it just before this
+    * rename runs. */
+  private def hdfsLike(rival: Option[String] = None): FileSystem =
+    new FilterFileSystem(local) {
+      override def rename(src: Path, dst: Path): Boolean = {
+        rival.foreach(write(local, dst, _))
+        !local.exists(dst) && local.rename(src, dst)
+      }
+    }
+
+  test("publish leaves no temp file and accepts a destination that already exists") {
+    val root = tmpRoot("graft_cs_publish")
+    val dst = new Path(root, "_manifests/m=0")
+    assert(CommitStore.publish(local, dst, "b=0", "commit manifest"))
+    assert(CommitStore.readText(local, dst) === "b=0")
+    // a zombie's identical commit finds the destination in place
+    val fs = hdfsLike()
+    assert(!CommitStore.publish(fs, dst, "b=0", "commit manifest"))
+    assert(CommitStore.readText(local, dst) === "b=0")
+    assert(!names(local, dst.getParent).exists(_.contains(".tmp-")),
+      names(local, dst.getParent).mkString(","))
+    // a rename that fails with no destination in place is an error
+    val never = new FilterFileSystem(local) {
+      override def rename(src: Path, dst: Path): Boolean = false
+    }
+    val e = intercept[java.io.IOException](
+      CommitStore.publish(never, new Path(root, "_manifests/m=1"), "b=1",
+        "commit manifest"))
+    assert(e.getMessage.contains("could not commit manifest"))
+    assert(names(local, dst.getParent).filterNot(_.endsWith(".crc")) === Seq("m=0"))
+  }
+
+  test("write-once stamp: absent -> written, equal -> no-op, different -> the caller's error") {
+    val root = tmpRoot("graft_cs_stamp")
+    val stamp = new Path(root, "_graft_params")
+    def check(fs: FileSystem, value: String): Unit =
+      CommitStore.checkStamp(fs, root, "_graft_params", value,
+        (stored, given) => s"pinned '$stored', given '$given'")
+    check(local, "seqLen=8")
+    assert(CommitStore.readText(local, stamp) === "seqLen=8")
+    check(local, "seqLen=8")
+    val e = intercept[IllegalStateException](check(local, "seqLen=16"))
+    assert(e.getMessage === "pinned 'seqLen=8', given 'seqLen=16'")
+    assert(CommitStore.readText(local, stamp) === "seqLen=8")
+    // the caller picks the exception type
+    intercept[IllegalArgumentException](
+      CommitStore.checkStamp(local, root, "_graft_params", "seqLen=16",
+        (_, _) => "taken", new IllegalArgumentException(_)))
+    assert(!names(local, root).exists(_.contains(".tmp-")),
+      names(local, root).mkString(","))
+
+    // a writer that loses the first-write race is held to the winner's value
+    val raced = tmpRoot("graft_cs_stamp_race")
+    CommitStore.checkStamp(hdfsLike(Some("a")), raced, "_graft_scope", "a",
+      (_, _) => "unreachable")
+    val lost = tmpRoot("graft_cs_stamp_lost")
+    val e2 = intercept[IllegalStateException](
+      CommitStore.checkStamp(hdfsLike(Some("a")), lost, "_graft_scope", "b",
+        (stored, given) => s"pinned '$stored', given '$given'"))
+    assert(e2.getMessage === "pinned 'a', given 'b'")
+    assert(CommitStore.readText(local, new Path(lost, "_graft_scope")) === "a")
+    assert(!names(local, lost).exists(_.contains(".tmp-")),
+      names(local, lost).mkString(","))
+  }
+
+  test("committedIds ignores temp and non-numeric names and sorts numerically") {
+    val root = tmpRoot("graft_cs_ids")
+    assert(CommitStore.committedIds(local, root, "_manifests", "m=").isEmpty)
+    for (n <- Seq("m=9", "m=10", "m=2", ".m=11.tmp-0f3a", "m=x", "notes"))
+      write(local, new Path(root, s"_manifests/$n"), "b=0")
+    assert(CommitStore.committedIds(local, root, "_manifests", "m=") ===
+      Seq(2L, 9L, 10L))
+  }
+}

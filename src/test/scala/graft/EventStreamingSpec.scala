@@ -673,4 +673,42 @@ class EventStreamingSpec extends AnyFunSuite {
       ActivityStreaming.committedPairs(spark, store).count())
     assert(new java.io.File(s"$dst/data").list().length === 1)
   }
+
+  test("compacting into a stamped destination: equal stamps are a no-op, a different pin fails and stays") {
+    val store = tmp("graft_act_stamps")
+    ActivityStreaming.activityBatch(ev.limit(50), 0L, store,
+      Seq("user_id"), "ts", Week, "sc")
+    val src = java.nio.file.Paths.get(store)
+    def stamp(dst: String, name: String, body: String): Unit = {
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(dst, name), body)
+    }
+    def read(dir: String, name: String): String =
+      java.nio.file.Files.readString(java.nio.file.Paths.get(dir, name))
+    def tempFiles(dir: String): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+        .map(_.getFileName.toString).filter(_.contains(".tmp-")).toSeq
+    }
+    // a destination already carrying the source's own stamps (a retried
+    // compaction) folds as if it were empty
+    val same = tmp("graft_act_stamps_same")
+    for (name <- Seq("_graft_scope", "_graft_params"))
+      stamp(same, name, java.nio.file.Files.readString(src.resolve(name)))
+    ActivityStreaming.compactStore(spark, store, same)
+    assert(ActivityStreaming.committedPairs(spark, same).count() ===
+      ActivityStreaming.committedPairs(spark, store).count())
+    assert(read(same, "_graft_params") === read(store, "_graft_params"))
+    assert(tempFiles(same).isEmpty, tempFiles(same).mkString(","))
+    // a destination pinned to other parameters keeps its pin and gets no data
+    val other = tmp("graft_act_stamps_other")
+    stamp(other, "_graft_params", "periodSeconds=86400,keys=user_id")
+    val e = intercept[IllegalStateException](
+      ActivityStreaming.compactStore(spark, store, other))
+    assert(e.getMessage.contains("already carries a different _graft_params pin"),
+      e.getMessage)
+    assert(read(other, "_graft_params") === "periodSeconds=86400,keys=user_id")
+    assert(!new java.io.File(s"$other/data").exists())
+    assert(tempFiles(other).isEmpty, tempFiles(other).mkString(","))
+  }
 }
