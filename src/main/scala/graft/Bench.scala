@@ -3,15 +3,24 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
 /**
  * Benchmark main: runs every SparkEntry query against
  * `SPARK_GRAFT_SF_DIR` (default sf0.1) on local[32] and prints ONE JSON
- * line `{"metric":"total","value":N,"unit":"sec","queries":{...},
- * "ops":{...},"growth":{...},"sf":...}`.
+ * line `{"metric":"total","value":N,"unit":"sec","cpus":N,
+ * "queries":{...},"ops":{...},"growth":{...},"iqr":{...},"failed":{...},
+ * "sf":...}`.
+ *
+ * Every row is timed one way ([[timeRow]]): one untimed warm-up at sf0.001,
+ * then [[Reps]] runs that each build the plan and write every row to the
+ * `noop` sink; the row records the median, and `iqr` its interquartile
+ * range. A row whose run throws is listed in `failed` with the exception
+ * class instead, and the run exits 1 after the contract line.
  *
  *  - `value` / `queries`: the driver's CORRECTNESS queries — `value` is
- *    their sum (round-over-round comparable; new queries change it, noted
- *    in docs/BENCH_NOTES.md).
+ *    the sum of their medians (new queries change it, noted in
+ *    docs/BENCH_NOTES.md).
  *  - `ops`: SparkEntry.benchOnly — the operator subplans of the queries
  *    whose correctness spelling embeds an in-plan verification twin.
  *    These are what a user actually pays for the operator.
@@ -117,8 +126,7 @@ object Bench {
   /** Frozen LID model for the serve-slope row — trained ONCE on the x1
     * corpus, so every g_lid_serve point prices only the scoring pass.
     * main RESOLVES this before the growth suite's clock starts (training
-    * must not land inside the first timed x1 sample — the pricing claim
-    * holds by construction, not by the min-of-2 anchor policy). The cache
+    * must not land inside the first timed x1 rep). The cache
     * stores the OWNING session next to each model and only serves an
     * entry whose session is THIS session object (`eq`) — a bare
     * identityHashCode key could recur after a stopped session is GC'd and
@@ -146,10 +154,10 @@ object Bench {
     * localCheckpoint: the pair table is tiny (thousands of rows), the
     * lineage truncation keeps repeated CC reps from re-running the pair
     * stage, and — unlike catalog cache — the width-sweep rows'
-    * clearCache() cannot wipe it between the timed pass and the deferred
-    * retry pass. main PRE-RESOLVES every scale before the growth clock
-    * starts (the lidServeModel doctrine); session-eq guard + stopped-
-    * session eviction as in [[lidServeModels]]. */
+    * clearCache() cannot wipe it between reps. main PRE-RESOLVES every
+    * scale before the growth clock starts (the lidServeModel doctrine);
+    * session-eq guard + stopped-session eviction as in
+    * [[lidServeModels]]. */
   private val dedupPairsFixtures = new java.util.concurrent.ConcurrentHashMap[
     String, (SparkSession, DataFrame)]()
   private[graft] def dedupPairsFixture(
@@ -178,10 +186,10 @@ object Bench {
   private def growthSuite(spark: SparkSession, dir: String)
       : Seq[(String, Seq[Int], Int => DataFrame)] = {
     // base documents count for knownCount pass-through (column-pruned
-    // metadata count; resolved lazily on first use — the x1 anchor's
-    // min-of-2 discards the rep that pays it): the dedup rows' verify
-    // joins size their build side from the corpus count (VerifyJoin),
-    // and c × base is EXACTLY the count the operator would compute
+    // metadata count, resolved lazily on first use): the dedup rows'
+    // verify joins size their build side from the corpus count
+    // (VerifyJoin), and c × base is EXACTLY the count the operator would
+    // compute
     lazy val nDocsBase = spark.read
       .parquet(s"$dir/documents.parquet").count()
     lazy val nEmbBase = spark.read
@@ -283,10 +291,8 @@ object Bench {
         scaledDocs(spark, dir, c), "doc_id", "text", n = 8)),
     // the stride-1 tier: one hash row per TOKEN (vs per chunk above) —
     // the dense window shuffle is exactly what must stay linear at scale.
-    // The final agg FORCES the rebuild: a bare count() would let Catalyst
-    // eliminate the row-preserving drop-list join and prune the whole
-    // window subtree (measured: flat 0.3s at any scale — measuring the
-    // optimizer, not the operator)
+    // The final agg consumes every rebuilt row (it dates from the count()
+    // runner, under which Catalyst pruned the whole window subtree)
     ("g_exact_substr", Seq(1, 4, 10, 32), (c: Int) =>
       graft.pipeline.Spans.dropDuplicatedSubstrings(
         scaledDocs(spark, dir, c), "doc_id", "text", n = 8)
@@ -353,8 +359,8 @@ object Bench {
         "doc_id", "text")),
     // frozen x1 vocabulary applied to the scaled corpus (the per-copy
     // token remap makes every copy-i token OOV, exercising that path);
-    // the size filter keeps the id-assembly aggregate load-bearing under
-    // the runner's count()
+    // the size filter dates from the count() runner, which pruned the
+    // id-assembly aggregate without it
     ("g_token_ids", Seq(1, 4, 10), (c: Int) => {
       val vocab = graft.pipeline.Bpe.buildVocab(
         scaledDocs(spark, dir, 1), "text", graft.pipeline.Bpe.DemoMerges)
@@ -368,8 +374,8 @@ object Bench {
     ("g_corpus_report", Seq(1, 4, 10), (c: Int) =>
       graft.pipeline.TextAnalysis.corpusReport(
         scaledDocs(spark, dir, c), "text")),
-    // the runner's count() would prune an unused `pos` and with it the
-    // whole shard window — the filter keeps the window load-bearing
+    // the filter dates from the count() runner, which pruned the unused
+    // `pos` and with it the whole shard window
     ("g_shuffle_order", Seq(1, 4, 10), (c: Int) =>
       graft.pipeline.Sampling.shuffleOrder(
         scaledDocs(spark, dir, c).select(col("doc_id")), "doc_id", 64)
@@ -377,9 +383,9 @@ object Bench {
     // fixed 20-query probe against a compressed index growing 1x -> 10x,
     // models FROZEN on the x1 corpus (the production pattern — train
     // once, reuse; lazy so the one-time driver-side training lands in
-    // the x1 anchor's first rep, which min-of-2 discards). The slope is
-    // the encode scan + the probed cells' ADC scan; rerank stays
-    // shortlist-sized at every scale
+    // the first x1 rep, the slowest of three, which the median leaves
+    // out). The slope is the encode scan + the probed cells' ADC scan;
+    // rerank stays shortlist-sized at every scale
     ("g_ann_ivfpq", Seq(1, 4, 10), {
       lazy val base = scaledEmb(spark, dir, 1)
       lazy val ivf = graft.pipeline.IVF.train(base, "vec_id", "embedding", k = 16)
@@ -392,7 +398,7 @@ object Bench {
     // SemDeDup end to end (cell assignment -> within-cell pair gen ->
     // vector-fetch verify joins -> cosine gate -> CC labels) under a
     // FROZEN x1 coarse quantizer (lazy; the one-time training lands in
-    // the min-of-2-discarded first x1 rep, the g_ann_ivfpq doctrine).
+    // the first x1 rep, which the median leaves out, as for g_ann_ivfpq).
     // This is the measured slope for the r18 VerifyJoin ladder's
     // SemDedup.edges path; knownCount keeps the ladder decision free
     // inside the timed thunk. tau at the paper's near-dup bar.
@@ -424,11 +430,11 @@ object Bench {
     }),
     // Width sweep, not an input-scale sweep — deliberately LAST in the
     // suite: the builders clearCache, and running them after every other
-    // growth entry keeps the wipe from cooling caches those entries (or
-    // the suite-end bootstrap pass) rely on. The "scale" axis is the FRAME
-    // WIDTH over a fixed daily rollup: the range-join form replicates each
-    // period's sketch `width` times, so its cost must grow with the axis,
-    // while the block-decomposed wide-frame form holds the
+    // growth entry keeps the wipe from cooling caches those entries rely
+    // on. The "scale" axis is the FRAME WIDTH over a fixed daily rollup:
+    // the range-join form replicates each period's sketch `width` times,
+    // so its cost must grow with the axis, while the block-decomposed
+    // wide-frame form holds the
     // ~3-merges-per-period invariant (Rollups.slidingUnionWideFrame doc)
     // and stays ~flat — the ratio between the two rows IS the claim.
     // The rollup is SYNTHETIC (10,000 periods x 200 uniques/day, counters
@@ -436,17 +442,15 @@ object Bench {
     // forms overhead-bound (~1s floor — measured; the merge term is tens of
     // ms), so the slope would measure plan overhead, not the operator. The
     // incremental_neardup precedent: synthesize the shape the claim is
-    // about. The final agg consumes the merged sketches — under the
-    // runner's bare count() Catalyst prunes the range-join form's merge
-    // aggregate entirely (while the wide-frame form's persist forces its
-    // windows) and the sweep would compare a real merge against a pruned
-    // one.
+    // about. The final agg consumes the merged sketches of both forms
+    // alike (it dates from the count() runner, which pruned the range-join
+    // form's merge aggregate entirely).
     // clearCache before each build: slidingUnionWideFrame persists its
     // periods-sized running table inside the returned plan, and Spark's
     // CacheManager matches it by canonicalized plan — without the clear,
-    // reps 2..n of a width (and the min-of-2 anchor) would measure the
-    // CACHED running table instead of the operator, while the range-join
-    // form (no persist) pays full price every rep.
+    // reps 2..n of a width would measure the CACHED running table instead
+    // of the operator, while the range-join form (no persist) pays full
+    // price every rep.
     ("g_sliding_rangejoin_w", Seq(7, 30, 90, 365), (w: Int) => {
       spark.catalog.clearCache()
       graft.operators.Rollups.slidingUnion(
@@ -473,13 +477,12 @@ object Bench {
       .groupBy(col("day"))
       .agg(TopnFunctions.topn_add_agg(col("item"), 100).as("sketch"))
 
-  /** Where a run's artifact lands by default: the committed full-suite
-    * file ONLY when the run IS the full suite — any deviation from the
-    * default row set (a SPARK_GRAFT_ONLY filter, growth disabled, audit
-    * rows toggled on) diverts to the side file, because a partial
-    * artifact at the committed path silently degrades loadAnchors /
-    * loadGrowthAnchors for every later run (the r15 clobber, generalized
-    * per r15 ADVICE). */
+  /** Where a full run's artifact lands by default: the full-suite file
+    * ONLY when the run IS the full suite — any deviation from the default
+    * row set (a SPARK_GRAFT_ONLY filter, growth disabled, audit rows
+    * toggled on) diverts to the side file, so a partial run never
+    * overwrites the full-suite artifact (the r15 clobber: a one-row
+    * funnel run shipped as BENCH_local.json). */
   private[graft] def defaultOutFile(
       only: Option[Seq[String]],
       growthOn: Boolean,
@@ -487,532 +490,95 @@ object Bench {
     if (only.isEmpty && growthOn && skipAudits) "BENCH_local.json"
     else "BENCH_only.json"
 
-  /** Host-speed SENTINEL: two FROZEN Spark jobs whose quiet-host cost is
-    * recorded in every committed artifact (`"sentinel_sec"`) —
-    *
-    *  1. a CPU leg: range + xxhash64 + bit_xor over 2B rows on 32
-    *     partitions (codegen, scheduler, all 32 cores — the v2 workload
-    *     halved to make room for leg 2);
-    *  2. a SHUFFLE+DISK leg (new in v3): 24M UNIQUE xxhash64 keys through
-    *     a groupBy — unique keys defeat map-side combine, so the full
-    *     ~0.5 GB of shuffle blocks is written to and read back from local
-    *     disk. The v2 pure-CPU sentinel was blind to the I/O axis and
-    *     measured 1.033 against a window whose suite rows drifted a real
-    *     1.14x (r19 pass 2) — most of the suite's load sensitivity is
-    *     shuffle/disk, so the sentinel must share it.
-    *
-    * The workload is all built-ins, so engine changes cannot move the
-    * PLAN; JVM state (heap pressure, GC debt from the suite's own
-    * phases) still can, which is why [[measureSentinel]] runs System.gc()
-    * before sampling and the promotion gate keeps a RAW-total backstop
-    * (see promotionTarget's `rawOk`) — normalization can stretch a bar,
-    * never unboundedly. NEVER change the constants once a sentinel has
-    * been recorded without bumping [[SentinelVersion]]: a changed
-    * workload silently re-bases every later host factor (the r19
-    * calibration accident, BenchSpec-pinned). */
-  private[graft] val SentinelVersion = 3
-  private[graft] def sentinelOnce(spark: SparkSession): Double =
-    time {
-      spark.range(0L, 2000000000L, 1L, 32)
-        .select(bit_xor(xxhash64(col("id")))).head()
-      spark.range(0L, 24000000L, 1L, 32)
-        .groupBy(xxhash64(col("id")).as("k")).agg(count(lit(1)).as("c"))
-        .agg(bit_xor(col("k").bitwiseXOR(col("c")))).head()
-    }
+  /** Timed repetitions per row, after one untimed warm-up. */
+  private[graft] val Reps = 3
 
-  /** min-of-5 of [[sentinelOnce]] (v3 widened from 3: the v2 factor
-    * resolved ~±8% against a 1.05 promotion slack — BENCH_NOTES r19's
-    * open item). System.gc() first strips collectible suite state so a
-    * GC-debt-loaded JVM inflates the sample as little as possible (the
-    * r19 ADVICE channel: an engine change that leaks heap would
-    * otherwise raise the sentinel, raise the factor, and let a slower
-    * build normalize its way through the gate — the raw backstop closes
-    * what gc() cannot). Deliberately NOT clearCache(): the suite's
-    * operator-internal persists (frozen models, checkpointed fixtures)
-    * are load-bearing for the deferred retry passes that run AFTER the
-    * s2/s3 samples, and wiping them would inflate those retries instead.
-    * Returns -1 when every rep fails. */
-  private def measureSentinel(spark: SparkSession): Double = {
-    System.gc()
-    // two DISCARDED warm reps: the v3 shuffle leg's first executions in
-    // a cold window pay shuffle-writer JIT + page-cache warm-up
-    // (calibrated: rep 1 ~2.6x steady state, rep 2 still ~15% over,
-    // steady by rep 3-4 — the SentCal table in BENCH_NOTES r20), which
-    // is not the host signal the reference wants
-    sentinelOnce(spark); sentinelOnce(spark)
-    val reps = (1 to 5).map(_ => sentinelOnce(spark)).filter(_ >= 0)
-    if (reps.isEmpty) -1.0 else reps.min
+  /** A row's wall seconds over [[Reps]] runs: the median and the
+    * interquartile range, so every recorded number carries its spread. */
+  private[graft] final case class Timing(median: Double, iqr: Double)
+
+  /** Median and IQR of `samples`, quartiles linearly interpolated between
+    * order statistics (numpy's default; for three samples the IQR is half
+    * the range). */
+  private[graft] def medianIqr(samples: Seq[Double]): Timing = {
+    require(samples.nonEmpty, "no samples")
+    val s = samples.sorted.toIndexedSeq
+    def q(p: Double): Double = {
+      val x = p * (s.size - 1)
+      val lo = x.toInt
+      val hi = math.min(lo + 1, s.size - 1)
+      s(lo) + (x - lo) * (s(hi) - s(lo))
+    }
+    Timing(q(0.5), q(0.75) - q(0.25))
   }
 
-  /** The reference sentinel — a ROBUST quiet floor over all recorded
-    * `"sentinel_sec"` values across ALL BENCH_*.json artifacts (committed
-    * AND staging, unlike the anchor loaders): the sentinel workload is
-    * frozen and load only ever ADDS time, so a staging recording (a
-    * diverted pass, a filtered run) is exactly as valid a quiet floor as
-    * a committed one — and including them bootstraps the reference in
-    * the same round a sentinel version ships instead of waiting for a
-    * pass to promote. Crashed recordings (-1) are filtered; only
-    * SUITE-CONFIG recordings count (the explicit `"sentinel_cfg"` field
-    * — the x100 mode's 24g long-settled JVM floors ~10% lower, and the
-    * r19 pass-4 miscalibration showed a cross-config reference inflating
-    * every later factor); and only recordings carrying the CURRENT
-    * [[SentinelVersion]] count — a recording of a different workload is
-    * not a reference, it is a re-basing accident.
-    *
-    * ROBUST floor (r19 ADVICE): the all-time raw minimum let one
-    * anomalously fast recording (turbo burst, timer glitch) permanently
-    * tighten the reference and loosen every later bar by that ratio.
-    * Now a minimum must be CORROBORATED — a second, distinct-valued
-    * recording within 5% — before it becomes the reference; with no
-    * corroborated minimum the MEDIAN recording stands (conservative:
-    * a larger reference only ever tightens bars), and a single
-    * recording is its own bootstrap reference. Values are deduplicated
-    * first so one recording copied across artifact files (the driver
-    * tails duplicate the committed line) cannot corroborate itself. */
-  /** The core-count an artifact was recorded under: first `"cpus":N`
-    * in the file (the driver's wrapper JSON carries it, and every line
-    * this bench writes from r21 on carries it too). Absent -> 32, the
-    * driver's main-bench config: every pre-r21 committed artifact except
-    * BENCH_r20_c8.json (which has the driver's own `"cpus": 8` field)
-    * was recorded at 32 cores. A recording's seconds are only comparable
-    * to runs at the SAME core count — the r20 promotion accident: the
-    * driver's local[8] run beat the 32-core gate on normalization
-    * arithmetic and became the committed proof, so gate, sentinel
-    * reference and anchors now all filter on this. */
-  private[graft] def artifactCpus(text: String): Int =
-    """"cpus":\s*(\d+)""".r.findFirstMatchIn(text)
-      .map(_.group(1).toInt).getOrElse(32)
+  /** Compute every column of every row and discard it: the noop sink has
+    * no write cost, and unlike a bare count() Catalyst cannot prune the
+    * columns, and with them the operator, that the row exists to price. */
+  private[graft] def materialize(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
 
-  private[graft] def committedSentinel(
-      benchDir: String, cpus: Int = 32): Option[Double] = {
-    val files = Option(new java.io.File(benchDir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.getName.matches("BENCH_[A-Za-z0-9_]+\\.json"))
-    // the explicit config marker (r19 ADVICE: the previous
-    // field-adjacency discrimination — host_factor trailing the value —
-    // silently broke once mid-round when sentinel_med was inserted).
-    // Every writer emits the (sentinel_v, sentinel_cfg, sentinel_sec)
-    // triplet ATOMICALLY in this order — the triplet is the contract,
-    // not an incidental layout, and fields added later land AFTER it.
-    val pat = ("""\\?"sentinel_v\\?":""" + SentinelVersion +
-      """,\\?"sentinel_cfg\\?":\\?"suite\\?",\\?"sentinel_sec\\?":(\d+(?:\.\d+)?)""").r
-    val vals = files.flatMap { f =>
-      val text =
-        try java.nio.file.Files.readString(f.toPath)
-        catch { case _: Throwable => "" }
-      // same-core-count recordings only: a local[8] sentinel floor is a
-      // different machine profile, not a quieter window of this one
-      if (artifactCpus(text) != cpus) Iterator.empty
-      else pat.findAllMatchIn(text).map(_.group(1).toDouble).filter(_ > 0)
-    }
-    val distinctSorted = vals.distinct.sorted
-    distinctSorted.length match {
-      case 0 => None
-      case 1 => Some(distinctSorted.head)
-      case len =>
-        distinctSorted.init.zipWithIndex.collectFirst {
-          case (v, i) if distinctSorted(i + 1) <= v * 1.05 => v
-        }.orElse(Some(distinctSorted(len / 2)))
-    }
-  }
+  /** The one timing protocol of the bench tools: build and materialize
+    * `df()` [[Reps]] times, the plan build inside the clock. */
+  private[graft] def timeRow(df: () => DataFrame): Timing =
+    medianIqr((1 to Reps).map { _ =>
+      val t0 = System.nanoTime()
+      materialize(df())
+      (System.nanoTime() - t0) / 1e9
+    })
 
-  /** The host factor: how much slower THIS machine window is than the
-    * quietest window any committed artifact recorded. Clamped to
-    * [1.0, 1.5] — bars only ever LOOSEN on a slow host (a fast host keeps
-    * the honest committed floors), and past 1.5 the window is so hostile
-    * the run should divert rather than stretch bars further (r18's
-    * observed drift was 1.1-1.26x). Missing reference (no committed
-    * sentinel yet) or a failed measurement -> 1.0, the pre-r19 behavior. */
-  private[graft] def hostFactor(
-      measuredSentinel: Double,
-      committedRef: Option[Double],
-      hi: Double = 1.5): Double =
-    committedRef.filter(r => r > 0 && measuredSentinel > 0)
-      .map(r => math.min(hi, math.max(1.0, measuredSentinel / r)))
-      .getOrElse(1.0)
+  /** `timed`, or None after recording `name -> exception class` in
+    * `failed` when it throws a non-fatal error. Fatal errors propagate. */
+  private[graft] def attempt(
+      name: String, failed: scala.collection.mutable.Map[String, String])(
+      timed: => Timing): Option[Timing] =
+    try Some(timed)
+    catch { case NonFatal(e) => failed(name) = e.getClass.getName; None }
 
-  /** The committed proof's own recorded host factor (BENCH_local.json's
-    * `"host_factor"`), 1.0 when absent (pre-r19 artifacts) or unreadable.
-    * Promotion compares NORMALIZED totals on BOTH sides
-    * (new/newFactor vs committed/committedFactor): promoting a raw total
-    * recorded on a slow host would otherwise ratchet the committed bar
-    * upward round over round. */
-  private[graft] def committedHostFactor(benchDir: String): Double = {
-    val p = java.nio.file.Paths.get(benchDir, "BENCH_local.json")
-    if (!java.nio.file.Files.exists(p)) return 1.0
-    (try {
-      """"host_factor":(\d+(?:\.\d+)?)""".r
-        .findFirstMatchIn(java.nio.file.Files.readString(p))
-        .map(_.group(1).toDouble).filter(_ >= 1.0)
-    } catch { case _: Throwable => None }).getOrElse(1.0)
-  }
+  /** The smallest scale factor, next to the measured one: every row runs
+    * there once, untimed, before its timed reps, so the reps measure the
+    * engine and not first-call JIT and codegen. */
+  private[graft] def warmDir(sfDir: String): String =
+    java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001").toString
 
-  /** The committed proof's recorded MEDIAN sentinel sample
-    * (BENCH_local.json's `"sentinel_med"`), None when absent (pre-r19.3
-    * artifacts). When present, the promotion gate normalizes BOTH sides
-    * against the CURRENT reference — raw/hostFactor(med, ref) on each —
-    * so the reference cancels and the comparison is invariant to the
-    * reference floor tightening between the two recordings. (Observed
-    * without this: pass 3 recorded its factor against a 0.720 floor,
-    * pass 5 against the meanwhile-tightened 0.666 floor, and a
-    * raw-slower pass displaced a raw-faster proof on normalization
-    * arithmetic alone.) Absent — or recorded under a DIFFERENT
-    * [[SentinelVersion]], whose seconds are not comparable to the
-    * current reference (the v2→v3 workload change roughly triples the
-    * sentinel) — fall back to the artifact's recorded host_factor. */
-  private[graft] def committedSentinelMed(benchDir: String): Option[Double] = {
-    val p = java.nio.file.Paths.get(benchDir, "BENCH_local.json")
-    if (!java.nio.file.Files.exists(p)) return None
-    try {
-      val text = java.nio.file.Files.readString(p)
-      if (!committedSentinelVersion(benchDir).contains(SentinelVersion)) None
-      else """"sentinel_med":(\d+(?:\.\d+)?)""".r
-        .findFirstMatchIn(text)
-        .map(_.group(1).toDouble).filter(_ > 0)
-    } catch { case _: Throwable => None }
-  }
-
-  /** The committed proof's recorded sentinel VERSION (None for
-    * pre-sentinel artifacts or an unreadable file). Drives the
-    * version-transition promotion rule in main: a committed artifact
-    * whose sentinel is another version cannot normalize — neither by
-    * its med (different workload units) nor by its RECORDED factor,
-    * which was computed against a reference floor that may since have
-    * drifted (the r19 pass-5 lesson; observed at the v2→v3 bump: the
-    * r19 round-close proof recorded factor 1.153 against a
-    * late-tightened v2 floor, and dividing by it set a ~74 s bar that
-    * diverted every honest ~85 s-raw pass). For the one transition
-    * round the gate compares RAW vs RAW (committed window assumed
-    * quiet — the conservative direction is covered by the raw
-    * backstop), and the first promoted artifact carries a
-    * current-version med, restoring drift invariance. */
-  private[graft] def committedSentinelVersion(benchDir: String): Option[Int] = {
-    val p = java.nio.file.Paths.get(benchDir, "BENCH_local.json")
-    if (!java.nio.file.Files.exists(p)) return None
-    try {
-      """"sentinel_v":(\d+)""".r
-        .findFirstMatchIn(java.nio.file.Files.readString(p))
-        .map(_.group(1).toInt)
-    } catch { case _: Throwable => None }
-  }
-
-  /** The committed full-suite total recorded in BENCH_local.json. None
-    * ONLY when no artifact exists (the legitimate first-recording case,
-    * which promotes). An artifact that EXISTS but cannot be read or
-    * parsed returns Some(NaN) — fail CLOSED: promotionTarget's
-    * comparison is false against NaN, so a transient read error or a
-    * corrupt artifact diverts the run to staging instead of silently
-    * opening the gate (the r16 clobber through the back door). */
-  private[graft] def committedTotal(benchDir: String): Option[Double] = {
-    val p = java.nio.file.Paths.get(benchDir, "BENCH_local.json")
-    if (!java.nio.file.Files.exists(p)) return None
-    (try {
-      """"metric":"total","value":(-?\d+(?:\.\d+)?)""".r
-        .findFirstMatchIn(java.nio.file.Files.readString(p))
-        .map(_.group(1).toDouble)
-    } catch { case _: Throwable => None })
-      .orElse(Some(Double.NaN))
-  }
-
-  /** The core-count recorded in the committed proof (BENCH_local.json):
-    * Some(n) when the artifact carries a `"cpus"` field, None when the
-    * file is missing OR predates the field (legacy artifacts — including
-    * the r20-promoted local[8] run, which is exactly why a legacy proof
-    * only yields to an explicit SPARK_GRAFT_PROMOTE=1). Callers combine
-    * this with [[committedTotal]]'s file-existence signal. */
-  private[graft] def committedProofCpus(benchDir: String): Option[Int] = {
-    val p = java.nio.file.Paths.get(benchDir, "BENCH_local.json")
-    if (!java.nio.file.Files.exists(p)) return None
-    try {
-      """"cpus":\s*(\d+)""".r
-        .findFirstMatchIn(java.nio.file.Files.readString(p))
-        .map(_.group(1).toInt)
-    } catch { case _: Throwable => None }
-  }
-
-  /** Promotion policy for a FULL run's artifact — the r16 clobber
-    * mechanized: BENCH_local.json is the committed PROOF the anchor
-    * policies load from, and until now any full pass overwrote it in
-    * place, so a run under machine load (the driver's r15 AND r16 passes,
-    * ~13% over) silently shadowed the honest artifact. Now a full run
-    * promotes to BENCH_local.json only when its total is within `slack`
-    * of the committed one (improvements and noise promote; a loaded pass
-    * diverts to the STAGING file BENCH_full.json, still inspectable);
-    * `force` (env SPARK_GRAFT_PROMOTE=1) overrides — the conscious act a
-    * legitimately costlier suite (new rows) records with. A run with ANY
-    * failed row (`anyFailed`: a -1 recording) never promotes, forced or
-    * not — a crash LOWERS the total, so it would otherwise sail under
-    * the slack bar, ship a broken proof, and divert every later honest
-    * run against its bogus low baseline. Anchors load only from
-    * BENCH_local.json / BENCH_r*.json, never the staging file, so a
-    * diverted run can no longer degrade any later run.
-    *
-    * `rawOk` is the RAW-TOTAL BACKSTOP (r19 ADVICE): normalization has
-    * a residual channel — an engine change that inflates the sentinel
-    * itself (heap pressure, GC debt the gc() before sampling cannot
-    * collect) raises the factor up to the 1.5 clamp and can normalize a
-    * genuinely slower build through the 1.05 gate. The caller computes
-    * `rawTotal <= slack * clampHi * committedRawTotal` (the most any
-    * legitimate host window could stretch the gate: 1.05 × 1.5) and a
-    * pass failing it diverts regardless of its normalized total; only
-    * the explicit force flag — the conscious costlier-suite act —
-    * overrides, as it does the gate itself. */
-  private[graft] def promotionTarget(
-      newTotal: Double,
-      committed: Option[Double],
-      force: Boolean,
-      anyFailed: Boolean = false,
-      slack: Double = 1.05,
-      rawOk: Boolean = true): String =
-    if (!anyFailed && (force || (rawOk && committed.forall(newTotal <= slack * _))))
-      "BENCH_local.json"
-    else "BENCH_full.json"
-
-  private def time(body: => Unit): Double = {
-    val t0 = System.nanoTime()
-    try body catch { case _: Throwable => return -1.0 }
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Anchor map for the flat queries/ops rows: per row name, the MINIMUM
-    * value any committed `BENCH_r*.json` artifact recorded (same sf across
-    * all rounds). Load only ever ADDS time, so the cheapest prior recording
-    * is the best available estimate of what the row costs — and unlike
-    * "previous round only", it is robust to the previous round itself having
-    * recorded a load spike (exactly what round 10 did: video_neardup_pairs
-    * 4.79s recorded vs 1.35s fresh). Artifact files embed the bench JSON
-    * line as an escaped string ("tail"), so the pattern tolerates the
-    * backslash escapes; names are filtered to the live query/op set so
-    * totals, scale keys (x1/x4/x10) and metadata never become anchors. */
-  private[graft] def loadAnchors(
-      benchDir: String, names: Set[String], cpus: Int = 32): Map[String, Double] = {
-    // BENCH_local.json is the committed FULL artifact; the driver's
-    // BENCH_r*.json tails truncate, so without it most rows have no
-    // anchor and a loaded run ships uncorrected (the r15 finding: eight
-    // unrelated rows 1.3-1.9x under one load window, zero retries fired)
-    val files = Option(new java.io.File(benchDir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.getName.matches("BENCH_r\\d+\\.json") ||
-        f.getName == "BENCH_local.json")
-    val pat = """\\?"([a-z0-9_]+)\\?":(-?\d+(?:\.\d+)?)""".r
-    val acc = scala.collection.mutable.Map.empty[String, Double]
-    for (f <- files) {
-      val text0 =
-        try java.nio.file.Files.readString(f.toPath)
-        catch { case _: Throwable => "" }
-      // anchors are per-core-count: a local[8] minimum is not a bar any
-      // local[32] rep should be retried against (half the r20 suite ran
-      // FASTER at 8 cores — scheduling floor, not compute)
-      val text = if (artifactCpus(text0) == cpus) text0 else ""
-      for (m <- pat.findAllMatchIn(text)) {
-        val k = m.group(1)
-        val v = m.group(2).toDouble
-        if (v > 0 && names.contains(k) && acc.get(k).forall(v < _)) acc(k) = v
-      }
-    }
-    acc.toMap
-  }
-
-  /** The growth doctrine (measureGrowth below) extended to the flat
-    * queries/ops rows: min-of-`reps` first, and if the result still lands
-    * above `slack` x the row's anchor (cheapest prior recorded value), the
-    * machine is under a sustained load window — min-of-3 does not survive
-    * one longer than its own ~3 reps, the round-10 lesson — so re-run up to
-    * `maxRetries` more times keeping the minimum. Anchors come from prior
-    * RECORDED artifacts, so a legitimately regressed plan still records its
-    * honest post-retry minimum: the policy spends bounded extra reps, it
-    * never edits a result. Rows with no anchor (new queries) keep plain
-    * min-of-`reps`. */
-  private[graft] def measureAnchored(
-      measure: () => Double,
-      anchor: Option[Double],
-      reps: Int = 3,
-      slack: Double = 1.5,
-      maxRetries: Int = 2): Double = {
-    var best = Double.MaxValue
-    var i = 0
-    while (i < reps) {
-      val t = measure()
-      if (t < 0) return -1.0
-      if (t < best) best = t
-      i += 1
-    }
-    anchor.foreach { a =>
-      val bar = slack * a
-      var tries = 0
-      while (best > bar && tries < maxRetries) {
-        val t = measure()
-        if (t >= 0 && t < best) best = t
-        tries += 1
-      }
-    }
-    best
-  }
-
-  /** Suite-end bootstrap for anchor-less flat rows (new queries). The
-    * round-11 lesson: `measureAnchored` protects every row that has a prior
-    * recorded artifact, but a NEW query has no anchor, falls back to plain
-    * min-of-reps, and a load window over its slot ships an inflated FIRST
-    * recording (r11: topn_delta_monthly 1.495s recorded vs 0.814s fresh) —
-    * which then becomes the row's anchor and can't be tightened below a
-    * genuine fresh value until some later round happens to run unloaded.
-    * Fix: after the whole suite has run, re-measure each anchor-less row
-    * once more and keep the min. The two samples are separated by the rest
-    * of the suite's wall-clock, so a load window must span the ENTIRE run
-    * to inflate a first recording. Bounded cost: one extra rep per new row,
-    * only in the round that introduces it. */
-  private[graft] def bootstrapAnchorless(
-      rows: Seq[(String, Double)],
-      hasAnchor: String => Boolean,
-      remeasure: String => Double): Seq[(String, Double)] =
-    rows.map { case (name, t) =>
-      if (hasAnchor(name) || t < 0) name -> t
-      else {
-        val t2 = remeasure(name)
-        name -> (if (t2 >= 0) math.min(t, t2) else t)
-      }
+  /** Run `body` untimed; a failure prints a diag line and the run goes on
+    * (the timed reps of the same row then fail loudly on their own). */
+  private[graft] def warmUp(name: String)(body: => Unit): Unit =
+    try body
+    catch { case NonFatal(e) =>
+      println(s"""{"diag":"warmup_failed","row":"$name","error":"${e.getClass.getName}"}""")
     }
 
-  /** Growth-point anchors from prior recorded artifacts: per (growth row,
-    * replica count), the MINIMUM value any committed `BENCH_r*.json` ever
-    * recorded. Growth entries are object-valued (`"g_name":{"x1":..,..}`),
-    * so they need their own parse; the head pattern deliberately does NOT
-    * consume the body (findAllMatchIn is non-overlapping — a body-consuming
-    * pattern would swallow the next entry's head). The `"growth"` section
-    * key itself cannot match (`g_` requires the underscore). */
-  private[graft] def loadGrowthAnchors(
-      benchDir: String, cpus: Int = 32): Map[(String, Int), Double] = {
-    // same file set as loadAnchors: the committed full artifact carries
-    // the growth series the driver tails truncate
-    val files = Option(new java.io.File(benchDir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.getName.matches("BENCH_r\\d+\\.json") ||
-        f.getName == "BENCH_local.json")
-    val head = """\\?"(g_[a-z0-9_]+)\\?":\{""".r
-    val pair = """\\?"x(\d+)\\?":(-?\d+(?:\.\d+)?)""".r
-    val acc = scala.collection.mutable.Map.empty[(String, Int), Double]
-    for (f <- files) {
-      val text0 =
-        try java.nio.file.Files.readString(f.toPath)
-        catch { case _: Throwable => "" }
-      // same-core-count recordings only (see loadAnchors)
-      val text = if (artifactCpus(text0) == cpus) text0 else ""
-      for (m <- head.findAllMatchIn(text)) {
-        val close = text.indexOf('}', m.end)
-        if (close > 0) {
-          val body = text.substring(m.end, close)
-          for (p <- pair.findAllMatchIn(body)) {
-            val key = (m.group(1), p.group(1).toInt)
-            val v = p.group(2).toDouble
-            if (v > 0 && acc.get(key).forall(v < _)) acc(key) = v
-          }
-        }
-      }
-    }
-    acc.toMap
-  }
+  private def jsonObj(kvs: Seq[(String, String)]): String =
+    kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
 
-  /** Suite-end deferred retry for GROWTH points — [[retryOverBar]]'s shape
-    * applied to the growth suite, anchored on prior ROUNDS' artifacts. The
-    * round-14 lesson: [[measureGrowth]]'s within-run bar is relative to the
-    * operator's own previous point (1.5 x scale-ratio x prev), so a 2.6x
-    * load spike at the 4->10 hop of a sublinear operator sails under it
-    * (g_span_rewrite x10 recorded 10.7 s vs 5.0 s isolated — the bar sat at
-    * 13.5 s). Cross-round, the same point's cheapest prior recording IS a
-    * direct anchor: any point above `slack` x it re-measures once after the
-    * whole suite (the load window must span the entire run to survive) and
-    * the min ships. A genuinely regressed slope stays above the bar in both
-    * samples and records its honest minimum. Points with no prior recording
-    * (new rows, new scales) keep the within-run policy only.
-    *
-    * Slack is 1.3 here (vs the flat rows' 1.5): the growth points are the
-    * scale evidence the judge reads, and the r17 `g_lsh_neardup` x32 point
-    * wobbled 55.3/62.2/72.7 s across three same-build contexts — all under
-    * the 1.5 bar, so nothing ever retried and the series kept spreading
-    * (verdict task 4). At 1.3 a loaded large-scale point pays one deferred
-    * rep; a quiet run pays nothing. */
-  private[graft] def retryGrowthOverBar(
-      rows: Seq[(String, Seq[(Int, Double)])],
-      anchor: (String, Int) => Option[Double],
-      remeasure: (String, Int) => Double,
-      slack: Double = 1.3): Seq[(String, Seq[(Int, Double)])] =
-    rows.map { case (name, pts) =>
-      name -> pts.map { case (c, t) =>
-        anchor(name, c) match {
-          case Some(a) if t > slack * a =>
-            val t2 = remeasure(name, c)
-            c -> (if (t2 >= 0) math.min(t, t2) else t)
-          case _ => c -> t
-        }
-      }
-    }
+  private def secs(kvs: Seq[(String, Double)]): String =
+    jsonObj(kvs.map { case (k, v) => k -> f"$v%.3f" })
 
-  /** Suite-end deferred retry for ANCHORED rows that finished above their
-    * bar. [[measureAnchored]]'s inline retries re-run immediately, so a
-    * sustained load window longer than the row's ~5 reps still ships an
-    * inflated number — exactly what happened to six BENCH_r12 rows
-    * (1.3-1.9x their r11 values; every one re-measured clean in isolation).
-    * This is [[bootstrapAnchorless]]'s shape applied to anchored rows:
-    * after the WHOLE suite has run, re-measure each still-over-bar row once
-    * more and keep the min — the two samples are separated by the rest of
-    * the suite's wall-clock, so a load window must span the entire run to
-    * survive into the artifact. A genuinely regressed plan stays above the
-    * bar in both samples and records its honest minimum: bounded extra
-    * reps, never an edited result. */
-  private[graft] def retryOverBar(
-      rows: Seq[(String, Double)],
-      anchor: String => Option[Double],
-      remeasure: String => Double,
-      slack: Double = 1.5): Seq[(String, Double)] =
-    rows.map { case (name, t) =>
-      anchor(name) match {
-        case Some(a) if t > slack * a =>
-          val t2 = remeasure(name)
-          name -> (if (t2 >= 0) math.min(t, t2) else t)
-        case _ => name -> t
-      }
-    }
-
-  /** Growth-point measurement with an outlier re-run policy anchored on the
-    * operator's OWN previous point, not on linear extrapolation from 1x.
-    *
-    * Round 8/9 lesson: the old trigger (`t > 2.0 * c * t1`) only fired above
-    * 2x PERFECT-LINEAR growth, so for operators whose honest slope is
-    * ~2-3x at 10x, a 6-14x load spike sailed under the bar and was recorded
-    * as a slope cliff (g_text_repetition x10 = 19.6s vs ~3.5s fresh), and a
-    * loaded x1 raised the bar further. The bar is now
-    * `slack * (c / prevScale) * prevTime`: a point more than `slack` times
-    * the proportional scaling of the operator's own previous point re-runs
-    * (up to `maxRetries` times, minimum kept). The anchor point (first
-    * scale) is itself the minimum of two runs — it is the cheapest point
-    * and everything downstream is judged relative to it. Load only ever
-    * ADDS time, so taking minima never understates cost.
-    */
-  private[graft] def measureGrowth(
-      scales: Seq[Int],
-      measure: Int => Double,
-      slack: Double = 1.5,
-      maxRetries: Int = 2): Seq[(Int, Double)] = {
-    var prevC = 0
-    var prev = -1.0
-    scales.map { c =>
-      var t = measure(c)
-      if (prev <= 0) {
-        // anchor point: min of 2 (cheap — smallest input of the series)
-        val t2 = measure(c)
-        if (t2 >= 0 && (t < 0 || t2 < t)) t = t2
-      } else if (t >= 0) {
-        val bar = slack * (c.toDouble / prevC) * prev
-        var tries = 0
-        while (t > bar && tries < maxRetries) {
-          val t2 = measure(c)
-          if (t2 >= 0 && t2 < t) t = t2
-          tries += 1
-        }
-      }
-      if (t >= 0) { prevC = c; prev = t }
-      c -> t
-    }
+  /** The contract line: `value` is the sum of the query medians;
+    * `queries`/`ops`/`growth` hold medians and `iqr` their spreads under
+    * the same keys; `failed` names each row whose run threw, with the
+    * exception class, and such a row is in no other section. */
+  private[graft] def contractLine(
+      cpus: Int,
+      sf: String,
+      queries: Seq[(String, Timing)],
+      ops: Seq[(String, Timing)],
+      growth: Seq[(String, Seq[(Int, Timing)])],
+      failed: Seq[(String, String)]): String = {
+    def flat(rows: Seq[(String, Timing)], f: Timing => Double) =
+      secs(rows.map { case (k, t) => k -> f(t) })
+    def grown(f: Timing => Double) = jsonObj(growth.map { case (name, pts) =>
+      name -> secs(pts.map { case (c, t) => s"x$c" -> f(t) })
+    })
+    val total = queries.map(_._2.median).sum
+    val iqr = jsonObj(Seq(
+      "queries" -> flat(queries, _.iqr), "ops" -> flat(ops, _.iqr),
+      "growth" -> grown(_.iqr)))
+    val failedJson = jsonObj(failed.map { case (k, c) => k -> ("\"" + c + "\"") })
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpus":$cpus%d,""" +
+      s""""queries":${flat(queries, _.median)},"ops":${flat(ops, _.median)},""" +
+      s""""growth":${grown(_.median)},"iqr":$iqr,"failed":$failedJson,"sf":"$sf"}"""
   }
 
   /**
@@ -1025,11 +591,10 @@ object Bench {
    * operator point over in-plan x100 embeddings with its DISTINCT-
    * candidate diagnostic, plus the dedup family (r18 task 4).
    *
-   * FRESH-JVM-PER-TIER protocol (r19 verdict task 3): the r19 artifact
-   * measured the shortlist tier AFTER the exact tier in one long-settled
-   * JVM, and its 61.1 -> 107.0 s round-over-round drift was
-   * unattributable between plan and JVM state. The protocol is now two
-   * commands, same minutes, each a fresh 24g JVM:
+   * FRESH-JVM-PER-TIER protocol (r19 verdict task 3): measuring the
+   * shortlist tier after the exact tier in one long-settled JVM left a
+   * 61.1 -> 107.0 s round-over-round drift unattributable between plan
+   * and JVM state, so each tier is its own command and a fresh 24g JVM:
    *
    *   SPARK_GRAFT_X100=1 SPARK_GRAFT_X100_TIER=exact     SPARK_DRIVER_MEM=24g sbt "runMain graft.Bench"
    *   SPARK_GRAFT_X100=1 SPARK_GRAFT_X100_TIER=shortlist SPARK_DRIVER_MEM=24g sbt "runMain graft.Bench"
@@ -1037,52 +602,49 @@ object Bench {
    * Each tier writes its fields to BENCH_x100_<tier>.json; the
    * SHORTLIST run (second) merges both into the canonical
    * BENCH_x100.json with `"protocol":"fresh_jvm_per_tier"` and
-   * per-candidate µs for each lsh variant. The legacy single-JVM mode
-   * (`SPARK_GRAFT_X100_TIER` unset / `all`) still runs everything in
-   * one JVM and labels the artifact `"protocol":"single_jvm"`.
+   * per-candidate µs for each lsh variant.
    *
    * (SPARK_DRIVER_MEM matters: the exact-verify x100 point pushes 231M
    * candidate pairs through a single 32-thread JVM — the documented
-   * spill regime — and the default 8g heap sits at the OOM boundary;
-   * a crashed row records -1 and the artifact says so rather than
-   * promoting anywhere.)
+   * spill regime — and the default 8g heap sits at the OOM boundary; a
+   * crashed point is listed under `"failed"` and the run exits 1.)
    *
-   * BENCH_x100.json is a STAGING artifact only: the anchor loaders read
-   * only BENCH_r&#42;.json / BENCH_local.json, the promotion gate never
-   * sees this path, and its sentinel triplet is tagged
-   * `"sentinel_cfg":"x100"` so [[committedSentinel]] never treats the
-   * 24g long-settled JVM's ~10%-lower floor as a suite reference. The
-   * fixture materializes once at `SPARK_GRAFT_X100_DIR` (default
-   * /tmp/graft_x100_fixture) and is reused by later runs.
+   * The fixture materializes once at `SPARK_GRAFT_X100_DIR` (default
+   * /tmp/graft_x100_fixture) and is reused by later runs. Returns false
+   * when a timed point failed.
    */
-  private def runX100(spark: SparkSession, sfDir: String): Unit = {
-    val tier = sys.env.getOrElse("SPARK_GRAFT_X100_TIER", "all")
-    require(Set("all", "exact", "shortlist")(tier),
-      s"SPARK_GRAFT_X100_TIER must be all|exact|shortlist, got '$tier'")
+  private def runX100(spark: SparkSession, sfDir: String): Boolean = {
+    val tier = sys.env.getOrElse("SPARK_GRAFT_X100_TIER", "")
+    require(Set("exact", "shortlist")(tier),
+      s"SPARK_GRAFT_X100_TIER must be exact|shortlist, got '$tier'")
     val fixDir = sys.env.getOrElse(
       "SPARK_GRAFT_X100_DIR", "/tmp/graft_x100_fixture")
-    // accumulated artifact fields, values pre-formatted; query-row keys
-    // carry a q_ prefix so the canonical assembly can nest them
+    // flat artifact fields, values pre-formatted JSON; the prefixes q_,
+    // iqr_ and failed_ mark the entries the canonical assembly nests
     val fields = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def put(k: String, v: Double): Unit = fields(k) = f"$v%.3f"
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def put(k: String, df: () => DataFrame): Unit =
+      attempt(k, failed)(timeRow(df)).foreach { t =>
+        fields(s"q_$k") = f"${t.median}%.3f"
+        fields(s"iqr_$k") = f"${t.iqr}%.3f"
+      }
+    // an untimed diagnostic count: the exception class when it fails
+    def diagCount(df: => DataFrame): String =
+      try df.count().toString
+      catch { case NonFatal(e) => "\"" + e.getClass.getName + "\"" }
 
     val base = spark.read.parquet(s"$sfDir/embeddings.parquet").count()
-    // min-of-2 on the expensive operator points (the r17 one-off
-    // protocol); knownCount = 100 x base is exactly the count AutoBits
-    // would run, so the chosen bit widths — hence the candidate sets —
-    // are identical across tiers and runs. Two variants: the DEFAULT
-    // exact-verify plan (the series-comparable number) and the opt-in
-    // two-pass signature shortlist (the spill-regime evidence — the
-    // candidate stream never meets a vector payload)
-    def lshPoint(shortlist: Int): Double = measureAnchored(
-      () => time(graft.pipeline.Similarity.lshNearDupPairs(
-        scaledEmb(spark, sfDir, 100), "vec_id", "embedding", topPairs = 50,
-        dim = 64, knownCount = 100 * base, shortlist = shortlist).count()),
-      anchor = None, reps = 2)
-    def safeCount(df: => org.apache.spark.sql.DataFrame): Long =
-      try df.count() catch { case _: Throwable => -1L }
+    // knownCount = 100 x base is exactly the count AutoBits would run, so
+    // the chosen bit widths — hence the candidate sets — are identical
+    // across tiers and runs. Two variants: the DEFAULT exact-verify plan
+    // (the series-comparable number) and the opt-in two-pass signature
+    // shortlist (the spill-regime evidence — the candidate stream never
+    // meets a vector payload)
+    def lshPairs(shortlist: Int) = graft.pipeline.Similarity.lshNearDupPairs(
+      scaledEmb(spark, sfDir, 100), "vec_id", "embedding", topPairs = 50,
+      dim = 64, knownCount = 100 * base, shortlist = shortlist)
 
-    if (tier != "shortlist") {
+    if (tier == "exact") {
       if (!new java.io.File(s"$fixDir/documents.parquet").exists()) {
         BenchFixture.materialize(spark, sfDir, fixDir, 100)
       }
@@ -1091,34 +653,33 @@ object Bench {
       // crossed to 0.22x in r16 — the floor-amortization evidence)
       val basket = Seq("dedup_jaccard_pairs", "bm25_search",
         "sessionize_events")
-      // JVM/codegen warm-up on the smallest SF, as in the main suite
       basket.foreach { n =>
-        try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
-        catch { case _: Throwable => }
+        warmUp(n)(materialize(SparkEntry.queries(n)(spark, warmDir(sfDir))))
       }
-      basket.foreach { n =>
-        put(s"q_$n", measureAnchored(
-          () => time(SparkEntry.queries(n)(spark, fixDir).count()), None))
-      }
-      put("q_g_lsh_neardup",
-        lshPoint(graft.pipeline.Similarity.NoShortlist))
+      basket.foreach(n => put(n, () => SparkEntry.queries(n)(spark, fixDir)))
+      put("g_lsh_neardup",
+        () => lshPairs(graft.pipeline.Similarity.NoShortlist))
       fields("g_lsh_neardup_candidates") =
-        safeCount(graft.pipeline.Similarity.lshCandidatePairs(
+        diagCount(graft.pipeline.Similarity.lshCandidatePairs(
           scaledEmb(spark, sfDir, 100), "vec_id", "embedding", dim = 64,
-          knownCount = 100 * base)).toString
+          knownCount = 100 * base))
       // which verify path the AUDIT chooses for THIS corpus at x100 —
       // the r18 verdict's ask: the artifact records the audited decision
       // next to both measured paths, so the shortlist win is labeled
       // with whether it is report-safe here (the x100 fixture is
       // decorrelated ORGANIC data, so the expected answer is
       // exact/thin-margin)
-      val (auditMargin, auditTwoPass) =
-        try graft.pipeline.Similarity.auditShortlist(
+      try {
+        val (margin, twoPass) = graft.pipeline.Similarity.auditShortlist(
           scaledEmb(spark, sfDir, 100), "vec_id", "embedding", topPairs = 50,
           dim = 64, knownCount = 100 * base)
-        catch { case _: Throwable => (Int.MinValue, false) }
-      fields("g_lsh_neardup_audit_margin") = auditMargin.toString
-      fields("g_lsh_neardup_audit_twopass") = auditTwoPass.toString
+        fields("g_lsh_neardup_audit_margin") = margin.toString
+        fields("g_lsh_neardup_audit_twopass") = twoPass.toString
+      } catch { case NonFatal(e) =>
+        val cls = "\"" + e.getClass.getName + "\""
+        fields("g_lsh_neardup_audit_margin") = cls
+        fields("g_lsh_neardup_audit_twopass") = cls
+      }
 
       // the DEDUP family at x100 (r18 verdict task 4): the VerifyJoin
       // ladder's own operators. The conf-only variant (setRowBytes = 1
@@ -1130,107 +691,72 @@ object Bench {
       def dedupPairsDf(rowBytes: Long) = graft.pipeline.Dedup.minhashLshPairs(
         scaledDocs(spark, sfDir, 100), "doc_id", "text", threshold = 0.5,
         knownCount = 100 * docBase, setRowBytes = rowBytes)
-      put("q_g_dedup_minhash_lsh", measureAnchored(
-        () => time(dedupPairsDf(graft.pipeline.VerifyJoin.ShingleSetRowBytes)
-          .count()), anchor = None, reps = 2))
-      put("q_g_dedup_minhash_lsh_confonly", measureAnchored(
-        () => time(dedupPairsDf(1L).count()), anchor = None, reps = 2))
-      put("q_g_dedup_clusters", measureAnchored(
-        () => time(graft.pipeline.Clustering.connectedComponents(
-          dedupPairsDf(graft.pipeline.VerifyJoin.ShingleSetRowBytes),
-          "doc_a", "doc_b").count()), anchor = None, reps = 2))
-      fields("g_dedup_minhash_lsh_pairs") =
-        safeCount(dedupPairsDf(graft.pipeline.VerifyJoin.ShingleSetRowBytes)).toString
-      fields("g_dedup_minhash_lsh_pairs_confonly") =
-        safeCount(dedupPairsDf(1L)).toString
+      val hinted = graft.pipeline.VerifyJoin.ShingleSetRowBytes
+      put("g_dedup_minhash_lsh", () => dedupPairsDf(hinted))
+      put("g_dedup_minhash_lsh_confonly", () => dedupPairsDf(1L))
+      put("g_dedup_clusters", () => graft.pipeline.Clustering
+        .connectedComponents(dedupPairsDf(hinted), "doc_a", "doc_b"))
+      fields("g_dedup_minhash_lsh_pairs") = diagCount(dedupPairsDf(hinted))
+      fields("g_dedup_minhash_lsh_pairs_confonly") = diagCount(dedupPairsDf(1L))
       fields("g_dedup_minhash_lsh_candidates") =
-        safeCount(graft.pipeline.Dedup.minhashLshCandidates(
-          scaledDocs(spark, sfDir, 100), "doc_id", "text")).toString
-    }
-    if (tier != "exact") {
+        diagCount(graft.pipeline.Dedup.minhashLshCandidates(
+          scaledDocs(spark, sfDir, 100), "doc_id", "text"))
+    } else {
       // warm the lsh path's codegen at the smallest SF before timing
-      try graft.pipeline.Similarity.lshNearDupPairs(
-        scaledEmb(spark, "/root/testdata/sf0.001", 1), "vec_id",
-        "embedding", topPairs = 5, dim = 64,
-        shortlist = graft.pipeline.Similarity.AutoShortlist).count()
-      catch { case _: Throwable => }
-      // the canonical series key either way: under fresh_jvm_per_tier
-      // the protocol field + shortlist_sentinel_sec carry the provenance
-      put("q_g_lsh_neardup_shortlist",
-        lshPoint(graft.pipeline.Similarity.AutoShortlist))
+      warmUp("g_lsh_neardup_shortlist")(materialize(
+        graft.pipeline.Similarity.lshNearDupPairs(
+          scaledEmb(spark, warmDir(sfDir), 1), "vec_id", "embedding",
+          topPairs = 5, dim = 64,
+          shortlist = graft.pipeline.Similarity.AutoShortlist)))
+      put("g_lsh_neardup_shortlist",
+        () => lshPairs(graft.pipeline.Similarity.AutoShortlist))
     }
+    failed.foreach { case (k, c) => fields(s"failed_$k") = "\"" + c + "\"" }
 
-    // the sentinel makes the x100 absolute seconds normalizable too;
-    // cfg "x100" keeps this 24g long-settled JVM's floor out of the
-    // suite reference (the r19 pass-4 miscalibration)
-    val sentKey = if (tier == "shortlist") "shortlist_sentinel_sec"
-      else "sentinel_sec"
-    put(sentKey, measureSentinel(spark))
-
-    // tier files carry the flat field map; the canonical artifact nests
-    // the q_ rows under "queries" and stamps the protocol
-    def assemble(all: Seq[(String, String)], protocol: String): String = {
-      val (qRows, scalars) = all.partition(_._1.startsWith("q_"))
-      val qjson = qRows
-        .map { case (k, v) => "\"" + k.stripPrefix("q_") + s"\":$v" }
-        .mkString("{", ",", "}")
-      // µs per candidate for each measured lsh variant (r19 task 3)
+    // the canonical artifact nests the prefixed fields and stamps the
+    // protocol, with µs per candidate for each measured lsh variant
+    def assemble(all: Seq[(String, String)]): String = {
+      val prefixes = Seq("q_" -> "queries", "iqr_" -> "iqr", "failed_" -> "failed")
+      def nested(prefix: String) = jsonObj(all.collect {
+        case (k, v) if k.startsWith(prefix) => k.stripPrefix(prefix) -> v
+      })
       val scalarMap = all.toMap
-      val cands = scalarMap.get("g_lsh_neardup_candidates")
-        .flatMap(c => scala.util.Try(c.toLong).toOption).filter(_ > 0)
       val usPerCand = for {
-        c <- cands.toSeq
-        (timeKey, outKey) <- Seq(
-          "q_g_lsh_neardup" -> "g_lsh_neardup_us_per_cand",
-          "q_g_lsh_neardup_shortlist" -> "g_lsh_neardup_shortlist_us_per_cand")
-        t <- scalarMap.get(timeKey).flatMap(v =>
-          scala.util.Try(v.toDouble).toOption).filter(_ > 0).toSeq
-      } yield outKey -> f"${t * 1e6 / c}%.3f"
-      val scalarJson = (scalars ++ usPerCand)
-        .map { case (k, v) => "\"" + k + s"\":$v" }.mkString(",")
-      s"""{"metric":"x100","protocol":"$protocol","queries":$qjson,""" +
-        s"""$scalarJson,""" +
-        s""""sentinel_v":$SentinelVersion,"sentinel_cfg":"x100",""" +
-        s""""fixture":"$fixDir","sf":"$sfDir"}"""
+        c <- scalarMap.get("g_lsh_neardup_candidates")
+          .flatMap(_.toLongOption).filter(_ > 0).toSeq
+        variant <- Seq("g_lsh_neardup", "g_lsh_neardup_shortlist")
+        t <- scalarMap.get(s"q_$variant").flatMap(_.toDoubleOption).toSeq
+      } yield s"${variant}_us_per_cand" -> f"${t * 1e6 / c}%.3f"
+      val scalars = all.filterNot { case (k, _) =>
+        prefixes.exists(p => k.startsWith(p._1)) } ++ usPerCand
+      val body = prefixes.map { case (p, key) => key -> nested(p) } ++
+        scalars ++ Seq("fixture" -> s""""$fixDir"""", "sf" -> s""""$sfDir"""")
+      jsonObj(("metric" -> "\"x100\"") +:
+        ("protocol" -> "\"fresh_jvm_per_tier\"") +: body)
     }
     def write(path: String, text: String): Unit =
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(path), text + "\n")
-      catch { case _: Throwable => }
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(path), text + "\n")
 
-    // a DEDICATED out var (r18 ADVICE): the x100 staging line must never
-    // ride SPARK_GRAFT_BENCH_OUT into a committed BENCH_r*.json that the
-    // anchor loaders read
+    // a DEDICATED out var (r18 ADVICE): the x100 line never rides
+    // SPARK_GRAFT_BENCH_OUT into the suite's artifact
     val outPath = sys.env.getOrElse("SPARK_GRAFT_X100_OUT", "BENCH_x100.json")
-    tier match {
-      case "all" =>
-        val line = assemble(fields.toSeq, "single_jvm")
+    val flat = jsonObj(fields.toSeq)
+    println(flat); write(s"BENCH_x100_$tier.json", flat)
+    if (tier == "shortlist") {
+      // merge with the exact tier's flat file into the canonical
+      // artifact; without it, the tier file alone stands (and says so)
+      val exactFile = java.nio.file.Paths.get("BENCH_x100_exact.json")
+      if (!java.nio.file.Files.exists(exactFile)) {
+        println("""{"diag":"x100_merge","error":"BENCH_x100_exact.json missing; run the exact tier first"}""")
+      } else {
+        val exactFields = """"([A-Za-z0-9_]+)":("[^"]*"|-?[0-9.]+|true|false)""".r
+          .findAllMatchIn(java.nio.file.Files.readString(exactFile))
+          .map(m => m.group(1) -> m.group(2)).toSeq
+        val line = assemble(exactFields ++ fields.toSeq)
         println(line); write(outPath, line)
-      case "exact" =>
-        val flat = fields
-          .map { case (k, v) => "\"" + k + s"\":$v" }.mkString("{", ",", "}")
-        println(flat); write("BENCH_x100_exact.json", flat)
-      case "shortlist" =>
-        val flat = fields
-          .map { case (k, v) => "\"" + k + s"\":$v" }.mkString("{", ",", "}")
-        println(flat); write("BENCH_x100_shortlist.json", flat)
-        // merge with the exact tier's flat file into the canonical
-        // artifact; without it, the tier file alone stands (and says so)
-        val exactFields =
-          try {
-            val text = java.nio.file.Files.readString(
-              java.nio.file.Paths.get("BENCH_x100_exact.json"))
-            """"([A-Za-z0-9_]+)":("[^"]*"|-?[0-9.]+|true|false)""".r
-              .findAllMatchIn(text).map(m => m.group(1) -> m.group(2)).toSeq
-          } catch { case _: Throwable => Seq.empty }
-        if (exactFields.isEmpty) {
-          println("""{"diag":"x100_merge","error":"BENCH_x100_exact.json missing; run the exact tier first"}""")
-        } else {
-          val line = assemble(exactFields ++ fields.toSeq,
-            "fresh_jvm_per_tier")
-          println(line); write(outPath, line)
-        }
+      }
     }
+    failed.isEmpty
   }
 
   def main(args: Array[String]): Unit = {
@@ -1274,89 +800,40 @@ object Bench {
     TopnFunctions.register(spark)
 
     // dedicated x100 mode: measure the scale-evidence rows and exit —
-    // never the regular suite, never the promotion gate
+    // never the regular suite
     if (sys.env.getOrElse("SPARK_GRAFT_X100", "0") == "1") {
-      runX100(spark, sfDir)
+      val ok = runX100(spark, sfDir)
       spark.stop()
+      if (!ok) sys.exit(1)
       return
     }
 
-    // JVM/codegen warm-up on the smallest SF so per-query numbers measure
-    // the engine, not first-call JIT + codegen compilation.
-    (SparkEntry.queries ++ SparkEntry.benchOnly).toSeq.sortBy(_._1)
-      .filter(kv => selected(kv._1)).foreach {
-        case (_, fn) =>
-          try fn(spark, "/root/testdata/sf0.001").count()
-          catch { case _: Throwable => }
+    val queryRows = SparkEntry.queries.toSeq.sortBy(_._1).filter(kv => selected(kv._1))
+    val opRows = SparkEntry.benchOnly.toSeq.sortBy(_._1).filter(kv => selected(kv._1))
+    (queryRows ++ opRows).sortBy(_._1).foreach { case (name, fn) =>
+      warmUp(name)(materialize(fn(spark, warmDir(sfDir))))
+    }
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def timeAll(rows: Seq[(String, (SparkSession, String) => DataFrame)]) =
+      rows.flatMap { case (name, fn) =>
+        attempt(name, failed)(timeRow(() => fn(spark, sfDir))).map(name -> _)
       }
+    val results = timeAll(queryRows)
+    val ops = timeAll(opRows)
 
-    // Host sentinel AFTER warm-up (the JVM is hot, so the measurement is
-    // the host's, not JIT's): the factor scales every cross-round bar —
-    // retry bars, growth bars, the promotion gate — so a slow machine
-    // window stretches bars instead of burning retries and diverting
-    // honest passes (the r18 lesson; see hostFactor). The sentinel is
-    // sampled THREE times — here, after the flat queries/ops phase, and
-    // after the growth suite — because a single start sample misses a
-    // window that arrives mid-run (measured the day this shipped: start
-    // sample quiet at 0.722 s, then the whole flat phase drifted a
-    // uniform 1.29x). The run's factor is the MEDIAN of the samples
-    // (robust to one blip in either direction: a brief spike at one
-    // sample cannot inflate the factor, a quiet blip at one sample
-    // cannot hide a sustained window); inline retry bars use the start
-    // sample (the only one available then — conservative), deferred
-    // bars and the promotion gate use the median.
-    val anchorDir = sys.env.getOrElse("SPARK_GRAFT_ANCHOR_DIR", ".")
-    val nCpus = cpus.toInt
-    val sentinelRef = committedSentinel(anchorDir, nCpus)
-    val s1 = measureSentinel(spark)
-    val hf1 = hostFactor(s1, sentinelRef)
-    println(f"""{"diag":"host_sentinel","sample":"start","sentinel_sec":$s1%.3f,"host_factor":$hf1%.3f}""")
-
-    // min-of-3 per query (docs/BENCH_NOTES.md) + the anchored re-run policy
-    // (sustained-load windows outlive 3 reps; see measureAnchored). Growth
-    // stays single-run — its signal is the slope WITHIN one run, which load
-    // shifts uniformly, and tripling the replicated-input suite would
-    // dominate bench time. Anchors are scaled by the host factor ONCE,
-    // here: every consumer (inline retries, deferred retries) then bars
-    // against quiet-floor x host-window, and a recorded value stays RAW
-    // (the artifact carries sentinel_sec + host_factor so readers can
-    // normalize; minima across rounds keep anchors honest).
-    val anchorsRaw = loadAnchors(anchorDir,
-      SparkEntry.queries.keySet ++ SparkEntry.benchOnly.keySet, nCpus)
-    val anchors = anchorsRaw.view.mapValues(_ * hf1).toMap
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(kv => selected(kv._1)).map { case (name, fn) =>
-        name -> measureAnchored(() => time(fn(spark, sfDir).count()), anchors.get(name))
-      }
-    val ops = SparkEntry.benchOnly.toSeq.sortBy(_._1)
-      .filter(kv => selected(kv._1)).map { case (name, fn) =>
-        name -> measureAnchored(() => time(fn(spark, sfDir).count()), anchors.get(name))
-      }
-    // second sentinel sample: the flat phase (everything the TOTAL sums)
-    // is now bracketed by s1 and s2
-    val s2 = measureSentinel(spark)
-    // growth: single-run normally (the slope WITHIN a run is the signal,
-    // and load shifts it uniformly) — with measureGrowth's re-run policy:
-    // any point landing above 1.5x the proportional scaling of the
-    // operator's own previous point re-runs (min kept), so one load spike
-    // can no longer masquerade as a slope cliff in the recorded artifact.
-    // the suite is materialized ONCE so the deferred growth retry below
-    // re-measures through the SAME builders (g_ann_ivfpq's lazy frozen
-    // models stay trained — a fresh suite instance would re-pay the
-    // one-time training inside the re-measure and inflate it)
     val gSuite =
       if (!growthOn) Seq.empty
       else growthSuite(spark, sfDir).filter(g => selected(g._1))
     // g_lid_serve's frozen model trains HERE, before any growth clock
     // starts — computeIfAbsent inside the thunk would otherwise pay the
-    // one-time training inside the first timed x1 sample
+    // one-time training inside the first timed x1 rep
     if (gSuite.exists(_._1 == "g_lid_serve")) lidServeModel(spark, sfDir)
     // the remap-safety scan likewise resolves BEFORE any growth clock:
     // the gate only fires at copies > 1, so without this it would land
-    // inside the first timed scaled sample, not a discarded x1 rep.
-    // (Deliberately unconditional on which rows were selected: the scan
-    // is UNTIMED wall-clock only — a name-list of doc-scaling rows would
-    // be a desync hazard for a ~1s saving.)
+    // inside the first timed scaled rep. (Deliberately unconditional on
+    // which rows were selected: the scan is UNTIMED wall-clock only — a
+    // name-list of doc-scaling rows would be a desync hazard for a ~1s
+    // saving.)
     if (gSuite.nonEmpty) preflightRemapCheck(spark, sfDir)
     // the g_dedup_cc decomposition row's pair sets materialize HERE,
     // before any growth clock — the row must time the CC stage alone
@@ -1364,47 +841,10 @@ object Bench {
       scales.foreach(c => dedupPairsFixture(spark, sfDir, c))
     }
     val growth = gSuite.map { case (name, scales, build) =>
-      name -> measureGrowth(scales, c => time(build(c).count()))
+      name -> scales.flatMap { c =>
+        attempt(s"$name@x$c", failed)(timeRow(() => build(c))).map(c -> _)
+      }
     }
-
-    // third sentinel sample, then the run's factor: median of the three
-    // (each itself min-of-3). The recorded reference value is the MIN of
-    // the positive samples — the quietest observed floor is what future
-    // runs compare against.
-    val s3 = measureSentinel(spark)
-    val samples = Seq(s1, s2, s3).filter(_ > 0).sorted
-    val sentinelSec = if (samples.isEmpty) -1.0 else samples.head
-    val sentinelMed =
-      if (samples.isEmpty) -1.0 else samples((samples.size - 1) / 2)
-    val hf = hostFactor(sentinelMed, sentinelRef)
-    println(f"""{"diag":"host_sentinel","samples":[$s1%.3f,$s2%.3f,$s3%.3f],"host_factor":$hf%.3f}""")
-    val anchorsDeferred = anchorsRaw.view.mapValues(_ * hf).toMap
-
-    // Suite-end bootstrap pass for rows with no prior-artifact anchor (new
-    // queries) — runs AFTER the growth suite so the re-measure is maximally
-    // separated in time from the row's main-pass slot (see
-    // bootstrapAnchorless).
-    // ... and the deferred-retry pass for ANCHORED rows still above their
-    // bar after the inline retries (see retryOverBar — the r12 lesson:
-    // a sustained load window outlives inline retries, not the suite).
-    val resultsFinal = retryOverBar(
-      bootstrapAnchorless(results, anchorsDeferred.contains,
-        name => time(SparkEntry.queries(name)(spark, sfDir).count())),
-      anchorsDeferred.get,
-      name => time(SparkEntry.queries(name)(spark, sfDir).count()))
-    val opsFinal = retryOverBar(
-      bootstrapAnchorless(ops, anchorsDeferred.contains,
-        name => time(SparkEntry.benchOnly(name)(spark, sfDir).count())),
-      anchorsDeferred.get,
-      name => time(SparkEntry.benchOnly(name)(spark, sfDir).count()))
-    // growth's own deferred pass, last of all: anchored on the cheapest
-    // prior ROUND's recording of the same point (see retryGrowthOverBar)
-    val gBuilders = gSuite.map(g => g._1 -> g._3).toMap
-    val growthAnchors = loadGrowthAnchors(anchorDir, nCpus)
-      .view.mapValues(_ * hf).toMap
-    val growthFinal = retryGrowthOverBar(growth,
-      (n, c) => growthAnchors.get((n, c)),
-      (n, c) => time(gBuilders(n)(c).count()))
 
     // g_lsh_neardup slope decomposition (untimed, after every timed pass):
     // the DISTINCT candidate-pair count per scale. Candidates/input staying
@@ -1424,97 +864,24 @@ object Bench {
         s""""x$c":$n"""
       }
       println(s"""{"diag":"g_lsh_neardup_candidates",${cands.mkString(",")}}""")
-    } catch { case e: Throwable =>
-      // the diagnostic must never cost the run its artifact: every TIMED
-      // row is crash-isolated (time() -> -1 -> anyFailed diverts), and
-      // this untimed pass — including an x32 count — gets the same
-      // courtesy
-      println(s"""{"diag":"g_lsh_neardup_candidates","error":"${e.getClass.getSimpleName}"}""")
+    } catch { case NonFatal(e) =>
+      // an untimed diagnostic never costs the run its contract line
+      println(s"""{"diag":"g_lsh_neardup_candidates","error":"${e.getClass.getName}"}""")
     } }
 
-    def fmt(kvs: Seq[(String, Double)]) =
-      kvs.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
-    val qs = fmt(resultsFinal)
-    val opsJson = fmt(opsFinal)
-    val growthJson = growthFinal.map { case (name, ts) =>
-      "\"" + name + "\":" + fmt(ts.map { case (c, t) => (s"x$c", t) })
-    }.mkString("{", ",", "}")
-    val total = resultsFinal.map(_._2).sum
-    // the (sentinel_v, sentinel_cfg, sentinel_sec) triplet is the
-    // committedSentinel contract — written atomically, new fields land
-    // AFTER sentinel_sec (the r19 pass-6 layout regression, closed by
-    // the explicit cfg marker)
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","sentinel_v":$SentinelVersion%d,"sentinel_cfg":"suite","sentinel_sec":$sentinelSec%.3f,"sentinel_med":$sentinelMed%.3f,"host_factor":$hf%.3f,"cpus":$nCpus%d,"queries":$qs,"ops":$opsJson,"growth":$growthJson,"sf":"$sfDir"}"""
-    // A partial run must not clobber the committed full-suite artifact
-    // (the r15 lesson: a one-row funnel run shipped as BENCH_local.json)
-    // — see defaultOutFile: ANY deviation from the default row set
-    // diverts to the side file unless the caller names an out path.
-    // And a LOADED full run must not shadow the committed proof either
-    // (the r16 lesson) — see promotionTarget.
-    val defaultOut0 = defaultOutFile(only, growthOn, skipAudits)
-    // a crashed row records -1, LOWERING the total — such a run must
-    // never promote (it would both ship a broken proof and divert every
-    // later honest run); and the committed total is read from the same
-    // dir the anchor policies load from, not an incidental cwd
-    val anyFailed = resultsFinal.exists(_._2 < 0) ||
-      opsFinal.exists(_._2 < 0) ||
-      growthFinal.exists(_._2.exists(_._2 < 0))
-    // promotion compares HOST-NORMALIZED totals on both sides (the r19
-    // change): raw/thisFactor vs committed/itsFactor — a pass on a
-    // 1.2x-slow host whose normalized total is within the gate promotes
-    // (its artifact carries the factor for readers), and a slow-host
-    // promotion cannot ratchet the committed bar because the committed
-    // side is normalized by ITS recorded factor too
-    // the committed side normalizes by hostFactor(ITS median, the SAME
-    // current reference) when its artifact recorded one — the reference
-    // cancels and the gate is invariant to the floor tightening between
-    // recordings; pre-median artifacts fall back to their recorded factor
-    val committedRaw = committedTotal(anchorDir)
-    val committedNorm = committedRaw.map { t =>
-      committedSentinelMed(anchorDir) match {
-        case Some(med) => t / hostFactor(med, sentinelRef)
-        // version transition (committed sentinel is another version):
-        // raw vs raw — see committedSentinelVersion; pre-sentinel
-        // artifacts keep the recorded-factor fallback
-        case None if committedSentinelVersion(anchorDir)
-          .exists(_ != SentinelVersion) => t
-        case None => t / committedHostFactor(anchorDir)
-      }
-    }
-    // raw backstop (r19 ADVICE): no normalization arithmetic may promote
-    // a pass whose RAW total exceeds the committed raw total by more
-    // than the clamp-adjusted gate (1.05 x 1.5) — the bound a legitimate
-    // host window could reach; a NaN committed raw fails closed
-    val rawOk = committedRaw.forall(t => total <= 1.05 * 1.5 * t)
-    // core-count guard on the proof (the r20 promotion accident: the
-    // driver's local[8] run normalized its way into BENCH_local.json) —
-    // a proof recorded at ANOTHER core count never yields to this run,
-    // forced or not (re-base consciously by deleting the file); a LEGACY
-    // proof (no "cpus" field — includes the r20 local[8] artifact)
-    // yields only to an explicit SPARK_GRAFT_PROMOTE=1
-    val proofCpus = committedProofCpus(anchorDir)
-    val cpusHardBlock = proofCpus.exists(_ != nCpus)
-    val cpusOk = committedRaw.isEmpty || proofCpus.contains(nCpus)
-    val defaultOut =
-      if (defaultOut0 != "BENCH_local.json") defaultOut0
-      else if (cpusHardBlock) "BENCH_full.json"
-      else promotionTarget(total / hf, committedNorm,
-        force = sys.env.getOrElse("SPARK_GRAFT_PROMOTE", "0") == "1",
-        anyFailed = anyFailed, rawOk = rawOk && cpusOk)
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)),
-      line + "\n")
-    catch { case _: Throwable => }
-    val outName = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)
+    val nCpus = cpus.toInt
+    val line = contractLine(nCpus, sfDir, results, ops, growth, failed.toSeq)
+    val outName = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      defaultOutFile(only, growthOn, skipAudits))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(outName), line + "\n")
     // summary first (human-readable provenance), the FULL contract line
     // LAST: the driver parses stdout for ONE JSON line of the shape
     // {"metric","value","unit","queries",...,"sf"} — with build.sbt's
-    // StdoutOutput/showSuccess fix the full line now lands bare and
-    // final (BENCH_r01..r20 all shipped "parsed": null because sbt
-    // prefixed every line with "[info] ")
-    println(f"""{"diag":"bench_summary","total_sec":$total%.3f,"sentinel_v":$SentinelVersion%d,"sentinel_cfg":"suite","sentinel_sec":$sentinelSec%.3f,"sentinel_med":$sentinelMed%.3f,"host_factor":$hf%.3f,"cpus":$nCpus%d,"n_queries":${resultsFinal.size},"n_ops":${opsFinal.size},"n_growth":${growthFinal.size},"full_artifact":"$outName","sf":"$sfDir"}""")
+    // StdoutOutput/showSuccess fix the full line lands bare and final
+    val total = results.map(_._2.median).sum
+    println(f"""{"diag":"bench_summary","total_sec":$total%.3f,"cpus":$nCpus%d,"reps":$Reps%d,"n_queries":${results.size},"n_ops":${ops.size},"n_growth":${growth.size},"n_failed":${failed.size},"full_artifact":"$outName","sf":"$sfDir"}""")
     println(line)
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

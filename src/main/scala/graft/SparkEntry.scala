@@ -3616,14 +3616,15 @@ object SparkEntry {
 
     // the production ENCODE tier at the same 50k-rule vocabulary — the
     // pieces materialize (hashed so the full arrays are consumed, not
-    // pruned to a size)
+    // pruned to a size); bit_xor folds the hashes order-free, where an
+    // ANSI sum of 64-bit hashes overflows
     "bpe_vocab_encode_op" -> ((spark, dir) => {
       import spark.implicits._
       val merges = graft.pipeline.Bpe.DemoMerges ++
         (0 until 50000).map(i => (s"Z$i", s"Q$i"))
       tbl(spark, dir, "documents")
         .select(xxhash64(graft.pipeline.Bpe.encodeVocab($"text", merges)).as("h"))
-        .agg(sum($"h").as("pieces_hash_sum"))
+        .agg(bit_xor($"h").as("pieces_hash_sum"))
     }))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

@@ -40,7 +40,7 @@ abstract class TopnAggregateBase
    * frequent first (reference `topn_pack`, topn.c:632-664). Empty/all-null
    * group yields `{}`, never NULL.
    */
-  final override def eval(buffer: TopnState): Any =
+  override def eval(buffer: TopnState): Any =
     TopnExprUtils.toMapData(buffer.pack(numCounters))
 
   final override def serialize(buffer: TopnState): Array[Byte] = buffer.serialize()
@@ -48,7 +48,7 @@ abstract class TopnAggregateBase
   final override def deserialize(bytes: Array[Byte]): TopnState =
     TopnState.deserialize(bytes)
 
-  final override def dataType: DataType =
+  override def dataType: DataType =
     MapType(StringType, LongType, valueContainsNull = false)
 
   final override def nullable: Boolean = false
@@ -150,17 +150,7 @@ case class TopnUnionAgg(
   override def update(buffer: TopnState, input: InternalRow): TopnState = {
     val v = child.eval(input)
     if (v != null) {
-      val md = v.asInstanceOf[MapData]
-      val keys = md.keyArray()
-      val vals = md.valueArray()
-      var i = 0
-      val n = md.numElements()
-      while (i < n) {
-        if (!vals.isNullAt(i)) {
-          buffer.mergeEntry(keys.getUTF8String(i), vals.getLong(i), numCounters)
-        }
-        i += 1
-      }
+      TopnExprUtils.mergeMapData(buffer, v.asInstanceOf[MapData], numCounters)
     }
     buffer
   }

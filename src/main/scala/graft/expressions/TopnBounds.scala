@@ -5,7 +5,6 @@ import graft.core.TopnState
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MapData}
@@ -56,19 +55,9 @@ private[graft] object TopnBoundsTypes {
   }
 }
 
-/** Shared finalize/wire scaffolding of the two bounded aggregates —
-  * [[TopnAggregateBase]] with the bounded struct as the result type. */
-abstract class TopnBoundsAggregateBase
-    extends TypedImperativeAggregate[TopnState] {
-
-  def numCounters: Int
-
-  final override def createAggregationBuffer(): TopnState = TopnState.empty()
-
-  final override def merge(buffer: TopnState, input: TopnState): TopnState = {
-    buffer.merge(input, numCounters)
-    buffer
-  }
+/** [[TopnAggregateBase]] with the bounded struct as the result type:
+  * the same buffer, merge and wire format, a different finalize. */
+abstract class TopnBoundsAggregateBase extends TopnAggregateBase {
 
   /** Finalize: policy-A prune + materialize like the plain aggregates,
     * plus the loss bound read AFTER the pack so the final prune's
@@ -81,14 +70,7 @@ abstract class TopnBoundsAggregateBase
       Array[Any](TopnExprUtils.toMapData(entries), buffer.lossBound))
   }
 
-  final override def serialize(buffer: TopnState): Array[Byte] = buffer.serialize()
-
-  final override def deserialize(bytes: Array[Byte]): TopnState =
-    TopnState.deserialize(bytes)
-
   final override def dataType: DataType = TopnBoundsTypes.boundedSketchType
-
-  final override def nullable: Boolean = false
 }
 
 /**
@@ -151,17 +133,7 @@ case class TopnUnionAggBounds(
     if (v != null) {
       val row = v.asInstanceOf[InternalRow]
       if (!row.isNullAt(0)) {
-        val md = row.getMap(0)
-        val keys = md.keyArray()
-        val vals = md.valueArray()
-        var i = 0
-        val n = md.numElements()
-        while (i < n) {
-          if (!vals.isNullAt(i)) {
-            buffer.mergeEntry(keys.getUTF8String(i), vals.getLong(i), numCounters)
-          }
-          i += 1
-        }
+        TopnExprUtils.mergeMapData(buffer, row.getMap(0), numCounters)
       }
       if (!row.isNullAt(1)) {
         buffer.addLossBound(row.getLong(1))

@@ -17,19 +17,23 @@ private[graft] object TopnExprUtils {
   /** Load a materialized sketch into a fresh state, applying the merge
     * (policy-B) path per key like the reference's
     * `MergeJsonbIntoTopnAggState` (topn.c:753-810). Null values skipped. */
-  def stateFromMapData(md: MapData, numCounters: Int): TopnState = {
-    val st = TopnState.empty()
+  def stateFromMapData(md: MapData, numCounters: Int): TopnState =
+    mergeMapData(TopnState.empty(), md, numCounters)
+
+  /** Merge a materialized sketch into `state` key by key (policy B),
+    * skipping null values; returns `state`. */
+  def mergeMapData(state: TopnState, md: MapData, numCounters: Int): TopnState = {
     val keys = md.keyArray()
     val vals = md.valueArray()
     var i = 0
     val n = md.numElements()
     while (i < n) {
       if (!vals.isNullAt(i)) {
-        st.mergeEntry(keys.getUTF8String(i), vals.getLong(i), numCounters)
+        state.mergeEntry(keys.getUTF8String(i), vals.getLong(i), numCounters)
       }
       i += 1
     }
-    st
+    state
   }
 
   /** Materialize entries (already in canonical order) as MapData. */

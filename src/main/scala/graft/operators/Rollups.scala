@@ -17,25 +17,6 @@ import org.apache.spark.storage.StorageLevel
 object Rollups {
 
   /**
-   * Sliding merge of per-period sketches over `ROWS (frameRows-1) PRECEDING
-   * .. CURRENT ROW` — the scale path for the reference's seven_days window
-   * (sql/customer_reviews_query.sql:58-70).
-   *
-   * A window with ORDER BY and no PARTITION BY forces ALL rollup rows into
-   * one partition (both here and in PostgreSQL). This variant instead:
-   *  1. ranks the distinct periods (a tiny dimension: one row per day/hour
-   *     — the only single-partition step, over #periods rows, not data);
-   *  2. builds the period->frame-member pair table by exploding each
-   *     target's member ranks and equi-joining the rank dimension
-   *     (broadcast hash join — never a nested-loop range join);
-   *  3. re-aggregates sketches with `topn_union_agg` grouped by the target
-   *     period — an ordinary shuffled aggregation, fully parallel in the
-   *     number of periods x groups.
-   *
-   * Identical results to the window form (merge below eviction threshold is
-   * order-free; above it, both forms are approximate by design).
-   */
-  /**
    * Skew-safe sketch build: two-level aggregation salting the group key.
    * Level 1 groups by (key, salt) — hot keys split across `saltBuckets`
    * reducers; level 2 merges the per-salt sketches with `topn_union_agg`.
@@ -87,6 +68,25 @@ object Rollups {
       .agg(TopnFunctions.topn_union_agg(col("__partial"), numCounters).as(sketchCol))
   }
 
+  /**
+   * Sliding merge of per-period sketches over `ROWS (frameRows-1) PRECEDING
+   * .. CURRENT ROW` — the scale path for the reference's seven_days window
+   * (sql/customer_reviews_query.sql:58-70).
+   *
+   * A window with ORDER BY and no PARTITION BY forces ALL rollup rows into
+   * one partition (both here and in PostgreSQL). This variant instead:
+   *  1. ranks the distinct periods (a tiny dimension: one row per day/hour
+   *     — the only single-partition step, over #periods rows, not data);
+   *  2. builds the period->frame-member pair table by exploding each
+   *     target's member ranks and equi-joining the rank dimension
+   *     (broadcast hash join — never a nested-loop range join);
+   *  3. re-aggregates sketches with `topn_union_agg` grouped by the target
+   *     period — an ordinary shuffled aggregation, fully parallel in the
+   *     number of periods x groups.
+   *
+   * Identical results to the window form (merge below eviction threshold is
+   * order-free; above it, both forms are approximate by design).
+   */
   def slidingUnion(
       rollup: DataFrame,
       periodCol: String,
@@ -128,75 +128,6 @@ object Rollups {
       .withColumnRenamed(periodCol + "_out", periodCol)
   }
 
-  /**
-   * Sliding merge for WIDE frames. [[slidingUnion]] replicates every
-   * period's sketch `frameRows` times through the range join, so a 90- or
-   * 365-period frame multiplies shuffle volume and merge work by the frame
-   * width — and because sketch merge is not invertible, a moving window
-   * frame cannot subtract the departing period either. This variant uses
-   * the classic prefix/suffix block decomposition for non-invertible
-   * sliding aggregation instead:
-   *
-   *  1. pre-merge to ONE sketch per period (cheap, periods-sized), rank the
-   *     periods, and cut the rank axis into blocks of `frameRows`;
-   *  2. within each block compute two RUNNING merges — `pre(t)` = block
-   *     start..t (rank asc) and `suf(s)` = s..block end (rank desc). Both
-   *     are growing frames, so Spark's window operator folds each period
-   *     into the buffer exactly once: O(1) merges per period instead of
-   *     the O(frameRows) a moving frame re-merges, and the blocks
-   *     parallelize across the cluster;
-   *  3. a frame ending at rank t starts at s = t-frameRows+1. When s lands
-   *     in t's own block it is provably the block START (with block width
-   *     == frame width, same-block happens only at t <= frameRows or t at
-   *     a block end), so `pre(t)` alone IS the frame; otherwise s is in
-   *     the previous block and the frame is the disjoint union
-   *     `suf(s) ++ pre(t)`, stitched by a 1:1 equi-join on rank.
-   *
-   * Total cost: ~3 merges per period (pre + suf + stitch) at ANY frame
-   * width, vs `frameRows` merges in [[slidingUnion]] — at a 365-period
-   * frame that is a 100x reduction in both shuffle bytes and merge work.
-   *
-   * Block width is NOT a tunable knob: it must equal `frameRows`, because
-   * that is the unique width for which every frame either starts exactly
-   * at its own block's start (pre(t) alone is the frame) or spans exactly
-   * two adjacent blocks (suf(s) ++ pre(t) is a disjoint cover) — the proof
-   * in step 3. A narrower block (e.g. the sqrt-decomposition's
-   * sqrt(frame)) would let frames span full MIDDLE blocks, adding
-   * per-period middle-block merges and a variable-arity stitch for no
-   * gain: the ~3-merges-per-period invariant already holds at every
-   * width, and the per-block state is frameRows sketch rows — small at
-   * any realistic frame. (ScaleOpsSpec pins equality with the range-join
-   * form at w = 1/7/13/30/90/365/beyond-#periods.)
-   *
-   * Measured crossover (g_sliding_*_w bench rows, 10k-period synthetic
-   * rollup, 200 uniques/day, 100 counters, local[32], after
-   * [[slidingUnion]]'s frame join moved to the explode+equi form): this
-   * form is ~flat in width (~1.3s at w = 7..365) while the range-join
-   * form grows with it (0.97s at w=7 -> 2.3s at w=365 — the
-   * frameRows-fold replication is intrinsic to its shape). Below the
-   * crossover (narrow frames) the range-join's smaller fixed costs win:
-   * [[slidingUnion]] stays the right spelling for the 7-day frame, this
-   * one for wide frames.
-   *
-   * Exactly the window/range-join result below the eviction threshold
-   * (merge is order-free there). Above it, the running merges prune after
-   * each period (the aggregate finalizer is policy A), which is the same
-   * approximation contract as the reference's repeated `topn_add`/`union`
-   * pipeline — and the rank-pinned merge order makes the approximate
-   * result DETERMINISTIC across runs and repartitions, which the
-   * hash-partitioned re-aggregation in [[slidingUnion]] does not pin.
-   *
-   * The per-period running table (3 sketches x #periods) is persisted:
-   * it is consumed twice (frame-end and frame-start sides of the stitch
-   * join) and re-deriving it would re-run the caller's rollup aggregation
-   * — the multi-consumer lesson from the curation chain. It is
-   * periods-sized (bounded by counters x periods), never corpus-sized.
-   * The persist lives inside the RETURNED lazy plan, so it cannot be
-   * released here; a long-lived service issuing many of these should
-   * `spark.catalog.clearCache()` between query batches (the block is
-   * periods-sized, so the leak is small — unlike the corpus-sized
-   * tables pageRank now releases itself).
-   */
   /** Frame width at which [[slidingUnionWideFrame]] overtakes
     * [[slidingUnion]], from the g_sliding_*_w bench sweep (10k-period
     * synthetic rollup, 200 uniques/day, 100 counters, local[32]): the
@@ -274,6 +205,75 @@ object Rollups {
       TopnFunctions.topn_union_agg(col(sketchCol), numCounters).as(sketchCol))
   }
 
+  /**
+   * Sliding merge for WIDE frames. [[slidingUnion]] replicates every
+   * period's sketch `frameRows` times through the range join, so a 90- or
+   * 365-period frame multiplies shuffle volume and merge work by the frame
+   * width — and because sketch merge is not invertible, a moving window
+   * frame cannot subtract the departing period either. This variant uses
+   * the classic prefix/suffix block decomposition for non-invertible
+   * sliding aggregation instead:
+   *
+   *  1. pre-merge to ONE sketch per period (cheap, periods-sized), rank the
+   *     periods, and cut the rank axis into blocks of `frameRows`;
+   *  2. within each block compute two RUNNING merges — `pre(t)` = block
+   *     start..t (rank asc) and `suf(s)` = s..block end (rank desc). Both
+   *     are growing frames, so Spark's window operator folds each period
+   *     into the buffer exactly once: O(1) merges per period instead of
+   *     the O(frameRows) a moving frame re-merges, and the blocks
+   *     parallelize across the cluster;
+   *  3. a frame ending at rank t starts at s = t-frameRows+1. When s lands
+   *     in t's own block it is provably the block START (with block width
+   *     == frame width, same-block happens only at t <= frameRows or t at
+   *     a block end), so `pre(t)` alone IS the frame; otherwise s is in
+   *     the previous block and the frame is the disjoint union
+   *     `suf(s) ++ pre(t)`, stitched by a 1:1 equi-join on rank.
+   *
+   * Total cost: ~3 merges per period (pre + suf + stitch) at ANY frame
+   * width, vs `frameRows` merges in [[slidingUnion]] — at a 365-period
+   * frame that is a 100x reduction in both shuffle bytes and merge work.
+   *
+   * Block width is NOT a tunable knob: it must equal `frameRows`, because
+   * that is the unique width for which every frame either starts exactly
+   * at its own block's start (pre(t) alone is the frame) or spans exactly
+   * two adjacent blocks (suf(s) ++ pre(t) is a disjoint cover) — the proof
+   * in step 3. A narrower block (e.g. the sqrt-decomposition's
+   * sqrt(frame)) would let frames span full MIDDLE blocks, adding
+   * per-period middle-block merges and a variable-arity stitch for no
+   * gain: the ~3-merges-per-period invariant already holds at every
+   * width, and the per-block state is frameRows sketch rows — small at
+   * any realistic frame. (ScaleOpsSpec pins equality with the range-join
+   * form at w = 1/7/13/30/90/365/beyond-#periods.)
+   *
+   * Measured crossover (g_sliding_*_w bench rows, 10k-period synthetic
+   * rollup, 200 uniques/day, 100 counters, local[32], after
+   * [[slidingUnion]]'s frame join moved to the explode+equi form): this
+   * form is ~flat in width (~1.3s at w = 7..365) while the range-join
+   * form grows with it (0.97s at w=7 -> 2.3s at w=365 — the
+   * frameRows-fold replication is intrinsic to its shape). Below the
+   * crossover (narrow frames) the range-join's smaller fixed costs win:
+   * [[slidingUnion]] stays the right spelling for the 7-day frame, this
+   * one for wide frames.
+   *
+   * Exactly the window/range-join result below the eviction threshold
+   * (merge is order-free there). Above it, the running merges prune after
+   * each period (the aggregate finalizer is policy A), which is the same
+   * approximation contract as the reference's repeated `topn_add`/`union`
+   * pipeline — and the rank-pinned merge order makes the approximate
+   * result DETERMINISTIC across runs and repartitions, which the
+   * hash-partitioned re-aggregation in [[slidingUnion]] does not pin.
+   *
+   * The per-period running table (3 sketches x #periods) is persisted:
+   * it is consumed twice (frame-end and frame-start sides of the stitch
+   * join) and re-deriving it would re-run the caller's rollup aggregation
+   * — the multi-consumer lesson from the curation chain. It is
+   * periods-sized (bounded by counters x periods), never corpus-sized.
+   * The persist lives inside the RETURNED lazy plan, so it cannot be
+   * released here; a long-lived service issuing many of these should
+   * `spark.catalog.clearCache()` between query batches (the block is
+   * periods-sized, so the leak is small — unlike the corpus-sized
+   * tables pageRank now releases itself).
+   */
   def slidingUnionWideFrame(
       rollup: DataFrame,
       periodCol: String,

@@ -4,15 +4,14 @@ import org.apache.spark.sql.SparkSession
 
 /**
  * Plan/timing probe for optimization work: for each named query (or op),
- * prints `.explain("formatted")` to a file and optionally times the
- * noop-sink execution (guide §1.4 — every column of every row computed,
- * no sink cost, no column pruning under a bare count).
+ * prints `.explain("formatted")` to a file and optionally times the row
+ * by the bench's protocol ([[graft.Bench.timeRow]]: noop-sink writes,
+ * median and IQR of three reps after an untimed sf0.001 warm-up).
  *
  *   SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.PlanDump <outDir> <name1> <name2> ..."
  *
- * Env knobs: SPARK_GRAFT_PLAN_TIME=0 skips the timed run (plans only);
- * SPARK_GRAFT_PLAN_REPS (default 2) timed reps, min kept. Same session
- * config as Bench so the plans match what the bench runs.
+ * Env knob: SPARK_GRAFT_PLAN_TIME=0 skips the timed run (plans only).
+ * Same session config as Bench so the plans match what the bench runs.
  */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -22,7 +21,6 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val doTime = sys.env.getOrElse("SPARK_GRAFT_PLAN_TIME", "1") != "0"
-    val reps = sys.env.getOrElse("SPARK_GRAFT_PLAN_REPS", "2").toInt
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-plandump")
@@ -60,23 +58,11 @@ object PlanDump {
       if (doTime) {
         // warm-up on the smallest SF as the bench does (growth points
         // close over their own dir+scale — a "warm-up" would run the
-        // full point, so they skip it; the r20 ADVICE nit applied:
-        // NonFatal only, say so when it fails, dir from the env)
-        val warmDir = sys.env.getOrElse(
-          "SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-        if (!name.contains("@x")) {
-          try fn(spark, warmDir)
-            .write.format("noop").mode("overwrite").save()
-          catch { case scala.util.control.NonFatal(e) =>
-            println(s"""{"plandump":"$name","warmup_failed":"${e.getClass.getSimpleName}"}""")
-          }
-        }
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"""{"plandump":"$name","noop_min_sec":${ts.min}%.3f,"reps":${ts.mkString("[", ",", "]")}}""")
+        // full point, so they skip it)
+        if (!name.contains("@x")) graft.Bench.warmUp(name)(
+          graft.Bench.materialize(fn(spark, graft.Bench.warmDir(sfDir))))
+        val t = graft.Bench.timeRow(() => fn(spark, sfDir))
+        println(f"""{"plandump":"$name","noop_median_sec":${t.median}%.3f,"noop_iqr_sec":${t.iqr}%.3f,"reps":${graft.Bench.Reps}%d}""")
       } else println(s"""{"plandump":"$name","plan_only":true}""")
     }
     spark.stop()

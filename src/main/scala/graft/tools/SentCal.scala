@@ -1,28 +1,21 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /**
- * Measurement harnesses behind two frozen constants — re-run these before
- * changing either:
+ * Measurement harness behind a frozen constant — re-run it before
+ * changing it: exact [[graft.pipeline.Similarity.cosineNearDupPairs]]
+ * (pinned) vs [[graft.pipeline.Similarity.lshNearDupPairs]] at growing
+ * corpus sizes over the sf0.1 embeddings, each point timed by
+ * [[graft.Bench.timeRow]] (median of three noop writes) — the measured
+ * basis of [[graft.pipeline.Similarity.ExactTierMaxRows]].
  *
- *  - [[main]] (sentinel legs): per-rep cost of the two
- *    [[graft.Bench.sentinelOnce]] legs, separately, over 12 reps — the
- *    warm-up tail (reps 1-3) is why measureSentinel discards two reps
- *    before its min-of-5; the steady-state minima are the expected
- *    quiet-host sample. The r20 calibration table is in
- *    docs/BENCH_NOTES.md.
- *
- *  - [[crossover]] (exact-tier dispatch bar): exact
- *    [[graft.pipeline.Similarity.cosineNearDupPairs]] (pinned) vs
- *    [[graft.pipeline.Similarity.lshNearDupPairs]] at growing corpus
- *    sizes over the sf0.1 embeddings — the measured basis of
- *    [[graft.pipeline.Similarity.ExactTierMaxRows]].
- *    `sbt "runMain graft.tools.SentCal crossover"`.
+ *   sbt "runMain graft.tools.SentCal crossover"
  */
 object SentCal {
   def main(args: Array[String]): Unit = {
+    require(args.headOption.contains("crossover"),
+      "usage: SentCal crossover")
     val spark = SparkSession.builder()
       .master("local[32]")
       .appName("sentcal")
@@ -32,53 +25,8 @@ object SentCal {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if (args.headOption.contains("crossover")) crossover(spark)
-    else if (args.headOption.contains("bridge")) bridge(spark)
-    else legs(spark)
+    crossover(spark)
     spark.stop()
-  }
-
-  /** v2↔v3 sentinel BRIDGE (r20 verdict task 3): the v2→v3 workload bump
-    * shipped with no conversion pass, so r19 totals (v2 units) and r20+
-    * totals (v3 units) cannot be normalized onto one scale. This mode
-    * measures BOTH frozen workloads interleaved in the same host window,
-    * each under the exact [[graft.Bench.measureSentinel]] protocol
-    * (System.gc(), two discarded warm reps, min-of-5), and prints the
-    * v2:v3 ratio per pair. Two pairs = the two corroborating samples
-    * BENCH_NOTES records. v2 is the r19 workload verbatim (4B-row
-    * range→xxhash64→bit_xor, no shuffle leg); v3 delegates to
-    * [[graft.Bench.sentinelOnce]] so it can never drift from the live
-    * sentinel. */
-  private def bridge(spark: SparkSession): Unit = {
-    def v2Once(): Double = time(
-      spark.range(0L, 4000000000L, 1L, 32)
-        .select(bit_xor(xxhash64(col("id")))).head())
-    def protocol(once: () => Double): Double = {
-      System.gc()
-      once(); once()
-      (1 to 5).map(_ => once()).min
-    }
-    for (i <- 1 to 2) {
-      val s3 = protocol(() => graft.Bench.sentinelOnce(spark))
-      val s2 = protocol(v2Once)
-      println(f"pair $i  v3 $s3%.3f s  v2 $s2%.3f s  v2/v3 ${s2 / s3}%.3f")
-    }
-  }
-
-  private def time(body: => Unit): Double = {
-    val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-  }
-
-  private def legs(spark: SparkSession): Unit = {
-    def cpu(): Double = time(
-      spark.range(0L, 2000000000L, 1L, 32)
-        .select(bit_xor(xxhash64(col("id")))).head())
-    def shuffle(): Double = time(
-      spark.range(0L, 24000000L, 1L, 32)
-        .groupBy(xxhash64(col("id")).as("k")).agg(count(lit(1)).as("c"))
-        .agg(bit_xor(col("k").bitwiseXOR(col("c")))).head())
-    for (i <- 1 to 12)
-      println(f"rep $i%2d cpu ${cpu()}%.3f shuffle ${shuffle()}%.3f")
   }
 
   private def crossover(spark: SparkSession): Unit = {
@@ -87,15 +35,15 @@ object SentCal {
     for (c <- Seq(1, 4, 10, 32)) {
       val n = c * base
       def emb = graft.Bench.scaledEmb(spark, dir, c)
-      def exactRep() = time(graft.pipeline.Similarity.cosineNearDupPairs(
-        emb, "vec_id", "embedding", topPairs = 50,
-        maxExactRows = Long.MaxValue).count())
-      def lshRep() = time(graft.pipeline.Similarity.lshNearDupPairs(
-        emb, "vec_id", "embedding", topPairs = 50, dim = 64,
-        knownCount = n).count())
-      val exact = Seq(exactRep(), exactRep()).min
-      val lsh = Seq(lshRep(), lshRep()).min
-      println(f"n=$n%7d (x$c%-2d)  exact ${exact}%8.3f s   lsh ${lsh}%8.3f s   ratio ${exact / lsh}%6.2f")
+      val exact = graft.Bench.timeRow(() =>
+        graft.pipeline.Similarity.cosineNearDupPairs(
+          emb, "vec_id", "embedding", topPairs = 50,
+          maxExactRows = Long.MaxValue))
+      val lsh = graft.Bench.timeRow(() =>
+        graft.pipeline.Similarity.lshNearDupPairs(
+          emb, "vec_id", "embedding", topPairs = 50, dim = 64,
+          knownCount = n))
+      println(f"n=$n%7d (x$c%-2d)  exact ${exact.median}%8.3f s (iqr ${exact.iqr}%.3f)   lsh ${lsh.median}%8.3f s (iqr ${lsh.iqr}%.3f)   ratio ${exact.median / lsh.median}%6.2f")
     }
   }
 }

@@ -2,225 +2,80 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The growth-measurement outlier policy, exercised with planted timing
-  * sequences (no Spark): a load spike on a shallow-slope operator must
-  * trigger a re-run, while a REAL slope cliff that reproduces must be
-  * recorded as measured. */
+import scala.jdk.CollectionConverters._
+
+/** The bench's timing protocol and contract line, exercised with planted
+  * samples and thunks (no Spark). */
 class BenchSpec extends AnyFunSuite {
 
-  /** A scripted measurer: consumes per-scale queues of planted timings and
-    * records how many runs each scale consumed. */
-  private class Script(planted: Map[Int, Seq[Double]]) {
-    val queues = scala.collection.mutable.Map(
-      planted.view.mapValues(scala.collection.mutable.Queue(_: _*)).toSeq: _*)
-    val calls = scala.collection.mutable.Map.empty[Int, Int].withDefaultValue(0)
-    def measure(c: Int): Double = {
-      calls(c) += 1
-      val q = queues(c)
-      if (q.size > 1) q.dequeue() else q.head
-    }
+  private def close(a: Double, b: Double) = math.abs(a - b) < 1e-9
+
+  test("median and IQR of planted samples, quartiles interpolated") {
+    // three reps, any order: median the middle sample, IQR half the range
+    val three = Bench.medianIqr(Seq(3.0, 1.0, 2.0))
+    assert(close(three.median, 2.0) && close(three.iqr, 1.0))
+    // one loaded rep moves the IQR, not the median
+    val loaded = Bench.medianIqr(Seq(1.0, 9.0, 1.2))
+    assert(close(loaded.median, 1.2) && close(loaded.iqr, 4.0))
+    // the reducer is not tied to three samples
+    val four = Bench.medianIqr(Seq(4.0, 1.0, 3.0, 2.0))
+    assert(close(four.median, 2.5) && close(four.iqr, 1.5))
+    val one = Bench.medianIqr(Seq(0.7))
+    assert(close(one.median, 0.7) && one.iqr === 0.0)
+    intercept[IllegalArgumentException](Bench.medianIqr(Seq.empty))
   }
 
-  test("clean linear growth: no re-runs beyond the min-of-2 anchor") {
-    val s = new Script(Map(1 -> Seq(1.0), 4 -> Seq(4.0), 10 -> Seq(10.0)))
-    val out = Bench.measureGrowth(Seq(1, 4, 10), s.measure)
-    assert(out === Seq(1 -> 1.0, 4 -> 4.0, 10 -> 10.0))
-    assert(s.calls(1) === 2, "anchor is min-of-2")
-    assert(s.calls(4) === 1 && s.calls(10) === 1, "in-bar points run once")
+  test("a row whose thunk throws lands in failed with its class and stays out of value") {
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val ok = Bench.attempt("topn_ok", failed)(Bench.Timing(1.5, 0.1))
+    val bad = Bench.attempt("topn_bad", failed)(
+      throw new ArithmeticException("planted overflow"))
+    assert(ok === Some(Bench.Timing(1.5, 0.1)))
+    assert(bad === None)
+    assert(failed.toSeq === Seq("topn_bad" -> "java.lang.ArithmeticException"))
+    val line = Bench.contractLine(4, "sf", Seq("topn_ok" -> ok.get), Seq.empty,
+      Seq.empty, failed.toSeq)
+    assert(line.contains(""""value":1.500,"""), "value sums the timed rows only")
+    assert(!line.contains(""""topn_bad":-"""), "no -1 sentinel for a failed row")
   }
 
-  test("the round-9 artifact scenario: a 6.7x spike on a ~2.5x-slope operator re-runs") {
-    // g_text_repetition as recorded in BENCH_r09.json: 1.37 / 2.92 / 19.57.
-    // The OLD bar (2 * c * t1 = 27.4s at x10) never fired; the new bar
-    // (1.5 * 10/4 * 2.92 = 10.95s) must, and the fresh ~3.5s re-run wins.
-    val s = new Script(Map(1 -> Seq(1.37), 4 -> Seq(2.92), 10 -> Seq(19.57, 3.5)))
-    val out = Bench.measureGrowth(Seq(1, 4, 10), s.measure)
-    assert(out.last === (10 -> 3.5))
-    assert(s.calls(10) === 2, "the spike must trigger exactly one re-run")
+  test("a fatal error propagates through attempt") {
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    intercept[OutOfMemoryError](
+      Bench.attempt("row", failed)(throw new OutOfMemoryError("planted")))
+    assert(failed.isEmpty)
   }
 
-  test("a spike at the MIDDLE point re-runs too (not only the last)") {
-    val s = new Script(Map(1 -> Seq(1.0), 4 -> Seq(16.2, 4.1), 10 -> Seq(10.0)))
-    val out = Bench.measureGrowth(Seq(1, 4, 10), s.measure)
-    assert(out(1) === (4 -> 4.1))
-    // the honest x4 then anchors the x10 bar: 1.5 * 2.5 * 4.1 = 15.4 > 10
-    assert(s.calls(10) === 1)
-  }
-
-  test("a reproducing cliff is recorded as measured, not retried forever") {
-    val s = new Script(Map(1 -> Seq(1.0), 4 -> Seq(30.0)))
-    val out = Bench.measureGrowth(Seq(1, 4), s.measure)
-    assert(out.last === (4 -> 30.0), "a real regression must survive the policy")
-    assert(s.calls(4) === 3, "initial run + maxRetries = 2 re-runs, then stop")
-  }
-
-  test("a loaded anchor cannot hide a later spike: min-of-2 keeps the anchor honest") {
-    // first x1 sample is loaded (9.0); the second (1.0) wins and sets the bar
-    val s = new Script(Map(1 -> Seq(9.0, 1.0), 4 -> Seq(16.0, 4.0)))
-    val out = Bench.measureGrowth(Seq(1, 4), s.measure)
-    assert(out.head === (1 -> 1.0))
-    // bar = 1.5 * 4 * 1.0 = 6.0 — the 16.0 spike fires and 4.0 is kept
-    assert(out.last === (4 -> 4.0))
-  }
-
-  test("a failed measurement (-1) propagates without retry arithmetic on it") {
-    val s = new Script(Map(1 -> Seq(1.0), 4 -> Seq(-1.0), 10 -> Seq(10.0)))
-    val out = Bench.measureGrowth(Seq(1, 4, 10), s.measure)
-    assert(out(1) === (4 -> -1.0))
-    // the failed point must not become the anchor: x10 is judged vs x1
-    // (bar = 1.5 * 10 * 1.0 = 15.0, so 10.0 passes without re-run)
-    assert(s.calls(10) === 1)
-  }
-
-  /** A scripted flat-row measurer for measureAnchored. */
-  private class FlatScript(planted: Double*) {
-    val q = scala.collection.mutable.Queue(planted: _*)
-    var calls = 0
-    def measure(): Double = { calls += 1; if (q.size > 1) q.dequeue() else q.head }
-  }
-
-  test("round-10 artifact scenario: a sustained-load window outliving min-of-3 re-runs") {
-    // video_neardup_pairs as recorded in BENCH_r10.json: min-of-3 landed on
-    // 4.79s during a load window; the judge's fresh run measured 1.35s. With
-    // the r9 recording (0.85s) as anchor, the bar is 1.5 * 0.85 = 1.28 —
-    // all three loaded reps exceed it, the re-runs fire, the fresh run wins
-    // (1.35 is still over-bar, so the second bounded retry is also spent —
-    // fixture-build jitter above the anchor costs reps, never the result).
-    val s = new FlatScript(4.79, 5.1, 4.9, 1.35, 1.41)
-    val out = Bench.measureAnchored(s.measure, anchor = Some(0.85))
-    assert(out === 1.35)
-    assert(s.calls === 5, "3 base reps + maxRetries = 2 re-runs; fresh min kept")
-  }
-
-  test("an in-bar row never pays a re-run") {
-    val s = new FlatScript(0.35, 0.4, 0.37)
-    assert(Bench.measureAnchored(s.measure, anchor = Some(0.31)) === 0.35)
-    assert(s.calls === 3)
-  }
-
-  test("a reproducing flat-row regression is recorded as measured") {
-    // every rep and retry agrees: the plan really regressed; the honest
-    // number survives the policy (bounded extra reps, result not edited)
-    val s = new FlatScript(3.0, 3.1, 3.05, 3.0, 3.02)
-    assert(Bench.measureAnchored(s.measure, anchor = Some(0.5)) === 3.0)
-    assert(s.calls === 5, "3 base reps + maxRetries = 2, then stop")
-  }
-
-  test("a row with no anchor (new query) keeps plain min-of-3") {
-    val s = new FlatScript(2.0, 1.8, 1.9)
-    assert(Bench.measureAnchored(s.measure, anchor = None) === 1.8)
-    assert(s.calls === 3)
-  }
-
-  test("round-11 artifact scenario: an anchor-less row's loaded first recording is repaired at suite end") {
-    // topn_delta_monthly as recorded in BENCH_r11.json: new query, no prior
-    // anchor, min-of-3 ran inside a load window and recorded 1.495s; the
-    // judge's fresh isolated re-run measured 0.814s. The suite-end bootstrap
-    // re-measures the anchor-less row once more — by then the load window
-    // has passed — and the min ships.
-    var remeasured = List.empty[String]
-    val out = Bench.bootstrapAnchorless(
-      Seq("topn_delta_monthly" -> 1.495, "topn_window_7day" -> 1.638),
-      hasAnchor = Set("topn_window_7day"), // anchored rows are already protected
-      remeasure = { n => remeasured ::= n; 0.814 })
-    assert(out === Seq("topn_delta_monthly" -> 0.814, "topn_window_7day" -> 1.638))
-    assert(remeasured === List("topn_delta_monthly"),
-      "anchored rows must not pay the bootstrap rep")
-  }
-
-  test("bootstrap keeps the main-pass value when the re-measure is worse or fails") {
-    val out = Bench.bootstrapAnchorless(
-      Seq("a" -> 0.5, "b" -> 0.5, "c" -> -1.0),
-      hasAnchor = _ => false,
-      remeasure = Map("a" -> 0.9, "b" -> -1.0, "c" -> 0.2))
-    assert(out === Seq("a" -> 0.5, "b" -> 0.5, "c" -> -1.0),
-      "min wins; a failed re-measure or failed main pass is left as-is")
-  }
-
-  test("round-12 artifact scenario: a load window outliving the inline retries is repaired at suite end") {
-    // topn_doc_trigrams as recorded in BENCH_r12.json: the anchored inline
-    // retries all ran INSIDE a sustained load window (suite wall 1135s vs
-    // r11's 884s) and the row shipped 1.756s vs a 0.801s judge-fresh value.
-    // The deferred pass re-measures still-over-bar anchored rows after the
-    // whole suite — separated from the loaded slot by the remaining rows'
-    // wall-clock — and the min ships.
-    var remeasured = List.empty[String]
-    val anchors = Map("topn_doc_trigrams" -> 0.801, "topn_events_by_type" -> 0.355)
-    val out = Bench.retryOverBar(
-      Seq("topn_doc_trigrams" -> 1.756, // over bar (1.5 * 0.801 = 1.20)
-        "topn_events_by_type" -> 0.41, // within bar — no deferred rep
-        "new_query" -> 2.0), // anchor-less — bootstrapAnchorless's job, not this pass's
-      anchor = anchors.get,
-      remeasure = { n => remeasured ::= n; 0.83 })
-    assert(out === Seq("topn_doc_trigrams" -> 0.83,
-      "topn_events_by_type" -> 0.41, "new_query" -> 2.0))
-    assert(remeasured === List("topn_doc_trigrams"),
-      "only still-over-bar anchored rows pay the deferred rep")
-  }
-
-  test("deferred retry records a reproducing regression and tolerates a failed re-measure") {
-    val out = Bench.retryOverBar(
-      Seq("a" -> 3.0, "b" -> 3.0),
-      anchor = _ => Some(0.5),
-      remeasure = Map("a" -> 3.1, "b" -> -1.0))
-    assert(out === Seq("a" -> 3.0, "b" -> 3.0),
-      "min wins; a failed deferred re-measure never overwrites the recorded value")
-  }
-
-  test("round-14 artifact scenario: a growth spike under the within-run slope bar is repaired at suite end") {
-    // g_span_rewrite as recorded in BENCH_r14.json: x10 shipped 10.738s vs
-    // 5.04s judge-isolated. The within-run bar (1.5 x 10/4 x its own x4 =
-    // ~13.5s) never fired — a 2.6x spike at the 4->10 hop of a sublinear
-    // operator sits under a slope-relative bar by construction. The prior
-    // ROUND's artifact recorded the same point at 4.131s (BENCH_r13), so the
-    // cross-round bar is 6.2s: the deferred pass re-measures once and the
-    // fresh ~5.0s wins. The in-bar points must not pay a rep.
-    var remeasured = List.empty[(String, Int)]
-    val anchors = Map(("g_span_rewrite", 1) -> 1.057,
-      ("g_span_rewrite", 4) -> 3.703, ("g_span_rewrite", 10) -> 4.131)
-    val out = Bench.retryGrowthOverBar(
-      Seq("g_span_rewrite" -> Seq(1 -> 1.36, 4 -> 4.44, 10 -> 10.738),
-        "g_new_row" -> Seq(1 -> 0.5, 4 -> 9.9)), // no prior recording
-      anchor = (n, c) => anchors.get((n, c)),
-      remeasure = { (n, c) => remeasured ::= (n, c); 5.04 })
-    assert(out === Seq("g_span_rewrite" -> Seq(1 -> 1.36, 4 -> 4.44, 10 -> 5.04),
-      "g_new_row" -> Seq(1 -> 0.5, 4 -> 9.9)))
-    assert(remeasured === List(("g_span_rewrite", 10)),
-      "only over-bar points with a prior-round anchor pay the deferred rep")
-  }
-
-  test("growth deferred retry records a reproducing regression and tolerates a failed re-measure") {
-    val out = Bench.retryGrowthOverBar(
-      Seq("g_a" -> Seq(10 -> 8.0), "g_b" -> Seq(10 -> 8.0)),
-      anchor = (_, _) => Some(2.0),
-      remeasure = (n, c) => Map(("g_a", 10) -> 8.2, ("g_b", 10) -> -1.0)((n, c)))
-    assert(out === Seq("g_a" -> Seq(10 -> 8.0), "g_b" -> Seq(10 -> 8.0)),
-      "min wins; a failed deferred re-measure never overwrites the recorded value")
-  }
-
-  test("loadGrowthAnchors parses object-valued growth entries across artifact styles") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ganchor")
-    // escaped-"tail" style (the driver's) AND plain-line style; the minimum
-    // across rounds wins per (row, scale); the section key "growth" and the
-    // flat rows must not produce anchors
-    java.nio.file.Files.writeString(dir.resolve("BENCH_r01.json"),
-      """{"queries":{"warc_extract":0.3},"growth":{"g_span_rewrite":{"x1":1.1,"x4":3.9,"x10":4.6},"g_funnel":{"x1":0.4}},"sf":"x"}""")
-    java.nio.file.Files.writeString(dir.resolve("BENCH_r02.json"),
-      """{"n": 2, "tail": "\"growth\":{\"g_span_rewrite\":{\"x1\":1.057,\"x4\":3.703,\"x10\":4.131},\"g_funnel\":{\"x1\":0.5}}"}""")
-    java.nio.file.Files.writeString(dir.resolve("ignored.json"),
-      """{"growth":{"g_span_rewrite":{"x10":0.001}}}""")
-    val a = Bench.loadGrowthAnchors(dir.toString)
-    assert(a(("g_span_rewrite", 10)) === 4.131, "minimum across rounds wins")
-    assert(a(("g_span_rewrite", 1)) === 1.057)
-    assert(a(("g_funnel", 1)) === 0.4)
-    assert(!a.keys.exists(_._1 == "growth"), "the section key is not a row")
-    assert(!a.keys.exists(_._1 == "warc_extract"), "flat rows are loadAnchors' job")
+  test("the contract line from planted rows parses and carries the kept keys plus iqr and failed") {
+    val line = Bench.contractLine(
+      cpus = 4,
+      sf = "/data/sf0.01",
+      queries = Seq("a_query" -> Bench.Timing(1.25, 0.5), "b_query" -> Bench.Timing(2.0, 0.0)),
+      ops = Seq("a_op" -> Bench.Timing(0.5, 0.125)),
+      growth = Seq("g_row" -> Seq(1 -> Bench.Timing(1.0, 0.25), 4 -> Bench.Timing(3.5, 0.75))),
+      failed = Seq("g_row@x10" -> "java.lang.ArithmeticException"))
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(json.fieldNames().asScala.toSeq === Seq("metric", "value", "unit",
+      "cpus", "queries", "ops", "growth", "iqr", "failed", "sf"))
+    assert(json.get("metric").asText === "total")
+    assert(close(json.get("value").asDouble, 3.25), "sum of the query medians")
+    assert(json.get("unit").asText === "sec")
+    assert(json.get("cpus").asInt === 4)
+    assert(close(json.get("queries").get("a_query").asDouble, 1.25))
+    assert(close(json.get("ops").get("a_op").asDouble, 0.5))
+    assert(close(json.get("growth").get("g_row").get("x4").asDouble, 3.5))
+    val iqr = json.get("iqr")
+    assert(close(iqr.get("queries").get("a_query").asDouble, 0.5))
+    assert(close(iqr.get("ops").get("a_op").asDouble, 0.125))
+    assert(close(iqr.get("growth").get("g_row").get("x1").asDouble, 0.25))
+    assert(json.get("failed").get("g_row@x10").asText === "java.lang.ArithmeticException")
+    assert(json.get("sf").asText === "/data/sf0.01")
   }
 
   test("only a genuinely full run may write the committed artifact path") {
     // the r15 clobber, generalized (r15 ADVICE): a run deviating from
     // the default row set in ANY way — a filter, growth off, audit rows
-    // on — must divert, or it degrades every later run's anchors
+    // on — must divert, or it overwrites the full-suite artifact
     assert(Bench.defaultOutFile(None, growthOn = true, skipAudits = true)
       === "BENCH_local.json")
     assert(Bench.defaultOutFile(Some(Seq("funnel")), growthOn = true,
@@ -229,284 +84,5 @@ class BenchSpec extends AnyFunSuite {
       === "BENCH_only.json")
     assert(Bench.defaultOutFile(None, growthOn = true, skipAudits = false)
       === "BENCH_only.json")
-  }
-
-  test("a loaded full run cannot shadow the committed proof: promotion is gated") {
-    // the r16 clobber mechanized: the driver's loaded pass (100.07s) over
-    // the committed quiet-machine artifact (88.26s) must divert to the
-    // staging file; improvements and noise promote; SPARK_GRAFT_PROMOTE
-    // forces (the conscious act for a legitimately costlier suite)
-    assert(Bench.promotionTarget(100.07, Some(88.26), force = false)
-      === "BENCH_full.json")
-    assert(Bench.promotionTarget(91.0, Some(88.26), force = false)
-      === "BENCH_local.json", "within-slack noise promotes")
-    assert(Bench.promotionTarget(70.0, Some(88.26), force = false)
-      === "BENCH_local.json", "improvements promote")
-    assert(Bench.promotionTarget(100.07, Some(88.26), force = true)
-      === "BENCH_local.json", "the explicit flag promotes anything")
-    assert(Bench.promotionTarget(100.07, None, force = false)
-      === "BENCH_local.json", "no committed artifact -> first recording lands")
-    // a crashed row records -1 and LOWERS the total — such a run must
-    // never promote, not even forced: it would ship a broken proof AND
-    // divert every later honest run against its bogus low baseline
-    assert(Bench.promotionTarget(80.0, Some(88.26), force = false,
-      anyFailed = true) === "BENCH_full.json")
-    assert(Bench.promotionTarget(80.0, Some(88.26), force = true,
-      anyFailed = true) === "BENCH_full.json")
-    // the RAW backstop (r19 ADVICE): an engine change that inflates the
-    // sentinel itself (heap/GC pressure) can normalize a slower build
-    // through the gate — the caller bounds the raw total at
-    // slack x clampHi x committed raw, and a pass over that bound
-    // diverts regardless of its normalized total; only force overrides
-    assert(Bench.promotionTarget(85.0, Some(88.26), force = false,
-      rawOk = false) === "BENCH_full.json",
-      "normalized-in-gate but raw-backstop-failing pass must divert")
-    assert(Bench.promotionTarget(85.0, Some(88.26), force = true,
-      rawOk = false) === "BENCH_local.json",
-      "force is the conscious override, as for the gate itself")
-    // and the committed total parses from the artifact's own head
-    val dir = java.nio.file.Files.createTempDirectory("graft_ptotal")
-    java.nio.file.Files.writeString(dir.resolve("BENCH_local.json"),
-      """{"metric":"total","value":88.260,"unit":"sec","queries":{"a":1.0}}""")
-    assert(Bench.committedTotal(dir.toString) === Some(88.26))
-    assert(Bench.committedTotal(
-      java.nio.file.Files.createTempDirectory("graft_ptotal_e").toString)
-      === None)
-    // an artifact that EXISTS but cannot be parsed fails CLOSED: the gate
-    // must divert rather than treat corruption as "no prior recording"
-    val cdir = java.nio.file.Files.createTempDirectory("graft_ptotal_c")
-    java.nio.file.Files.writeString(cdir.resolve("BENCH_local.json"),
-      "not json at all")
-    val corrupt = Bench.committedTotal(cdir.toString)
-    assert(corrupt.exists(_.isNaN))
-    assert(Bench.promotionTarget(50.0, corrupt, force = false)
-      === "BENCH_full.json",
-      "a corrupt committed artifact must divert, not open the gate")
-  }
-
-  test("host factor: ratio of measured to quietest committed sentinel, clamped [1.0, 1.5]") {
-    // the r18 lesson mechanized: bars were absolute seconds on a host
-    // drifting +-25%, so four honest full passes diverted. The factor
-    // only ever LOOSENS bars (floor clamp 1.0 keeps committed floors on
-    // a fast host) and refuses to stretch past 1.5 (a window that
-    // hostile should divert, not bend the bars around itself)
-    assert(math.abs(Bench.hostFactor(1.32, Some(1.1)) - 1.2) < 1e-9)
-    assert(Bench.hostFactor(0.9, Some(1.1)) === 1.0, "fast host clamps to 1.0")
-    assert(Bench.hostFactor(9.9, Some(1.1)) === 1.5, "hi clamp")
-    assert(Bench.hostFactor(1.32, None) === 1.0, "no committed sentinel yet")
-    assert(Bench.hostFactor(-1.0, Some(1.1)) === 1.0, "failed measurement")
-    assert(Bench.hostFactor(1.32, Some(Double.NaN)) === 1.0, "corrupt ref")
-  }
-
-  test("committed sentinel: explicit cfg marker, robust floor, escaped tails tolerated") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sentinel")
-    val v = Bench.SentinelVersion
-    // the CURRENT writer contract: the (sentinel_v, sentinel_cfg,
-    // sentinel_sec) triplet is written atomically in this order by every
-    // writer — the EXPLICIT cfg field replaced the r19 field-adjacency
-    // discrimination (host_factor trailing the value), which silently
-    // broke once mid-round when sentinel_med shipped between them
-    // (the pass-6 regression; r19 ADVICE)
-    java.nio.file.Files.writeString(dir.resolve("BENCH_r19.json"),
-      s"""{"metric":"total","value":9.9,"sentinel_v":$v,"sentinel_cfg":"suite","sentinel_sec":1.312,"sentinel_med":1.400,"host_factor":1.050,"queries":{"a":1.0}}""")
-    // staging artifacts COUNT for the sentinel (unlike anchors): the
-    // workload is frozen and load only adds time — this is what
-    // bootstraps the reference in the round a sentinel version ships.
-    // 1.320 corroborates 1.312 (within 5%), so 1.312 is the reference
-    // even though an uncorroborated 1.104 sits below it: a lone
-    // anomalously fast recording (turbo burst, timer glitch) must not
-    // permanently tighten the floor and loosen every later bar (r19
-    // ADVICE)
-    java.nio.file.Files.writeString(dir.resolve("BENCH_full.json"),
-      s"""{"metric":"total","sentinel_v":$v,"sentinel_cfg":"suite","sentinel_sec":1.320,"sentinel_med":1.410,"host_factor":1.000,"queries":{}}""")
-    java.nio.file.Files.writeString(dir.resolve("BENCH_r20.json"),
-      s"""{"n": 2, "rc": 0, "tail": "\\"sentinel_v\\":$v,\\"sentinel_cfg\\":\\"suite\\",\\"sentinel_sec\\":1.104,\\"host_factor\\":1.000"}""")
-    // the x100 mode's recording is EXCLUDED by its explicit cfg: its 24g
-    // long-settled JVM floors ~10% lower than the suite JVM, and the
-    // round-19 pass-4 miscalibration showed a cross-config reference
-    // inflating every later factor
-    java.nio.file.Files.writeString(dir.resolve("BENCH_x100.json"),
-      s"""{"metric":"x100","sentinel_v":$v,"sentinel_cfg":"x100","sentinel_sec":0.904,"fixture":"/tmp/f"}""")
-    java.nio.file.Files.writeString(dir.resolve("BENCH_crash.json"),
-      s"""{"metric":"total","sentinel_v":$v,"sentinel_cfg":"suite","sentinel_sec":-1.000,"host_factor":1.000,"queries":{}}""")
-    // a recording of a DIFFERENT workload version is not a reference —
-    // the round-19 near-miss: a stale staging recording of a shorter
-    // sentinel would clamp every later factor to the hi bound
-    java.nio.file.Files.writeString(dir.resolve("BENCH_r18.json"),
-      s"""{"metric":"total","sentinel_v":${v - 1},"sentinel_cfg":"suite","sentinel_sec":0.213,"host_factor":1.000,"queries":{"a":1.0}}""")
-    java.nio.file.Files.writeString(dir.resolve("not_bench.txt"),
-      s"""{"sentinel_v":$v,"sentinel_cfg":"suite","sentinel_sec":0.001,"host_factor":1.000}""")
-    assert(Bench.committedSentinel(dir.toString) === Some(1.312),
-      "smallest CORROBORATED same-version suite-config recording wins; " +
-        "a lone outlier minimum, crashed (-1), other-version, " +
-        "cross-config (x100), and non-artifact recordings are ignored")
-    assert(Bench.committedSentinel(
-      java.nio.file.Files.createTempDirectory("graft_sentinel_e").toString)
-      === None, "pre-r19 artifacts carry no sentinel")
-    // single recording: its own bootstrap reference
-    val one = java.nio.file.Files.createTempDirectory("graft_sentinel_1")
-    java.nio.file.Files.writeString(one.resolve("BENCH_full.json"),
-      s"""{"metric":"total","sentinel_v":$v,"sentinel_cfg":"suite","sentinel_sec":1.500,"queries":{}}""")
-    assert(Bench.committedSentinel(one.toString) === Some(1.5))
-    // two recordings too far apart to corroborate: the MEDIAN (= the
-    // larger of two) stands — conservative, a larger reference only
-    // ever tightens bars
-    val two = java.nio.file.Files.createTempDirectory("graft_sentinel_2")
-    java.nio.file.Files.writeString(two.resolve("BENCH_full.json"),
-      s"""{"metric":"total","sentinel_v":$v,"sentinel_cfg":"suite","sentinel_sec":0.600,"queries":{}}""")
-    java.nio.file.Files.writeString(two.resolve("BENCH_r01.json"),
-      s"""{"metric":"total","sentinel_v":$v,"sentinel_cfg":"suite","sentinel_sec":0.900,"queries":{}}""")
-    assert(Bench.committedSentinel(two.toString) === Some(0.9))
-    // one recording DUPLICATED across files (the driver tail copies the
-    // committed line) cannot corroborate itself: values are deduplicated
-    val dup = java.nio.file.Files.createTempDirectory("graft_sentinel_d")
-    java.nio.file.Files.writeString(dup.resolve("BENCH_local.json"),
-      s"""{"metric":"total","sentinel_v":$v,"sentinel_cfg":"suite","sentinel_sec":0.600,"queries":{}}""")
-    java.nio.file.Files.writeString(dup.resolve("BENCH_r01.json"),
-      s"""{"n": 1, "tail": "\\"sentinel_v\\":$v,\\"sentinel_cfg\\":\\"suite\\",\\"sentinel_sec\\":0.600"}""")
-    java.nio.file.Files.writeString(dup.resolve("BENCH_r02.json"),
-      s"""{"metric":"total","sentinel_v":$v,"sentinel_cfg":"suite","sentinel_sec":0.900,"queries":{}}""")
-    assert(Bench.committedSentinel(dup.toString) === Some(0.9),
-      "a copied recording must not corroborate its own outlier value")
-  }
-
-  test("core-count guard: sentinel reference, anchors and the proof filter on cpus") {
-    // the r20 promotion accident: the driver's local[8] full run beat the
-    // 32-core gate on normalization arithmetic and became the committed
-    // proof — its per-row minima (half the suite ran FASTER at 8 cores)
-    // then poison every 32-core retry bar. From r21 every artifact line
-    // carries "cpus" and each loader only reads same-cpus recordings.
-    val v = Bench.SentinelVersion
-    val dir = java.nio.file.Files.createTempDirectory("graft_cpus")
-    java.nio.file.Files.writeString(dir.resolve("BENCH_r21.json"),
-      s"""{"metric":"total","value":9.9,"sentinel_v":$v,"sentinel_cfg":"suite","sentinel_sec":1.000,"sentinel_med":1.1,"host_factor":1.0,"cpus":32,"queries":{"a":2.000},"growth":{"g_x":{"x4":3.000}}}""")
-    // an 8-core proof at the committed path (exactly the r20 state, but
-    // with the cpus field recorded)
-    java.nio.file.Files.writeString(dir.resolve("BENCH_local.json"),
-      s"""{"metric":"total","value":5.0,"sentinel_v":$v,"sentinel_cfg":"suite","sentinel_sec":0.700,"sentinel_med":0.9,"host_factor":1.0,"cpus":8,"queries":{"a":0.500},"growth":{"g_x":{"x4":1.000}}}""")
-    assert(Bench.committedSentinel(dir.toString, 32) === Some(1.0),
-      "an 8-core sentinel recording is not a 32-core floor")
-    assert(Bench.committedSentinel(dir.toString, 8) === Some(0.7))
-    assert(Bench.loadAnchors(dir.toString, Set("a"), 32) === Map("a" -> 2.0),
-      "8-core minima must not become 32-core retry bars")
-    assert(Bench.loadAnchors(dir.toString, Set("a"), 8) === Map("a" -> 0.5))
-    assert(Bench.loadGrowthAnchors(dir.toString, 32) === Map(("g_x", 4) -> 3.0))
-    assert(Bench.loadGrowthAnchors(dir.toString, 8) === Map(("g_x", 4) -> 1.0))
-    assert(Bench.committedProofCpus(dir.toString) === Some(8))
-    // legacy artifacts (no cpus field) are 32-core recordings — every
-    // pre-r21 committed BENCH_r*.json was — and a legacy PROOF yields
-    // only to an explicit force (main's cpusOk gate)
-    assert(Bench.artifactCpus("""{"metric":"total","value":1.0}""") === 32)
-    val legacy = java.nio.file.Files.createTempDirectory("graft_cpus_l")
-    java.nio.file.Files.writeString(legacy.resolve("BENCH_local.json"),
-      s"""{"metric":"total","value":5.0,"queries":{"a":0.500}}""")
-    assert(Bench.committedProofCpus(legacy.toString) === None)
-    assert(Bench.committedProofCpus(
-      java.nio.file.Files.createTempDirectory("graft_cpus_e").toString)
-      === None)
-    // the driver's wrapper artifact style: top-level "cpus": 8 (with
-    // space) ahead of the tail — the filter must read it
-    java.nio.file.Files.writeString(dir.resolve("BENCH_r22.json"),
-      s"""{"n": 2, "rc": 0, "cpus": 8, "tail": "\\"sentinel_v\\":$v,\\"sentinel_cfg\\":\\"suite\\",\\"sentinel_sec\\":0.690"}""")
-    assert(Bench.committedSentinel(dir.toString, 32) === Some(1.0),
-      "driver-wrapped 8-core tails stay out of the 32-core reference")
-    assert(Bench.committedSentinel(dir.toString, 8) === Some(0.69),
-      "0.690 corroborates 0.700 within 5% and becomes the 8-core floor")
-  }
-
-  test("normalized promotion: a full pass on a slow host promotes by its normalized total") {
-    // the r18 verdict's Done-criterion, as a synthetic-factor spec: raw
-    // 95 s measured under host factor 1.2 normalizes to 79.2 s — within
-    // the 1.05 gate over a committed 80 s @ factor 1.0 — and promotes;
-    // the SAME raw total at factor 1.0 (a genuinely slower suite) diverts
-    assert(Bench.promotionTarget(95.0 / 1.2, Some(80.0 / 1.0), force = false)
-      === "BENCH_local.json", "normalized-in-gate slow-host pass promotes")
-    assert(Bench.promotionTarget(95.0 / 1.0, Some(80.0 / 1.0), force = false)
-      === "BENCH_full.json", "the same raw total on a quiet host diverts")
-    // and a committed proof recorded ON a slow host is normalized by its
-    // own factor, so it cannot ratchet the bar upward: committed raw 95
-    // @ 1.2 gates at 79.2, not 95
-    assert(Bench.promotionTarget(90.0 / 1.0, Some(95.0 / 1.2), force = false)
-      === "BENCH_full.json",
-      "a slow-host committed proof must not loosen the gate to its raw total")
-    // committedHostFactor parses the committed proof's factor (1.0 when
-    // absent — every pre-r19 artifact)
-    val dir = java.nio.file.Files.createTempDirectory("graft_hf")
-    java.nio.file.Files.writeString(dir.resolve("BENCH_local.json"),
-      """{"metric":"total","value":95.0,"sentinel_sec":1.32,"host_factor":1.200,"queries":{"a":1.0}}""")
-    assert(Bench.committedHostFactor(dir.toString) === 1.2)
-    val dirOld = java.nio.file.Files.createTempDirectory("graft_hf_old")
-    java.nio.file.Files.writeString(dirOld.resolve("BENCH_local.json"),
-      """{"metric":"total","value":79.1,"queries":{"a":1.0}}""")
-    assert(Bench.committedHostFactor(dirOld.toString) === 1.0)
-    assert(Bench.committedHostFactor(
-      java.nio.file.Files.createTempDirectory("graft_hf_e").toString) === 1.0)
-  }
-
-  test("drift-invariant gate: both sides normalize against the CURRENT reference") {
-    // the round-19 pass-5 lesson: pass 3 recorded its factor against a
-    // 0.720 reference, the floor then tightened to 0.666, and pass 5
-    // (raw-SLOWER, 90.408 @ med 0.759 vs 83.154 @ med 0.749) promoted on
-    // normalization arithmetic alone. With the committed median recorded,
-    // both sides normalize by hostFactor(their med, the SAME current ref)
-    // — the reference cancels and the decision is the same at every floor
-    val dir = java.nio.file.Files.createTempDirectory("graft_med")
-    java.nio.file.Files.writeString(dir.resolve("BENCH_local.json"),
-      s"""{"metric":"total","value":83.154,"unit":"sec","sentinel_v":${Bench.SentinelVersion},"sentinel_cfg":"suite","sentinel_sec":0.666,"sentinel_med":0.749,"host_factor":1.041,"queries":{"a":1.0}}""")
-    assert(Bench.committedSentinelMed(dir.toString) === Some(0.749))
-    // a committed median recorded under a DIFFERENT sentinel version is
-    // NOT comparable to the current reference (the v2->v3 workload
-    // change ~triples the sentinel): fall back to the recorded factor
-    val dirV = java.nio.file.Files.createTempDirectory("graft_med_v")
-    java.nio.file.Files.writeString(dirV.resolve("BENCH_local.json"),
-      s"""{"metric":"total","value":83.154,"unit":"sec","sentinel_v":${Bench.SentinelVersion - 1},"sentinel_cfg":"suite","sentinel_sec":0.666,"sentinel_med":0.749,"host_factor":1.041,"queries":{"a":1.0}}""")
-    assert(Bench.committedSentinelMed(dirV.toString) === None,
-      "an other-version median must not normalize against the current reference")
-    // ... and the transition rule has the version to key on: another
-    // version -> the gate compares RAW vs RAW (dividing by the RECORDED
-    // factor is the non-invariant arithmetic the med fix deprecated —
-    // observed at the v2->v3 bump, where the r19 proof's 1.153 factor
-    // set a ~74 s bar that diverted every honest ~85 s-raw pass);
-    // pre-sentinel artifacts (no version at all) keep the recorded-
-    // factor fallback
-    assert(Bench.committedSentinelVersion(dirV.toString)
-      === Some(Bench.SentinelVersion - 1))
-    assert(Bench.committedSentinelVersion(dir.toString)
-      === Some(Bench.SentinelVersion))
-    for (ref <- Seq(Some(0.666), Some(0.720), Some(0.800), None)) {
-      val newNorm = 90.408 / Bench.hostFactor(0.759, ref)
-      val comNorm = 83.154 / Bench.hostFactor(0.749, ref)
-      assert(Bench.promotionTarget(newNorm, Some(comNorm), force = false)
-        === "BENCH_full.json",
-        s"a raw-slower, similar-window pass must divert at ref=$ref")
-      val cheaper = 80.0 / Bench.hostFactor(0.759, ref)
-      assert(Bench.promotionTarget(cheaper, Some(comNorm), force = false)
-        === "BENCH_local.json",
-        s"a genuinely cheaper pass must promote at ref=$ref")
-    }
-    // a pre-median committed artifact falls back to its recorded factor
-    val dirOld = java.nio.file.Files.createTempDirectory("graft_med_old")
-    java.nio.file.Files.writeString(dirOld.resolve("BENCH_local.json"),
-      """{"metric":"total","value":79.1,"host_factor":1.000,"queries":{"a":1.0}}""")
-    assert(Bench.committedSentinelMed(dirOld.toString) === None)
-    assert(Bench.committedSentinelVersion(dirOld.toString) === None,
-      "pre-sentinel artifacts carry no version: recorded-factor fallback")
-  }
-
-  test("loadAnchors takes the minimum across artifacts and tolerates escaped tails") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_anchor")
-    // r(N-1): plain JSON-line style; r(N): the driver's escaped-"tail" style
-    java.nio.file.Files.writeString(dir.resolve("BENCH_r01.json"),
-      """{"metric":"total","value":9.9,"queries":{"warc_extract":0.310,"video_neardup_pairs":0.850},"sf":"x"}""")
-    java.nio.file.Files.writeString(dir.resolve("BENCH_r02.json"),
-      """{"n": 2, "rc": 0, "sf": 0.1, "tail": "\"warc_extract\":1.418,\"video_neardup_pairs\":4.788,\"x1\":0.1"}""")
-    java.nio.file.Files.writeString(dir.resolve("not_a_bench.json"), """{"warc_extract":0.001}""")
-    val anchors = Bench.loadAnchors(dir.toString,
-      Set("warc_extract", "video_neardup_pairs", "missing_row"))
-    assert(anchors("warc_extract") === 0.310, "minimum across rounds wins")
-    assert(anchors("video_neardup_pairs") === 0.850)
-    assert(!anchors.contains("missing_row"))
-    assert(!anchors.contains("x1"), "scale keys are not anchors")
-    assert(!anchors.contains("value"), "totals are not anchors")
   }
 }

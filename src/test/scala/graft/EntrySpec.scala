@@ -42,6 +42,14 @@ class EntrySpec extends AnyFunSuite {
     }
   }
 
+  test("every benchOnly row materializes through the noop sink at sf0.001") {
+    // the bench times these rows by a noop write; count() let Catalyst
+    // prune their outputs, which hid bpe_vocab_encode_op's ANSI overflow
+    SparkEntry.benchOnly.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      withClue(s"$name: ")(Bench.materialize(fn(spark, "/root/testdata/sf0.001")))
+    }
+  }
+
   test("Verify's empty-dump guard fires on every empty-evidence shape (round-12 failure mode)") {
     // the round-12 driver artifact was `{}` and nothing noticed; Verify now
     // exits non-zero with a grep-able marker whenever a run produced no
