@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import scala.util.control.NonFatal
 
+import graft.catalog.FixtureStore
+
 /**
  * Benchmark main: runs every SparkEntry query against
  * `SPARK_GRAFT_SF_DIR` (default sf0.1) on local[32] and prints ONE JSON
@@ -53,22 +55,21 @@ object Bench {
     * (docs/BENCH_NOTES.md round 16 re-baselines the affected rows).
     * The in-band `_g<i>` caveat is now a CHECKED precondition: a corpus
     * token literally ending in `_g<i>` would collide with copy i's remap
-    * of its prefix, so the first scaling of each dir asserts none exists
-    * ([[BenchFixture.assertRemapSafe]]) — memoized per dir, one scan.
-    * main PRE-RESOLVES the check before the growth clock starts
-    * ([[preflightRemapCheck]], the lidServeModel doctrine: the x1 sample
-    * has copies == 1 and skips the gate, so without the preflight the
-    * scan would land inside the first TIMED copies>1 sample and inflate
-    * that recorded point); direct callers outside the bench pay it once
-    * on their first copies>1 use. */
-  private val remapSafeDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    * of its prefix, so the first scaling of each fixture asserts none
+    * exists ([[BenchFixture.assertRemapSafe]]) — one scan per fixture
+    * fingerprint in the [[graft.catalog.FixtureStore]], so a fixture
+    * rewritten in place is checked again. main PRE-RESOLVES the check
+    * before the growth clock starts ([[preflightRemapCheck]]: the x1
+    * sample has copies == 1 and skips the gate, so without the preflight
+    * the scan would land inside the first TIMED copies>1 sample and
+    * inflate that recorded point); direct callers outside the bench pay
+    * it once on their first copies>1 use. */
   private[graft] def preflightRemapCheck(spark: SparkSession, dir: String): Unit =
-    if (!remapSafeDirs.contains(dir)) {
+    FixtureStore.value("remap_safe", dir, "documents") {
       BenchFixture.assertRemapSafe(
         spark.read.parquet(s"$dir/documents.parquet"), "text",
         s"scaledDocs($dir)")
-      remapSafeDirs.add(dir)
+      java.lang.Boolean.TRUE
     }
   private[graft] def scaledDocs(spark: SparkSession, dir: String, copies: Int): DataFrame = {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
@@ -124,55 +125,39 @@ object Bench {
   }
 
   /** Frozen LID model for the serve-slope row — trained ONCE on the x1
-    * corpus, so every g_lid_serve point prices only the scoring pass.
-    * main RESOLVES this before the growth suite's clock starts (training
-    * must not land inside the first timed x1 rep). The cache
-    * stores the OWNING session next to each model and only serves an
-    * entry whose session is THIS session object (`eq`) — a bare
-    * identityHashCode key could recur after a stopped session is GC'd and
-    * hand out a model whose weights DataFrame is bound to a dead session
-    * (r16 ADVICE); entries of stopped sessions are evicted on access, so
-    * the map never pins dead-session state for the JVM's life either. */
-  private val lidServeModels = new java.util.concurrent.ConcurrentHashMap[
-    String, (SparkSession, graft.pipeline.Classifier.MultiModel)]()
+    * corpus and written to the [[graft.catalog.FixtureStore]], so every
+    * g_lid_serve point prices only the scoring pass. main RESOLVES this
+    * before the growth suite's clock starts (training must not land
+    * inside the first timed x1 rep). */
   private def lidServeModel(spark: SparkSession, dir: String)
       : graft.pipeline.Classifier.MultiModel = {
-    lidServeModels.entrySet()
-      .removeIf(e => e.getValue._1.sparkContext.isStopped)
-    lidServeModels.compute(
-      s"${System.identityHashCode(spark)}@$dir", (_, held) =>
-      if (held != null && (held._1 eq spark)) held
-      else (spark, graft.pipeline.Classifier.MultiModel(
-        graft.pipeline.Classifier.trainMulti(
-          spark.read.parquet(s"$dir/documents.parquet"),
-          "doc_id", "text", "lang", numBuckets = 4096, iters = 2),
-        4096)))._2
+    val p = FixtureStore.stage("lid_serve_model", dir, "documents") { out =>
+      graft.pipeline.Classifier.saveMulti(
+        graft.pipeline.Classifier.MultiModel(
+          graft.pipeline.Classifier.trainMulti(
+            spark.read.parquet(s"$dir/documents.parquet"),
+            "doc_id", "text", "lang", numBuckets = 4096, iters = 2),
+          4096), out)
+    }
+    graft.pipeline.Classifier.loadMulti(p, spark)
   }
 
-  /** MATERIALIZED minhashLshPairs per (session, dir, scale) — the pair
-    * set the g_dedup_cc decomposition row times CC over. Eager
-    * localCheckpoint: the pair table is tiny (thousands of rows), the
-    * lineage truncation keeps repeated CC reps from re-running the pair
-    * stage, and — unlike catalog cache — the width-sweep rows'
-    * clearCache() cannot wipe it between reps. main PRE-RESOLVES every
-    * scale before the growth clock starts (the lidServeModel doctrine);
-    * session-eq guard + stopped-session eviction as in
-    * [[lidServeModels]]. */
-  private val dedupPairsFixtures = new java.util.concurrent.ConcurrentHashMap[
-    String, (SparkSession, DataFrame)]()
+  /** The minhashLshPairs pair set at scale `c` — what the g_dedup_cc
+    * decomposition row times CC over — written once per fixture to the
+    * [[graft.catalog.FixtureStore]]. The pair table is tiny (thousands of
+    * rows); reading it back keeps repeated CC reps from re-running the
+    * pair stage, and the width-sweep rows' clearCache() cannot wipe it
+    * between reps. main PRE-RESOLVES every scale before the growth clock
+    * starts. */
   private[graft] def dedupPairsFixture(
       spark: SparkSession, dir: String, c: Int): DataFrame = {
-    dedupPairsFixtures.entrySet()
-      .removeIf(e => e.getValue._1.sparkContext.isStopped)
-    dedupPairsFixtures.compute(
-      s"${System.identityHashCode(spark)}@$dir@x$c", (_, held) =>
-      if (held != null && (held._1 eq spark)) held
-      else {
-        val base = spark.read.parquet(s"$dir/documents.parquet").count()
-        (spark, graft.pipeline.Dedup.minhashLshPairs(
-          scaledDocs(spark, dir, c), "doc_id", "text", threshold = 0.5,
-          knownCount = c * base).localCheckpoint(true))
-      })._2
+    val p = FixtureStore.stage(s"dedup_pairs_x$c", dir, "documents") { out =>
+      val base = spark.read.parquet(s"$dir/documents.parquet").count()
+      graft.pipeline.Dedup.minhashLshPairs(
+        scaledDocs(spark, dir, c), "doc_id", "text", threshold = 0.5,
+        knownCount = c * base).write.mode("overwrite").parquet(out)
+    }
+    spark.read.parquet(p)
   }
 
   /** [[growthSuite]] for the PlanDump tool: growth rows are where the
@@ -279,8 +264,8 @@ object Bench {
     // stages): the PAIR stage's timed twin is g_dedup_minhash_lsh
     // (IDENTICAL args, measured in the same pass), and this row times
     // the CC rounds ALONE over the same pair set, materialized UNTIMED
-    // at preflight ([[dedupPairsFixture]] — localCheckpoint, deliberately
-    // not catalog cache, which the width-sweep rows clear). Together the
+    // at preflight ([[dedupPairsFixture]] — a written stage, which the
+    // width-sweep rows' clearCache() cannot wipe). Together the
     // artifact carries both sub-timings next to the composed row, so a
     // slow g_dedup_clusters window names its stage.
     ("g_dedup_cc", Seq(1, 4, 10, 32), (c: Int) =>
@@ -825,7 +810,7 @@ object Bench {
       if (!growthOn) Seq.empty
       else growthSuite(spark, sfDir).filter(g => selected(g._1))
     // g_lid_serve's frozen model trains HERE, before any growth clock
-    // starts — computeIfAbsent inside the thunk would otherwise pay the
+    // starts — the store build inside the thunk would otherwise pay the
     // one-time training inside the first timed x1 rep
     if (gSuite.exists(_._1 == "g_lid_serve")) lidServeModel(spark, sfDir)
     // the remap-safety scan likewise resolves BEFORE any growth clock:

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /**
  * Vocabulary-driven (BPE-merge) tokenizer — the pluggable alternative to
@@ -348,7 +349,7 @@ object Bpe {
         }
       }
     } finally {
-      try words.unpersist() catch { case _: Throwable => }
+      try words.unpersist() catch { case NonFatal(_) => }
     }
     learned.toSeq
   }

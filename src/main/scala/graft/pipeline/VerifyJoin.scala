@@ -85,13 +85,12 @@ private[graft] object VerifyJoin {
     * corpus per session is the honest price. The key is the analyzed
     * plan's SEMANTIC hash (two independent reads of the same parquet
     * path canonicalize equal — the CacheManager's own matching rule);
-    * the session guard is the [[graft.Bench]] lidServeModels pattern
-    * (entry served only to the session object that built it, stopped
-    * sessions evicted on access). Same caveat as Spark's plan cache:
-    * content changing UNDER an identical plan (an appended file) is
-    * invisible until a new session — a width estimate only ever trades
-    * broadcast vs shuffled-hash near the boundary, so staleness is
-    * benign by the operator's own contract. */
+    * the session guard serves an entry only to the session object that
+    * built it, and evicts stopped sessions' entries on access. Same
+    * caveat as Spark's plan cache: content changing UNDER an identical
+    * plan (an appended file) is invisible until a new session — a width
+    * estimate only ever trades broadcast vs shuffled-hash near the
+    * boundary, so staleness is benign by the operator's own contract. */
   private val widthCache = new java.util.concurrent.ConcurrentHashMap[
     String, (org.apache.spark.sql.SparkSession, Long)]()
 

@@ -15,24 +15,27 @@ class EntrySpec extends AnyFunSuite {
     assert(missing.isEmpty, s"oracles without queries: $missing")
   }
 
-  test("oracleSql / queries map literals have no duplicate keys") {
-    // A Scala Map literal silently keeps the LAST duplicate entry, so a
-    // duplicated key would shadow one query or oracle. Guard PER literal:
-    // split the source at the oracleSql declaration and assert each key
-    // appears at most once on each side.
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val parts = src.split("def oracleSql", 2)
-    assert(parts.length === 2, "oracleSql declaration not found")
-    // anchored to the entry position (4-space indent at line start) so
-    // string-keyed Map literals INSIDE query bodies don't false-trip
-    val keyRe = """(?m)^    "([a-z0-9_]+)" ->""".r
-    for ((section, label) <- Seq((parts(0), "queries"), (parts(1), "oracleSql"))) {
-      val keys = keyRe.findAllMatchIn(section).map(_.group(1)).toSeq
-      val dups = keys.groupBy(identity).filter(_._2.size > 1).keys
-      assert(dups.isEmpty, s"duplicated keys in $label: ${dups.mkString(", ")}")
-    }
+  test("the catalog rejects a name defined twice, in one family or across two") {
+    import graft.catalog.{Catalog, Entry}
+    val stub = Entry("stub", (s, _) => s.range(1).toDF(), Some("SELECT 1"))
+    val other = stub.copy(name = "other")
+    val within = intercept[IllegalArgumentException](
+      Catalog.index(Seq(Seq(stub, other, stub))))
+    assert(within.getMessage.contains("stub"))
+    val across = intercept[IllegalArgumentException](
+      Catalog.index(Seq(Seq(stub), Seq(other, stub))))
+    assert(across.getMessage.contains("stub"))
+    assert(!across.getMessage.contains("other"))
+    assert(Catalog.index(Seq(Seq(stub), Seq(other))).keySet === Set("stub", "other"))
+  }
+
+  test("the registry holds 131 queries, each with a non-empty oracle, and 15 bench-only rows") {
+    assert(SparkEntry.queries.size === 131)
+    assert(SparkEntry.oracleSql.keySet === SparkEntry.queries.keySet)
+    val blank = SparkEntry.oracleSql.collect { case (n, sql) if sql.trim.isEmpty => n }
+    assert(blank.isEmpty, s"queries with an empty oracle: $blank")
+    assert(SparkEntry.benchOnly.size === 15)
+    assert((SparkEntry.benchOnly.keySet & SparkEntry.queries.keySet).isEmpty)
   }
 
   test("every query runs and returns rows at sf0.001") {
