@@ -14,11 +14,13 @@ import graft.catalog.FixtureStore
  * "queries":{...},"ops":{...},"growth":{...},"iqr":{...},"failed":{...},
  * "sf":...}`.
  *
- * Every row is timed one way ([[timeRow]]): one untimed warm-up at sf0.001,
- * then [[Reps]] runs that each build the plan and write every row to the
- * `noop` sink; the row records the median, and `iqr` its interquartile
- * range. A row whose run throws is listed in `failed` with the exception
- * class instead, and the run exits 1 after the contract line.
+ * Every row is timed one way ([[timeRow]]): one untimed warm-up at sf0.001
+ * and one untimed plan build at the measured SF (which builds the row's
+ * fixture stages), then [[Reps]] runs that each build the plan and write
+ * every row to the `noop` sink; the row records the median, and `iqr` its
+ * interquartile range. A row whose run throws is listed in `failed` with
+ * the exception class instead, and the run exits 1 after the contract
+ * line.
  *
  *  - `value` / `queries`: the driver's CORRECTNESS queries — `value` is
  *    the sum of their medians (new queries change it, noted in
@@ -797,6 +799,10 @@ object Bench {
     val opRows = SparkEntry.benchOnly.toSeq.sortBy(_._1).filter(kv => selected(kv._1))
     (queryRows ++ opRows).sortBy(_._1).foreach { case (name, fn) =>
       warmUp(name)(materialize(fn(spark, warmDir(sfDir))))
+      // building the plan at the measured SF resolves the row's
+      // FixtureStore stages (keyed by that SF's fingerprint, not the
+      // warm-up's) before any clock, as main does for the growth rows
+      warmUp(name)(fn(spark, sfDir))
     }
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def timeAll(rows: Seq[(String, (SparkSession, String) => DataFrame)]) =

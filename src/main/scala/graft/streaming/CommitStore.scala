@@ -3,8 +3,11 @@ package graft.streaming
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
  * The on-disk commit protocol every streaming maintainer shares: the
@@ -309,7 +312,35 @@ private[graft] object CommitStore {
     * multi-root read performs no type coercion — every maintainer pins
     * its written types per batch (SessionStreaming casts the merge-
     * widened value_sum back to the batch-kernel decimal for exactly
-    * this reason). */
+    * this reason). The schema is read from one footer
+    * ([[footerSchema]]), so building the read submits no job. */
   def readChain(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.parquet(paths: _*)
+    spark.read.schema(footerSchema(spark, paths)).parquet(paths: _*)
+
+  /** The footer key under which Spark's parquet writer stores the row
+    * schema it wrote. */
+  private val RowSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The row schema of the parquet data under `paths`, read on the driver
+    * from the footer of the first part file found: the file and the key
+    * Spark's own schema inference reads, without the Spark job that
+    * inference submits on every read (even for one footer). Every store
+    * directory is written by Spark, so the key is always there. */
+  def footerSchema(spark: SparkSession, paths: Seq[String]): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val part = paths.iterator.flatMap { p =>
+      val dir = new Path(p)
+      dir.getFileSystem(conf).listStatus(dir).iterator
+        .map(_.getPath).filter(_.getName.startsWith("part-"))
+    }.nextOption().getOrElse(throw new IllegalStateException(
+      s"no parquet part file under ${paths.mkString(", ")}"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(part, conf))
+    val json =
+      try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(RowSchemaKey)
+      finally reader.close()
+    if (json == null) {
+      throw new IllegalStateException(s"$part carries no Spark row schema")
+    }
+    DataType.fromJson(json).asInstanceOf[StructType]
+  }
 }

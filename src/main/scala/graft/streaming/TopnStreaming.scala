@@ -62,8 +62,11 @@ object TopnStreaming {
    * (reference README.md:73-116). Each micro-batch is a true delta: it is
    * aggregated with `topn_add_agg` inside `foreachBatch` (plain batch
    * aggregation, no streaming state to double-count) and merged into the
-   * stored sketches with `topn_union(old, delta)` — exactly the
-   * incremental-rollup algebra the mergeable sketch exists for.
+   * stored sketches by one re-aggregation, `topn_union_agg(sketch,
+   * numCounters)` over the delta and the touched periods' stored rows, at
+   * the caller's budget (not the session's). Both sides hold at most n
+   * entries, so a cell's union holds at most 2n < 3n: nothing is evicted,
+   * and the result equals a pairwise `topn_union` entry for entry.
    *
    * Returns the StreamingQuery; the caller owns its lifecycle. Read the
    * maintained table with [[committedRollup]].
@@ -80,6 +83,8 @@ object TopnStreaming {
    *    partition directory), so no partition-value type inference can
    *    fork date- or number-shaped periods;
    *  - empty batches commit nothing and touch nothing;
+   *  - readers take the schema from a footer (the commit path: the
+   *    delta's), so no read submits a schema-inference job;
    *  - a directory whose periods were partially re-touched by later
    *    batches keeps its stale rows on disk (readers filter them by the
    *    manifest's period map) until its last referenced period moves —
@@ -110,9 +115,7 @@ object TopnStreaming {
   /** Rollup key for rows whose period expression evaluates to null. */
   val NullPeriodKey = "__GRAFT_NULL_PERIOD__"
 
-  /** Highest-numbered committed manifest id. None before the first commit.
-    * Fails fast on a rollup written by the pre-manifest layout (v=<id>
-    * directories) instead of silently reading it as empty. */
+  /** [[CommitStore.committedVersion]]: None before the first commit. */
   def committedVersion(
       spark: org.apache.spark.sql.SparkSession, rollupPath: String): Option[Long] =
     CommitStore.committedVersion(spark, rollupPath)
@@ -165,20 +168,25 @@ object TopnStreaming {
   }
 
   /** Assemble the table for a manifest: union of the referenced data dirs,
-    * each filtered to the keys (`keyCol` values) the manifest maps to it. */
+    * each filtered to the keys (`keyCol` values) the manifest maps to it,
+    * read under `schema` (default: one data file's footer schema). */
   private def manifestTable(
       spark: org.apache.spark.sql.SparkSession,
       rollupPath: String,
       manifest: Map[String, Long],
-      keyCol: String = "period"): Option[DataFrame] =
-    manifest.groupBy(_._2).map { case (dirId, byKey) =>
-      spark.read.parquet(s"$rollupPath/data/b=$dirId")
-        .filter(col(keyCol).isin(byKey.keys.toSeq: _*))
+      keyCol: String = "period",
+      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      : Option[DataFrame] = {
+    val dirs = manifest.groupBy(_._2).toSeq
+      .map { case (id, byKey) => s"$rollupPath/data/b=$id" -> byKey.keys.toSeq }
+    lazy val pinned = schema.getOrElse(CommitStore.footerSchema(spark, dirs.map(_._1)))
+    dirs.map { case (dir, keys) =>
+      spark.read.schema(pinned).parquet(dir).filter(col(keyCol).isin(keys: _*))
     }.reduceOption(_ unionAll _)
+  }
 
   /** The committed rollup table: (period, group, sketch). Empty-schema
-    * DataFrame before the first commit (same contract callers had when the
-    * path did not exist yet). */
+    * DataFrame before the first commit. */
   def committedRollup(
       spark: org.apache.spark.sql.SparkSession, rollupPath: String): DataFrame = {
     val (fs, root) = CommitStore.fsOf(spark, rollupPath)
@@ -205,7 +213,6 @@ object TopnStreaming {
 
     val committed = committedVersion(spark, rollupPath)
     if (committed.exists(batchId <= _)) return // replay of a committed batch
-    if (batch.isEmpty) return // nothing to merge; commit nothing
 
     // period is an ordinary STRING data column end to end (never a
     // partition directory), so date-/number-shaped periods cannot be
@@ -219,29 +226,21 @@ object TopnStreaming {
       .agg(TopnFunctions.topn_add_agg(itemExpr, numCounters).as("sketch"))
       .cache()
     try {
-      val touched = delta.select("period").distinct()
-        .collect().map(_.getString(0)).toSet
+      // fills the cache; (period, group) rows are few: dedupe on the driver
+      val touched = delta.select("period").collect().map(_.getString(0)).toSet
+      if (touched.isEmpty) return // nothing to merge; commit nothing
       val manifest = committed.map(readManifest(fs, root, _)).getOrElse(Map.empty)
 
       // previous state of ONLY the touched periods — per-batch read/merge/
       // write cost is proportional to the batch, not the rollup's history
-      val oldTouched = manifestTable(spark, rollupPath,
-        manifest.view.filterKeys(touched).toMap)
-
-      val merged = oldTouched match {
+      val merged = manifestTable(spark, rollupPath,
+        manifest.view.filterKeys(touched).toMap, schema = Some(delta.schema)) match {
         case None => delta
         case Some(old) =>
-          delta.join(old.withColumnRenamed("sketch", "old_sketch"),
-            Seq("period", groupCol), "full_outer")
-            .select(col("period"), col(groupCol),
-              when(col("old_sketch").isNull, col("sketch"))
-                .when(col("sketch").isNull, col("old_sketch"))
-                .otherwise(TopnFunctions.topn_union(
-                  col("old_sketch"), col("sketch"))).as("sketch"))
+          delta.unionByName(old).groupBy(col("period"), col(groupCol))
+            .agg(TopnFunctions.topn_union_agg(col("sketch"), numCounters).as("sketch"))
       }
-
       merged.write.mode("overwrite").parquet(s"$rollupPath/data/b=$batchId")
-
       // the atomic commit: one rename of the new manifest file
       commitTouched(fs, root, batchId, committed, manifest, touched)
     } finally delta.unpersist()

@@ -2,16 +2,20 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import graft.streaming.CommitStore
+import graft.streaming.{CommitStore, TopnStreaming}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * The streaming stores' commit primitives, on the local filesystem: the
- * atomic publish, the write-once stamp and the manifest listing. A
- * rename that refuses an existing destination (HDFS semantics; the local
- * filesystem replaces it instead) is modelled by a filter filesystem.
+ * atomic publish, the write-once stamp, the manifest listing and the
+ * footer-schema reads. A rename that refuses an existing destination
+ * (HDFS semantics; the local filesystem replaces it instead) is modelled
+ * by a filter filesystem.
  */
 class CommitStoreSpec extends AnyFunSuite {
 
@@ -101,5 +105,67 @@ class CommitStoreSpec extends AnyFunSuite {
       write(local, new Path(root, s"_manifests/$n"), "b=0")
     assert(CommitStore.committedIds(local, root, "_manifests", "m=") ===
       Seq(2L, 9L, 10L))
+  }
+
+  /** Spark jobs submitted while `body` runs. The listener bus is drained
+    * before the listener joins and before it is read, so every job start
+    * posted inside `body`, and only those, is counted. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = SparkTestSession.spark.sparkContext
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", classOf[Long]).invoke(bus, Long.box(60000L))
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    drain()
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      drain()
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("store reads submit no job before the query's own; a rollup commit at most 5") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val root = tmpRoot("graft_cs_jobs").toString
+
+    // a rollup keyed by an INT group: the footer schema must round-trip it
+    val rollup = s"$root/rollup"
+    def events(periods: Seq[String], mult: Int) =
+      (for (p <- periods; g <- 0 until 3; i <- 0 until 40) yield (p, g, s"i${i * mult % 17}"))
+        .toDF("period", "grp", "item")
+    def merge(id: Long, periods: String*): Unit =
+      TopnStreaming.mergeBatch(events(periods, id.toInt + 1), id, rollup,
+        $"period", "grp", $"item", 100, scope = "jobs-scope")
+    merge(0, "d0", "d1", "d2")
+    val (_, commitJobs) = jobsDuring(merge(1, "d2", "d3"))
+    assert(commitJobs <= 5, s"a commit over stored periods ran $commitJobs jobs")
+    val (table, readJobs) = jobsDuring(TopnStreaming.committedRollup(spark, rollup))
+    assert(readJobs === 0)
+    assert(table.schema("grp").dataType === IntegerType)
+    assert(table.schema === spark.read.parquet(s"$rollup/data/b=1").schema)
+    val totals = table.select($"period", explode($"sketch")).groupBy($"period")
+      .agg(sum($"value")).as[(String, Long)].collect().toMap
+    assert(totals === Map("d0" -> 120L, "d1" -> 120L, "d2" -> 240L, "d3" -> 120L))
+
+    // a chain store: batch directories written one by one
+    val dirs = (0 until 3).map { b =>
+      val dir = s"$root/chain/data/b=$b/pairs"
+      CommitStore.writeBatchDir(
+        Seq((b, b * 10L, s"k$b"), (b + 1, b * 10L + 1, "x")).toDF("key", "n", "tag"), 1, dir)
+      dir
+    }
+    val (chain, chainJobs) = jobsDuring(CommitStore.readChain(spark, dirs))
+    assert(chainJobs === 0)
+    val inferred = spark.read.parquet(dirs: _*)
+    assert(chain.schema === inferred.schema)
+    assert(chain.as[(Int, Long, String)].collect().sorted ===
+      inferred.as[(Int, Long, String)].collect().sorted)
+    assert(chain.count() === 6)
   }
 }

@@ -12,6 +12,9 @@ class InteropSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   import spark.implicits._
 
+  /** A fresh directory, deleted when the test JVM exits. */
+  private def tmpDir(tag: String): String = graft.catalog.FixtureStore.tempDir(tag)
+
   test("JSON-string sketches round-trip through from_json/to_json/topn_to_json") {
     val json = """{"apple": 3, "pear": 1, "fig": 7}"""
     val back = Seq(json).toDF("j")
@@ -41,17 +44,17 @@ class InteropSpec extends AnyFunSuite {
   }
 
   test("CSV ingest with the customer_reviews schema (copy_data.sql:1-16)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv")
+    val dir = tmpDir("graft_csv")
     val csv =
       """c1,1998-01-02,5,10,8,P000000001,Some Title,1000,Book,Fiction,Novels,"P2,P3"
         |c2,1998-01-03,4,2,1,P000000001,Some Title,1000,Book,Fiction,Novels,
         |c3,1998-01-04,3,0,0,P000000002,Other,2000,Music,Rock,,""".stripMargin
-    java.nio.file.Files.writeString(dir.resolve("reviews.csv"), csv)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "reviews.csv"), csv)
     val ddl = """customer_id STRING, review_date DATE, review_rating INT,
       review_votes INT, review_helpful_votes INT, product_id STRING,
       product_title STRING, product_sales_rank BIGINT, product_group STRING,
       product_category STRING, product_subcategory STRING, similar_product_ids STRING"""
-    val df = graft.sources.Tables.csv(spark, dir.toString + "/reviews.csv", ddl)
+    val df = graft.sources.Tables.csv(spark, dir + "/reviews.csv", ddl)
     assert(df.count() === 3)
     // the CHAR(10)[] column arrives as a string; split on demand
     val similar = df.filter($"customer_id" === "c1")
@@ -77,7 +80,7 @@ class InteropSpec extends AnyFunSuite {
     }.toDF("event_id", "us", "user_id", "event_type", "value", "props")
 
     def writeAs(tsCol: org.apache.spark.sql.Column): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_events").toString
+      val dir = tmpDir("graft_events")
       base.select($"event_id", tsCol.as("ts"), $"user_id", $"event_type", $"value", $"props")
         .coalesce(1).write.mode("overwrite").parquet(dir + "/events.parquet")
       dir
@@ -118,7 +121,7 @@ class InteropSpec extends AnyFunSuite {
       when($"o_orderkey" % 3 === 0, lit(null: String))
         .otherwise(concat(lit("sub"), $"o_orderkey" % 13)).as("product_subcategory"),
       concat(lit("P1,P"), $"o_custkey" % 100).as("similar_product_ids"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv_big").toString
+    val dir = tmpDir("graft_csv_big")
     reviews.write.option("header", "false").mode("overwrite").csv(dir)
 
     val ddl = """customer_id STRING, review_date DATE, review_rating INT,
@@ -149,9 +152,6 @@ class InteropSpec extends AnyFunSuite {
   }
 
   // --- JSONL source/sink ---------------------------------------------------
-
-  private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString
 
   test("JSONL round-trips hostile text byte-exactly (writer escape + reader parse)") {
     val rows = Seq(

@@ -469,6 +469,69 @@ class StreamingSpec extends AnyFunSuite {
     assert(TopnStreaming.committedVersion(spark, rollupPath) === Some(1L))
   }
 
+  private def withSessionBudget[T](n: Int)(body: => T): T = {
+    spark.conf.set(GraftConf.NumberOfCountersKey, n.toString)
+    try body finally spark.conf.set(GraftConf.NumberOfCountersKey, "1000")
+  }
+
+  /** (period, grp) -> the stored sketch's entries, in stored order. */
+  private def storedEntries(df: org.apache.spark.sql.DataFrame) =
+    df.select($"period", $"grp", map_entries($"sketch"))
+      .as[(String, String, Seq[(String, Long)])].collect()
+      .map { case (p, g, es) => (p, g) -> es }.toMap
+
+  test("rollup merges at the caller's numCounters, not the session budget") {
+    val rollupPath = java.nio.file.Files.createTempDirectory("graft_budget").toString + "/t"
+    val items = (0 until 2000).map(i => ("d0", "g", s"item$i")).toDF("period", "grp", "item")
+    withSessionBudget(1000) {
+      for (id <- 0L to 1L) {
+        TopnStreaming.mergeBatch(items, id, rollupPath, $"period", "grp", $"item",
+          5000, scope = "budget-scope")
+      }
+    }
+    val Seq(es) = storedEntries(TopnStreaming.committedRollup(spark, rollupPath)).values.toSeq
+    assert(es.size === 2000, "the second touch pruned to the session budget")
+    assert(es.map(_._2).sum === 4000L)
+  }
+
+  test("rollup merge == the full-outer topn_union merge, entry for entry and in order") {
+    val n = 30
+    // per cell 80 distinct items with counts 1..5 (many ties): each side
+    // is packed to n, and the union re-packs to n
+    def cells(seed: Int, keys: Seq[(String, String)]) =
+      keys.flatMap { case (p, g) =>
+        (0 until 80).flatMap(i => Seq.fill(1 + (i * 7 + seed + g.length) % 5)((p, g, s"i$i")))
+      }.toDF("period", "grp", "item")
+    val old = cells(1, Seq("d1" -> "a", "d1" -> "b", "d2" -> "a", "d2" -> "bb"))
+    // d2/a in both, d2/bb only in old, d2/ccc and d3/a only in the delta;
+    // d1 is untouched
+    val delta = cells(3, Seq("d2" -> "a", "d2" -> "ccc", "d3" -> "a"))
+    val rollupPath = java.nio.file.Files.createTempDirectory("graft_mergeq").toString + "/t"
+    def merge(df: org.apache.spark.sql.DataFrame, id: Long): Unit =
+      TopnStreaming.mergeBatch(df, id, rollupPath, $"period", "grp", $"item", n,
+        scope = "mergeq-scope")
+    withSessionBudget(n) {
+      merge(old, 0)
+      val before = TopnStreaming.committedRollup(spark, rollupPath)
+      val sk = delta.groupBy($"period", $"grp")
+        .agg(TopnFunctions.topn_add_agg($"item", n).as("sketch"))
+      val periods = sk.select($"period").distinct()
+      val expected = sk.join(before.join(periods, "period")
+          .withColumnRenamed("sketch", "old_sketch"), Seq("period", "grp"), "full_outer")
+        .select($"period", $"grp",
+          when($"old_sketch".isNull, $"sketch").when($"sketch".isNull, $"old_sketch")
+            .otherwise(TopnFunctions.topn_union($"old_sketch", $"sketch")).as("sketch"))
+        .unionByName(before.join(periods, Seq("period"), "left_anti"))
+      val want = storedEntries(expected)
+      merge(delta, 1)
+      val got = storedEntries(TopnStreaming.committedRollup(spark, rollupPath))
+      assert(want.keySet === Set("d1" -> "a", "d1" -> "b", "d2" -> "a", "d2" -> "bb",
+        "d2" -> "ccc", "d3" -> "a"))
+      assert(want("d2" -> "a").size === n)
+      assert(got === want)
+    }
+  }
+
   test("streaming cluster maintenance: incremental CC across batches == batch CC") {
     val path = java.nio.file.Files.createTempDirectory("graft_clusters").toString + "/t"
     // batch 1 bridges batch 0's components {1,2,3} and {10,11}, and grows
