@@ -522,14 +522,4 @@ object TopnState {
     }
     st
   }
-
-  /** Build a state from a materialized sketch, applying policy B per key. */
-  def fromSketch(entries: Iterator[(String, Long)], numCounters: Int): TopnState = {
-    val st = empty(numCounters)
-    while (entries.hasNext) {
-      val (k, v) = entries.next()
-      st.mergeEntry(k, v, numCounters)
-    }
-    st
-  }
 }

@@ -188,15 +188,11 @@ case class TopnWithBounds(left: Expression, right: Expression, numCounters: Int)
 object TopnWithBounds {
   /** The report kernel, shared by interpreted eval and codegen. */
   def query(bsketch: InternalRow, k: Int, numCounters: Int): ArrayData = {
-    if (k > numCounters) {
-      // wording mirrors the reference, topn.c:231-232
-      throw graft.GraftErrors.kExceedsCounters(k, numCounters)
-    }
     val entries: MapData =
       if (bsketch.isNullAt(0)) TopnExprUtils.toMapData(Array.empty)
       else bsketch.getMap(0)
     val bound = if (bsketch.isNullAt(1)) 0L else math.max(0L, bsketch.getLong(1))
-    val arr = TopnExprUtils.topEntries(entries, k)
+    val arr = TopnExprUtils.topEntries(entries, k, numCounters)
     val out = new Array[Any](arr.length)
     var i = 0
     while (i < out.length) {

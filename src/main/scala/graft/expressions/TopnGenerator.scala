@@ -49,12 +49,8 @@ case class TopnRows(left: Expression, right: Expression, numCounters: Int)
     val sketch = left.eval(input)
     val k = right.eval(input)
     if (sketch == null || k == null) return Iterator.empty
-    val n = k.asInstanceOf[Int]
-    if (n > numCounters) {
-      // wording mirrors the reference, topn.c:231-232
-      throw graft.GraftErrors.kExceedsCounters(n, numCounters)
-    }
-    TopnExprUtils.topEntries(sketch.asInstanceOf[MapData], n).iterator
+    TopnExprUtils.topEntries(sketch.asInstanceOf[MapData], k.asInstanceOf[Int], numCounters)
+      .iterator
       .map { case (item, freq) =>
         new GenericInternalRow(Array[Any](item, freq.longValue))
       }

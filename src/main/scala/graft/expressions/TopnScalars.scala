@@ -56,12 +56,18 @@ private[graft] object TopnExprUtils {
     StructField("frequency", LongType, nullable = false)))
 
   /**
-   * Top `k` sketch entries in canonical order (freq desc, item asc).
-   * Full sort when k covers most of the map; bounded worst-first heap
-   * (O(size log k)) when k << size — the common shape once counter budgets
-   * grow (k=10 report over an n=1M sketch must not sort 1M entries per row).
+   * Top `k` sketch entries in canonical order (freq desc, item asc), for a
+   * report under a `numCounters` budget: a `k` above the budget fails, as
+   * the reference's does. Full sort when k covers most of the map; bounded
+   * worst-first heap (O(size log k)) when k << size — the common shape once
+   * counter budgets grow (k=10 report over an n=1M sketch must not sort 1M
+   * entries per row).
    */
-  def topEntries(md: MapData, k: Int): Array[(UTF8String, java.lang.Long)] = {
+  def topEntries(md: MapData, k: Int, numCounters: Int): Array[(UTF8String, java.lang.Long)] = {
+    if (k > numCounters) {
+      // wording mirrors the reference, topn.c:231-232
+      throw graft.GraftErrors.kExceedsCounters(k, numCounters)
+    }
     // k <= 0 yields zero rows, like the reference's Min(desiredNToPrint,
     // elementCount) cap in topn.c (max_calls can be 0, never negative).
     if (k <= 0) return Array.empty
@@ -149,11 +155,7 @@ case class TopnQuery(left: Expression, right: Expression, numCounters: Int)
 object TopnQuery {
   /** The report kernel, shared by interpreted eval and codegen. */
   def query(sketch: MapData, k: Int, numCounters: Int): ArrayData = {
-    if (k > numCounters) {
-      // wording mirrors the reference, topn.c:231-232
-      throw graft.GraftErrors.kExceedsCounters(k, numCounters)
-    }
-    val arr = TopnExprUtils.topEntries(sketch, k)
+    val arr = TopnExprUtils.topEntries(sketch, k, numCounters)
     val out = new Array[Any](arr.length)
     var i = 0
     while (i < out.length) {

@@ -30,13 +30,10 @@ import org.apache.spark.sql.functions._
  * ingested so far, row for row — StreamingSpec pins the equality with
  * keys whose first activity and returns straddle batch boundaries.
  *
- * Store layout ([[CommitStore]]'s crash argument applies verbatim —
- * data first, manifest LAST via temp+rename, replays return before
- * writing):
+ * The store's own leaves and pin ([[CommitStore]] has the layout and
+ * the crash argument; data first, manifest last, replays write nothing):
  * {{{
- *   storePath/_graft_scope        checkpoint identity (write-once)
  *   storePath/_graft_params       periodSeconds/keys pin (write-once)
- *   storePath/_manifests/m=<id>   commit marker for batch <id>
  *   storePath/data/b=<id>/pairs   batch-distinct (key..., period_idx)
  * }}}
  */
@@ -54,18 +51,11 @@ object ActivityStreaming {
       periodSeconds: Long,
       checkpointLocation: Option[String] = None,
       filesPerBatch: Int = 1)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = CommitStore.scopeOf(checkpointLocation)
-    val writer = events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        activityBatch(batch, batchId, storePath, keyCols, tsCol,
-          periodSeconds, scope, filesPerBatch)
-        ()
-      }
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    CommitStore.maintain(events, checkpointLocation) { (batch, batchId, scope) =>
+      activityBatch(batch, batchId, storePath, keyCols, tsCol, periodSeconds,
+        scope, filesPerBatch)
+    }
 
   /** One micro-batch of the protocol (exposed for deterministic
     * crash-path testing; [[maintainActivity]] drives it). */
@@ -86,50 +76,31 @@ object ActivityStreaming {
     require(!keyCols.exists(c => c == "period_idx" || c.startsWith("__graft_")),
       s"activityBatch: key columns $keyCols collide with internal names " +
         "('period_idx' / '__graft_*'); rename them")
-    val spark = batch.sparkSession
-    val (fs, root) = CommitStore.fsOf(spark, storePath)
-    CommitStore.checkScope(fs, root, scope)
-    CommitStore.checkStamp(fs, root, "_graft_params",
+    val pin = CommitStore.Pin(
       s"periodSeconds=$periodSeconds,keys=${keyCols.mkString("+")}",
       (stored, given) =>
-        s"activity store at $root was maintained with '$stored' but this " +
-          s"stream uses '$given' — period ordinals are incompatible; " +
+        s"activity store at $storePath was maintained with '$stored' but " +
+          s"this stream uses '$given' — period ordinals are incompatible; " +
           "resume with the original parameters or start a new store path")
-    val committed = CommitStore.committedVersion(spark, storePath)
-    if (committed.exists(batchId <= _)) return // replay of a committed batch
-    if (batch.isEmpty) return // no events, state unchanged
-
-    CommitStore.writeBatchDir(
-      batch
-        .select((keyCols.map(col) :+
-          Sessions.periodIndex(batch, tsCol, periodSeconds)
-            .as("period_idx")): _*)
-        .distinct(),
-      filesPerBatch, s"$storePath/data/b=$batchId/pairs")
-    CommitStore.commitBatch(fs, root, batchId)
+    CommitStore.guard(batch, batchId, storePath, scope, Some(pin)) { b =>
+      CommitStore.writeBatchDir(
+        batch
+          .select((keyCols.map(col) :+
+            Sessions.periodIndex(batch, tsCol, periodSeconds)
+              .as("period_idx")): _*)
+          .distinct(),
+        filesPerBatch, b.dir("pairs"))
+      b.commit()
+    }
   }
 
   /** The committed distinct activity pairs `(keyCols..., period_idx)`.
     * Empty-schema DataFrame before the first commit. */
   def committedPairs(
       spark: org.apache.spark.sql.SparkSession, storePath: String): DataFrame =
-    committedPairs(spark, storePath, advise = true)
-
-  /** [[committedPairs]] with the compaction advisory switchable off —
-    * [[compactStore]] reads the chain through here, and advising
-    * "consider compactStore" from inside compactStore itself is noise
-    * (the r17 ADVICE item; every maintainer's fold threads the same
-    * flag through its advised reader). */
-  private[streaming] def committedPairs(
-      spark: org.apache.spark.sql.SparkSession,
-      storePath: String,
-      advise: Boolean): DataFrame = {
-    val ids = CommitStore.committedIds(spark, storePath)
-    if (ids.isEmpty) return spark.emptyDataFrame
-    if (advise) CommitStore.adviseCompaction(ids.size, storePath, "ActivityStreaming")
-    CommitStore.readChain(spark, ids.map(id => s"$storePath/data/b=$id/pairs"))
-      .distinct()
-  }
+    CommitStore.committedChain(spark, storePath, "pairs", Some("ActivityStreaming"))
+      .map(_.distinct())
+      .getOrElse(spark.emptyDataFrame)
 
   /** The cohort-retention report over everything ingested so far —
     * `(cohort_start_us, period_offset, n_keys)`, row-for-row equal to
@@ -171,8 +142,8 @@ object ActivityStreaming {
       dstPath: String,
       files: Int = 1): Unit =
     CommitStore.foldInto(spark, srcPath, dstPath, "compactStore", "activity") {
-      (_, v) => CommitStore.writeFoldDir(
-        committedPairs(spark, srcPath, advise = false), files,
-        s"$dstPath/data/b=$v/pairs")
+      (ids, v) => CommitStore.writeFoldDir(
+        CommitStore.readChain(spark, srcPath, ids, "pairs").distinct(), files,
+        CommitStore.dataDir(dstPath, v, "pairs"))
     }
 }

@@ -53,19 +53,16 @@ import org.apache.spark.sql.functions._
  * conversions that STRADDLE batch boundaries (step i committed, step
  * i+1 arriving batches later) and chains completing inside one batch.
  *
- * Store layout ([[CommitStore]]'s crash argument applies verbatim —
- * data first, manifest LAST via temp+rename, replays return before
- * writing):
+ * The store's own leaves and pin ([[CommitStore]] has the layout and
+ * the crash argument; data first, manifest last, replays write nothing):
  * {{{
- *   storePath/_graft_scope        checkpoint identity (write-once)
  *   storePath/_graft_params       steps/keys pin (write-once)
- *   storePath/_manifests/m=<id>   commit marker for batch <id>
  *   storePath/data/b=<id>/state   touched keys' (t0..tN, hw) delta
  * }}}
  */
 object FunnelStreaming {
 
-  private val DeltaBatchCol = "__graft_delta_batch"
+  import CommitStore.DeltaBatchCol
   private val HwCol = "__graft_hw"
 
   /** Start the maintenance stream. `events` is a STREAMING DataFrame;
@@ -82,18 +79,11 @@ object FunnelStreaming {
       checkpointLocation: Option[String] = None,
       watermarkSeconds: Long = 0L,
       filesPerBatch: Int = 1)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = CommitStore.scopeOf(checkpointLocation)
-    val writer = events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        funnelBatch(batch, batchId, storePath, keyCols, tsCol, stepCol,
-          steps, scope, watermarkSeconds, filesPerBatch)
-        ()
-      }
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    CommitStore.maintain(events, checkpointLocation) { (batch, batchId, scope) =>
+      funnelBatch(batch, batchId, storePath, keyCols, tsCol, stepCol, steps,
+        scope, watermarkSeconds, filesPerBatch)
+    }
 
   /** One micro-batch of the protocol (exposed for deterministic
     * crash-path testing; [[maintainFunnel]] drives it). */
@@ -120,135 +110,108 @@ object FunnelStreaming {
     require(!keyCols.exists(_.startsWith("__graft_")),
       s"funnelBatch: key columns $keyCols collide with internal " +
         "'__graft_*' names; rename them")
-    val spark = batch.sparkSession
-    val (fs, root) = CommitStore.fsOf(spark, storePath)
-    CommitStore.checkScope(fs, root, scope)
-    CommitStore.checkStamp(fs, root, "_graft_params",
-      paramsOf(keyCols, steps, watermarkSeconds),
+    val pin = CommitStore.Pin(paramsOf(keyCols, steps, watermarkSeconds),
       (stored, given) =>
-        s"funnel store at $root was maintained with '$stored' but this " +
+        s"funnel store at $storePath was maintained with '$stored' but this " +
           s"stream uses '$given' — step ordinals and state columns are " +
           "incompatible; resume with the original parameters or start a " +
           "new store path")
-    val committed = CommitStore.committedVersion(spark, storePath)
-    if (committed.exists(batchId <= _)) return // replay of a committed batch
-    if (batch.isEmpty) return // no events: state unchanged, and the
-    // high-water mark is EVENT time, so the cut cannot advance either
+    CommitStore.guard(batch, batchId, storePath, scope, Some(pin)) { b =>
+      val spark = batch.sparkSession
+      val keyC = keyCols.map(col)
+      val eNew = batch.select(
+        (keyC :+ col(stepCol).as("__graft_step") :+
+          Sessions.tsMicros(batch, tsCol).as("__graft_tu")): _*)
 
-    val keyC = keyCols.map(col)
-    val eNew = batch.select(
-      (keyC :+ col(stepCol).as("__graft_step") :+
-        Sessions.tsMicros(batch, tsCol).as("__graft_tu")): _*)
+      // bounded-disorder tier: the shared release step
+      // (StreamWatermark.release) folds pending with the new arrivals,
+      // advances the event-time high-water mark, and returns only events
+      // at or below (hwm - watermark) — everything else buffers
+      val wmUs = watermarkSeconds * 1000000L
+      val (e, wmTail) =
+        if (watermarkSeconds == 0L) (eNew, None)
+        else {
+          val (released, tail) = StreamWatermark.release(
+            storePath, eNew, df => df("__graft_tu"), wmUs, "funnelBatch")
+          (released, Some(tail))
+        }
 
-    // bounded-disorder tier: the shared release step
-    // (StreamWatermark.release) folds pending with the new arrivals,
-    // advances the event-time high-water mark, and returns only events
-    // at or below (hwm - watermark) — everything else buffers
-    val wmUs = watermarkSeconds * 1000000L
-    val (e, wmTail) =
-      if (watermarkSeconds == 0L) (eNew, None)
-      else {
-        val (released, tail) = StreamWatermark.release(
-          storePath, eNew, df => df("__graft_tu"), wmUs, "funnelBatch")
-        (released, Some(tail))
+      // touched keys with their batch time range (bmin for the ordered-
+      // arrival check, bmax for the new high-watermark)
+      val touched = e.groupBy(keyC: _*).agg(
+        min(col("__graft_tu")).as("__graft_bmin"),
+        max(col("__graft_tu")).as("__graft_bmax"))
+
+      val stateOpt = committedState(spark, storePath)
+      val seeded = stateOpt match {
+        case None =>
+          steps.indices.foldLeft(
+            touched.withColumn(HwCol, lit(null).cast("long"))) {
+            (acc, i) => acc.withColumn(s"__graft_t$i", lit(null).cast("long"))
+          }
+        case Some(state) =>
+          touched.join(state, keyCols, "left")
+            .withColumn(HwCol,
+              when(col(HwCol).isNotNull && col("__graft_bmin") < col(HwCol),
+                // the ordered-arrival contract is broken: a set t_i may no
+                // longer be the true earliest — fail instead of under-counting
+                expr(s"""raise_error(CONCAT(
+                  |'funnelBatch: out-of-order arrival for key ',
+                  |CAST(`${keyCols.head}` AS STRING),
+                  |' — batch event at ', CAST(__graft_bmin AS STRING),
+                  |'us precedes the committed high-watermark ',
+                  |CAST($HwCol AS STRING),
+                  |'us; events must arrive per-key ts-ordered across batches'))"""
+                  .stripMargin).cast("long"))
+                .otherwise(col(HwCol)))
       }
 
-    // touched keys with their batch time range (bmin for the ordered-
-    // arrival check, bmax for the new high-watermark)
-    val touched = e.groupBy(keyC: _*).agg(
-      min(col("__graft_tu")).as("__graft_bmin"),
-      max(col("__graft_tu")).as("__graft_bmax"))
+      // the batch operator's iterated conditional min, seeded with the
+      // committed state as per-step floors
+      val updated = steps.zipWithIndex.foldLeft(seeded) { case (acc, (s, i)) =>
+        val cand =
+          if (i == 0) e.filter(col("__graft_step") === s)
+            .groupBy(keyC: _*).agg(min(col("__graft_tu")).as("__graft_m"))
+          else e.filter(col("__graft_step") === s)
+            .join(acc.select((keyC :+ col(s"__graft_t${i - 1}")): _*), keyCols)
+            .filter(col("__graft_tu") > col(s"__graft_t${i - 1}"))
+            .groupBy(keyC: _*).agg(min(col("__graft_tu")).as("__graft_m"))
+        acc.join(cand, keyCols, "left")
+          .withColumn(s"__graft_t$i",
+            coalesce(col(s"__graft_t$i"), col("__graft_m")))
+          .drop("__graft_m")
+      }
 
-    val stateOpt = committedState(spark, storePath)
-    val seeded = stateOpt match {
-      case None =>
-        steps.indices.foldLeft(
-          touched.withColumn(HwCol, lit(null).cast("long"))) {
-          (acc, i) => acc.withColumn(s"__graft_t$i", lit(null).cast("long"))
-        }
-      case Some(state) =>
-        touched.join(state, keyCols, "left")
-          .withColumn(HwCol,
-            when(col(HwCol).isNotNull && col("__graft_bmin") < col(HwCol),
-              // the ordered-arrival contract is broken: a set t_i may no
-              // longer be the true earliest — fail instead of under-counting
-              expr(s"""raise_error(CONCAT(
-                |'funnelBatch: out-of-order arrival for key ',
-                |CAST(`${keyCols.head}` AS STRING),
-                |' — batch event at ', CAST(__graft_bmin AS STRING),
-                |'us precedes the committed high-watermark ',
-                |CAST($HwCol AS STRING),
-                |'us; events must arrive per-key ts-ordered across batches'))"""
-                .stripMargin).cast("long"))
-              .otherwise(col(HwCol)))
+      val stateCols =
+        keyCols.map(col) ++ steps.indices.map(i => col(s"__graft_t$i")) :+
+          greatest(col(HwCol), col("__graft_bmax")).as(HwCol)
+      CommitStore.writeBatchDir(
+        updated.select((stateCols :+ lit(batchId).as(DeltaBatchCol)): _*),
+        filesPerBatch, b.dir("state"))
+      // watermark tier: pending snapshot (latest wins) + hwm row, data
+      // before the marker like everything else
+      wmTail.foreach { case (pending, hwm) =>
+        StreamWatermark.write(spark, storePath, batchId, pending, hwm,
+          filesPerBatch)
+      }
+      b.commit()
     }
-
-    // the batch operator's iterated conditional min, seeded with the
-    // committed state as per-step floors
-    val updated = steps.zipWithIndex.foldLeft(seeded) { case (acc, (s, i)) =>
-      val cand =
-        if (i == 0) e.filter(col("__graft_step") === s)
-          .groupBy(keyC: _*).agg(min(col("__graft_tu")).as("__graft_m"))
-        else e.filter(col("__graft_step") === s)
-          .join(acc.select((keyC :+ col(s"__graft_t${i - 1}")): _*), keyCols)
-          .filter(col("__graft_tu") > col(s"__graft_t${i - 1}"))
-          .groupBy(keyC: _*).agg(min(col("__graft_tu")).as("__graft_m"))
-      acc.join(cand, keyCols, "left")
-        .withColumn(s"__graft_t$i",
-          coalesce(col(s"__graft_t$i"), col("__graft_m")))
-        .drop("__graft_m")
-    }
-
-    val stateCols =
-      keyCols.map(col) ++ steps.indices.map(i => col(s"__graft_t$i")) :+
-        greatest(col(HwCol), col("__graft_bmax")).as(HwCol)
-    CommitStore.writeBatchDir(
-      updated.select((stateCols :+ lit(batchId).as(DeltaBatchCol)): _*),
-      filesPerBatch, s"$storePath/data/b=$batchId/state")
-    // watermark tier: pending snapshot (latest wins) + hwm row, data
-    // before the marker like everything else
-    wmTail.foreach { case (pending, hwm) =>
-      StreamWatermark.write(spark, storePath, batchId, pending, hwm,
-        filesPerBatch)
-    }
-    CommitStore.commitBatch(fs, root, batchId)
   }
 
   /** Current per-key state: the delta chain folded with a per-key
-    * argmax on batch id. None before the first commit. */
+    * argmax on batch id. None before the first commit. No compaction
+    * advice here: funnelBatch seeds its delta merge from this fold on
+    * EVERY micro-batch, and a >64-batch store would WARN once per trigger
+    * — the advisory lives in committedCounts, the external read. */
   private[graft] def committedState(
       spark: org.apache.spark.sql.SparkSession, storePath: String)
-      : Option[DataFrame] = {
-    val ids = CommitStore.committedIds(spark, storePath)
-    if (ids.isEmpty) None
-    else Some(committedStateFromIds(spark, storePath, ids))
-  }
+      : Option[DataFrame] =
+    CommitStore.committedChain(spark, storePath, "state", None).map(latest)
 
-  /** [[committedState]] over an ALREADY-LISTED commit chain — so a
-    * caller that needed the ids anyway (committedCounts lists them for
-    * the compaction advisory) folds the state without a second
-    * commit-marker directory listing (the r17 ADVICE item).
-    * No advice here either way: funnelBatch seeds its delta merge from
-    * this fold on EVERY micro-batch, and a >64-batch store would WARN
-    * once per trigger — the advisory lives in committedCounts, the
-    * external read. */
-  private def committedStateFromIds(
-      spark: org.apache.spark.sql.SparkSession,
-      storePath: String,
-      ids: Seq[Long]): DataFrame = {
-    val all = CommitStore.readChain(spark,
-      ids.map(id => s"$storePath/data/b=$id/state"))
-    val dataCols = all.columns.filter(_ != DeltaBatchCol)
-    val keyCols = dataCols.takeWhile(c => !c.startsWith("__graft_"))
-    // one delta row per (key, batch), so max(struct(batch, ...)) IS the
-    // latest row — no window, no driver state
-    all
-      .groupBy(keyCols.map(col): _*)
-      .agg(max(struct((col(DeltaBatchCol) +:
-        dataCols.filterNot(keyCols.contains).map(col)): _*)).as("__graft_f"))
-      .select((keyCols.map(col) ++ dataCols.filterNot(keyCols.contains)
-        .map(c => col(s"__graft_f.`$c`").as(c))): _*)
-  }
+  /** Each key's latest state row; the key is the prefix before the first
+    * `__graft_` column. */
+  private def latest(all: DataFrame): DataFrame =
+    CommitStore.latestPerKey(all, c => !c.startsWith("__graft_"))
 
   /** The committed funnel report — `(step_idx, step, n_keys)`,
     * row-for-row equal to `Sessions.funnelCounts` over the full event
@@ -268,13 +231,9 @@ object FunnelStreaming {
         s"funnel store at $root was maintained with '$stored' but this " +
           s"reader asks for '$given' — the stored step times do not mean " +
           "what this report would claim")
-    // ONE commit-marker listing serves both the advisory and the state
-    // fold (the per-read double listing was the r17 ADVICE item)
-    val ids = CommitStore.committedIds(spark, storePath)
-    CommitStore.adviseCompaction(ids.size, storePath, "FunnelStreaming")
-    if (ids.isEmpty) spark.emptyDataFrame
-    else Sessions.countsFromTimes(
-      committedStateFromIds(spark, storePath, ids), steps)
+    CommitStore.committedChain(spark, storePath, "state", Some("FunnelStreaming"))
+      .map(chain => Sessions.countsFromTimes(latest(chain), steps))
+      .getOrElse(spark.emptyDataFrame)
   }
 
   /**
@@ -292,10 +251,11 @@ object FunnelStreaming {
       dstPath: String,
       files: Int = 1): Unit =
     CommitStore.foldInto(spark, srcPath, dstPath, "compactStore", "funnel") {
-      (_, v) =>
+      (ids, v) =>
         CommitStore.writeFoldDir(
-          committedState(spark, srcPath).get.withColumn(DeltaBatchCol, lit(v)),
-          files, s"$dstPath/data/b=$v/state")
+          latest(CommitStore.readChain(spark, srcPath, ids, "state"))
+            .withColumn(DeltaBatchCol, lit(v)),
+          files, CommitStore.dataDir(dstPath, v, "state"))
         // a watermark-tier store also carries its buffered tail + hwm
         StreamWatermark.compactInto(spark, srcPath, dstPath, v, files)
     }

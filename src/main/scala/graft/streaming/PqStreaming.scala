@@ -46,7 +46,7 @@ object PqStreaming {
     CommitStore.committedMarkers(spark, storePath)
 
   /** One micro-batch of the append protocol (exposed for deterministic
-    * crash-path testing; [[maintainIndex]] drives it from foreachBatch). */
+    * crash-path testing; [[maintainIndex]] drives it). */
   private[graft] def appendBatch(
       batch: DataFrame,
       batchId: Long,
@@ -62,7 +62,7 @@ object PqStreaming {
 
     Pq.index(batch, idCol, vecCol, pq, ivf)
       .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$storePath/data/b=$batchId")
+      .parquet(CommitStore.dataDir(storePath, batchId))
     CommitStore.commitMarker(fs, root, batchId)
   }
 
@@ -76,7 +76,7 @@ object PqStreaming {
     // chain-length bound (it collapses to one batch tree), so the
     // O(batches) plan between rebuilds is acceptable
     committedBatches(spark, storePath)
-      .map(id => spark.read.parquet(s"$storePath/data/b=$id"))
+      .map(id => spark.read.parquet(CommitStore.dataDir(storePath, id)))
       .reduceOption(_ unionByName _)
       .getOrElse(spark.emptyDataFrame)
 
@@ -138,7 +138,7 @@ object PqStreaming {
       committedIndex(spark, storePath)
         .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$rebuiltPath/data/b=0")
+        .parquet(CommitStore.dataDir(rebuiltPath, 0L))
       CommitStore.commitMarker(rfs, rroot, 0L)
     }
     writeRetirePointer(fs, root, rebuiltPath)
@@ -210,7 +210,7 @@ object PqStreaming {
       Pq.index(vectors, idCol, vecCol, newPq, newIvf)
         .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$rebuiltPath/data/b=0")
+        .parquet(CommitStore.dataDir(rebuiltPath, 0L))
       CommitStore.commitMarker(rfs, rroot, 0L)
     }
     writeRetirePointer(fs, root, rebuiltPath)
@@ -353,11 +353,8 @@ object PqStreaming {
       ivf: IVF.Model,
       storePath: String,
       checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendBatch(batch, batchId, idCol, vecCol, pq, ivf, storePath)
-      }
-      .start()
+    // the index binds no scope: its markers, not manifests, are the commit
+    CommitStore.maintain(stream, Some(checkpointDir)) { (batch, batchId, _) =>
+      appendBatch(batch, batchId, idCol, vecCol, pq, ivf, storePath)
+    }
 }

@@ -25,13 +25,10 @@ import org.apache.spark.sql.functions._
  * with a key whose spike is SPLIT across batches (each fragment
  * unremarkable, only the summed total anomalous).
  *
- * Store layout ([[CommitStore]]'s crash argument applies verbatim —
- * data first, manifest LAST via temp+rename, replays return before
- * writing):
+ * The store's own leaves and pin ([[CommitStore]] has the layout and
+ * the crash argument; data first, manifest last, replays write nothing):
  * {{{
- *   storePath/_graft_scope        checkpoint identity (write-once)
  *   storePath/_graft_params       periodSeconds/keys pin (write-once)
- *   storePath/_manifests/m=<id>   commit marker for batch <id>
  *   storePath/data/b=<id>/counts  batch partial (key..., period_idx, n_events)
  * }}}
  */
@@ -50,18 +47,11 @@ object RateStreaming {
       periodSeconds: Long,
       checkpointLocation: Option[String] = None,
       filesPerBatch: Int = 1)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = CommitStore.scopeOf(checkpointLocation)
-    val writer = events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        rateBatch(batch, batchId, storePath, keyCols, tsCol, periodSeconds,
-          scope, filesPerBatch)
-        ()
-      }
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    CommitStore.maintain(events, checkpointLocation) { (batch, batchId, scope) =>
+      rateBatch(batch, batchId, storePath, keyCols, tsCol, periodSeconds,
+        scope, filesPerBatch)
+    }
 
   /** One micro-batch of the protocol (exposed for deterministic
     * crash-path testing; [[maintainPeriodCounts]] drives it). */
@@ -83,50 +73,35 @@ object RateStreaming {
         c == "period_idx" || c == "n_events" || c.startsWith("__graft_")),
       s"rateBatch: key columns $keyCols collide with internal names " +
         "('period_idx' / 'n_events' / '__graft_*'); rename them")
-    val spark = batch.sparkSession
-    val (fs, root) = CommitStore.fsOf(spark, storePath)
-    CommitStore.checkScope(fs, root, scope)
-    CommitStore.checkStamp(fs, root, "_graft_params",
+    val pin = CommitStore.Pin(
       s"periodSeconds=$periodSeconds,keys=${keyCols.mkString("+")}",
       (stored, given) =>
-        s"rate store at $root was maintained with '$stored' but this " +
+        s"rate store at $storePath was maintained with '$stored' but this " +
           s"stream uses '$given' — period ordinals are incompatible; " +
           "resume with the original parameters or start a new store path")
-    val committed = CommitStore.committedVersion(spark, storePath)
-    if (committed.exists(batchId <= _)) return // replay of a committed batch
-    if (batch.isEmpty) return // no events, state unchanged
-
-    CommitStore.writeBatchDir(
-      batch
-        .select((keyCols.map(col) :+
-          Sessions.periodIndex(batch, tsCol, periodSeconds)
-            .as("period_idx")): _*)
-        .groupBy((keyCols.map(col) :+ col("period_idx")): _*)
-        .agg(count(lit(1)).as("n_events")),
-      filesPerBatch, s"$storePath/data/b=$batchId/counts")
-    CommitStore.commitBatch(fs, root, batchId)
+    CommitStore.guard(batch, batchId, storePath, scope, Some(pin)) { b =>
+      CommitStore.writeBatchDir(
+        batch
+          .select((keyCols.map(col) :+
+            Sessions.periodIndex(batch, tsCol, periodSeconds)
+              .as("period_idx")): _*)
+          .groupBy((keyCols.map(col) :+ col("period_idx")): _*)
+          .agg(count(lit(1)).as("n_events")),
+        filesPerBatch, b.dir("counts"))
+      b.commit()
+    }
   }
 
   /** The committed exact per-(key, period) counts — the chain's partial
     * counts summed. Empty-schema DataFrame before the first commit. */
   def committedCounts(
       spark: org.apache.spark.sql.SparkSession, storePath: String): DataFrame =
-    committedCounts(spark, storePath, advise = true)
+    CommitStore.committedChain(spark, storePath, "counts", Some("RateStreaming"))
+      .map(summed)
+      .getOrElse(spark.emptyDataFrame)
 
-  /** [[committedCounts]] with the compaction advisory switchable off —
-    * [[compactStore]]'s fold reads through here (advising "consider
-    * compactStore" from inside compactStore itself is noise). */
-  private[streaming] def committedCounts(
-      spark: org.apache.spark.sql.SparkSession,
-      storePath: String,
-      advise: Boolean): DataFrame = {
-    val ids = CommitStore.committedIds(spark, storePath)
-    if (ids.isEmpty) return spark.emptyDataFrame
-    if (advise) {
-      CommitStore.adviseCompaction(ids.size, storePath, "RateStreaming")
-    }
-    val all = CommitStore.readChain(spark,
-      ids.map(id => s"$storePath/data/b=$id/counts"))
+  /** A chain of partial counts summed per (key, period). */
+  private def summed(all: DataFrame): DataFrame = {
     val keyCols = all.columns.takeWhile(_ != "period_idx")
     all
       .groupBy((keyCols.map(col) :+ col("period_idx")): _*)
@@ -174,8 +149,8 @@ object RateStreaming {
       dstPath: String,
       files: Int = 1): Unit =
     CommitStore.foldInto(spark, srcPath, dstPath, "compactStore", "rate") {
-      (_, v) => CommitStore.writeFoldDir(
-        committedCounts(spark, srcPath, advise = false), files,
-        s"$dstPath/data/b=$v/counts")
+      (ids, v) => CommitStore.writeFoldDir(
+        summed(CommitStore.readChain(spark, srcPath, ids, "counts")), files,
+        CommitStore.dataDir(dstPath, v, "counts"))
     }
 }

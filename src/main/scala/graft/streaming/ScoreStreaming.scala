@@ -39,13 +39,10 @@ import org.apache.spark.sql.functions._
  * resuming the stream (or reading a report) with a different model
  * fails fast instead of silently mixing incomparable scores.
  *
- * Store layout ([[CommitStore]]'s crash argument applies verbatim —
- * data first, manifest LAST via temp+rename, replays return before
- * writing):
+ * The store's own leaves and pin ([[CommitStore]] has the layout and
+ * the crash argument; data first, manifest last, replays write nothing):
  * {{{
- *   storePath/_graft_scope        checkpoint identity (write-once)
  *   storePath/_graft_params      buckets/bigrams/weight-fingerprint pin
- *   storePath/_manifests/m=<id>   commit marker for batch <id>
  *   storePath/data/b=<id>/preds   batch predictions
  * }}}
  */
@@ -66,17 +63,11 @@ object ScoreStreaming {
       checkpointLocation: Option[String] = None,
       filesPerBatch: Int = 1)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = CommitStore.scopeOf(checkpointLocation)
     val fp = modelFingerprint(model)
-    val writer = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scoreBatch(batch, batchId, model, fp, storePath, idCol, textCol,
-          scope, filesPerBatch)
-        ()
-      }
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer.start()
+    CommitStore.maintain(docs, checkpointLocation) { (batch, batchId, scope) =>
+      scoreBatch(batch, batchId, model, fp, storePath, idCol, textCol, scope,
+        filesPerBatch)
+    }
   }
 
   /**
@@ -107,20 +98,13 @@ object ScoreStreaming {
       filesPerBatch: Int = 1,
       stateTtl: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = CommitStore.scopeOf(checkpointLocation)
     val fp = modelFingerprint(model)
-    val writer = TopnStreaming
-      .streamingFirstById(docs, idCol, textCol, stateTtl)
-      .toDF()
-      .writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scoreBatch(batch, batchId, model, fp, storePath, "doc_id", "text",
-          scope, filesPerBatch)
-        ()
-      }
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer.start()
+    CommitStore.maintain(
+      TopnStreaming.streamingFirstById(docs, idCol, textCol, stateTtl).toDF(),
+      checkpointLocation, "update") { (batch, batchId, scope) =>
+      scoreBatch(batch, batchId, model, fp, storePath, "doc_id", "text", scope,
+        filesPerBatch)
+    }
   }
 
   /** Order-independent fingerprint of the weight table (bounded:
@@ -214,9 +198,9 @@ object ScoreStreaming {
                   "belongs to another stream; migrate into a fresh path")
           }
       }) {
-      (_, v) => CommitStore.writeFoldDir(
-        committedPredictions(spark, srcPath, advise = false),
-        files, s"$dstPath/data/b=$v/preds")
+      (ids, v) => CommitStore.writeFoldDir(
+        CommitStore.readChain(spark, srcPath, ids, "preds"),
+        files, CommitStore.dataDir(dstPath, v, "preds"))
     }
 
   /** One micro-batch of the protocol (exposed for deterministic
@@ -241,52 +225,46 @@ object ScoreStreaming {
     require(!Seq("cls_pred", "score_e6", "margin_e6", "share_bp",
         "n_tokens").contains(idCol) && !idCol.startsWith("__graft_"),
       s"scoreBatch: id column '$idCol' collides with an output name")
-    val spark = batch.sparkSession
-    val (fs, root) = CommitStore.fsOf(spark, storePath)
-    CommitStore.checkScope(fs, root, scope)
-    CommitStore.checkStamp(fs, root, "_graft_params",
-      paramsOf(model, modelFp),
+    val pin = CommitStore.Pin(paramsOf(model, modelFp),
       (stored, given) =>
-        s"score store at $root was maintained with '$stored' but this " +
+        s"score store at $storePath was maintained with '$stored' but this " +
           s"stream serves '$given' — a different model's scores are not " +
           "comparable; resume with the original model or start a new " +
           "store path")
-    val committed = CommitStore.committedVersion(spark, storePath)
-    if (committed.exists(batchId <= _)) return // replay of a committed batch
-    if (batch.isEmpty) return // no documents, state unchanged
-
-    // one keyed agg serves double duty: the per-doc token counts the
-    // store carries AND the duplicate-id guard (count per id) — no
-    // second batch scan for the check, and the join side is unique-keyed
-    // by construction
-    val toks = batch
-      .select(col(idCol).as("doc_id"),
-        graft.pipeline.TextAnalysis.tokenCount(col(textCol))
-          .cast("long").as("n_tokens"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("__graft_n"), max(col("n_tokens")).as("n_tokens"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val dups = toks.filter(col("__graft_n") > 1L)
-        .select(col("doc_id")).limit(3).collect().map(_.get(0)).toSeq
-      if (dups.nonEmpty) {
-        throw new IllegalArgumentException(
-          s"scoreBatch: batch $batchId carries duplicate ids " +
-            s"(e.g. ${dups.mkString(", ")}) — scoring is keyed per doc " +
-            "and duplicates would fan the prediction join out; dedup " +
-            "upstream (at-least-once sources must collapse replays " +
-            "within a batch)")
-      }
-      val preds = Classifier.calibrateScores(
-        Classifier.scoreMulti(model, batch, idCol, textCol))
-      CommitStore.writeBatchDir(
-        preds
-          .join(toks.select(col("doc_id"), col("n_tokens")), "doc_id")
-          .select(col("doc_id"), col("cls_pred"), col("score_e6"),
-            col("margin_e6"), col("share_bp"), col("n_tokens")),
-        filesPerBatch, s"$storePath/data/b=$batchId/preds")
-    } finally toks.unpersist(blocking = false)
-    CommitStore.commitBatch(fs, root, batchId)
+    CommitStore.guard(batch, batchId, storePath, scope, Some(pin)) { b =>
+      // one keyed agg serves double duty: the per-doc token counts the
+      // store carries AND the duplicate-id guard (count per id) — no
+      // second batch scan for the check, and the join side is unique-keyed
+      // by construction
+      val toks = batch
+        .select(col(idCol).as("doc_id"),
+          graft.pipeline.TextAnalysis.tokenCount(col(textCol))
+            .cast("long").as("n_tokens"))
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("__graft_n"), max(col("n_tokens")).as("n_tokens"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val dups = toks.filter(col("__graft_n") > 1L)
+          .select(col("doc_id")).limit(3).collect().map(_.get(0)).toSeq
+        if (dups.nonEmpty) {
+          throw new IllegalArgumentException(
+            s"scoreBatch: batch $batchId carries duplicate ids " +
+              s"(e.g. ${dups.mkString(", ")}) — scoring is keyed per doc " +
+              "and duplicates would fan the prediction join out; dedup " +
+              "upstream (at-least-once sources must collapse replays " +
+              "within a batch)")
+        }
+        val preds = Classifier.calibrateScores(
+          Classifier.scoreMulti(model, batch, idCol, textCol))
+        CommitStore.writeBatchDir(
+          preds
+            .join(toks.select(col("doc_id"), col("n_tokens")), "doc_id")
+            .select(col("doc_id"), col("cls_pred"), col("score_e6"),
+              col("margin_e6"), col("share_bp"), col("n_tokens")),
+          filesPerBatch, b.dir("preds"))
+      } finally toks.unpersist(blocking = false)
+      b.commit()
+    }
   }
 
   /** Every committed prediction — the union of the batch chain; equal to
@@ -295,23 +273,8 @@ object ScoreStreaming {
     * commit. */
   def committedPredictions(
       spark: org.apache.spark.sql.SparkSession, storePath: String): DataFrame =
-    committedPredictions(spark, storePath, advise = true)
-
-  /** [[committedPredictions]] with the compaction advisory switchable
-    * off — the compaction/migration folds read through here (advising
-    * "consider compactStore" from inside the compaction is noise). */
-  private[streaming] def committedPredictions(
-      spark: org.apache.spark.sql.SparkSession,
-      storePath: String,
-      advise: Boolean): DataFrame = {
-    val ids = CommitStore.committedIds(spark, storePath)
-    if (ids.isEmpty) return spark.emptyDataFrame
-    if (advise) {
-      CommitStore.adviseCompaction(ids.size, storePath, "ScoreStreaming")
-    }
-    CommitStore.readChain(spark,
-      ids.map(id => s"$storePath/data/b=$id/preds"))
-  }
+    CommitStore.committedChain(spark, storePath, "preds", Some("ScoreStreaming"))
+      .getOrElse(spark.emptyDataFrame)
 
   /** The thresholded-LID view of everything served so far:
     * [[Classifier.gateAtMedianMargin]] over the committed predictions
@@ -354,8 +317,8 @@ object ScoreStreaming {
       dstPath: String,
       files: Int = 1): Unit =
     CommitStore.foldInto(spark, srcPath, dstPath, "compactStore", "score") {
-      (_, v) => CommitStore.writeFoldDir(
-        committedPredictions(spark, srcPath, advise = false),
-        files, s"$dstPath/data/b=$v/preds")
+      (ids, v) => CommitStore.writeFoldDir(
+        CommitStore.readChain(spark, srcPath, ids, "preds"),
+        files, CommitStore.dataDir(dstPath, v, "preds"))
     }
 }

@@ -56,20 +56,17 @@ import org.apache.spark.sql.functions._
  * [[committedSessions]] then reports the MATURED prefix — buffered
  * events join once the watermark passes them.
  *
- * Store layout ([[CommitStore]]'s crash argument applies verbatim —
- * data first, manifest LAST via temp+rename, replays return before
- * writing):
+ * The store's own leaves and pin ([[CommitStore]] has the layout and
+ * the crash argument; data first, manifest last, replays write nothing):
  * {{{
- *   storePath/_graft_scope        checkpoint identity (write-once)
  *   storePath/_graft_params       gap/keys/value pin (write-once)
- *   storePath/_manifests/m=<id>   commit marker for batch <id>
  *   storePath/data/b=<id>/closed  sessions closed BY batch <id>
  *   storePath/data/b=<id>/open    open-state delta AFTER batch <id>
  * }}}
  */
 object SessionStreaming {
 
-  private val DeltaBatchCol = "__graft_delta_batch"
+  import CommitStore.DeltaBatchCol
 
   /** Start the maintenance stream. `events` is a STREAMING DataFrame;
     * each key's events must arrive in non-decreasing `tsCol` order
@@ -86,18 +83,11 @@ object SessionStreaming {
       checkpointLocation: Option[String] = None,
       watermarkSeconds: Long = 0L,
       filesPerBatch: Int = 1)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = CommitStore.scopeOf(checkpointLocation)
-    val writer = events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sessionBatch(batch, batchId, storePath, keyCols, tsCol, gapSeconds,
-          valueCol, orderCols, scope, watermarkSeconds, filesPerBatch)
-        ()
-      }
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    CommitStore.maintain(events, checkpointLocation) { (batch, batchId, scope) =>
+      sessionBatch(batch, batchId, storePath, keyCols, tsCol, gapSeconds,
+        valueCol, orderCols, scope, watermarkSeconds, filesPerBatch)
+    }
 
   /** One micro-batch of the protocol (exposed for deterministic
     * crash-path testing; [[maintainSessions]] drives it). */
@@ -115,195 +105,175 @@ object SessionStreaming {
       filesPerBatch: Int = 1): Unit = {
     require(watermarkSeconds >= 0L,
       s"sessionBatch: watermarkSeconds must be >= 0, got $watermarkSeconds")
-    val spark = batch.sparkSession
-    val (fs, root) = CommitStore.fsOf(spark, storePath)
-    CommitStore.checkScope(fs, root, scope)
-    CommitStore.checkStamp(fs, root, "_graft_params",
+    val pin = CommitStore.Pin(
       s"gapSeconds=$gapSeconds,keys=${keyCols.mkString("+")}," +
         s"value=${valueCol.getOrElse("-")}" +
         StreamWatermark.paramsSuffix(watermarkSeconds),
       (stored, given) =>
-        s"session store at $root was maintained with '$stored' but this " +
-          s"stream uses '$given' — session boundaries and schemas are " +
+        s"session store at $storePath was maintained with '$stored' but " +
+          s"this stream uses '$given' — session boundaries and schemas are " +
           "incompatible; resume with the original parameters or start a " +
           "new store path")
-    val committed = CommitStore.committedVersion(spark, storePath)
-    if (committed.exists(batchId <= _)) return // replay of a committed batch
-    if (batch.isEmpty) return // no events: state unchanged, and the
-    // high-water mark is EVENT time, so the cut cannot advance either
+    CommitStore.guard(batch, batchId, storePath, scope, Some(pin)) { b =>
+      val spark = batch.sparkSession
+      // bounded-disorder tier: the shared release step
+      // (StreamWatermark.release) folds pending with the new arrivals and
+      // returns only events at or below (hwm - watermark)
+      val inCols = (keyCols :+ tsCol) ++ valueCol.toSeq ++
+        orderCols.filterNot(c => keyCols.contains(c) || c == tsCol)
+      val eNew = batch.select(inCols.distinct.map(col): _*)
+      val wmUs = watermarkSeconds * 1000000L
+      val (events, wmTail) =
+        if (watermarkSeconds == 0L) (eNew, None)
+        else {
+          val (released, tail) = StreamWatermark.release(
+            storePath, eNew, df => Sessions.tsMicros(df, tsCol), wmUs,
+            "sessionBatch")
+          (released, Some(tail))
+        }
 
-    // bounded-disorder tier: the shared release step
-    // (StreamWatermark.release) folds pending with the new arrivals and
-    // returns only events at or below (hwm - watermark)
-    val inCols = (keyCols :+ tsCol) ++ valueCol.toSeq ++
-      orderCols.filterNot(c => keyCols.contains(c) || c == tsCol)
-    val eNew = batch.select(inCols.distinct.map(col): _*)
-    val wmUs = watermarkSeconds * 1000000L
-    val (events, wmTail) =
-      if (watermarkSeconds == 0L) (eNew, None)
-      else {
-        val (released, tail) = StreamWatermark.release(
-          storePath, eNew, df => Sessions.tsMicros(df, tsCol), wmUs,
-          "sessionBatch")
-        (released, Some(tail))
+      val gapUs = gapSeconds * 1000000L
+      val stats0 = Sessions.stats(events, keyCols, tsCol, gapSeconds, valueCol,
+        orderCols)
+      val stats = stats0
+        .withColumn("__graft_s_us", Sessions.tsMicros(stats0, "session_start"))
+        .withColumn("__graft_e_us", Sessions.tsMicros(stats0, "session_end"))
+      val keyC = keyCols.map(col)
+      val storeCols =
+        keyCols ++ Seq("session_seq", "session_start", "session_end",
+          "n_events", "duration_us") ++ valueCol.map(_ => "value_sum").toSeq
+
+      // per-key decision row: batch session count, first batch event's
+      // micros, and the committed open session (if any)
+      val perKey = stats.groupBy(keyC: _*).agg(
+        max(col("session_seq")).as("__graft_maxl"),
+        min(col("__graft_s_us")).as("__graft_first_us"))
+      val openOpt = committedOpenState(spark, storePath)
+      val dec = openOpt match {
+        case None =>
+          perKey
+            .withColumn("__graft_o_seq", lit(null).cast("long"))
+            .withColumn("__graft_o_start",
+              lit(null).cast(stats.schema("session_start").dataType))
+            .withColumn("__graft_o_start_us", lit(null).cast("long"))
+            .withColumn("__graft_o_end_us", lit(null).cast("long"))
+            .withColumn("__graft_o_n", lit(null).cast("long"))
+            .withColumn("__graft_o_vsum", lit(null)
+              .cast(valueCol.map(_ => stats.schema("value_sum").dataType)
+                .getOrElse(org.apache.spark.sql.types.LongType)))
+            .withColumn("__graft_merged", lit(false))
+        case Some(open0) =>
+          val open = open0
+            .withColumn("__graft_o_start_us",
+              Sessions.tsMicros(open0, "session_start"))
+            .withColumn("__graft_o_end_us",
+              Sessions.tsMicros(open0, "session_end"))
+            .select(keyC ++ Seq(
+              col("session_seq").as("__graft_o_seq"),
+              col("session_start").as("__graft_o_start"),
+              col("__graft_o_start_us"), col("__graft_o_end_us"),
+              col("n_events").as("__graft_o_n"),
+              valueCol.map(_ => col("value_sum"))
+                .getOrElse(lit(null).cast("long")).as("__graft_o_vsum")): _*)
+          perKey.join(open, keyCols, "left")
+            .withColumn("__graft_merged",
+              when(col("__graft_o_seq").isNull, lit(false))
+                .when(col("__graft_first_us") < col("__graft_o_end_us"),
+                  // the ordered-arrival contract is broken: continuing
+                  // would fabricate session boundaries — fail the batch
+                  expr(s"""raise_error(CONCAT(
+                    |'sessionBatch: out-of-order arrival for key ',
+                    |CAST(`${keyCols.head}` AS STRING),
+                    |' — batch event at ', CAST(__graft_first_us AS STRING),
+                    |'us precedes the committed open session end at ',
+                    |CAST(__graft_o_end_us AS STRING),
+                    |'us; events must arrive per-key ts-ordered across batches'))"""
+                    .stripMargin).cast("boolean"))
+                .otherwise(
+                  col("__graft_first_us") - col("__graft_o_end_us") <= gapUs))
       }
 
-    val gapUs = gapSeconds * 1000000L
-    val stats0 = Sessions.stats(events, keyCols, tsCol, gapSeconds, valueCol,
-      orderCols)
-    val stats = stats0
-      .withColumn("__graft_s_us", Sessions.tsMicros(stats0, "session_start"))
-      .withColumn("__graft_e_us", Sessions.tsMicros(stats0, "session_end"))
-    val keyC = keyCols.map(col)
-    val storeCols =
-      keyCols ++ Seq("session_seq", "session_start", "session_end",
-        "n_events", "duration_us") ++ valueCol.map(_ => "value_sum").toSeq
+      val j = stats.join(
+        dec.select(keyC ++ Seq(col("__graft_maxl"), col("__graft_o_seq"),
+          col("__graft_o_start"), col("__graft_o_start_us"),
+          col("__graft_o_n"), col("__graft_o_vsum"),
+          col("__graft_merged")): _*),
+        keyCols, "inner")
+      // pin the LOCAL-seq predicate before session_seq is globalized —
+      // later withColumns resolve col("session_seq") against the rewrite
+      val isFirstMerged = col("__graft_merged") && col("__graft_is_l1")
+      val adjusted = j
+        .withColumn("__graft_is_l1", col("session_seq") === 1L)
+        .withColumn("session_seq",
+          col("session_seq") + coalesce(col("__graft_o_seq"), lit(0L))
+            - when(col("__graft_merged"), 1L).otherwise(0L))
+        .withColumn("n_events",
+          col("n_events") + when(isFirstMerged, col("__graft_o_n")).otherwise(0L))
+        .withColumn("__graft_s_us2",
+          when(isFirstMerged, col("__graft_o_start_us"))
+            .otherwise(col("__graft_s_us")))
+        .withColumn("session_start",
+          when(isFirstMerged, col("__graft_o_start")).otherwise(col("session_start")))
+        .withColumn("duration_us", col("__graft_e_us") - col("__graft_s_us2"))
+      // the merge addition widens decimal precision (sum(decimal(p,s)) +
+      // stored = decimal(p+1,s)); cast back to the batch-kernel type so
+      // EVERY batch writes the identical schema — the store stays
+      // schema-stable (one multi-root read, no per-batch coercion) and
+      // committedSessions' type equals Sessions.stats' exactly. ANSI casts
+      // throw on a genuine overflow instead of truncating
+      val adjustedV = valueCol.map(_ => adjusted.withColumn("value_sum",
+          when(isFirstMerged, col("value_sum") + col("__graft_o_vsum"))
+            .otherwise(col("value_sum"))
+            .cast(stats.schema("value_sum").dataType)))
+        .getOrElse(adjusted)
 
-    // per-key decision row: batch session count, first batch event's
-    // micros, and the committed open session (if any)
-    val perKey = stats.groupBy(keyC: _*).agg(
-      max(col("session_seq")).as("__graft_maxl"),
-      min(col("__graft_s_us")).as("__graft_first_us"))
-    val openOpt = committedOpenState(spark, storePath)
-    val dec = openOpt match {
-      case None =>
-        perKey
-          .withColumn("__graft_o_seq", lit(null).cast("long"))
-          .withColumn("__graft_o_start",
-            lit(null).cast(stats.schema("session_start").dataType))
-          .withColumn("__graft_o_start_us", lit(null).cast("long"))
-          .withColumn("__graft_o_end_us", lit(null).cast("long"))
-          .withColumn("__graft_o_n", lit(null).cast("long"))
-          .withColumn("__graft_o_vsum", lit(null)
-            .cast(valueCol.map(_ => stats.schema("value_sum").dataType)
-              .getOrElse(org.apache.spark.sql.types.LongType)))
-          .withColumn("__graft_merged", lit(false))
-      case Some(open0) =>
-        val open = open0
-          .withColumn("__graft_o_start_us",
-            Sessions.tsMicros(open0, "session_start"))
-          .withColumn("__graft_o_end_us",
-            Sessions.tsMicros(open0, "session_end"))
-          .select(keyC ++ Seq(
-            col("session_seq").as("__graft_o_seq"),
-            col("session_start").as("__graft_o_start"),
-            col("__graft_o_start_us"), col("__graft_o_end_us"),
-            col("n_events").as("__graft_o_n"),
-            valueCol.map(_ => col("value_sum"))
-              .getOrElse(lit(null).cast("long")).as("__graft_o_vsum")): _*)
-        perKey.join(open, keyCols, "left")
-          .withColumn("__graft_merged",
-            when(col("__graft_o_seq").isNull, lit(false))
-              .when(col("__graft_first_us") < col("__graft_o_end_us"),
-                // the ordered-arrival contract is broken: continuing
-                // would fabricate session boundaries — fail the batch
-                expr(s"""raise_error(CONCAT(
-                  |'sessionBatch: out-of-order arrival for key ',
-                  |CAST(`${keyCols.head}` AS STRING),
-                  |' — batch event at ', CAST(__graft_first_us AS STRING),
-                  |'us precedes the committed open session end at ',
-                  |CAST(__graft_o_end_us AS STRING),
-                  |'us; events must arrive per-key ts-ordered across batches'))"""
-                  .stripMargin).cast("boolean"))
-              .otherwise(
-                col("__graft_first_us") - col("__graft_o_end_us") <= gapUs))
+      // closed by this batch: every batch session but each key's last, plus
+      // open sessions the batch's first event did NOT extend (under ordered
+      // arrival no future event can reach them either)
+      val batchClosed = adjustedV
+        .filter(col("session_seq") <
+          col("__graft_maxl") + coalesce(col("__graft_o_seq"), lit(0L))
+            - when(col("__graft_merged"), 1L).otherwise(0L))
+        .select(storeCols.map(col): _*)
+      val openClosed = openOpt match {
+        case None => None
+        case Some(open) => Some(open
+          .join(dec.filter(col("__graft_o_seq").isNotNull &&
+              !col("__graft_merged"))
+            .select(keyC: _*), keyCols, "left_semi")
+          .select(storeCols.map(col): _*))
+      }
+      val closed = openClosed.map(batchClosed.unionByName(_)).getOrElse(batchClosed)
+      val openDelta = adjustedV
+        .filter(col("session_seq") ===
+          col("__graft_maxl") + coalesce(col("__graft_o_seq"), lit(0L))
+            - when(col("__graft_merged"), 1L).otherwise(0L))
+        .select((storeCols.map(col) :+ lit(batchId).as(DeltaBatchCol)): _*)
+
+      CommitStore.writeBatchDir(closed, filesPerBatch, b.dir("closed"))
+      CommitStore.writeBatchDir(openDelta, filesPerBatch, b.dir("open"))
+      // watermark tier: pending snapshot (latest wins) + hwm row, data
+      // before the marker like everything else
+      wmTail.foreach { case (pending, hwm) =>
+        StreamWatermark.write(spark, storePath, batchId, pending, hwm,
+          filesPerBatch)
+      }
+      b.commit()
     }
-
-    val j = stats.join(
-      dec.select(keyC ++ Seq(col("__graft_maxl"), col("__graft_o_seq"),
-        col("__graft_o_start"), col("__graft_o_start_us"),
-        col("__graft_o_n"), col("__graft_o_vsum"),
-        col("__graft_merged")): _*),
-      keyCols, "inner")
-    // pin the LOCAL-seq predicate before session_seq is globalized —
-    // later withColumns resolve col("session_seq") against the rewrite
-    val isFirstMerged = col("__graft_merged") && col("__graft_is_l1")
-    val adjusted = j
-      .withColumn("__graft_is_l1", col("session_seq") === 1L)
-      .withColumn("session_seq",
-        col("session_seq") + coalesce(col("__graft_o_seq"), lit(0L))
-          - when(col("__graft_merged"), 1L).otherwise(0L))
-      .withColumn("n_events",
-        col("n_events") + when(isFirstMerged, col("__graft_o_n")).otherwise(0L))
-      .withColumn("__graft_s_us2",
-        when(isFirstMerged, col("__graft_o_start_us"))
-          .otherwise(col("__graft_s_us")))
-      .withColumn("session_start",
-        when(isFirstMerged, col("__graft_o_start")).otherwise(col("session_start")))
-      .withColumn("duration_us", col("__graft_e_us") - col("__graft_s_us2"))
-    // the merge addition widens decimal precision (sum(decimal(p,s)) +
-    // stored = decimal(p+1,s)); cast back to the batch-kernel type so
-    // EVERY batch writes the identical schema — the store stays
-    // schema-stable (one multi-root read, no per-batch coercion) and
-    // committedSessions' type equals Sessions.stats' exactly. ANSI casts
-    // throw on a genuine overflow instead of truncating
-    val adjustedV = valueCol.map(_ => adjusted.withColumn("value_sum",
-        when(isFirstMerged, col("value_sum") + col("__graft_o_vsum"))
-          .otherwise(col("value_sum"))
-          .cast(stats.schema("value_sum").dataType)))
-      .getOrElse(adjusted)
-
-    // closed by this batch: every batch session but each key's last, plus
-    // open sessions the batch's first event did NOT extend (under ordered
-    // arrival no future event can reach them either)
-    val batchClosed = adjustedV
-      .filter(col("session_seq") <
-        col("__graft_maxl") + coalesce(col("__graft_o_seq"), lit(0L))
-          - when(col("__graft_merged"), 1L).otherwise(0L))
-      .select(storeCols.map(col): _*)
-    val openClosed = openOpt match {
-      case None => None
-      case Some(open) => Some(open
-        .join(dec.filter(col("__graft_o_seq").isNotNull &&
-            !col("__graft_merged"))
-          .select(keyC: _*), keyCols, "left_semi")
-        .select(storeCols.map(col): _*))
-    }
-    val closed = openClosed.map(batchClosed.unionByName(_)).getOrElse(batchClosed)
-    val openDelta = adjustedV
-      .filter(col("session_seq") ===
-        col("__graft_maxl") + coalesce(col("__graft_o_seq"), lit(0L))
-          - when(col("__graft_merged"), 1L).otherwise(0L))
-      .select((storeCols.map(col) :+ lit(batchId).as(DeltaBatchCol)): _*)
-
-    CommitStore.writeBatchDir(closed, filesPerBatch,
-      s"$storePath/data/b=$batchId/closed")
-    CommitStore.writeBatchDir(openDelta, filesPerBatch,
-      s"$storePath/data/b=$batchId/open")
-    // watermark tier: pending snapshot (latest wins) + hwm row, data
-    // before the marker like everything else
-    wmTail.foreach { case (pending, hwm) =>
-      StreamWatermark.write(spark, storePath, batchId, pending, hwm,
-        filesPerBatch)
-    }
-    CommitStore.commitBatch(fs, root, batchId)
   }
 
   /** Current open session per key: the delta chain folded with a per-key
     * argmax on batch id. None before the first commit. */
   private[graft] def committedOpenState(
       spark: org.apache.spark.sql.SparkSession, storePath: String)
-      : Option[DataFrame] = {
-    val ids = CommitStore.committedIds(spark, storePath)
-    if (ids.isEmpty) return None
-    Some(foldOpen(CommitStore.readChain(spark,
-      ids.map(id => s"$storePath/data/b=$id/open"))))
-  }
+      : Option[DataFrame] =
+    CommitStore.committedChain(spark, storePath, "open", None).map(foldOpen)
 
-  /** The delta-chain fold behind [[committedOpenState]]: one delta row
-    * per (key, batch), so max(struct(batch, ...)) IS the latest row — no
-    * window, no driver state. Shared with [[migrateStore]], whose legacy
-    * chain arrives via a coercing union instead of the multi-root read. */
-  private def foldOpen(all: DataFrame): DataFrame = {
-    val dataCols = all.columns.filter(_ != DeltaBatchCol)
-    val keyCols = dataCols.takeWhile(c => c != "session_seq")
-    all
-      .groupBy(keyCols.map(col): _*)
-      .agg(max(struct((col(DeltaBatchCol) +:
-        dataCols.filterNot(keyCols.contains).map(col)): _*)).as("__graft_m"))
-      .select((keyCols.map(col) ++ dataCols.filterNot(keyCols.contains)
-        .map(c => col(s"__graft_m.`$c`").as(c))): _*)
-  }
+  /** Each key's latest open session ([[CommitStore.latestPerKey]]).
+    * Shared with [[migrateStore]], whose legacy chain arrives via a
+    * coercing union instead of the multi-root read. */
+  private def foldOpen(all: DataFrame): DataFrame =
+    CommitStore.latestPerKey(all, _ != "session_seq")
 
   /** The committed session table: closed sessions plus each key's open
     * one — `Sessions.stats` over everything ingested so far, row for
@@ -313,11 +283,9 @@ object SessionStreaming {
     val ids = CommitStore.committedIds(spark, storePath)
     if (ids.isEmpty) return spark.emptyDataFrame
     CommitStore.adviseCompaction(ids.size, storePath, "SessionStreaming")
-    val closed = CommitStore.readChain(spark,
-      ids.map(id => s"$storePath/data/b=$id/closed"))
-    committedOpenState(spark, storePath)
-      .map(o => closed.unionByName(o.select(closed.columns.map(col): _*)))
-      .getOrElse(closed)
+    val closed = CommitStore.readChain(spark, storePath, ids, "closed")
+    val open = foldOpen(CommitStore.readChain(spark, storePath, ids, "open"))
+    closed.unionByName(open.select(closed.columns.map(col): _*))
   }
 
   /**
@@ -337,12 +305,11 @@ object SessionStreaming {
       files: Int = 1): Unit =
     CommitStore.foldInto(spark, srcPath, dstPath, "compactStore", "session") {
       (ids, v) =>
-        val closed = CommitStore.readChain(spark,
-          ids.map(id => s"$srcPath/data/b=$id/closed"))
-        val open = committedOpenState(spark, srcPath).get
+        val closed = CommitStore.readChain(spark, srcPath, ids, "closed")
+        val open = foldOpen(CommitStore.readChain(spark, srcPath, ids, "open"))
           .withColumn(DeltaBatchCol, lit(v))
-        CommitStore.writeFoldDir(closed, files, s"$dstPath/data/b=$v/closed")
-        CommitStore.writeFoldDir(open, files, s"$dstPath/data/b=$v/open")
+        CommitStore.writeFoldDir(closed, files, CommitStore.dataDir(dstPath, v, "closed"))
+        CommitStore.writeFoldDir(open, files, CommitStore.dataDir(dstPath, v, "open"))
         // a watermark-tier store also carries its buffered tail + hwm
         StreamWatermark.compactInto(spark, srcPath, dstPath, v, files)
     }
@@ -384,9 +351,10 @@ object SessionStreaming {
       valueType: Option[org.apache.spark.sql.types.DataType] = None): Unit =
     CommitStore.foldInto(spark, srcPath, dstPath, "migrateStore", "session") {
       (ids, v) =>
-        // coercing per-batch fold — the pre-multi-root reader's spelling
+        // coercing per-batch union, not readChain: the legacy chain's
+        // widened types need union's coercion (the pre-multi-root spelling)
         def chain(leaf: String): DataFrame = ids
-          .map(id => spark.read.parquet(s"$srcPath/data/b=$id/$leaf"))
+          .map(id => spark.read.parquet(CommitStore.dataDir(srcPath, id, leaf)))
           .reduce(_.unionByName(_))
         // batch-kernel value type: explicit override, else the narrowest
         // written type across the chain (merges only ever widened, so any
@@ -395,7 +363,7 @@ object SessionStreaming {
         val kernel: Option[org.apache.spark.sql.types.DataType] =
           valueType.orElse {
             val seen = ids.flatMap { id =>
-              spark.read.parquet(s"$srcPath/data/b=$id/closed")
+              spark.read.parquet(CommitStore.dataDir(srcPath, id, "closed"))
                 .schema.find(_.name == "value_sum").map(_.dataType)
             }
             seen.sortBy {
@@ -421,8 +389,8 @@ object SessionStreaming {
         val closed = atKernel(chain("closed"))
         val open = atKernel(foldOpen(chain("open")))
           .withColumn(DeltaBatchCol, lit(v))
-        CommitStore.writeFoldDir(closed, files, s"$dstPath/data/b=$v/closed")
-        CommitStore.writeFoldDir(open, files, s"$dstPath/data/b=$v/open")
+        CommitStore.writeFoldDir(closed, files, CommitStore.dataDir(dstPath, v, "closed"))
+        CommitStore.writeFoldDir(open, files, CommitStore.dataDir(dstPath, v, "open"))
         StreamWatermark.compactInto(spark, srcPath, dstPath, v, files)
     }
 }

@@ -29,20 +29,18 @@ import org.apache.spark.sql.functions._
  * committed reader stitches them by concatenation — no committed bytes
  * are ever rewritten, so per-batch work is O(batch), not O(history).
  *
- * Crash safety — the usual manifest argument, append-only edition:
+ * The store's own leaves and pin ([[CommitStore]] has the layout and
+ * the crash argument: data first, manifest last, a replay writes nothing,
+ * and a crashed batch's replay recomputes the SAME rows from the SAME
+ * committed offset):
  * {{{
- *   shardPath/_graft_scope        checkpoint identity (write-once)
  *   shardPath/_graft_params       seqLen pin (write-once)
  *   shardPath/_manifests/m=<id>   total stream tokens AFTER batch <id>
  *   shardPath/data/b=<id>/        the batch's window rows (parquet)
  * }}}
- * A batch writes its data directory first and commits the manifest LAST
- * (temp+rename — the atomic commit point); a replayed batch
- * (id <= committed max) returns before writing; a batch that crashed
- * mid-write left no manifest, so its replay recomputes the SAME rows
- * from the SAME committed offset. The seqLen pin closes the quiet
- * corruption: resuming with a different window length would interleave
- * incompatible layouts, so it fails fast instead.
+ * The seqLen pin closes the quiet corruption: resuming with a different
+ * window length would interleave incompatible layouts, so it fails fast
+ * instead.
  */
 object ShardStreaming {
 
@@ -59,18 +57,10 @@ object ShardStreaming {
       promptLenCol: String,
       seqLen: Long,
       checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = CommitStore.scopeOf(checkpointLocation)
-    val writer = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        packBatch(batch, batchId, shardPath, idCol, idsCol, promptLenCol,
-          seqLen, scope)
-        ()
-      }
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    CommitStore.maintain(docs, checkpointLocation) { (batch, batchId, scope) =>
+      packBatch(batch, batchId, shardPath, idCol, idsCol, promptLenCol, seqLen, scope)
+    }
 
   /** One micro-batch of the protocol (exposed for deterministic
     * crash-path testing; [[maintainPackedShards]] drives it). */
@@ -82,30 +72,11 @@ object ShardStreaming {
       idsCol: String,
       promptLenCol: String,
       seqLen: Long,
-      scope: String): Unit = {
-    val spark = batch.sparkSession
-    val (fs, root) = CommitStore.fsOf(spark, shardPath)
-    CommitStore.checkScope(fs, root, scope)
-    CommitStore.checkStamp(fs, root, "_graft_params", s"seqLen=$seqLen",
-      (stored, given) =>
-        s"shard store at $root was packed with '$stored' but this stream " +
-          s"uses '$given' — window layouts are incompatible; resume with " +
-          "the original seqLen or start a new shard path")
-    val committed = CommitStore.committedVersion(spark, shardPath)
-    if (committed.exists(batchId <= _)) return // replay of a committed batch
-    if (batch.isEmpty) return // nothing to lay out, offset unchanged
-    val offset = committedOffset(spark, shardPath)
-    graft.pipeline.Sampling
-      .packMaskedTokenIdsFrom(batch, idCol, idsCol, promptLenCol, seqLen,
-        offset)
-      .write.mode("overwrite").parquet(s"$shardPath/data/b=$batchId")
-    // the new total counts the bytes JUST WRITTEN (the exportShards
-    // doctrine: the manifest describes disk, not a plan that might
-    // recompute differently)
-    val written = spark.read.parquet(s"$shardPath/data/b=$batchId")
-      .agg(coalesce(sum(col("n_tokens")), lit(0L))).head.getLong(0)
-    CommitStore.commit(fs, root, batchId, (offset + written).toString)
-  }
+      scope: String): Unit =
+    pack(batch, batchId, shardPath, seqLen, scope) { offset =>
+      graft.pipeline.Sampling.packMaskedTokenIdsFrom(batch, idCol, idsCol,
+        promptLenCol, seqLen, offset)
+    }
 
   /** [[maintainPackedShards]] for MULTI-TURN CHAT corpora: the ingest
     * stream carries (id, token_ids, loss intervals) documents —
@@ -124,18 +95,11 @@ object ShardStreaming {
       intervalsCol: String,
       seqLen: Long,
       checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = CommitStore.scopeOf(checkpointLocation)
-    val writer = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        packIntervalBatch(batch, batchId, shardPath, idCol, idsCol,
-          intervalsCol, seqLen, scope)
-        ()
-      }
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    CommitStore.maintain(docs, checkpointLocation) { (batch, batchId, scope) =>
+      packIntervalBatch(batch, batchId, shardPath, idCol, idsCol, intervalsCol,
+        seqLen, scope)
+    }
 
   /** One micro-batch of the interval tier (exposed for deterministic
     * crash-path testing; [[maintainIntervalShards]] drives it). */
@@ -147,25 +111,36 @@ object ShardStreaming {
       idsCol: String,
       intervalsCol: String,
       seqLen: Long,
-      scope: String): Unit = {
-    val spark = batch.sparkSession
-    val (fs, root) = CommitStore.fsOf(spark, shardPath)
-    CommitStore.checkScope(fs, root, scope)
-    CommitStore.checkStamp(fs, root, "_graft_params", s"seqLen=$seqLen",
+      scope: String): Unit =
+    pack(batch, batchId, shardPath, seqLen, scope) { offset =>
+      graft.pipeline.Chat.packTokenIdsFrom(batch, idCol, idsCol, intervalsCol,
+        seqLen, offset)
+    }
+
+  /** Both tiers' batch: under the guard and the seqLen pin, write the
+    * windows laid out from the committed offset, then commit the new total.
+    * The total counts the rows JUST WRITTEN (the exportShards doctrine:
+    * the manifest describes disk, not a plan that might recompute
+    * differently). */
+  private def pack(
+      batch: DataFrame,
+      batchId: Long,
+      shardPath: String,
+      seqLen: Long,
+      scope: String)(windows: Long => DataFrame): Unit = {
+    val pin = CommitStore.Pin(s"seqLen=$seqLen",
       (stored, given) =>
-        s"shard store at $root was packed with '$stored' but this stream " +
-          s"uses '$given' — window layouts are incompatible; resume with " +
-          "the original seqLen or start a new shard path")
-    val committed = CommitStore.committedVersion(spark, shardPath)
-    if (committed.exists(batchId <= _)) return // replay of a committed batch
-    if (batch.isEmpty) return // nothing to lay out, offset unchanged
-    val offset = committedOffset(spark, shardPath)
-    graft.pipeline.Chat
-      .packTokenIdsFrom(batch, idCol, idsCol, intervalsCol, seqLen, offset)
-      .write.mode("overwrite").parquet(s"$shardPath/data/b=$batchId")
-    val written = spark.read.parquet(s"$shardPath/data/b=$batchId")
-      .agg(coalesce(sum(col("n_tokens")), lit(0L))).head.getLong(0)
-    CommitStore.commit(fs, root, batchId, (offset + written).toString)
+        s"shard store at $shardPath was packed with '$stored' but this " +
+          s"stream uses '$given' — window layouts are incompatible; resume " +
+          "with the original seqLen or start a new shard path")
+    CommitStore.guard(batch, batchId, shardPath, scope, Some(pin)) { b =>
+      val spark = batch.sparkSession
+      val offset = committedOffset(spark, shardPath)
+      windows(offset).write.mode("overwrite").parquet(b.dir())
+      val written = CommitStore.readChain(spark, shardPath, Seq(b.id))
+        .agg(coalesce(sum(col("n_tokens")), lit(0L))).head.getLong(0)
+      b.commit((offset + written).toString)
+    }
   }
 
   /** Total committed stream tokens (0 before the first commit). */
@@ -186,8 +161,7 @@ object ShardStreaming {
       spark: org.apache.spark.sql.SparkSession, shardPath: String): DataFrame = {
     val ids = CommitStore.committedIds(spark, shardPath)
     if (ids.isEmpty) return spark.emptyDataFrame
-    val all = CommitStore.readChain(spark,
-      ids.map(id => s"$shardPath/data/b=$id"))
+    val all = CommitStore.readChain(spark, shardPath, ids)
     // a window split across batches is several rows with one seq_id,
     // disjoint [row_base, row_base + n_tokens) spans: concatenate in
     // row_base order (leading-field struct sort; bases are distinct

@@ -37,9 +37,9 @@ private[graft] object StreamWatermark {
       spark: SparkSession, storePath: String): Option[Long] = {
     val ids = CommitStore.committedIds(spark, storePath)
     if (ids.isEmpty) return None
-    val (fs, root) = CommitStore.fsOf(spark, storePath)
+    val (fs, _) = CommitStore.fsOf(spark, storePath)
     def has(id: Long, leaf: String): Boolean =
-      fs.exists(new org.apache.hadoop.fs.Path(root, s"data/b=$id/$leaf"))
+      fs.exists(new org.apache.hadoop.fs.Path(CommitStore.dataDir(storePath, id, leaf)))
     ids.sorted.reverse
       .find(id => has(id, "wm") || has(id, "pending"))
       .map { id =>
@@ -116,17 +116,21 @@ private[graft] object StreamWatermark {
     if (watermarkSeconds > 0L) s",wm=$watermarkSeconds" else ""
 
   /** Event-time high-water mark after the latest committed batch; None
-    * for a fresh or strict-tier store. */
+    * for a fresh or strict-tier store. Read on the driver, no Spark job. */
   def committedHwm(spark: SparkSession, storePath: String): Option[Long] =
-    latestTierBatch(spark, storePath).map { id =>
-      spark.read.parquet(s"$storePath/data/b=$id/wm").head.getLong(0)
-    }
+    latestTierBatch(spark, storePath).map(hwmOf(spark, storePath, _))
 
   /** Still-buffered events after the latest committed batch; None for a
-    * fresh or strict-tier store. */
+    * fresh or strict-tier store. The schema comes from the leaf's footer,
+    * so building the read submits no job. */
   def committedPending(spark: SparkSession, storePath: String): Option[DataFrame] =
-    latestTierBatch(spark, storePath)
-      .map(id => spark.read.parquet(s"$storePath/data/b=$id/pending"))
+    latestTierBatch(spark, storePath).map(pendingOf(spark, storePath, _))
+
+  private def hwmOf(spark: SparkSession, storePath: String, id: Long): Long =
+    CommitStore.firstLong(spark, CommitStore.dataDir(storePath, id, "wm"))
+
+  private def pendingOf(spark: SparkSession, storePath: String, id: Long): DataFrame =
+    CommitStore.readChain(spark, storePath, Seq(id), "pending")
 
   /** Write this batch's buffer snapshot + hwm (before the commit marker).
     * `files` caps the pending snapshot's file count
@@ -142,10 +146,10 @@ private[graft] object StreamWatermark {
       hwmUs: Long,
       files: Int = 1): Unit = {
     CommitStore.writeBatchDir(pending, files,
-      s"$storePath/data/b=$batchId/pending")
+      CommitStore.dataDir(storePath, batchId, "pending"))
     spark.range(1).select(lit(hwmUs).as("hwm_us"))
       .coalesce(1).write.mode("overwrite")
-      .parquet(s"$storePath/data/b=$batchId/wm")
+      .parquet(CommitStore.dataDir(storePath, batchId, "wm"))
   }
 
   /** Carry the watermark tier into a compacted store: the latest pending
@@ -156,9 +160,7 @@ private[graft] object StreamWatermark {
       spark: SparkSession, srcPath: String, dstPath: String, v: Long,
       files: Int = 1): Unit =
     latestTierBatch(spark, srcPath).foreach { id =>
-      write(spark, dstPath, v,
-        spark.read.parquet(s"$srcPath/data/b=$id/pending"),
-        spark.read.parquet(s"$srcPath/data/b=$id/wm").head.getLong(0),
-        files)
+      write(spark, dstPath, v, pendingOf(spark, srcPath, id),
+        hwmOf(spark, srcPath, id), files)
     }
 }

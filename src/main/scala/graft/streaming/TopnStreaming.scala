@@ -13,24 +13,33 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  * tables, reference README.md:73-116; streams are the Spark-native
  * continuation of that design).
  *
- * Two tiers:
+ * Three families:
  *
- *  - [[windowedSketches]]: event-time tumbling-window sketch build — the
- *    streaming twin of the batch "daily rollup" pattern. Uses the same
- *    `topn_add_agg` aggregate inside a watermarked window aggregation, so
- *    each micro-batch folds rows into per-window sketch state and late data
- *    past the watermark is dropped. Emitted (append-mode, on watermark
- *    close) rows land in the same `map<string,bigint>` rollup tables the
- *    batch path re-aggregates with `topn_union_agg`.
+ *  - Sketch streams. [[windowedSketches]] is the event-time
+ *    tumbling-window sketch build, the streaming twin of the batch "daily
+ *    rollup" pattern: the same `topn_add_agg` aggregate inside a
+ *    watermarked window aggregation, whose append-mode rows land in the
+ *    same `map<string,bigint>` rollup tables the batch path re-aggregates
+ *    with `topn_union_agg`. [[runningTopK]] keeps a per-key top-k in
+ *    `mapGroupsWithState` holding a [[TopnState]] (same eviction
+ *    semantics, same wire format as the aggregate buffer) and emits it on
+ *    every trigger — the "live dashboard" shape.
  *
- *  - [[runningTopK]]: per-key continuously-updated top-k via
- *    `mapGroupsWithState` holding a [[TopnState]] (same eviction semantics,
- *    same serialized wire format as the aggregate buffer). Emits the
- *    current top-k per key on every trigger — the "live dashboard" shape.
+ *  - Maintained keyed stores under [[CommitStore]]'s protocol:
+ *    [[maintainRollup]] (a parquet rollup of per-(period, group) sketches
+ *    merged batch by batch), [[maintainClusters]] (a bucketed
+ *    duplicate-cluster labeling) and [[maintainSemanticClusters]]
+ *    (SemDeDup clusters over an embedding stream). Each states only its
+ *    batch kernel; the entry, the guard, the keyed manifest and its GC
+ *    are CommitStore's.
  *
- * Scale notes: state per key is bounded (<= 3n counters, the reference's
- * cap), so state-store size is O(keys * n) regardless of stream volume;
- * both shapes shuffle only by group key, identical to the batch plans.
+ *  - Dedup streams: [[streamingNearDupPairs]], [[streamingExactDedup]]
+ *    and [[streamingFirstById]], keyed state with optional TTLs.
+ *
+ * Scale notes: sketch state per key is bounded (<= 3n counters, the
+ * reference's cap), so state-store size is O(keys * n) regardless of
+ * stream volume; both sketch shapes shuffle only by group key, identical
+ * to the batch plans.
  */
 object TopnStreaming {
 
@@ -99,18 +108,11 @@ object TopnStreaming {
       itemExpr: org.apache.spark.sql.Column,
       numCounters: Int = GraftConf.DefaultNumberOfCounters,
       checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = CommitStore.scopeOf(checkpointLocation)
-    val writer = events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, batchId, rollupPath, periodExpr, groupCol, itemExpr,
-          numCounters, scope)
-        ()
-      }
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    CommitStore.maintain(events, checkpointLocation) { (batch, batchId, scope) =>
+      mergeBatch(batch, batchId, rollupPath, periodExpr, groupCol, itemExpr,
+        numCounters, scope)
+    }
 
   /** Rollup key for rows whose period expression evaluates to null. */
   val NullPeriodKey = "__GRAFT_NULL_PERIOD__"
@@ -120,84 +122,15 @@ object TopnStreaming {
       spark: org.apache.spark.sql.SparkSession, rollupPath: String): Option[Long] =
     CommitStore.committedVersion(spark, rollupPath)
 
-  /** Manifest contents: period -> id of the data directory holding its
-    * current rows. Lines are `<dirId>\t<urlencoded period>`. */
-  private def readManifest(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      version: Long): Map[String, Long] =
-    CommitStore.readManifest(fs, root, version)
-      .split("\n").iterator.filter(_.nonEmpty).map { line =>
-        val Array(ver, enc) = line.split("\t", 2)
-        java.net.URLDecoder.decode(enc, "UTF-8") -> ver.toLong
-      }.toMap
-
-  private def writeManifest(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      version: Long,
-      entries: Map[String, Long]): Unit =
-    CommitStore.commit(fs, root, version,
-      entries.toSeq.sorted.map { case (period, ver) =>
-        s"$ver\t${java.net.URLEncoder.encode(period, "UTF-8")}"
-      }.mkString("\n"))
-
-  /** Commit batch `batchId` as `manifest` with the `touched` keys moved to
-    * its data directory, then garbage-collect: drop data dirs referenced by
-    * neither the new nor the previous manifest (readers of the previous
-    * committed state stay safe), and manifests older than the previous
-    * one. */
-  private def commitTouched(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      batchId: Long,
-      committed: Option[Long],
-      manifest: Map[String, Long],
-      touched: Set[String]): Unit = {
-    val newManifest = manifest ++ touched.iterator.map(_ -> batchId)
-    writeManifest(fs, root, batchId, newManifest)
-    val live = newManifest.values.toSet ++ manifest.values.toSet
-    val dataRoot = new org.apache.hadoop.fs.Path(root, "data")
-    if (fs.exists(dataRoot)) {
-      fs.listStatus(dataRoot).toSeq.filter(_.isDirectory).foreach { st =>
-        scala.util.Try(st.getPath.getName.stripPrefix("b=").toLong).toOption
-          .foreach { id => if (!live.contains(id)) fs.delete(st.getPath, true) }
-      }
-    }
-    CommitStore.dropManifestsBelow(fs, root, committed.getOrElse(batchId))
-  }
-
-  /** Assemble the table for a manifest: union of the referenced data dirs,
-    * each filtered to the keys (`keyCol` values) the manifest maps to it,
-    * read under `schema` (default: one data file's footer schema). */
-  private def manifestTable(
-      spark: org.apache.spark.sql.SparkSession,
-      rollupPath: String,
-      manifest: Map[String, Long],
-      keyCol: String = "period",
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
-      : Option[DataFrame] = {
-    val dirs = manifest.groupBy(_._2).toSeq
-      .map { case (id, byKey) => s"$rollupPath/data/b=$id" -> byKey.keys.toSeq }
-    lazy val pinned = schema.getOrElse(CommitStore.footerSchema(spark, dirs.map(_._1)))
-    dirs.map { case (dir, keys) =>
-      spark.read.schema(pinned).parquet(dir).filter(col(keyCol).isin(keys: _*))
-    }.reduceOption(_ unionAll _)
-  }
-
   /** The committed rollup table: (period, group, sketch). Empty-schema
     * DataFrame before the first commit. */
   def committedRollup(
-      spark: org.apache.spark.sql.SparkSession, rollupPath: String): DataFrame = {
-    val (fs, root) = CommitStore.fsOf(spark, rollupPath)
-    committedVersion(spark, rollupPath)
-      .flatMap(v => manifestTable(spark, rollupPath, readManifest(fs, root, v)))
+      spark: org.apache.spark.sql.SparkSession, rollupPath: String): DataFrame =
+    CommitStore.committedKeyed(spark, rollupPath, "period")
       .getOrElse(spark.emptyDataFrame)
-  }
 
   /** One micro-batch of the rollup maintenance protocol (exposed for
-    * deterministic crash-path testing; `maintainRollup` drives it from
-    * `foreachBatch`). */
+    * deterministic crash-path testing; `maintainRollup` drives it). */
   private[graft] def mergeBatch(
       batch: DataFrame,
       batchId: Long,
@@ -208,42 +141,39 @@ object TopnStreaming {
       numCounters: Int,
       scope: String): Unit = {
     val spark = batch.sparkSession
-    val (fs, root) = CommitStore.fsOf(spark, rollupPath)
-    CommitStore.checkScope(fs, root, scope)
-
-    val committed = committedVersion(spark, rollupPath)
-    if (committed.exists(batchId <= _)) return // replay of a committed batch
-
-    // period is an ordinary STRING data column end to end (never a
-    // partition directory), so date-/number-shaped periods cannot be
-    // re-typed by partition-value inference on read. Rows whose period
-    // evaluates to null (e.g. a null event time) roll up under a
-    // distinguished key instead of NPE-ing the manifest writer — the same
-    // move Hive's default partition makes.
-    val delta = batch
-      .groupBy(coalesce(periodExpr.cast("string"), lit(NullPeriodKey)).as("period"),
-        col(groupCol))
-      .agg(TopnFunctions.topn_add_agg(itemExpr, numCounters).as("sketch"))
-      .cache()
-    try {
-      // fills the cache; (period, group) rows are few: dedupe on the driver
-      val touched = delta.select("period").collect().map(_.getString(0)).toSet
-      if (touched.isEmpty) return // nothing to merge; commit nothing
-      val manifest = committed.map(readManifest(fs, root, _)).getOrElse(Map.empty)
-
-      // previous state of ONLY the touched periods — per-batch read/merge/
-      // write cost is proportional to the batch, not the rollup's history
-      val merged = manifestTable(spark, rollupPath,
-        manifest.view.filterKeys(touched).toMap, schema = Some(delta.schema)) match {
-        case None => delta
-        case Some(old) =>
-          delta.unionByName(old).groupBy(col("period"), col(groupCol))
-            .agg(TopnFunctions.topn_union_agg(col("sketch"), numCounters).as("sketch"))
-      }
-      merged.write.mode("overwrite").parquet(s"$rollupPath/data/b=$batchId")
-      // the atomic commit: one rename of the new manifest file
-      commitTouched(fs, root, batchId, committed, manifest, touched)
-    } finally delta.unpersist()
+    // no empty-batch probe: the delta below finds an empty batch for free
+    CommitStore.guard(batch, batchId, rollupPath, scope, skipEmpty = false) { b =>
+      // period is an ordinary STRING data column end to end (never a
+      // partition directory), so date-/number-shaped periods cannot be
+      // re-typed by partition-value inference on read. Rows whose period
+      // evaluates to null (e.g. a null event time) roll up under a
+      // distinguished key instead of NPE-ing the manifest writer — the same
+      // move Hive's default partition makes.
+      val delta = batch
+        .groupBy(coalesce(periodExpr.cast("string"), lit(NullPeriodKey)).as("period"),
+          col(groupCol))
+        .agg(TopnFunctions.topn_add_agg(itemExpr, numCounters).as("sketch"))
+        .cache()
+      try {
+        // fills the cache; (period, group) rows are few: dedupe on the driver
+        val touched = delta.select("period").collect().map(_.getString(0)).toSet
+        if (touched.nonEmpty) { // an empty batch commits nothing
+          val manifest = b.keys
+          // previous state of ONLY the touched periods — per-batch read/merge/
+          // write cost is proportional to the batch, not the rollup's history
+          val merged = CommitStore.keyedTable(spark, rollupPath,
+            manifest.view.filterKeys(touched).toMap, "period", Some(delta.schema)) match {
+            case None => delta
+            case Some(old) =>
+              delta.unionByName(old).groupBy(col("period"), col(groupCol))
+                .agg(TopnFunctions.topn_union_agg(col("sketch"), numCounters).as("sketch"))
+          }
+          merged.write.mode("overwrite").parquet(b.dir())
+          // the atomic commit: one rename of the new manifest file
+          b.commitKeys(manifest, touched)
+        }
+      } finally delta.unpersist()
+    }
   }
 
   // ---- streaming duplicate-cluster maintenance ---------------------------
@@ -287,17 +217,10 @@ object TopnStreaming {
       bCol: String,
       checkpointLocation: Option[String] = None,
       numBuckets: Int = 64)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = CommitStore.scopeOf(checkpointLocation)
-    val writer = pairs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        clusterBatch(batch, batchId, labelsPath, aCol, bCol, scope, numBuckets)
-        ()
-      }
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    CommitStore.maintain(pairs, checkpointLocation) { (batch, batchId, scope) =>
+      clusterBatch(batch, batchId, labelsPath, aCol, bCol, scope, numBuckets)
+    }
 
   /** Stable bucket of a doc id, any orderable id type. Stored as string —
     * same move as the rollup's `period` (no partition-value inference). */
@@ -317,77 +240,73 @@ object TopnStreaming {
       commitOnEmpty: Boolean = false): Unit = {
     require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
     val spark = batch.sparkSession
-    val (fs, root) = CommitStore.fsOf(spark, labelsPath)
-    CommitStore.checkScope(fs, root, scope)
-    CommitStore.checkStamp(fs, root, "_graft_cluster_buckets", numBuckets.toString,
+    val pin = CommitStore.Pin(numBuckets.toString,
       (stored, given) =>
-        s"labels at $root were bucketed with numBuckets=$stored; this query " +
-          s"uses numBuckets=$given. Bucket membership is a pure function of " +
-          "numBuckets, so changing it would re-bucket docs and orphan their " +
-          "old rows. Resume with the original numBuckets, or rebuild the " +
-          "labels path from scratch.")
+        s"labels at $labelsPath were bucketed with numBuckets=$stored; this " +
+          s"query uses numBuckets=$given. Bucket membership is a pure function " +
+          "of numBuckets, so changing it would re-bucket docs and orphan " +
+          "their old rows. Resume with the original numBuckets, or rebuild " +
+          "the labels path from scratch.",
+      "_graft_cluster_buckets")
+    CommitStore.guard(batch, batchId, labelsPath, scope, Some(pin),
+        skipEmpty = false) { b =>
+      val manifest = b.keys
+      if (batch.isEmpty) {
+        // a PAIRS batch can be legitimately empty while its source batch
+        // was not (semantic wiring: vectors arrived, none near-duplicate) —
+        // the caller then needs the committed version to advance so the
+        // read side sees the new vectors. Plain pair streams keep the
+        // original commit-nothing behavior.
+        if (commitOnEmpty) b.commit(CommitStore.keysBody(manifest))
+      } else {
+        // changed/new labels only — bounded by the members of touched
+        // components, never the corpus
+        // a committed-but-empty manifest (only empty-delta batches so far)
+        // has no labels table to contract against — fresh CC, like first
+        // commit
+        val delta = (CommitStore.keyedTable(spark, labelsPath, manifest, BucketCol)
+          .map(_.drop(BucketCol)) match {
+          case None =>
+            graft.pipeline.Clustering.connectedComponents(batch, aCol, bCol)
+          case Some(current) =>
+            graft.pipeline.Clustering.incrementalUpdateDelta(
+              current, batch, aCol, bCol)
+        }).withColumn(BucketCol, bucketOf(col("doc_id"), numBuckets))
+          .cache()
+        try {
+          val touched = delta.select(BucketCol).distinct()
+            .collect().map(_.getString(0)).toSet
 
-    val committed = committedVersion(spark, labelsPath)
-    if (committed.exists(batchId <= _)) return // replay of a committed batch
-    val manifest = committed.map(readManifest(fs, root, _)).getOrElse(Map.empty)
-    if (batch.isEmpty) {
-      // a PAIRS batch can be legitimately empty while its source batch was
-      // not (semantic wiring: vectors arrived, none near-duplicate) — the
-      // caller then needs the committed version to advance so the read
-      // side sees the new vectors. Plain pair streams keep the original
-      // commit-nothing behavior.
-      if (commitOnEmpty) writeManifest(fs, root, batchId, manifest)
-      return
-    }
-
-    // changed/new labels only — bounded by the members of touched
-    // components, never the corpus
-    // a committed-but-empty manifest (only empty-delta batches so far)
-    // has no labels table to contract against — fresh CC, like first commit
-    val delta = (manifestTable(spark, labelsPath, manifest, BucketCol)
-      .map(_.drop(BucketCol)) match {
-      case None =>
-        graft.pipeline.Clustering.connectedComponents(batch, aCol, bCol)
-      case Some(current) =>
-        graft.pipeline.Clustering.incrementalUpdateDelta(
-          current, batch, aCol, bCol)
-    }).withColumn(BucketCol, bucketOf(col("doc_id"), numBuckets))
-      .cache()
-    try {
-      val touched = delta.select(BucketCol).distinct()
-        .collect().map(_.getString(0)).toSet
-
-      // pairs that were all self-loops or internal to existing clusters
-      // move no label: the unchanged manifest still commits so the batch id
-      // advances (replay detection stays exact), and no data is written
-      if (touched.nonEmpty) {
-        // previous state of ONLY the touched buckets; changed docs' old
-        // rows are replaced, the bucket's other rows carry over
-        val oldTouched = manifestTable(spark, labelsPath,
-          manifest.view.filterKeys(touched).toMap, BucketCol)
-        val merged = oldTouched match {
-          case None => delta
-          case Some(old) =>
-            old.join(delta.select(col("doc_id")), Seq("doc_id"), "left_anti")
-              .unionByName(delta)
-        }
-        merged.write.mode("overwrite").parquet(s"$labelsPath/data/b=$batchId")
+          // pairs that were all self-loops or internal to existing clusters
+          // move no label: the unchanged manifest still commits so the batch
+          // id advances (replay detection stays exact), and no data is
+          // written
+          if (touched.nonEmpty) {
+            // previous state of ONLY the touched buckets; changed docs' old
+            // rows are replaced, the bucket's other rows carry over
+            val oldTouched = CommitStore.keyedTable(spark, labelsPath,
+              manifest.view.filterKeys(touched).toMap, BucketCol)
+            val merged = oldTouched match {
+              case None => delta
+              case Some(old) =>
+                old.join(delta.select(col("doc_id")), Seq("doc_id"), "left_anti")
+                  .unionByName(delta)
+            }
+            merged.write.mode("overwrite").parquet(b.dir())
+          }
+          b.commitKeys(manifest, touched)
+        } finally delta.unpersist()
       }
-      commitTouched(fs, root, batchId, committed, manifest, touched)
-    } finally delta.unpersist()
+    }
   }
 
   /** The committed cluster labeling: (doc_id, cluster_id). Empty-schema
     * DataFrame before the first commit. */
   def committedClusters(
-      spark: org.apache.spark.sql.SparkSession, labelsPath: String): DataFrame = {
-    val (fs, root) = CommitStore.fsOf(spark, labelsPath)
-    committedVersion(spark, labelsPath)
-      .flatMap(v => manifestTable(spark, labelsPath,
-        readManifest(fs, root, v), BucketCol))
+      spark: org.apache.spark.sql.SparkSession, labelsPath: String): DataFrame =
+    CommitStore.committedKeyed(spark, labelsPath, BucketCol)
       .map(_.drop(BucketCol))
       .getOrElse(spark.emptyDataFrame)
-  }
 
   // ---- streaming semantic (SemDeDup) cluster maintenance -----------------
 
@@ -428,18 +347,11 @@ object TopnStreaming {
       checkpointLocation: Option[String] = None,
       numBuckets: Int = 64,
       tileSize: Int = 10000)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val scope = CommitStore.scopeOf(checkpointLocation)
-    val writer = vectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        semanticBatch(batch, batchId, storePath, idCol, vecCol, model, tau,
-          scope, numBuckets, tileSize)
-        ()
-      }
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    CommitStore.maintain(vectors, checkpointLocation) { (batch, batchId, scope) =>
+      semanticBatch(batch, batchId, storePath, idCol, vecCol, model, tau,
+        scope, numBuckets, tileSize)
+    }
 
   /** One micro-batch of semantic cluster maintenance (exposed for
     * deterministic crash/replay testing; [[maintainSemanticClusters]]
@@ -457,61 +369,61 @@ object TopnStreaming {
       tileSize: Int = 10000): Unit = {
     val spark = batch.sparkSession
     val labelsPath = s"$storePath/labels"
-    if (committedVersion(spark, labelsPath).exists(batchId <= _)) return
-    if (batch.isEmpty) return
+    // the labels store's guard; clusterBatch below re-checks it and commits
+    CommitStore.guard(batch, batchId, labelsPath, scope) { _ =>
+      // 1. record the batch's vectors FIRST (before the labels commit, so a
+      // crash in between replays to an idempotent rewrite of this
+      // directory), PARTITIONED by quantizer cell: the batch×resident pair
+      // scan only needs resident vectors in the batch's cells, and a
+      // `cell=` directory layout turns that restriction into partition
+      // pruning — per-batch read I/O is O(touched cells), never O(corpus)
+      import graft.pipeline.{IVF, SemDedup}
+      val cellOf = (v: org.apache.spark.sql.Column) =>
+        element_at(IVF.cells(v, model, 1), 1)
+      val norm = batch.select(col(idCol).as("doc_id"), col(vecCol).as("vec"))
+      norm.withColumn("cell", cellOf(col("vec")))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$storePath/vectors/b=$batchId")
 
-    // 1. record the batch's vectors FIRST (before the labels commit, so a
-    // crash in between replays to an idempotent rewrite of this
-    // directory), PARTITIONED by quantizer cell: the batch×resident pair
-    // scan only needs resident vectors in the batch's cells, and a
-    // `cell=` directory layout turns that restriction into partition
-    // pruning — per-batch read I/O is O(touched cells), never O(corpus)
-    import graft.pipeline.{IVF, SemDedup}
-    val cellOf = (v: org.apache.spark.sql.Column) =>
-      element_at(IVF.cells(v, model, 1), 1)
-    val norm = batch.select(col(idCol).as("doc_id"), col(vecCol).as("vec"))
-    norm.withColumn("cell", cellOf(col("vec")))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$storePath/vectors/b=$batchId")
+      // 2. new edges: pairs within the batch plus batch×resident pairs in
+      // shared cells. The touched-cell list is at most the model's k cells
+      // — bounded driver data driving the partition filter.
+      val newIds = norm.select(col("doc_id").as("__new_id"))
+      val scanSet = residentVectors(spark, storePath, batchId) match {
+        case None => norm
+        case Some(res) =>
+          val touched = norm.select(cellOf(col("vec")).as("cell")).distinct()
+            .collect().map(_.getInt(0)).toSeq
+          res.filter(col("cell").isin(touched: _*)).drop("cell")
+            .unionByName(norm)
+      }
+      // resident×resident pairs in touched cells were already committed by
+      // earlier batches — keep only pairs involving a NEW vector.
+      // LadderOptOut is the streaming exemption from the verify-join
+      // ladder (the incrementalMinhashPairs doctrine): the scan set is
+      // batch + touched-cell residents — bounded by construction, and
+      // counting it would re-execute the whole union on EVERY micro-batch.
+      // The opt-out is EXPLICIT (no estimate reaches the ladder, so no
+      // hint can ship under ANY broadcast-threshold setting — the r19
+      // ADVICE: the previous knownCount = 0 spelling hinted shuffle_hash
+      // whenever broadcast was disabled); Spark's own size estimate of the
+      // in-memory batch plan decides (broadcast when small, shuffled-hash
+      // via the recommended preferSortMergeJoin=false deployment conf
+      // otherwise).
+      val tagged = SemDedup.edges(scanSet, "doc_id", "vec", model, tau, tileSize,
+        knownCount = SemDedup.LadderOptOut)
+      val involvingNew = tagged
+        .join(newIds, tagged("id_a") === col("__new_id"), "left_semi")
+        .unionByName(tagged.join(newIds, tagged("id_b") === col("__new_id"), "left_semi"))
+        .distinct()
+        .cache()
 
-    // 2. new edges: pairs within the batch plus batch×resident pairs in
-    // shared cells. The touched-cell list is at most the model's k cells
-    // — bounded driver data driving the partition filter.
-    val newIds = norm.select(col("doc_id").as("__new_id"))
-    val scanSet = residentVectors(spark, storePath, batchId) match {
-      case None => norm
-      case Some(res) =>
-        val touched = norm.select(cellOf(col("vec")).as("cell")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        res.filter(col("cell").isin(touched: _*)).drop("cell")
-          .unionByName(norm)
+      // 3. fold into the committed labeling (bucketed commit protocol);
+      // commitOnEmpty so a no-near-dup batch still publishes its vectors
+      try clusterBatch(involvingNew, batchId, labelsPath, "id_a", "id_b",
+        scope, numBuckets, commitOnEmpty = true)
+      finally involvingNew.unpersist()
     }
-    // resident×resident pairs in touched cells were already committed by
-    // earlier batches — keep only pairs involving a NEW vector.
-    // LadderOptOut is the streaming exemption from the verify-join
-    // ladder (the incrementalMinhashPairs doctrine): the scan set is
-    // batch + touched-cell residents — bounded by construction, and
-    // counting it would re-execute the whole union on EVERY micro-batch.
-    // The opt-out is EXPLICIT (no estimate reaches the ladder, so no
-    // hint can ship under ANY broadcast-threshold setting — the r19
-    // ADVICE: the previous knownCount = 0 spelling hinted shuffle_hash
-    // whenever broadcast was disabled); Spark's own size estimate of the
-    // in-memory batch plan decides (broadcast when small, shuffled-hash
-    // via the recommended preferSortMergeJoin=false deployment conf
-    // otherwise).
-    val tagged = SemDedup.edges(scanSet, "doc_id", "vec", model, tau, tileSize,
-      knownCount = SemDedup.LadderOptOut)
-    val involvingNew = tagged
-      .join(newIds, tagged("id_a") === col("__new_id"), "left_semi")
-      .unionByName(tagged.join(newIds, tagged("id_b") === col("__new_id"), "left_semi"))
-      .distinct()
-      .cache()
-
-    // 3. fold into the committed labeling (bucketed commit protocol);
-    // commitOnEmpty so a no-near-dup batch still publishes its vectors
-    try clusterBatch(involvingNew, batchId, labelsPath, "id_a", "id_b",
-      scope, numBuckets, commitOnEmpty = true)
-    finally involvingNew.unpersist()
   }
 
   /** Union of vector snapshots from batches BEFORE `beforeBatch` (the

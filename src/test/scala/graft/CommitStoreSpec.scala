@@ -2,7 +2,7 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import graft.streaming.{CommitStore, TopnStreaming}
+import graft.streaming.{CommitStore, StreamWatermark, TopnStreaming}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -12,8 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * The streaming stores' commit primitives, on the local filesystem: the
- * atomic publish, the write-once stamp, the manifest listing and the
- * footer-schema reads. A rename that refuses an existing destination
+ * atomic publish, the write-once stamp, the manifest listing, the batch
+ * guard, the keyed manifest and the footer-schema reads. A rename that refuses an existing destination
  * (HDFS semantics; the local filesystem replaces it instead) is modelled
  * by a filter filesystem.
  */
@@ -155,17 +155,129 @@ class CommitStoreSpec extends AnyFunSuite {
 
     // a chain store: batch directories written one by one
     val dirs = (0 until 3).map { b =>
-      val dir = s"$root/chain/data/b=$b/pairs"
+      val dir = CommitStore.dataDir(s"$root/chain", b, "pairs")
       CommitStore.writeBatchDir(
         Seq((b, b * 10L, s"k$b"), (b + 1, b * 10L + 1, "x")).toDF("key", "n", "tag"), 1, dir)
       dir
     }
-    val (chain, chainJobs) = jobsDuring(CommitStore.readChain(spark, dirs))
+    val (chain, chainJobs) = jobsDuring(
+      CommitStore.readChain(spark, s"$root/chain", (0L until 3L), "pairs"))
     assert(chainJobs === 0)
     val inferred = spark.read.parquet(dirs: _*)
     assert(chain.schema === inferred.schema)
     assert(chain.as[(Int, Long, String)].collect().sorted ===
       inferred.as[(Int, Long, String)].collect().sorted)
     assert(chain.count() === 6)
+
+    // a watermark store: the pending snapshot and the high-water mark
+    val wm = s"$root/wm"
+    val pending = Seq((7L, "view", 500L), (8L, "click", 900L)).toDF("user_id", "step", "tu")
+    CommitStore.guard(pending, 0L, wm, "jobs-scope") { b =>
+      StreamWatermark.write(spark, wm, b.id, pending, 1234L)
+      b.commit()
+    }
+    val (buffered, pendingJobs) = jobsDuring(StreamWatermark.committedPending(spark, wm).get)
+    assert(pendingJobs === 0)
+    assert(buffered.schema === spark.read.parquet(s"$wm/data/b=0/pending").schema)
+    assert(buffered.as[(Long, String, Long)].collect().sorted ===
+      Array((7L, "view", 500L), (8L, "click", 900L)))
+    val (hwm, hwmJobs) = jobsDuring(StreamWatermark.committedHwm(spark, wm))
+    assert(hwmJobs === 0)
+    assert(hwm === Some(1234L))
+  }
+
+  private def files(root: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val base = java.nio.file.Paths.get(root)
+    java.nio.file.Files.walk(base).iterator().asScala.toSeq
+      .map(p => base.relativize(p).toString).sorted
+  }
+
+  test("the batch guard: scope, then the pin, then the replay rule, then the body") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val store = tmpRoot("graft_cs_guard").toString
+    val one = Seq(1).toDF("x")
+    val pin = CommitStore.Pin("p=1", (stored, given) => s"pinned '$stored', given '$given'")
+    var ran = 0
+    def run(id: Long, scope: String = "s", p: CommitStore.Pin = pin)(
+        body: CommitStore.Batch => Unit = _ => ()): Unit =
+      CommitStore.guard(one, id, store, scope, Some(p)) { b => ran += 1; body(b) }
+
+    // the body's data directory exists before its manifest does
+    run(0) { b =>
+      assert(b.committed === None)
+      CommitStore.writeBatchDir(one, 1, b.dir("leaf"))
+      assert(local.exists(new Path(s"$store/data/b=0/leaf")))
+      assert(CommitStore.committedVersion(spark, store) === None,
+        "the manifest must not exist before the body commits")
+      b.commit()
+    }
+    assert(ran === 1)
+    assert(CommitStore.committedVersion(spark, store) === Some(0L))
+    assert(CommitStore.readManifest(local, new Path(store), 0L) === "b=0")
+    val committed = files(store)
+
+    // a replayed batch id runs no body and writes no file
+    run(0)()
+    assert(ran === 1)
+    assert(files(store) === committed)
+
+    // a scope mismatch throws before the body runs, on a replay too
+    for (id <- Seq(0L, 1L)) {
+      val e = intercept[IllegalStateException](run(id, scope = "other")())
+      assert(e.getMessage.startsWith(s"store at "), e.getMessage)
+      assert(e.getMessage.contains("different streaming checkpoint"))
+    }
+    // a params mismatch throws with the caller's text, on a replay too,
+    // and only after the scope check
+    for (id <- Seq(0L, 1L)) {
+      val e = intercept[IllegalStateException](run(id, p = pin.copy(value = "p=2"))())
+      assert(e.getMessage === "pinned 'p=1', given 'p=2'")
+    }
+    val both = intercept[IllegalStateException](
+      run(1L, scope = "other", p = pin.copy(value = "p=2"))())
+    assert(both.getMessage.contains("different streaming checkpoint"))
+    assert(ran === 1)
+    assert(files(store) === committed)
+
+    // an empty batch commits nothing unless the maintainer takes it itself
+    CommitStore.guard(one.limit(0), 1L, store, "s", Some(pin)) { _ => ran += 1 }
+    assert(ran === 1)
+    CommitStore.guard(one.limit(0), 1L, store, "s", Some(pin), skipEmpty = false) { b =>
+      assert(b.committed === Some(0L))
+      ran += 1
+    }
+    assert(ran === 2)
+  }
+
+  test("keyed manifest: url-encoded sorted lines, and the GC keeps what the previous manifest names") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val body = CommitStore.keysBody(Map("x y" -> 1L, "a\tb" -> 2L))
+    assert(body === "2\ta%09b\n1\tx+y")
+
+    val store = tmpRoot("graft_cs_keyed").toString
+    val root = new Path(store)
+    val one = Seq(1).toDF("x")
+    def commit(id: Long, touched: String*): Unit =
+      CommitStore.guard(one, id, store, "s", skipEmpty = false) { b =>
+        CommitStore.writeBatchDir(one, 1, b.dir())
+        b.commitKeys(b.keys, touched.toSet)
+      }
+    def dirs(): Seq[String] = names(local, new Path(store, "data")).filter(_.startsWith("b="))
+    def manifests(): Seq[String] = names(local, new Path(store, "_manifests"))
+      .filter(_.startsWith("m="))
+    commit(0, "k1", "k2")
+    assert(CommitStore.readManifest(local, root, 0L) === "0\tk1\n0\tk2")
+    commit(1, "k1")
+    commit(2, "k2")
+    // b=0 still named by the previous manifest (k2 -> 0); m=0 dropped
+    assert(CommitStore.readKeys(local, root, 2L) === Map("k1" -> 1L, "k2" -> 2L))
+    assert(dirs() === Seq("b=0", "b=1", "b=2"))
+    assert(manifests() === Seq("m=1", "m=2"))
+    commit(3, "k1", "k2")
+    assert(dirs() === Seq("b=1", "b=2", "b=3"))
+    assert(manifests() === Seq("m=2", "m=3"))
   }
 }
