@@ -3,7 +3,8 @@ package graft
 import graft.expressions._
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Inline}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.graftshim.GraftShim
 
 /**
@@ -53,48 +54,73 @@ object TopnFunctions {
       b(exprs)
     }
 
+  /** A topn function's one construction site: the argument expressions
+    * and the counter budget in, the Catalyst expression out. The SQL
+    * catalog passes the session conf when the query is analyzed; the
+    * DataFrame methods below pass their `numCounters`. */
+  private type Build[E] = (Seq[Expression], Int) => E
+
+  private val addAgg: Build[TopnAddAgg] = (e, n) => TopnAddAgg(e.head, n)
+  private val addWeightedAgg: Build[TopnAddWeightedAgg] =
+    (e, n) => TopnAddWeightedAgg(e(0), e(1), n)
+  private val unionAgg: Build[TopnUnionAgg] = (e, n) => TopnUnionAgg(e.head, n)
+  private val addAggBounds: Build[TopnAddAggBounds] = (e, n) => TopnAddAggBounds(e.head, n)
+  private val unionAggBounds: Build[TopnUnionAggBounds] = (e, n) => TopnUnionAggBounds(e.head, n)
+  private val query: Build[TopnQuery] = (e, n) => TopnQuery(e(0), e(1), n)
+  private val addScalar: Build[TopnAddScalar] = (e, n) => TopnAddScalar(e(0), e(1), n)
+  private val unionScalar: Build[TopnUnionScalar] = (e, n) => TopnUnionScalar(e(0), e(1), n)
+  private val withBounds: Build[TopnWithBounds] = (e, n) => TopnWithBounds(e(0), e(1), n)
+  /** The one topn function without a counter budget. */
+  private val toJson: Seq[Expression] => TopnToJson = e => TopnToJson(e.head)
+
+  /** A catalog entry for a budgeted topn function of fixed arity. */
+  private def sketchFn(name: String, usage: String, args: Int, build: Build[Expression]) =
+    (name, usage, arity(name, args, args)(exprs => build(exprs, GraftConf.numberOfCounters)))
+
   /** One catalog drives BOTH registration paths (session-level
     * [[register]] and the cluster-wide [[GraftExtensions]] injection), so
     * the two SQL surfaces cannot drift apart. */
   private[graft] val catalog: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    ("topn_add_agg",
+    sketchFn("topn_add_agg",
       "topn_add_agg(expr) - builds a topn sketch (map<string,bigint>) of the most frequent values of expr",
-      arity("topn_add_agg", 1, 1)(exprs => TopnAddAgg(exprs.head, GraftConf.numberOfCounters))),
-    ("topn_union_agg",
+      1, addAgg),
+    sketchFn("topn_union_agg",
       "topn_union_agg(sketch) - merges a column of topn sketches into one sketch",
-      arity("topn_union_agg", 1, 1)(exprs => TopnUnionAgg(exprs.head, GraftConf.numberOfCounters))),
-    ("topn",
+      1, unionAgg),
+    sketchFn("topn",
       "topn(sketch, k) - top k entries of the sketch as array<struct<item,frequency>>",
-      arity("topn", 2, 2)(exprs => TopnQuery(exprs(0), exprs(1), GraftConf.numberOfCounters))),
-    ("topn_add",
+      2, query),
+    sketchFn("topn_add",
       "topn_add(sketch, item) - adds one occurrence of item to a materialized sketch",
-      arity("topn_add", 2, 2)(exprs => TopnAddScalar(exprs(0), exprs(1), GraftConf.numberOfCounters))),
-    ("topn_union",
+      2, addScalar),
+    sketchFn("topn_union",
       "topn_union(a, b) - merges two materialized sketches",
-      arity("topn_union", 2, 2)(exprs => TopnUnionScalar(exprs(0), exprs(1), GraftConf.numberOfCounters))),
+      2, unionScalar),
     ("topn_to_json",
       "topn_to_json(sketch) - sketch as JSON text with PostgreSQL-canonical key order",
-      arity("topn_to_json", 1, 1)(exprs => TopnToJson(exprs.head))),
-    ("topn_add_weighted_agg",
+      arity("topn_to_json", 1, 1)(toJson)),
+    sketchFn("topn_add_weighted_agg",
       "topn_add_weighted_agg(item, weight) - builds a sketch counting each item `weight` times",
-      arity("topn_add_weighted_agg", 2, 2)(exprs => TopnAddWeightedAgg(exprs(0), exprs(1), GraftConf.numberOfCounters))),
+      2, addWeightedAgg),
     ("topn_delta",
       "topn_delta(a, b, k) - top-k items by absolute frequency movement between two sketches",
       arity("topn_delta", 3, 3)(exprs => GraftShim.analyzableExpression(
         topn_delta(GraftShim.column(exprs(0)), GraftShim.column(exprs(1)),
           litNum(exprs(2), "topn_delta", "k").toInt)))),
-    ("topn_rows",
+    // the set-returning report: `topn`'s array flattened by Spark's own
+    // (codegen'd) `inline` generator
+    sketchFn("topn_rows",
       "topn_rows(sketch, k) - set-returning topn for LATERAL VIEW: rows of (item, frequency)",
-      arity("topn_rows", 2, 2)(exprs => TopnRows(exprs(0), exprs(1), GraftConf.numberOfCounters))),
-    ("topn_add_agg_bounds",
+      2, (e, n) => Inline(query(e, n))),
+    sketchFn("topn_add_agg_bounds",
       "topn_add_agg_bounds(expr) - topn_add_agg carrying a guaranteed count-interval bound: struct<entries, loss_bound>",
-      arity("topn_add_agg_bounds", 1, 1)(exprs => TopnAddAggBounds(exprs.head, GraftConf.numberOfCounters))),
-    ("topn_union_agg_bounds",
+      1, addAggBounds),
+    sketchFn("topn_union_agg_bounds",
       "topn_union_agg_bounds(bsketch) - merges bounded sketches, folding each input's loss_bound into the union's",
-      arity("topn_union_agg_bounds", 1, 1)(exprs => TopnUnionAggBounds(exprs.head, GraftConf.numberOfCounters))),
-    ("topn_with_bounds",
+      1, unionAggBounds),
+    sketchFn("topn_with_bounds",
       "topn_with_bounds(bsketch, k) - top k entries with their guaranteed interval: array<struct<item, frequency, max_error>>",
-      arity("topn_with_bounds", 2, 2)(exprs => TopnWithBounds(exprs(0), exprs(1), GraftConf.numberOfCounters))),
+      2, withBounds),
     // ---- pipeline expressions on the SQL surface -------------------------
     ("cosine_sim",
       "cosine_sim(a, b) - cosine similarity of two float/double vectors (deterministic sequential accumulation)",
@@ -219,66 +245,43 @@ object TopnFunctions {
   }
 
   // ---- DataFrame API ----------------------------------------------------
-  // Conf is resolved when the Column is constructed (driver side).
+  // The catalog's builders, with the budget resolved when the Column is
+  // constructed (driver side): `numCounters` defaults to the session conf,
+  // read on each call.
 
-  def topn_add_agg(item: Column): Column =
-    topn_add_agg(item, GraftConf.numberOfCounters)
+  private def scalar(build: Build[Expression], args: Column*): Column =
+    GraftShim.column(build(args.map(GraftShim.expression), GraftConf.numberOfCounters))
 
-  def topn_add_agg(item: Column, numCounters: Int): Column =
-    GraftShim.column(
-      TopnAddAgg(GraftShim.expression(item), numCounters).toAggregateExpression())
+  private def aggregate(build: Build[AggregateFunction], numCounters: Int, args: Column*): Column =
+    GraftShim.column(build(args.map(GraftShim.expression), numCounters).toAggregateExpression())
 
-  def topn_add_weighted_agg(item: Column, weight: Column, numCounters: Int): Column =
-    GraftShim.column(TopnAddWeightedAgg(
-      GraftShim.expression(item), GraftShim.expression(weight),
-      numCounters).toAggregateExpression())
+  def topn_add_agg(item: Column, numCounters: Int = GraftConf.numberOfCounters): Column =
+    aggregate(addAgg, numCounters, item)
 
-  def topn_add_weighted_agg(item: Column, weight: Column): Column =
-    topn_add_weighted_agg(item, weight, GraftConf.numberOfCounters)
+  def topn_add_weighted_agg(
+      item: Column, weight: Column, numCounters: Int = GraftConf.numberOfCounters): Column =
+    aggregate(addWeightedAgg, numCounters, item, weight)
 
-  def topn_union_agg(sketch: Column): Column =
-    topn_union_agg(sketch, GraftConf.numberOfCounters)
+  def topn_union_agg(sketch: Column, numCounters: Int = GraftConf.numberOfCounters): Column =
+    aggregate(unionAgg, numCounters, sketch)
 
-  def topn_union_agg(sketch: Column, numCounters: Int): Column =
-    GraftShim.column(
-      TopnUnionAgg(GraftShim.expression(sketch), numCounters).toAggregateExpression())
+  def topn(sketch: Column, k: Column): Column = scalar(query, sketch, k)
 
-  def topn(sketch: Column, k: Column): Column =
-    GraftShim.column(TopnQuery(
-      GraftShim.expression(sketch), GraftShim.expression(k),
-      GraftConf.numberOfCounters))
+  def topn_add(sketch: Column, item: Column): Column = scalar(addScalar, sketch, item)
 
-  def topn_add(sketch: Column, item: Column): Column =
-    GraftShim.column(TopnAddScalar(
-      GraftShim.expression(sketch), GraftShim.expression(item),
-      GraftConf.numberOfCounters))
-
-  def topn_union(a: Column, b: Column): Column =
-    GraftShim.column(TopnUnionScalar(
-      GraftShim.expression(a), GraftShim.expression(b),
-      GraftConf.numberOfCounters))
+  def topn_union(a: Column, b: Column): Column = scalar(unionScalar, a, b)
 
   def topn_to_json(sketch: Column): Column =
-    GraftShim.column(TopnToJson(GraftShim.expression(sketch)))
+    GraftShim.column(toJson(Seq(GraftShim.expression(sketch))))
 
-  def topn_add_agg_bounds(item: Column): Column =
-    topn_add_agg_bounds(item, GraftConf.numberOfCounters)
+  def topn_add_agg_bounds(item: Column, numCounters: Int = GraftConf.numberOfCounters): Column =
+    aggregate(addAggBounds, numCounters, item)
 
-  def topn_add_agg_bounds(item: Column, numCounters: Int): Column =
-    GraftShim.column(
-      TopnAddAggBounds(GraftShim.expression(item), numCounters).toAggregateExpression())
+  def topn_union_agg_bounds(
+      bsketch: Column, numCounters: Int = GraftConf.numberOfCounters): Column =
+    aggregate(unionAggBounds, numCounters, bsketch)
 
-  def topn_union_agg_bounds(bsketch: Column): Column =
-    topn_union_agg_bounds(bsketch, GraftConf.numberOfCounters)
-
-  def topn_union_agg_bounds(bsketch: Column, numCounters: Int): Column =
-    GraftShim.column(
-      TopnUnionAggBounds(GraftShim.expression(bsketch), numCounters).toAggregateExpression())
-
-  def topn_with_bounds(bsketch: Column, k: Column): Column =
-    GraftShim.column(TopnWithBounds(
-      GraftShim.expression(bsketch), GraftShim.expression(k),
-      GraftConf.numberOfCounters))
+  def topn_with_bounds(bsketch: Column, k: Column): Column = scalar(withBounds, bsketch, k)
 
   /**
    * Heavy-change detection between two sketches — "what moved between
@@ -289,8 +292,10 @@ object TopnFunctions {
    * absent from one side counts 0 there, so arrivals and departures rank
    * by their full frequency. STRICT like the other scalars: NULL if
    * either sketch is NULL. Exact when the sketches are exact at their
-   * counter budget; under eviction it inherits the sketches' usual
-   * SpaceSaving overestimate semantics.
+   * counter budget. Under eviction each side only undercounts
+   * (reported <= true <= reported + that sketch's
+   * [[graft.core.TopnState.lossBound]]), so the true movement lies in
+   * `[delta - loss_a, delta + loss_b]`.
    *
    * A pure Column composition over the map type (codegen'd built-ins:
    * map_keys/element_at/array_sort), so it runs anywhere a projection

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.Window
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.expressions.{TopnAddAgg, TopnAddWeightedAgg, TopnUnionAgg}
+import graft.expressions.TopnAggregateBase
 
 /**
  * Guardrail for the single-partition window cliff: a Topn aggregate over
@@ -21,8 +21,8 @@ import graft.expressions.{TopnAddAgg, TopnAddWeightedAgg, TopnUnionAgg}
  * naive user writes. This listener (installed by
  * [[TopnFunctions.register]]) detects the pattern in executed plans and
  * logs a one-time WARN pointing at the scale path,
- * [[graft.operators.Rollups.slidingUnion]] — same semantics, rank-range
- * join, no single-partition sort.
+ * [[graft.operators.Rollups.slidingMerge]] — same semantics; its only
+ * single-partition step ranks the distinct periods.
  *
  * A WARN rather than an AnalysisException: the spelling is CORRECT (and
  * the right tier for small aggregated inputs like daily rollups); only
@@ -62,10 +62,7 @@ object TopnWindowGuard {
       qe.analyzed.exists {
         case w: Window if w.partitionSpec.isEmpty =>
           w.windowExpressions.exists(_.exists {
-            case ae: AggregateExpression => ae.aggregateFunction match {
-              case _: TopnAddAgg | _: TopnAddWeightedAgg | _: TopnUnionAgg => true
-              case _ => false
-            }
+            case ae: AggregateExpression => ae.aggregateFunction.isInstanceOf[TopnAggregateBase]
             case _ => false
           })
         case _ => false
@@ -77,8 +74,9 @@ object TopnWindowGuard {
           "funnels through a single task, which is fine for small " +
           "pre-aggregated inputs (e.g. daily rollups) but does not scale to " +
           "raw data. For the same sliding-frame semantics without the " +
-          "single-partition sort, use graft.operators.Rollups.slidingUnion " +
-          "(rank-range join, hash-partitioned). This warning fires once per JVM.")
+          "single-partition sort, use graft.operators.Rollups.slidingMerge " +
+          "(only the distinct periods are ranked in one task). This warning " +
+          "fires once per JVM.")
     }
   }
 }

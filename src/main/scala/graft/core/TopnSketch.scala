@@ -328,17 +328,6 @@ final class TopnState private (initialCapacity: Int) extends Serializable {
     sortedEntries()
   }
 
-  /** Top `k` entries in canonical order. Errors if k > numCounters,
-    * mirroring topn.c:229-233. */
-  def topK(k: Int, numCounters: Int): Array[(String, Long)] = {
-    if (k > numCounters) {
-      // wording mirrors the reference, topn.c:231-232
-      throw graft.GraftErrors.kExceedsCounters(k, numCounters)
-    }
-    sortedEntries().take(math.min(k, used))
-      .map(e => (e._1.toString, e._2.longValue))
-  }
-
   /**
    * Compact wire format for partial-aggregate shipping:
    * varint entryCount, then per entry: varint keyByteLen, key UTF-8 bytes,

@@ -464,14 +464,15 @@ object TopnStreaming {
     val vecs = committed
       .flatMap(v => residentVectors(spark, storePath, v + 1))
       .getOrElse(return spark.emptyDataFrame)
-    val labels = committedClusters(spark, s"$storePath/labels")
-      .withColumnRenamed("cluster_id", "__graft_cc_id")
-    vecs
-      .select(col("doc_id"), col("cell").cast("int").as("cell"))
-      .join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("cell"),
-        coalesce(col("__graft_cc_id"), col("doc_id")).as("cluster_id"))
-      .withColumn("keep", col("doc_id") === col("cluster_id"))
+    val cells = vecs.select(col("doc_id"), col("cell").cast("int").as("cell"))
+    // vectors without a committed label (all of them until a commit finds a
+    // near-duplicate pair) are singleton clusters
+    val labeled = CommitStore.committedKeyed(spark, s"$storePath/labels", BucketCol)
+      .fold(cells.withColumn("cluster_id", col("doc_id"))) { labels =>
+        cells.join(labels.drop(BucketCol), Seq("doc_id"), "left")
+          .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
+      }
+    labeled.withColumn("keep", col("doc_id") === col("cluster_id"))
   }
 
   case class KeyedItem(key: String, item: String)
@@ -711,8 +712,8 @@ object TopnStreaming {
             if (r.item != null) st.add(r.item, numCounters)
           }
           state.update(st.serialize())
-          st.topK(math.min(k, numCounters), numCounters).iterator
-            .map { case (item, freq) => TopEntry(key, item, freq) }
+          st.sortedEntries().take(math.min(k, numCounters)).iterator
+            .map { case (item, freq) => TopEntry(key, item.toString, freq.longValue) }
       }
   }
 }

@@ -948,6 +948,30 @@ class StreamingSpec extends AnyFunSuite {
     assert(cellDirs.nonEmpty, "vector snapshots must be cell-partitioned")
   }
 
+  test("committed semantic labels before any near-duplicate pair: every vector a singleton") {
+    import graft.pipeline.{IVF, SemDedup}
+    val r = new scala.util.Random(5)
+    val vecs = (0L until 40L).map(i => (i, Array.fill(16)(r.nextGaussian().toFloat)))
+    val df = vecs.toDF("vec_id", "embedding")
+    val model = IVF.train(df, "vec_id", "embedding", k = 4, sampleSize = 40)
+    val root = java.nio.file.Files.createTempDirectory("graft_sem_single")
+    try {
+      val store = s"$root/s"
+      (0 until 2).foreach { i =>
+        TopnStreaming.semanticBatch(vecs.filter(_._1 % 2 == i).toDF("vec_id", "embedding"),
+          i, store, "vec_id", "embedding", model, tau = 0.99, scope = "sem-single")
+      }
+      assert(TopnStreaming.committedClusters(spark, s"$store/labels").columns.isEmpty,
+        "premise: no committed batch found a near-duplicate pair")
+      val got = TopnStreaming.committedSemanticLabels(spark, store, model)
+        .as[(Long, Int, Long, Boolean)].collect()
+      assert(got.length === vecs.length)
+      assert(got.forall { case (id, _, cluster, keep) => cluster == id && keep })
+      assert(got.toSet === SemDedup.labels(df, "vec_id", "embedding", model, tau = 0.99)
+        .as[(Long, Int, Long, Boolean)].collect().toSet)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+  }
+
   test("streaming WARC ingest: parse + canonical-URL dedup + frozen quality gate = batch twin") {
     import graft.pipeline.{Classifier, Dsir, TextAnalysis, Urls, Warc}
     // a frozen model: +0.1 bias admits everything EXCEPT docs carrying the

@@ -310,6 +310,15 @@ class TopnFunctionsSpec extends AnyFunSuite {
     // one-time: re-armed only by reset()
     TopnWindowGuard.reset()
     assert(!TopnWindowGuard.hasFired)
+
+    // the bounded aggregates funnel through the same single task
+    Seq(("d1", "a"), ("d2", "b")).toDF("day", "item")
+      .groupBy($"day").agg(TopnFunctions.topn_add_agg_bounds($"item", 100).as("bs"))
+      .withColumn("m", TopnFunctions.topn_union_agg_bounds($"bs", 100).over(w)).collect()
+    drain()
+    assert(TopnWindowGuard.hasFired,
+      "an unpartitioned bounded Topn window must fire the guardrail")
+    TopnWindowGuard.reset()
   }
 
   test("results stable under repartition when distinct <= 3*n") {
@@ -404,5 +413,125 @@ class TopnFunctionsSpec extends AnyFunSuite {
     // k validation (plan-time literal)
     intercept[Exception](
       spark.sql("SELECT topn_delta(map('a',1L), map('a',1L), 0)").collect())
+  }
+
+  // ---- one construction site per function ------------------------------
+
+  test("topn_rows is inline(topn(...)): edge cases, OUTER, k > n, codegen on/off, extension path") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.execution.{GenerateExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.graftshim.GraftShim
+    Seq((1, Map("a" -> 3L, "b" -> 1L, "c" -> 3L)), (2, Map("d" -> 2L)))
+      .toDF("g", "s").createOrReplaceTempView("rows_input")
+    val nullSketch = "CAST(NULL AS MAP<STRING,BIGINT>)"
+    val top3 = Seq((1, "a", 3L), (1, "c", 3L), (1, "b", 1L), (2, "d", 2L))
+    val cases = Seq(("s", "3") -> top3, ("s", "1") -> Seq((1, "a", 3L), (2, "d", 2L)),
+      (nullSketch, "3") -> Nil, ("s", "CAST(NULL AS INT)") -> Nil, ("s", "0") -> Nil,
+      ("s", "-1") -> Nil, ("MAP()", "3") -> Nil)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Int, String, java.lang.Long)] =
+      df.collect().toSeq.map(r => (r.getInt(0), r.getString(1), r.getAs[java.lang.Long](2)))
+        .sortBy(r => (r._1, -Option(r._3).fold(0L)(_.longValue), r._2))
+    def lateral(outer: String, gen: String) = spark.sql(
+      s"SELECT g, t.item, t.frequency FROM rows_input LATERAL VIEW $outer $gen t AS item, frequency")
+    val ws = "spark.sql.codegen.wholeStage"
+    try {
+      for (codegen <- Seq("true", "false")) {
+        spark.conf.set(ws, codegen)
+        for (((sk, k), want) <- cases; outer <- Seq("", "OUTER")) {
+          val got = lateral(outer, s"topn_rows($sk, $k)")
+          val spelled = lateral(outer, s"inline(topn($sk, $k))")
+          val empty = Seq(1, 2).filterNot(g => want.exists(_._1 == g))
+            .map(g => (g, null: String, null: java.lang.Long))
+          val expected = want.map(r => (r._1, r._2, java.lang.Long.valueOf(r._3))) ++
+            (if (outer.nonEmpty) empty else Nil)
+          val ctx = s"codegen=$codegen $outer topn_rows($sk, $k)"
+          assert(got.schema === spelled.schema, ctx)
+          assert(rows(got) === rows(spelled), ctx)
+          assert(rows(got) === expected.sortBy(r => (r._1, -Option(r._3).fold(0L)(_.longValue), r._2)), ctx)
+        }
+        // select-list call
+        val sel = spark.sql("SELECT g, topn_rows(s, 3) FROM rows_input")
+        assert(sel.schema.fieldNames.toSeq === Seq("g", "item", "frequency"))
+        assert(rows(sel) === rows(spark.sql("SELECT g, inline(topn(s, 3)) FROM rows_input")))
+        // k above the budget: the report kernel's error, same class either way
+        for (gen <- Seq("topn_rows(s, 1001)", "inline(topn(s, 1001))")) {
+          val ex = intercept[Exception](lateral("", gen).collect())
+          val conditions = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+            .collect { case t: org.apache.spark.SparkThrowable => t.getCondition }.toSeq
+          assert(conditions.contains("GRAFT_K_EXCEEDS_COUNTERS"), s"$gen: $conditions")
+        }
+        // the generate now runs inside a whole-stage-codegen stage
+        val df = lateral("", "topn_rows(s, 3)")
+        df.collect()
+        val helper = new AdaptiveSparkPlanHelper {}
+        val inStage = helper.collect(df.queryExecution.executedPlan) {
+          case w: WholeStageCodegenExec => w.child.exists(_.isInstanceOf[GenerateExec])
+        }
+        assert(inStage.contains(true) === (codegen == "true"), df.queryExecution.executedPlan)
+      }
+    } finally spark.conf.unset(ws)
+
+    // the cluster-wide path builds the same generator from the same catalog
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val injected = GraftShim.applyInjectedFunctions(ext, GraftShim.builtinRegistryClone())
+      .lookupFunction(FunctionIdentifier("topn_rows"),
+        Seq(GraftShim.expression($"s"), GraftShim.expression(lit(3))))
+    assert(injected.prettyName === "inline")
+    val viaExt = spark.table("rows_input").select($"g", GraftShim.column(injected))
+    assert(rows(viaExt) === top3.map(r => (r._1, r._2, java.lang.Long.valueOf(r._3))))
+  }
+
+  test("DataFrame methods and SQL spellings build the same expression with the same budget") {
+    import TopnFunctions._
+    import org.apache.spark.sql.Column
+    val items = (1 to 30).flatMap(i => Seq.fill(i)(s"k$i")).toDF("item").coalesce(1)
+      .withColumn("w", length($"item").cast("bigint"))
+      .withColumn("a", typedLit((1 to 10).map(i => s"x$i" -> i.toLong).toMap))
+      .withColumn("b", typedLit((5 to 14).map(i => s"x$i" -> (2 * i).toLong).toMap))
+      .withColumn("bs", struct($"a".as("entries"), lit(2L).as("loss_bound")))
+    // the topn expressions of a plan, with their counter budgets
+    def built(df: org.apache.spark.sql.DataFrame): Seq[(String, Option[Int])] =
+      df.queryExecution.analyzed.expressions.flatMap(_.collect {
+        case e: Product if e.getClass.getPackage.getName == "graft.expressions" =>
+          (e.getClass.getSimpleName, e.productElementNames.zip(e.productIterator)
+            .collectFirst { case ("numCounters", n: Int) => n })
+      })
+    // (SQL spelling, DataFrame spelling given an optional explicit budget, aggregate?)
+    val fns: Seq[(String, Option[Int] => Column, Boolean)] = Seq(
+      ("topn_add_agg(item)", _.fold(topn_add_agg($"item"))(topn_add_agg($"item", _)), true),
+      ("topn_add_weighted_agg(item, w)",
+        _.fold(topn_add_weighted_agg($"item", $"w"))(topn_add_weighted_agg($"item", $"w", _)), true),
+      ("topn_union_agg(a)", _.fold(topn_union_agg($"a"))(topn_union_agg($"a", _)), true),
+      ("topn_add_agg_bounds(item)",
+        _.fold(topn_add_agg_bounds($"item"))(topn_add_agg_bounds($"item", _)), true),
+      ("topn_union_agg_bounds(bs)",
+        _.fold(topn_union_agg_bounds($"bs"))(topn_union_agg_bounds($"bs", _)), true),
+      ("topn(a, 5)", _ => topn($"a", lit(5)), false),
+      ("topn_add(a, item)", _ => topn_add($"a", $"item"), false),
+      ("topn_union(a, b)", _ => topn_union($"a", $"b"), false),
+      ("topn_to_json(a)", _ => topn_to_json($"a"), false),
+      ("topn_with_bounds(bs, 5)", _ => topn_with_bounds($"bs", lit(5)), false),
+      ("topn_delta(a, b, 4)", _ => topn_delta($"a", $"b", 4), false))
+    for (budget <- Seq(None, Some(7)); (sql, method, isAgg) <- fns) {
+      def on(c: Column) = if (isAgg) items.agg(c.as("r")) else items.select(c.as("r"))
+      // a scalar's budget comes from the conf on both sides; an aggregate's
+      // DataFrame spelling takes it as an argument, its SQL spelling from the
+      // conf read when the query is analyzed
+      def withBudget[T](f: => T): T = {
+        budget.foreach(n => spark.conf.set(GraftConf.NumberOfCountersKey, n.toString))
+        try f finally spark.conf.set(GraftConf.NumberOfCountersKey, "1000")
+      }
+      val viaSql = withBudget(on(expr(sql)))
+      val viaMethod = if (isAgg) on(method(budget)) else withBudget(on(method(budget)))
+      val ctx = s"$sql budget=$budget"
+      assert(built(viaMethod) === built(viaSql), ctx)
+      if (!sql.startsWith("topn_delta") && !sql.startsWith("topn_to_json")) {
+        assert(built(viaSql).map(_._2) === Seq(Some(budget.getOrElse(1000))), ctx)
+      }
+      assert(viaMethod.schema === viaSql.schema, ctx)
+      assert(viaMethod.collect().map(_.toString).sorted === viaSql.collect().map(_.toString).sorted, ctx)
+    }
   }
 }

@@ -37,13 +37,18 @@ class TopnStateSpec extends AnyFunSuite {
   test("topK deterministic tie-break: frequency desc then item asc") {
     val st = TopnState.empty()
     Seq("b", "a", "c", "a", "b", "z").foreach(st.add(_, 10))
-    assert(st.topK(4, 10).toSeq === Seq(("a", 2L), ("b", 2L), ("c", 1L), ("z", 1L)))
+    val top = st.sortedEntries().take(4).map(e => (e._1.toString, e._2.longValue))
+    assert(top.toSeq === Seq(("a", 2L), ("b", 2L), ("c", 1L), ("z", 1L)))
   }
 
   test("topK errors when k exceeds numCounters (topn.c:229-233)") {
+    // the one k > n check is the report kernel's, behind topn, topn_rows
+    // and topn_with_bounds
     val st = TopnState.empty()
     st.add("x", 10)
-    assertThrows[IllegalArgumentException](st.topK(11, 10))
+    val sketch = graft.expressions.TopnExprUtils.toMapData(st.pack(10))
+    assertThrows[IllegalArgumentException](
+      graft.expressions.TopnExprUtils.topEntries(sketch, 11, 10))
   }
 
   test("saturating add at Long.MaxValue (topn.c:997-1009)") {
