@@ -341,14 +341,17 @@ object TopnFunctions {
  * Production registration path:
  * `spark.sql.extensions=graft.GraftExtensions` (or
  * `SparkSession.builder().withExtensions(new GraftExtensions)`), so every
- * session on a cluster gets the functions without explicit register() calls.
+ * session on a cluster gets the functions and the [[TopnWindowGuard]]
+ * guardrail without explicit register() calls.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     TopnFunctions.catalog.foreach { case (name, _, builder) =>
       ext.injectFunction((
         org.apache.spark.sql.catalyst.FunctionIdentifier(name),
         new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", name),
         builder))
     }
+    ext.injectCheckRule(TopnWindowGuard.checkRule)
+  }
 }

@@ -6,7 +6,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
-import org.apache.spark.sql.catalyst.plans.logical.Window
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -18,11 +18,15 @@ import graft.expressions.TopnAggregateBase
  * `partitionBy`) funnels every row through one task — the same cliff the
  * reference hits for its `seven_days` frame, fine on daily-rollup row
  * counts, a scale-killer on raw data. It is also the first spelling a
- * naive user writes. This listener (installed by
- * [[TopnFunctions.register]]) detects the pattern in executed plans and
- * logs a one-time WARN pointing at the scale path,
+ * naive user writes. One check detects the pattern and logs a one-time
+ * WARN pointing at the scale path,
  * [[graft.operators.Rollups.slidingMerge]] — same semantics; its only
- * single-partition step ranks the distinct periods.
+ * single-partition step ranks the distinct periods. Both registration
+ * paths run it: [[TopnFunctions.register]] installs it as a query
+ * execution listener over each executed plan, and [[GraftExtensions]]
+ * injects it as a check rule over each analyzed plan (an extension
+ * builds the session, so it cannot reach the session's listener
+ * manager).
  *
  * A WARN rather than an AnalysisException: the spelling is CORRECT (and
  * the right tier for small aggregated inputs like daily rollups); only
@@ -51,15 +55,21 @@ object TopnWindowGuard {
 
   private val listener = new QueryExecutionListener {
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-      check(qe)
+      check(qe.analyzed)
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-      check(qe)
+      check(qe.analyzed)
   }
 
-  private def check(qe: QueryExecution): Unit = {
+  /** The check rule [[GraftExtensions]] injects. */
+  private[graft] val checkRule: SparkSession => LogicalPlan => Unit =
+    _ => plan => check(plan)
+
+  /** The one check body: `plan` is by-name because resolving a failed
+    * query's analyzed plan may itself throw. */
+  private def check(plan: => LogicalPlan): Unit = {
     if (fired.get()) return
     val cliff = try {
-      qe.analyzed.exists {
+      plan.exists {
         case w: Window if w.partitionSpec.isEmpty =>
           w.windowExpressions.exists(_.exists {
             case ae: AggregateExpression => ae.aggregateFunction.isInstanceOf[TopnAggregateBase]

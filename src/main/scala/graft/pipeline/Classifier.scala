@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StringType}
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -51,27 +53,41 @@ import org.apache.spark.storage.StorageLevel
  * SIGNAL (rank by them, threshold them with [[Selection]]), sharpened
  * by more iterations.
  *
+ * One core serves both model families. The binary model ([[train]],
+ * [[Model]]) is the one-head case of one-vs-rest ([[trainMulti]],
+ * [[MultiModel]]): the same {0, 1e6} targets, clamp, floor divisions and
+ * broadcast weight table, with no class key. One-vs-rest is the same
+ * core keyed by `cls`, every head trained side by side over one shared
+ * feature scan. Each layer is written once and takes the key columns as
+ * a parameter: the Spark training loop, the weight-sum join of training
+ * and serving, the feature-bucket expression of the per-row scorers, the
+ * save/load pair, and the three SQL stage generators (features, the K
+ * unrolled iterations, score plus the pinned argmax) behind every
+ * oracle replay.
+ *
  * Scale shape (100 TB): the only corpus-sized dataset is the
  * doc-feature table — ONE tokenize+hash scan, persisted, then scanned
  * 2 times per iteration from cache. Everything else is bounded by
- * construction: weights and gradients are <= numBuckets+1 rows (a few
- * KB — the ONLY tables carrying a broadcast hint), the label table is
- * (doc_id, y) longs, and each iteration is two bounded shuffles (a
- * per-doc sum keyed by doc_id, a per-feature sum keyed by f) with
- * map-side partial aggregation. Per-iteration weights are
- * localCheckpoint'ed (numBuckets rows) so the K-step loop never grows
- * a deep lineage. No driver-side data beyond the one scalar n_docs.
+ * construction: weights and gradients are <= heads × (numBuckets+1)
+ * rows (a few KB — the ONLY tables carrying a broadcast hint), the
+ * label table is (doc_id, [cls], y) — nClasses rows per document for
+ * one-vs-rest, nClasses being language-cardinality, a constant — and
+ * each iteration is two bounded shuffles (a per-doc sum keyed by
+ * (doc_id, [cls]), a per-feature sum keyed by ([cls], f)) with map-side
+ * partial aggregation. Per-iteration weights are localCheckpoint'ed so
+ * the K-step loop never grows a deep lineage. No driver-side data
+ * beyond the one scalar n_docs.
  *
  * Fault-tolerance trade-off: `localCheckpoint` truncates lineage by
  * keeping the checkpointed rows ONLY in executor storage — losing an
  * executor mid-training loses blocks that can no longer be recomputed
  * and fails the job. That is the right trade for the common case (the
- * checkpointed table is numBuckets+1 rows and each iteration is
- * seconds), but a many-iteration run on a flaky cluster should set
+ * checkpointed table is numBuckets+1 rows per head and each iteration
+ * is seconds), but a many-iteration run on a flaky cluster should set
  * `spark.sparkContext.setCheckpointDir(...)` and pass
- * `reliableCheckpoint = true` to [[train]]/[[trainScores]], which
- * swaps in a reliable `checkpoint()` (same bounded rows, written to
- * the checkpoint dir, recoverable after executor loss).
+ * `reliableCheckpoint = true` to any trainer, which swaps in a reliable
+ * checkpoint (same bounded rows, written to the checkpoint dir,
+ * recoverable after executor loss).
  */
 object Classifier {
 
@@ -89,6 +105,9 @@ object Classifier {
     * broadcast join is the right tier. */
   val MaxScoreColumnBuckets: Int = 1 << 16
 
+  /** The one-vs-rest head key; the binary model has none. */
+  private val ClassKey = Seq("cls")
+
   /** Exact floor division a/n for n > 0, identical in both engines:
     * `(a - pmod(a, n)) / n`. The subtraction makes the numerator an
     * exact multiple of n, so the double division is IEEE-exact for
@@ -101,13 +120,13 @@ object Classifier {
   def floorDivSql(a: String, n: String): String =
     s"CAST((($a) - ((($a) % ($n) + ($n)) % ($n))) / ($n) AS BIGINT)"
 
-  /** Shared parameter guard for [[train]]/[[trainScores]] and the oracle
-    * generator [[classifierSql]]. The etaNum cap is the exactness bound:
-    * |g_e12| <= ClampE6 * 1e6 / n summed over at most n docs = 1e15, so
-    * etaNum <= 9 keeps |etaNum * g_e12| <= 9e15 < 2^53 — the window where
-    * [[floorDiv]]'s double division is exact in both engines. A larger
-    * etaNum would silently break the bit-identical-training contract
-    * (Spark truncates, DuckDB rounds, both diverge from Math.floorDiv). */
+  /** Shared parameter guard for the trainers and the oracle generators.
+    * The etaNum cap is the exactness bound: |g_e12| <= ClampE6 * 1e6 / n
+    * summed over at most n docs = 1e15, so etaNum <= 9 keeps
+    * |etaNum * g_e12| <= 9e15 < 2^53 — the window where [[floorDiv]]'s
+    * double division is exact in both engines. A larger etaNum would
+    * silently break the bit-identical-training contract (Spark
+    * truncates, DuckDB rounds, both diverge from Math.floorDiv). */
   private def requireEta(iters: Int, etaNum: Long, etaDen: Long): Unit = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(etaNum >= 1L && etaDen >= 1L,
@@ -127,6 +146,13 @@ object Classifier {
       zip_with(slice(toks, lit(1), n - 1), slice(toks, lit(2), n - 1),
         (a, b) => concat_ws(" ", a, b)))
       .otherwise(array().cast("array<string>"))
+  }
+
+  /** The hashed feature words of a text column: its tokens, plus the
+    * bigram strings when `bigrams` is on. */
+  private def featureWords(textCol: Column, bigrams: Boolean): Column = {
+    val toks = TextAnalysis.tokens(textCol)
+    if (bigrams) concat(toks, wordBigrams(toks)) else toks
   }
 
   /**
@@ -162,11 +188,11 @@ object Classifier {
       textCol: String,
       numBuckets: Int,
       bigrams: Boolean = false): DataFrame = {
-    val toks = TextAnalysis.tokens(col(textCol))
-    val words = if (bigrams) concat(toks, wordBigrams(toks)) else toks
     val feats = concat(
       array(lit(BiasFeature)),
-      coalesce(transform(words, w => Dsir.featureBucket(w, numBuckets)),
+      coalesce(
+        transform(featureWords(col(textCol), bigrams),
+          w => Dsir.featureBucket(w, numBuckets)),
         array().cast("array<long>")))
     docs
       .select(col(idCol).as("doc_id"), explode(feats).as("f"))
@@ -174,9 +200,81 @@ object Classifier {
       .distinct()
   }
 
+  /** Per-(doc, head) sum of the weights of the document's features: the
+    * forward pass of training and the score of serving. `keys` is the
+    * head key of the weight table (empty for the binary model). */
+  private def weightSums(
+      feats: DataFrame, weights: DataFrame, keys: Seq[String], as: String): DataFrame =
+    feats.join(broadcast(weights), "f")
+      .groupBy(("doc_id" +: keys).map(col): _*)
+      .agg(sum(col("w_e6")).as(as))
+
+  /**
+   * The one training loop: `iters` exact GD steps (see object doc) for
+   * every head at once. `labels` is (doc_id, keys..., y_e6) over
+   * `nDocs` documents, built by `prepare` after the feature table is
+   * marked for caching; `keys` is empty for the binary model and
+   * [[ClassKey]] for one-vs-rest. Returns the checkpointed weight table
+   * (keys..., f, w_e6); the feature cache serves only the loop and is
+   * released before returning.
+   */
+  private def fit(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      keys: Seq[String],
+      numBuckets: Int,
+      iters: Int,
+      etaNum: Long,
+      etaDen: Long,
+      reliableCheckpoint: Boolean,
+      bigrams: Boolean)(prepare: => (DataFrame, Long)): DataFrame = {
+    requireEta(iters, etaNum, etaDen)
+    if (reliableCheckpoint)
+      require(docs.sparkSession.sparkContext.getCheckpointDir.isDefined,
+        "reliableCheckpoint = true needs spark.sparkContext.setCheckpointDir(...) first")
+
+    val feats = docFeatures(docs, idCol, textCol, numBuckets, bigrams)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val (labels, nDocs) = prepare
+      require(nDocs > 0L, "classifier training needs at least one document")
+      val docKey = ("doc_id" +: keys).map(col)
+      val weightKey = (keys :+ "f").map(col)
+      val clamp: Column => Column =
+        c => greatest(lit(-ClampE6), least(lit(ClampE6), c))
+
+      var weights: DataFrame = null
+      for (_ <- 1 to iters) {
+        val yhat =
+          if (weights == null) labels.select(docKey :+ lit(0L).as("yhat_e6"): _*)
+          else weightSums(feats, weights, keys, "yhat_e6")
+        val resid = labels.join(yhat, "doc_id" +: keys)
+          .select(docKey :+ clamp(col("yhat_e6") - col("y_e6")).as("r_e6"): _*)
+        val contrib = resid.select(docKey :+
+          floorDiv(col("r_e6") * lit(1000000L), lit(nDocs)).as("gc_e12"): _*)
+        val grad = feats.join(contrib, "doc_id")
+          .groupBy(weightKey: _*)
+          .agg(sum(col("gc_e12")).as("g_e12"))
+        val step = floorDiv(lit(etaNum) * col("g_e12"), lit(etaDen * 1000000L))
+        val next =
+          if (weights == null)
+            grad.select(weightKey :+ (lit(0L) - step).as("w_e6"): _*)
+          else
+            grad.join(broadcast(weights), keys :+ "f", "left")
+              .select(weightKey :+ (coalesce(col("w_e6"), lit(0L)) - step).as("w_e6"): _*)
+        // materialize the bounded weight table; the loop's lineage resets
+        // to its concrete rows each iteration
+        weights = if (reliableCheckpoint) next.checkpoint() else next.localCheckpoint()
+      }
+      weights
+    } finally feats.unpersist(blocking = false)
+  }
+
   /**
    * Train `iters` exact GD steps; returns the weight table
    * (f, w_e6) — numBuckets+1 rows at most. See object doc for the rule.
+   * A NULL `isTarget` trains as target 0.
    */
   def train(
       docs: DataFrame,
@@ -188,13 +286,16 @@ object Classifier {
       etaNum: Long = 1L,
       etaDen: Long = 256L,
       reliableCheckpoint: Boolean = false,
-      bigrams: Boolean = false): DataFrame = {
-    val (weights, feats) =
-      trainWithFeatures(docs, idCol, textCol, isTarget, numBuckets, iters,
-        etaNum, etaDen, reliableCheckpoint, bigrams)
-    feats.unpersist(blocking = false)
-    weights
-  }
+      bigrams: Boolean = false): DataFrame =
+    fit(docs, idCol, textCol, Nil, numBuckets, iters, etaNum, etaDen,
+        reliableCheckpoint, bigrams) {
+      val labels = docs
+        .select(col(idCol).as("doc_id"),
+          when(isTarget, lit(1000000L)).otherwise(lit(0L)).as("y_e6"))
+      // the one driver-side scalar (cheap metadata-or-scan count); every
+      // later appearance of n is a literal inside the distributed plan
+      (labels, labels.count())
+    }
 
   /**
    * Train, then score every document with the final weights:
@@ -213,82 +314,11 @@ object Classifier {
       etaDen: Long = 256L,
       reliableCheckpoint: Boolean = false,
       bigrams: Boolean = false): DataFrame = {
-    val (weights, feats) =
-      trainWithFeatures(docs, idCol, textCol, isTarget, numBuckets, iters,
-        etaNum, etaDen, reliableCheckpoint, bigrams)
-    val labels = docs.select(col(idCol).as("doc_id"), isTarget.as("is_target"))
-    val scores = feats
-      .join(broadcast(weights), "f")
-      .groupBy(col("doc_id"))
-      .agg(sum(col("w_e6")).as("score_e6"))
-    // release the training cache: the returned lazy plan recomputes the
-    // feature scan once at action time (weights are checkpointed rows)
-    feats.unpersist(blocking = false)
-    labels.join(scores, "doc_id")
+    val weights = train(docs, idCol, textCol, isTarget, numBuckets, iters,
+      etaNum, etaDen, reliableCheckpoint, bigrams)
+    docs.select(col(idCol).as("doc_id"), isTarget.as("is_target"))
+      .join(score(docs, idCol, textCol, Model(weights, numBuckets, bigrams)), "doc_id")
       .select(col("doc_id"), col("is_target"), col("score_e6"))
-  }
-
-  /** Shared loop: returns (checkpointed weights, the still-persisted
-    * feature table) so scoring can reuse the cache. */
-  private def trainWithFeatures(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      isTarget: Column,
-      numBuckets: Int,
-      iters: Int,
-      etaNum: Long,
-      etaDen: Long,
-      reliableCheckpoint: Boolean,
-      bigrams: Boolean = false): (DataFrame, DataFrame) = {
-    requireEta(iters, etaNum, etaDen)
-    if (reliableCheckpoint)
-      require(docs.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "reliableCheckpoint = true needs spark.sparkContext.setCheckpointDir(...) first")
-
-    val feats = docFeatures(docs, idCol, textCol, numBuckets, bigrams)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val labels = docs
-      .select(col(idCol).as("doc_id"),
-        when(isTarget, lit(1000000L)).otherwise(lit(0L)).as("y_e6"))
-    // the one driver-side scalar (cheap metadata-or-scan count); every
-    // later appearance of n is a literal inside the distributed plan
-    val nDocs = labels.count()
-    require(nDocs > 0L, "classifier training needs at least one document")
-
-    val clamp: Column => Column =
-      c => greatest(lit(-ClampE6), least(lit(ClampE6), c))
-
-    var weights: DataFrame = null
-    for (_ <- 1 to iters) {
-      val yhat =
-        if (weights == null)
-          labels.select(col("doc_id"), lit(0L).as("yhat_e6"))
-        else
-          feats.join(broadcast(weights), "f")
-            .groupBy(col("doc_id"))
-            .agg(sum(col("w_e6")).as("yhat_e6"))
-      val resid = labels.join(yhat, "doc_id")
-        .select(col("doc_id"),
-          clamp(col("yhat_e6") - col("y_e6")).as("r_e6"))
-      val contrib = resid.select(col("doc_id"),
-        floorDiv(col("r_e6") * lit(1000000L), lit(nDocs)).as("gc_e12"))
-      val grad = feats.join(contrib, "doc_id")
-        .groupBy(col("f"))
-        .agg(sum(col("gc_e12")).as("g_e12"))
-      val step = floorDiv(lit(etaNum) * col("g_e12"), lit(etaDen * 1000000L))
-      val next =
-        if (weights == null)
-          grad.select(col("f"), (lit(0L) - step).as("w_e6"))
-        else
-          grad.join(broadcast(weights), Seq("f"), "left")
-            .select(col("f"),
-              (coalesce(col("w_e6"), lit(0L)) - step).as("w_e6"))
-      // materialize the bounded weight table; the loop's lineage resets
-      // to numBuckets+1 concrete rows each iteration
-      weights = if (reliableCheckpoint) next.checkpoint() else next.localCheckpoint()
-    }
-    (weights, feats)
   }
 
   /** A trained model: the bounded weight table plus the bucket count it
@@ -308,10 +338,20 @@ object Classifier {
    * bounded weight table, one per-doc sum. Output: (doc_id, score_e6).
    */
   def score(docs: DataFrame, idCol: String, textCol: String, model: Model): DataFrame =
-    docFeatures(docs, idCol, textCol, model.numBuckets, model.bigrams)
-      .join(broadcast(model.weights), "f")
-      .groupBy(col("doc_id"))
-      .agg(sum(col("w_e6")).as("score_e6"))
+    weightSums(docFeatures(docs, idCol, textCol, model.numBuckets, model.bigrams),
+      model.weights, Nil, "score_e6")
+
+  /** The distinct feature buckets of a text column, as the per-row
+    * scorers read them. */
+  private def bucketsOf(textCol: Column, numBuckets: Int, bigrams: Boolean): Column =
+    array_distinct(transform(featureWords(textCol, bigrams),
+      t => Dsir.featureBucket(t, numBuckets)))
+
+  /** One head's per-row score over a bucket array: its bias plus the sum
+    * of its embedded per-bucket weights (a missing bucket weighs 0). */
+  private def headScore(buckets: Column, w: Map[Long, Long]): Column =
+    aggregate(buckets, lit(w.getOrElse(BiasFeature, 0L)),
+      (acc, f) => acc + coalesce(element_at(typedLit(w - BiasFeature), f), lit(0L)))
 
   /**
    * Per-ROW scoring with a frozen model: the same score as [[score]]
@@ -333,69 +373,77 @@ object Classifier {
       s"scoreColumn embeds the weight table in the plan; numBuckets = " +
         s"${model.numBuckets} exceeds $MaxScoreColumnBuckets — use score() " +
         s"(broadcast join) for large-bucket models")
-    val w: Map[Long, Long] = model.weights
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val bias = w.getOrElse(BiasFeature, 0L)
-    val perBucket = w - BiasFeature
-    val toks = TextAnalysis.tokens(textCol)
-    val words = if (model.bigrams) concat(toks, wordBigrams(toks)) else toks
-    val buckets = array_distinct(
-      transform(words, t => Dsir.featureBucket(t, model.numBuckets)))
-    aggregate(buckets, lit(bias),
-      (acc, f) => acc + coalesce(element_at(typedLit(perBucket), f), lit(0L)))
+    val w = model.weights.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    headScore(bucketsOf(textCol, model.numBuckets, model.bigrams), w)
   }
 
-  /** Persist a trained model: the weight table (numBuckets+1 rows of
-    * (f, w_e6) — a few KB of parquet) plus a one-row meta table pinning
-    * the bucket count. */
-  def save(model: Model, path: String): Unit = {
-    model.weights.write.mode("overwrite").parquet(s"$path/weights")
-    val spark = model.weights.sparkSession
+  /** Persist a weight table plus a one-row meta table pinning the bucket
+    * count and the feature set: the layout of both [[save]] and
+    * [[saveMulti]]. */
+  private def saveModel(
+      weights: DataFrame, numBuckets: Int, bigrams: Boolean, path: String): Unit = {
+    weights.write.mode("overwrite").parquet(s"$path/weights")
+    val spark = weights.sparkSession
     import spark.implicits._
-    Seq((model.numBuckets.toLong, model.bigrams))
+    Seq((numBuckets.toLong, bigrams))
       .toDF("num_buckets", "use_bigrams")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
 
-  /** Load a model persisted by [[save]]. Weights round-trip exactly
-    * (integers). Fails fast on layout drift — names AND types, the
-    * [[LanguageModel.load]] doctrine: a weight table with matching
+  /** Load a model written by [[saveModel]], with (`keyed`) or without a
+    * class key: (weights, numBuckets, bigrams). Weights round-trip
+    * exactly (integers). Fails fast on layout drift — names AND types,
+    * the [[LanguageModel.load]] doctrine: a weight table with matching
     * names but a narrowed w_e6 would otherwise score wrong silently. */
-  def load(path: String, spark: org.apache.spark.sql.SparkSession): Model = {
-    import org.apache.spark.sql.types.LongType
+  private def loadModel(
+      path: String, spark: SparkSession, keyed: Boolean): (DataFrame, Int, Boolean) = {
+    val (saver, cols, need) =
+      if (keyed) ("saveMulti", Seq("cls" -> StringType, "f" -> LongType, "w_e6" -> LongType),
+        "string cls, long f and w_e6")
+      else ("save", Seq("f" -> LongType, "w_e6" -> LongType), "long f and w_e6")
     val w = spark.read.parquet(s"$path/weights")
     require(w.schema.fields.map(f => f.name -> f.dataType).sortBy(_._1)
-      .sameElements(Seq("f" -> LongType, "w_e6" -> LongType)),
-      s"not a Classifier.save layout at $path (need long f and w_e6; " +
+      .sameElements(cols),
+      s"not a Classifier.$saver layout at $path (need $need; " +
         s"got ${w.schema.simpleString})")
     val meta = spark.read.parquet(s"$path/meta")
     require(meta.schema.fields.map(f => f.name -> f.dataType)
-      .sameElements(Seq("num_buckets" -> LongType,
-        "use_bigrams" -> org.apache.spark.sql.types.BooleanType)),
-      s"not a Classifier.save meta layout at $path " +
+      .sameElements(Seq("num_buckets" -> LongType, "use_bigrams" -> BooleanType)),
+      s"not a Classifier.$saver meta layout at $path " +
         s"(got ${meta.schema.simpleString})")
     val metaRow = meta.head
     val buckets = metaRow.getLong(0)
     require(buckets >= 2L && buckets <= (1L << 30),
       s"persisted num_buckets out of range at $path: $buckets")
-    Model(w, buckets.toInt, metaRow.getBoolean(1))
+    (w, buckets.toInt, metaRow.getBoolean(1))
+  }
+
+  /** Persist a trained model: the weight table (numBuckets+1 rows of
+    * (f, w_e6) — a few KB of parquet) plus a one-row meta table pinning
+    * the bucket count. */
+  def save(model: Model, path: String): Unit =
+    saveModel(model.weights, model.numBuckets, model.bigrams, path)
+
+  /** Load a model persisted by [[save]]; fails fast on layout drift. */
+  def load(path: String, spark: SparkSession): Model = {
+    val (w, buckets, bigrams) = loadModel(path, spark, keyed = false)
+    Model(w, buckets, bigrams)
   }
 
   // --- multi-class (one-vs-rest) --------------------------------------------
   //
-  // The binary trainer generalized to a LABEL COLUMN: one linear model
-  // per distinct label value, all trained simultaneously over ONE shared
-  // doc-feature scan — the weight table just gains a `cls` key, and every
-  // per-iteration shuffle carries it. The flagship use is trained
-  // language-ID (the fastText lid.176 shape: hashed token features, one
-  // linear head per language), replacing TextAnalysis.languageId's
-  // 4-language stop-word heuristic with a model the corpus itself
-  // teaches. Arithmetic, clamping, floor divisions, and the eta bound
-  // are IDENTICAL to the binary path — a K-step multi-class run is
-  // bit-identical across engines, and [[multiClassifierCtes]] replays
-  // the ENTIRE training in DuckDB. Prediction is argmax with the pinned
-  // tie order (score desc, class asc), spelled as the same
-  // row_number-over-(doc) window in both engines.
+  // The binary trainer generalized to a LABEL COLUMN: one linear head per
+  // distinct label value, all trained simultaneously by the same core
+  // over ONE shared doc-feature scan — the weight table just gains a
+  // `cls` key, and every per-iteration shuffle carries it. The flagship
+  // use is trained language-ID (the fastText lid.176 shape: hashed token
+  // features, one linear head per language), replacing
+  // TextAnalysis.languageId's 4-language stop-word heuristic with a model
+  // the corpus itself teaches. A K-step multi-class run is bit-identical
+  // across engines, and [[multiClassifierCtes]] replays the ENTIRE
+  // training in DuckDB. Prediction is argmax with the pinned tie order
+  // (score desc, class asc), spelled as the same row_number-over-(doc)
+  // window in both engines.
 
   /** A trained multi-class model: (cls, f, w_e6) weights — at most
     * nClasses × (numBuckets+1) rows — plus the feature-space pins. */
@@ -404,17 +452,11 @@ object Classifier {
 
   /**
    * Train one-vs-rest: `iters` exact GD steps for EVERY distinct value
-   * of `labelCol` at once. Returns the weight table (cls, f, w_e6).
-   *
-   * Scale shape: the corpus-sized tables are the shared doc-feature
-   * scan (ONE tokenize+hash pass, persisted — identical to binary
-   * training) and its class fan-outs (feature rows × nClasses inside
-   * the per-iteration joins — nClasses is language-cardinality, a
-   * constant). Weights stay broadcast-sized (nClasses × buckets), and
-   * each iteration is the same two bounded shuffles as the binary
-   * trainer, now keyed (doc_id, cls) and (cls, f). NULL labels are
-   * rejected up front: a NULL never equals its own class under SQL
-   * semantics, so it would train as all-negative silently.
+   * of `labelCol` at once. Returns the weight table (cls, f, w_e6). Each
+   * head is exactly the binary model [[train]] would fit for "label ==
+   * that class". NULL labels are rejected up front: a NULL never equals
+   * its own class under SQL semantics, so it would train as all-negative
+   * silently.
    */
   def trainMulti(
       docs: DataFrame,
@@ -426,12 +468,27 @@ object Classifier {
       etaNum: Long = 1L,
       etaDen: Long = 256L,
       reliableCheckpoint: Boolean = false,
-      bigrams: Boolean = false): DataFrame = {
-    val (w, feats) = trainMultiWithFeatures(docs, idCol, textCol, labelCol,
-      numBuckets, iters, etaNum, etaDen, reliableCheckpoint, bigrams)
-    feats.unpersist(blocking = false)
-    w
-  }
+      bigrams: Boolean = false): DataFrame =
+    fit(docs, idCol, textCol, ClassKey, numBuckets, iters, etaNum, etaDen,
+        reliableCheckpoint, bigrams) {
+      val classes = docs.select(col(labelCol).as("cls")).distinct()
+      // one-vs-rest label table: every (doc, class) pair with its 0/1e6
+      // target — nClasses rows per document, bounded fan-out
+      val labels = docs
+        .select(col(idCol).as("doc_id"), col(labelCol).as("__graft_y"))
+        .crossJoin(broadcast(classes))
+        .select(col("doc_id"), col("cls"),
+          when(col("__graft_y") === col("cls"), lit(1000000L))
+            .otherwise(lit(0L)).as("y_e6"))
+      // one scan answers both pre-flight questions (count + NULL labels)
+      val pre = docs
+        .agg(count(lit(1)), count(when(col(labelCol).isNull, lit(1)))).head
+      val (nDocs, nNull) = (pre.getLong(0), pre.getLong(1))
+      require(nNull == 0L,
+        s"trainMulti: label column '$labelCol' has $nNull NULLs; filter or " +
+          "impute them first (a NULL label trains as all-negative silently)")
+      (labels, nDocs)
+    }
 
   /**
    * Train one-vs-rest, then predict every document: (doc_id, cls_actual,
@@ -448,32 +505,32 @@ object Classifier {
       etaNum: Long = 1L,
       etaDen: Long = 256L,
       reliableCheckpoint: Boolean = false,
-      bigrams: Boolean = false): DataFrame = {
-    val (weights, feats) = trainMultiWithFeatures(docs, idCol, textCol,
-      labelCol, numBuckets, iters, etaNum, etaDen, reliableCheckpoint, bigrams)
-    feats.unpersist(blocking = false)
-    predictionsFrom(MultiModel(weights, numBuckets, bigrams),
+      bigrams: Boolean = false): DataFrame =
+    predictionsFrom(
+      MultiModel(trainMulti(docs, idCol, textCol, labelCol, numBuckets, iters,
+        etaNum, etaDen, reliableCheckpoint, bigrams), numBuckets, bigrams),
       docs, idCol, textCol, labelCol)
-  }
 
   /**
    * Score every (doc, class) pair of `docs` under an ALREADY-TRAINED
    * model: (doc_id, cls, score_e6) — the identical feature scan +
-   * broadcast weight join + keyed sum the trainers run, factored out so
-   * a model trained once (or loaded via [[loadMulti]]) can serve many
+   * broadcast weight join + keyed sum the trainers run, so a model
+   * trained once (or loaded via [[loadMulti]]) can serve many
    * consumers — argmax, calibration, gating, mixture weighting —
-   * without re-running GD. Bit-equal to the score table inside
-   * [[trainMultiPredictions]] by construction (same spelling).
+   * without re-running GD.
    */
   def scoreMulti(
       model: MultiModel,
       docs: DataFrame,
       idCol: String,
       textCol: String): DataFrame =
-    docFeatures(docs, idCol, textCol, model.numBuckets, model.bigrams)
-      .join(broadcast(model.weights), "f")
-      .groupBy(col("doc_id"), col("cls"))
-      .agg(sum(col("w_e6")).as("score_e6"))
+    weightSums(docFeatures(docs, idCol, textCol, model.numBuckets, model.bigrams),
+      model.weights, ClassKey, "score_e6")
+
+  /** The pinned argmax order within a document: score desc, class asc —
+    * the window both engines spell identically. */
+  private def byScore: WindowSpec =
+    Window.partitionBy(col("doc_id")).orderBy(col("score_e6").desc, col("cls").asc)
 
   /**
    * [[trainMultiPredictions]]'s output — (doc_id, cls_actual, cls_pred,
@@ -486,14 +543,9 @@ object Classifier {
       idCol: String,
       textCol: String,
       labelCol: String): DataFrame = {
-    val scores = scoreMulti(model, docs, idCol, textCol)
-    // argmax via the keyed window both engines spell identically; the
-    // doc_id partitioning scales (nClasses rows per key)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id"))
-      .orderBy(col("score_e6").desc, col("cls").asc)
-    val best = scores
-      .withColumn("__graft_rn", row_number().over(w))
+    // the doc_id partitioning scales (nClasses rows per key)
+    val best = scoreMulti(model, docs, idCol, textCol)
+      .withColumn("__graft_rn", row_number().over(byScore))
       .filter(col("__graft_rn") === 1)
       .select(col("doc_id"), col("cls").as("cls_pred"), col("score_e6"))
     docs.select(col(idCol).as("doc_id"), col(labelCol).as("cls_actual"))
@@ -545,10 +597,7 @@ object Classifier {
    * nClasses rows per doc, the same scale shape as the argmax path.
    */
   def calibrateScores(scores: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id"))
-      .orderBy(col("score_e6").desc, col("cls").asc)
-    val ranked = scores.withColumn("__graft_rn", row_number().over(w))
+    val ranked = scores.withColumn("__graft_rn", row_number().over(byScore))
     val agg = scores.groupBy(col("doc_id")).agg(
       min(col("score_e6")).as("__graft_smin"),
       sum(col("score_e6")).as("__graft_ssum"),
@@ -590,13 +639,11 @@ object Classifier {
       etaNum: Long = 1L,
       etaDen: Long = 256L,
       reliableCheckpoint: Boolean = false,
-      bigrams: Boolean = false): DataFrame = {
-    val (weights, feats) = trainMultiWithFeatures(docs, idCol, textCol,
-      labelCol, numBuckets, iters, etaNum, etaDen, reliableCheckpoint, bigrams)
-    feats.unpersist(blocking = false)
-    calibratedFrom(MultiModel(weights, numBuckets, bigrams),
+      bigrams: Boolean = false): DataFrame =
+    calibratedFrom(
+      MultiModel(trainMulti(docs, idCol, textCol, labelCol, numBuckets, iters,
+        etaNum, etaDen, reliableCheckpoint, bigrams), numBuckets, bigrams),
       docs, idCol, textCol, labelCol)
-  }
 
   /**
    * Confidence-gate calibrated predictions: `cls_gated = cls_pred` where
@@ -647,80 +694,6 @@ object Classifier {
       col("margin_floor"), und)
   }
 
-  /** Shared multi-class loop; returns (checkpointed weights, the
-    * still-persisted feature table). Prediction unpersists it before its
-    * own action runs — like the binary [[trainScores]], the returned lazy
-    * plan recomputes the feature scan once at action time (weights are
-    * checkpointed rows); the cache only serves the training loop. */
-  private def trainMultiWithFeatures(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      labelCol: String,
-      numBuckets: Int,
-      iters: Int,
-      etaNum: Long,
-      etaDen: Long,
-      reliableCheckpoint: Boolean,
-      bigrams: Boolean): (DataFrame, DataFrame) = {
-    requireEta(iters, etaNum, etaDen)
-    if (reliableCheckpoint)
-      require(docs.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "reliableCheckpoint = true needs spark.sparkContext.setCheckpointDir(...) first")
-
-    val feats = docFeatures(docs, idCol, textCol, numBuckets, bigrams)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val classes = docs.select(col(labelCol).as("cls")).distinct()
-    // one-vs-rest label table: every (doc, class) pair with its 0/1e6
-    // target — nClasses rows per document, bounded fan-out
-    val labels = docs
-      .select(col(idCol).as("doc_id"), col(labelCol).as("__graft_y"))
-      .crossJoin(broadcast(classes))
-      .select(col("doc_id"), col("cls"),
-        when(col("__graft_y") === col("cls"), lit(1000000L))
-          .otherwise(lit(0L)).as("y_e6"))
-    // one scan answers both pre-flight questions (count + NULL labels)
-    val pre = docs
-      .agg(count(lit(1)), count(when(col(labelCol).isNull, lit(1)))).head
-    val (nDocs, nNull) = (pre.getLong(0), pre.getLong(1))
-    require(nDocs > 0L, "classifier training needs at least one document")
-    require(nNull == 0L,
-      s"trainMulti: label column '$labelCol' has $nNull NULLs; filter or " +
-        "impute them first (a NULL label trains as all-negative silently)")
-
-    val clamp: Column => Column =
-      c => greatest(lit(-ClampE6), least(lit(ClampE6), c))
-
-    var weights: DataFrame = null
-    for (_ <- 1 to iters) {
-      val yhat =
-        if (weights == null)
-          labels.select(col("doc_id"), col("cls"), lit(0L).as("yhat_e6"))
-        else
-          feats.join(broadcast(weights), "f")
-            .groupBy(col("doc_id"), col("cls"))
-            .agg(sum(col("w_e6")).as("yhat_e6"))
-      val resid = labels.join(yhat, Seq("doc_id", "cls"))
-        .select(col("doc_id"), col("cls"),
-          clamp(col("yhat_e6") - col("y_e6")).as("r_e6"))
-      val contrib = resid.select(col("doc_id"), col("cls"),
-        floorDiv(col("r_e6") * lit(1000000L), lit(nDocs)).as("gc_e12"))
-      val grad = feats.join(contrib, "doc_id")
-        .groupBy(col("cls"), col("f"))
-        .agg(sum(col("gc_e12")).as("g_e12"))
-      val step = floorDiv(lit(etaNum) * col("g_e12"), lit(etaDen * 1000000L))
-      val next =
-        if (weights == null)
-          grad.select(col("cls"), col("f"), (lit(0L) - step).as("w_e6"))
-        else
-          grad.join(broadcast(weights), Seq("cls", "f"), "left")
-            .select(col("cls"), col("f"),
-              (coalesce(col("w_e6"), lit(0L)) - step).as("w_e6"))
-      weights = if (reliableCheckpoint) next.checkpoint() else next.localCheckpoint()
-    }
-    (weights, feats)
-  }
-
   /**
    * Per-ROW prediction with a frozen multi-class model — the
    * [[scoreColumn]] shape generalized: each class's weight map embeds as
@@ -747,19 +720,9 @@ object Classifier {
         s"${model.numBuckets} weights in the plan, over " +
         s"$MaxScoreColumnBuckets — use trainMultiPredictions' " +
         "broadcast-join path for large models")
-    val toks = TextAnalysis.tokens(textCol)
-    val words = if (model.bigrams) concat(toks, wordBigrams(toks)) else toks
-    val buckets = array_distinct(
-      transform(words, t => Dsir.featureBucket(t, model.numBuckets)))
+    val buckets = bucketsOf(textCol, model.numBuckets, model.bigrams)
     val scored = classes.zipWithIndex.map { case (c, i) =>
-      val w = grouped(c)
-      val bias = w.getOrElse(BiasFeature, 0L)
-      val perBucket = w - BiasFeature
-      val s =
-        if (perBucket.isEmpty) lit(bias)
-        else aggregate(buckets, lit(bias),
-          (acc, f) => acc + coalesce(element_at(typedLit(perBucket), f), lit(0L)))
-      struct(s.as("s"), lit(-i).as("nr"))
+      struct(headScore(buckets, grouped(c)).as("s"), lit(-i).as("nr"))
     }
     val best =
       if (scored.size == 1) scored.head else greatest(scored: _*)
@@ -774,48 +737,130 @@ object Classifier {
 
   /** Persist a multi-class model: the (cls, f, w_e6) weight table plus
     * the one-row meta pins — the [[save]] layout with a class key. */
-  def saveMulti(model: MultiModel, path: String): Unit = {
-    model.weights.write.mode("overwrite").parquet(s"$path/weights")
-    val spark = model.weights.sparkSession
-    import spark.implicits._
-    Seq((model.numBuckets.toLong, model.bigrams))
-      .toDF("num_buckets", "use_bigrams")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
+  def saveMulti(model: MultiModel, path: String): Unit =
+    saveModel(model.weights, model.numBuckets, model.bigrams, path)
 
   /** Load a model persisted by [[saveMulti]]; fails fast on layout
     * drift (names AND types — the [[load]] doctrine). */
-  def loadMulti(path: String, spark: org.apache.spark.sql.SparkSession): MultiModel = {
-    import org.apache.spark.sql.types.{LongType, StringType}
-    val w = spark.read.parquet(s"$path/weights")
-    require(w.schema.fields.map(f => f.name -> f.dataType).sortBy(_._1)
-      .sameElements(Seq("cls" -> StringType, "f" -> LongType,
-        "w_e6" -> LongType)),
-      s"not a Classifier.saveMulti layout at $path (need string cls, " +
-        s"long f and w_e6; got ${w.schema.simpleString})")
-    val meta = spark.read.parquet(s"$path/meta")
-    require(meta.schema.fields.map(f => f.name -> f.dataType)
-      .sameElements(Seq("num_buckets" -> LongType,
-        "use_bigrams" -> org.apache.spark.sql.types.BooleanType)),
-      s"not a Classifier.saveMulti meta layout at $path " +
-        s"(got ${meta.schema.simpleString})")
-    val metaRow = meta.head
-    val buckets = metaRow.getLong(0)
-    require(buckets >= 2L && buckets <= (1L << 30),
-      s"persisted num_buckets out of range at $path: $buckets")
-    MultiModel(w, buckets.toInt, metaRow.getBoolean(1))
+  def loadMulti(path: String, spark: SparkSession): MultiModel = {
+    val (w, buckets, bigrams) = loadModel(path, spark, keyed = true)
+    MultiModel(w, buckets, bigrams)
   }
+
+  // --- SQL replay ------------------------------------------------------------
+  //
+  // Every oracle replay is composed from three stage generators, each the
+  // SQL twin of one Spark layer above and each taking the head key as a
+  // flag (`keyed`: one-vs-rest's `cls`, absent for the binary model):
+  // [[featureStages]] ([[docFeatures]]), [[iterationStages]] ([[fit]]'s
+  // K unrolled steps) and [[scoreStages]] ([[weightSums]] plus the pinned
+  // argmax). Each returns comma-joined CTE definitions under a name
+  // prefix; a composition wraps the whole chain in
+  // [[OracleSql.materializeCtes]] (the feature CTE feeds two stages per
+  // iteration, each weight stage the next).
+
+  /** The SQL head-key fragments: the column list prefix, the same
+    * qualified by a table alias, and the GROUP BY ordinals of a
+    * (doc_id or f, [cls]) aggregate. */
+  private final case class SqlKey(keyed: Boolean) {
+    val cols: String = if (keyed) "cls, " else ""
+    def of(alias: String): String = if (keyed) s"$alias.cls, " else ""
+    val groupBy: String = if (keyed) "1, 2" else "1"
+  }
+
+  /** `{p}t` (doc_id, `labelCol` = the caller's label expression, toks),
+    * `{p}exw` (distinct hashed buckets) and `{p}ex` (plus the bias row
+    * per document) over `src`, which needs `doc_id` and `text`. Bigram
+    * strings concatenate onto the token list before the unnest, as in
+    * [[docFeatures]] (DuckDB range() is stop-exclusive and lists are
+    * 1-indexed, so i pairs toks[i] with toks[i+1] for i in [1, len-1];
+    * < 2 tokens yields the empty range). */
+  private def featureStages(p: String, src: String, labelExpr: String,
+      labelCol: String, labelName: String, numBuckets: Int, bigrams: Boolean): String = {
+    OracleSql.requireNoCteHead(src, "src")
+    OracleSql.requireNoCteHead(labelExpr, labelName)
+    val words =
+      if (bigrams)
+        "list_concat(toks, list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i + 1]))"
+      else "toks"
+    s"""${p}t AS (
+       |  SELECT doc_id, ($labelExpr) AS $labelCol,
+       |         regexp_split_to_array(trim(text), '\\s+') AS toks FROM $src),
+       |${p}exw AS (SELECT DISTINCT doc_id, ${Dsir.featureBucketSql("w", numBuckets)} AS f
+       |        FROM (SELECT doc_id, unnest($words) AS w FROM ${p}t)),
+       |${p}ex AS (SELECT doc_id, f FROM ${p}exw
+       |       UNION ALL SELECT doc_id, CAST($BiasFeature AS BIGINT) AS f FROM ${p}t)""".stripMargin
+  }
+
+  /** `{p}n` (the document count of `{p}t`), then the K unrolled GD steps
+    * over `{p}lab` (doc_id, [cls], y_e6) and `{p}ex`: step k ends in the
+    * weights CTE `{p}w<k>` ([cls], f, w_e6). */
+  private def iterationStages(p: String, key: SqlKey, iters: Int,
+      etaNum: Long, etaDen: Long): String = {
+    def update(g: String) = floorDivSql(s"$etaNum * $g", s"${etaDen}000000")
+    val steps = (1 to iters).map { k =>
+      val resid =
+        if (k == 1)
+          s"""${p}r$k AS (SELECT doc_id, ${key.cols}
+             |        GREATEST(-$ClampE6, LEAST($ClampE6, 0 - y_e6)) AS r_e6 FROM ${p}lab)""".stripMargin
+        else
+          s"""${p}y$k AS (SELECT e.doc_id, ${key.of("w")}CAST(SUM(w.w_e6) AS BIGINT) AS yhat_e6
+             |       FROM ${p}ex e JOIN ${p}w${k - 1} w USING (f) GROUP BY ${key.groupBy}),
+             |${p}r$k AS (SELECT l.doc_id, ${key.of("l")}
+             |        GREATEST(-$ClampE6, LEAST($ClampE6, y.yhat_e6 - l.y_e6)) AS r_e6
+             |        FROM ${p}lab l JOIN ${p}y$k y USING (${key.cols}doc_id))""".stripMargin
+      val weights =
+        if (k == 1)
+          s"""${p}w$k AS (SELECT ${key.cols}f, CAST(0 - ${update("g_e12")} AS BIGINT) AS w_e6
+             |       FROM ${p}g$k)""".stripMargin
+        else
+          s"""${p}w$k AS (SELECT ${key.of("g")}g.f,
+             |        CAST(COALESCE(w.w_e6, 0) - ${update("g.g_e12")} AS BIGINT) AS w_e6
+             |        FROM ${p}g$k g LEFT JOIN ${p}w${k - 1} w USING (${key.cols}f))""".stripMargin
+      s"""$resid,
+         |${p}gc$k AS (SELECT doc_id, ${key.cols}${floorDivSql("r_e6 * 1000000", "n_docs")} AS gc_e12
+         |        FROM ${p}r$k CROSS JOIN ${p}n),
+         |${p}g$k AS (SELECT ${key.of("gc")}e.f, CAST(SUM(gc.gc_e12) AS BIGINT) AS g_e12
+         |       FROM ${p}ex e JOIN ${p}gc$k gc USING (doc_id) GROUP BY ${key.groupBy}),
+         |$weights""".stripMargin
+    }
+    (s"${p}n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM ${p}t)" +: steps)
+      .mkString(",\n")
+  }
+
+  /** `{p}sc` (doc_id, [cls], score_e6) under the weights CTE `weights`;
+    * keyed, also `{p}bst`, every (doc, class) score ranked by the pinned
+    * argmax order as `rn`. */
+  private def scoreStages(p: String, key: SqlKey, weights: String): String = {
+    val sc =
+      s"""${p}sc AS (SELECT e.doc_id, ${key.of("w")}CAST(SUM(w.w_e6) AS BIGINT) AS score_e6
+         |       FROM ${p}ex e JOIN $weights w USING (f) GROUP BY ${key.groupBy})""".stripMargin
+    if (!key.keyed) sc
+    else
+      s"""$sc,
+         |${p}bst AS (SELECT doc_id, cls AS cls_pred, score_e6,
+         |        ROW_NUMBER() OVER (PARTITION BY doc_id
+         |                           ORDER BY score_e6 DESC, cls) AS rn
+         |        FROM ${p}sc)""".stripMargin
+  }
+
+  /** `{p}out` (doc_id, cls_actual, cls_pred, score_e6): the argmax row of
+    * [[scoreStages]]' ranking per document. */
+  private def predictionStage(p: String): String =
+    s"""${p}out AS (SELECT t.doc_id, t.cls_actual, b.cls_pred, b.score_e6
+       |       FROM ${p}t t JOIN ${p}bst b USING (doc_id) WHERE b.rn = 1)""".stripMargin
 
   /**
    * The COMPLETE one-vs-rest training + prediction replay as CTE stages
    * over a source relation `src` (needs `doc_id`, `text`, and the label
-   * column named by `labelExpr`) — the [[classifierCtes]] doctrine with
-   * a `cls` key threaded through every stage. The class list is derived
+   * column named by `labelExpr`) — the [[classifierCtes]] replay with a
+   * `cls` key threaded through every stage. The class list is derived
    * IN-QUERY (`SELECT DISTINCT`), so DuckDB trains whatever classes the
    * data holds, exactly as the Spark loop does. Returns (ctesString,
    * finalCteName); the final CTE yields (doc_id, cls_actual, cls_pred,
    * score_e6) with the argmax spelled as the identical
-   * row_number-over-doc window.
+   * row_number-over-doc window, plus margin_e6 and share_bp (the
+   * [[calibrateScores]] replay) when `calibrated`.
    */
   def multiClassifierCtes(
       src: String,
@@ -828,72 +873,15 @@ object Classifier {
       bigrams: Boolean = false,
       calibrated: Boolean = false): (String, String) = {
     requireEta(iters, etaNum, etaDen)
-    OracleSql.requireNoCteHead(src, "src")
-    OracleSql.requireNoCteHead(labelExpr, "labelExpr")
-    val bucket = Dsir.featureBucketSql("w", numBuckets)
     val p = prefix
-    val wordsExpr =
-      if (bigrams)
-        "list_concat(toks, list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i + 1]))"
-      else "toks"
-    val header =
-      s"""${p}t AS (
-         |  SELECT doc_id, ($labelExpr) AS cls_actual,
-         |         regexp_split_to_array(trim(text), '\\s+') AS toks FROM $src),
-         |${p}cls AS (SELECT DISTINCT cls_actual AS cls FROM ${p}t),
-         |${p}lab AS (SELECT t.doc_id, c.cls,
-         |               CASE WHEN t.cls_actual = c.cls THEN 1000000 ELSE 0 END AS y_e6
-         |        FROM ${p}t t CROSS JOIN ${p}cls c),
-         |${p}n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM ${p}t),
-         |${p}exw AS (SELECT DISTINCT doc_id, $bucket AS f
-         |        FROM (SELECT doc_id, unnest($wordsExpr) AS w FROM ${p}t)),
-         |${p}ex AS (SELECT doc_id, f FROM ${p}exw
-         |       UNION ALL SELECT doc_id, CAST($BiasFeature AS BIGINT) AS f FROM ${p}t)""".stripMargin
-    val iterations = (1 to iters).map { k =>
-      val resid =
-        if (k == 1)
-          s"""${p}r$k AS (SELECT doc_id, cls,
-             |        GREATEST(-$ClampE6, LEAST($ClampE6, 0 - y_e6)) AS r_e6 FROM ${p}lab)""".stripMargin
-        else
-          s"""${p}y$k AS (SELECT e.doc_id, w.cls, CAST(SUM(w.w_e6) AS BIGINT) AS yhat_e6
-             |       FROM ${p}ex e JOIN ${p}w${k - 1} w USING (f) GROUP BY 1, 2),
-             |${p}r$k AS (SELECT l.doc_id, l.cls,
-             |        GREATEST(-$ClampE6, LEAST($ClampE6, y.yhat_e6 - l.y_e6)) AS r_e6
-             |        FROM ${p}lab l JOIN ${p}y$k y USING (doc_id, cls))""".stripMargin
-      val update =
-        if (k == 1)
-          s"""${p}w$k AS (SELECT cls, f, CAST(0 - ${floorDivSql(s"$etaNum * g_e12", s"${etaDen}000000")} AS BIGINT) AS w_e6
-             |       FROM ${p}g$k)""".stripMargin
-        else
-          s"""${p}w$k AS (SELECT g.cls, g.f,
-             |        CAST(COALESCE(w.w_e6, 0) - ${floorDivSql(s"$etaNum * g.g_e12", s"${etaDen}000000")} AS BIGINT) AS w_e6
-             |        FROM ${p}g$k g LEFT JOIN ${p}w${k - 1} w USING (cls, f))""".stripMargin
-      s"""$resid,
-         |${p}gc$k AS (SELECT doc_id, cls, ${floorDivSql("r_e6 * 1000000", "n_docs")} AS gc_e12
-         |        FROM ${p}r$k CROSS JOIN ${p}n),
-         |${p}g$k AS (SELECT gc.cls, e.f, CAST(SUM(gc.gc_e12) AS BIGINT) AS g_e12
-         |       FROM ${p}ex e JOIN ${p}gc$k gc USING (doc_id) GROUP BY 1, 2),
-         |$update""".stripMargin
-    }.mkString(",\n")
-    val scoreRank =
-      s"""${p}sc AS (SELECT e.doc_id, w.cls, CAST(SUM(w.w_e6) AS BIGINT) AS score_e6
-         |       FROM ${p}ex e JOIN ${p}w$iters w USING (f) GROUP BY 1, 2),
-         |${p}bst AS (SELECT doc_id, cls AS cls_pred, score_e6,
-         |        ROW_NUMBER() OVER (PARTITION BY doc_id
-         |                           ORDER BY score_e6 DESC, cls) AS rn
-         |        FROM ${p}sc)""".stripMargin
-    val footer =
-      if (!calibrated)
-        s"""$scoreRank,
-           |${p}out AS (SELECT t.doc_id, t.cls_actual, b.cls_pred, b.score_e6
-           |       FROM ${p}t t JOIN ${p}bst b USING (doc_id) WHERE b.rn = 1)""".stripMargin
+    val key = SqlKey(keyed = true)
+    val out =
+      if (!calibrated) predictionStage(p)
       else
-        // the calibrateScores replay: per-doc shifted-mass stats, the
-        // top-2 pivot, then margin + share in the identical floor
-        // division ([[floorDivSql]]); all-tied docs take the uniform
+        // per-doc shifted-mass stats, the top-2 pivot, then margin + share
+        // in the identical floor division; all-tied docs take the uniform
         // floor(10000 / n)
-        s"""$scoreRank,
-           |${p}ag AS (SELECT doc_id, MIN(score_e6) AS smin,
+        s"""${p}ag AS (SELECT doc_id, MIN(score_e6) AS smin,
            |        CAST(SUM(score_e6) AS BIGINT) AS ssum,
            |        CAST(COUNT(*) AS BIGINT) AS n
            |        FROM ${p}sc GROUP BY 1),
@@ -911,9 +899,16 @@ object Classifier {
            |        END AS share_bp
            |       FROM ${p}t t JOIN ${p}tp b USING (doc_id)
            |       JOIN ${p}ag a USING (doc_id))""".stripMargin
-    // MATERIALIZED pragma: see OracleSql.materializeCtes
-    (OracleSql.materializeCtes(s"$header,\n$iterations,\n$footer"),
-      s"${p}out")
+    val stages = Seq(
+      featureStages(p, src, labelExpr, "cls_actual", "labelExpr", numBuckets, bigrams),
+      s"""${p}cls AS (SELECT DISTINCT cls_actual AS cls FROM ${p}t),
+         |${p}lab AS (SELECT t.doc_id, c.cls,
+         |               CASE WHEN t.cls_actual = c.cls THEN 1000000 ELSE 0 END AS y_e6
+         |        FROM ${p}t t CROSS JOIN ${p}cls c)""".stripMargin,
+      iterationStages(p, key, iters, etaNum, etaDen),
+      scoreStages(p, key, s"${p}w$iters"),
+      out)
+    (OracleSql.materializeCtes(stages.mkString(",\n")), s"${p}out")
   }
 
   /**
@@ -954,31 +949,12 @@ object Classifier {
       numBuckets: Int = 1 << 12,
       prefix: String = "hs",
       bigrams: Boolean = false): (String, String) = {
-    OracleSql.requireNoCteHead(src, "src")
-    OracleSql.requireNoCteHead(labelExpr, "labelExpr")
-    val bucket = Dsir.featureBucketSql("w", numBuckets)
     val p = prefix
-    val wordsExpr =
-      if (bigrams)
-        "list_concat(toks, list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i + 1]))"
-      else "toks"
-    val block =
-      s"""${p}t AS (
-         |  SELECT doc_id, ($labelExpr) AS cls_actual,
-         |         regexp_split_to_array(trim(text), '\\s+') AS toks FROM $src),
-         |${p}exw AS (SELECT DISTINCT doc_id, $bucket AS f
-         |        FROM (SELECT doc_id, unnest($wordsExpr) AS w FROM ${p}t)),
-         |${p}ex AS (SELECT doc_id, f FROM ${p}exw
-         |       UNION ALL SELECT doc_id, CAST($BiasFeature AS BIGINT) AS f FROM ${p}t),
-         |${p}sc AS (SELECT e.doc_id, w.cls, CAST(SUM(w.w_e6) AS BIGINT) AS score_e6
-         |       FROM ${p}ex e JOIN $weightsCte w USING (f) GROUP BY 1, 2),
-         |${p}bst AS (SELECT doc_id, cls AS cls_pred, score_e6,
-         |        ROW_NUMBER() OVER (PARTITION BY doc_id
-         |                           ORDER BY score_e6 DESC, cls) AS rn
-         |        FROM ${p}sc),
-         |${p}out AS (SELECT t.doc_id, t.cls_actual, b.cls_pred, b.score_e6
-         |       FROM ${p}t t JOIN ${p}bst b USING (doc_id) WHERE b.rn = 1)""".stripMargin
-    (OracleSql.materializeCtes(block), s"${p}out")
+    val stages = Seq(
+      featureStages(p, src, labelExpr, "cls_actual", "labelExpr", numBuckets, bigrams),
+      scoreStages(p, SqlKey(keyed = true), weightsCte),
+      predictionStage(p))
+    (OracleSql.materializeCtes(stages.mkString(",\n")), s"${p}out")
   }
 
   /**
@@ -1019,63 +995,16 @@ object Classifier {
       prefix: String = "c",
       bigrams: Boolean = false): (String, String) = {
     requireEta(iters, etaNum, etaDen)
-    OracleSql.requireNoCteHead(src, "src")
-    OracleSql.requireNoCteHead(targetExpr, "targetExpr")
-    val bucket = Dsir.featureBucketSql("w", numBuckets)
     val p = prefix
-    // the same one-scan feature spelling as docFeatures: bigram strings
-    // concatenate onto the token list before the unnest (DuckDB range()
-    // is stop-exclusive and lists are 1-indexed, so i pairs toks[i] with
-    // toks[i+1] for i in [1, len-1]; < 2 tokens yields the empty range)
-    val wordsExpr =
-      if (bigrams)
-        "list_concat(toks, list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i + 1]))"
-      else "toks"
-    val header =
-      s"""${p}t AS (
-         |  SELECT doc_id, ($targetExpr) AS is_target,
-         |         regexp_split_to_array(trim(text), '\\s+') AS toks FROM $src),
-         |${p}lab AS (SELECT doc_id, is_target,
-         |               CASE WHEN is_target THEN 1000000 ELSE 0 END AS y_e6 FROM ${p}t),
-         |${p}n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM ${p}lab),
-         |${p}exw AS (SELECT DISTINCT doc_id, $bucket AS f
-         |        FROM (SELECT doc_id, unnest($wordsExpr) AS w FROM ${p}t)),
-         |${p}ex AS (SELECT doc_id, f FROM ${p}exw
-         |       UNION ALL SELECT doc_id, CAST($BiasFeature AS BIGINT) AS f FROM ${p}t)""".stripMargin
-    val iterations = (1 to iters).map { k =>
-      val resid =
-        if (k == 1)
-          s"""${p}r$k AS (SELECT doc_id,
-             |        GREATEST(-$ClampE6, LEAST($ClampE6, 0 - y_e6)) AS r_e6 FROM ${p}lab)""".stripMargin
-        else
-          s"""${p}y$k AS (SELECT e.doc_id, CAST(SUM(w.w_e6) AS BIGINT) AS yhat_e6
-             |       FROM ${p}ex e JOIN ${p}w${k - 1} w USING (f) GROUP BY 1),
-             |${p}r$k AS (SELECT l.doc_id,
-             |        GREATEST(-$ClampE6, LEAST($ClampE6, y.yhat_e6 - l.y_e6)) AS r_e6
-             |        FROM ${p}lab l JOIN ${p}y$k y USING (doc_id))""".stripMargin
-      val update =
-        if (k == 1)
-          s"""${p}w$k AS (SELECT f, CAST(0 - ${floorDivSql(s"$etaNum * g_e12", s"${etaDen}000000")} AS BIGINT) AS w_e6
-             |       FROM ${p}g$k)""".stripMargin
-        else
-          s"""${p}w$k AS (SELECT g.f,
-             |        CAST(COALESCE(w.w_e6, 0) - ${floorDivSql(s"$etaNum * g.g_e12", s"${etaDen}000000")} AS BIGINT) AS w_e6
-             |        FROM ${p}g$k g LEFT JOIN ${p}w${k - 1} w USING (f))""".stripMargin
-      s"""$resid,
-         |${p}gc$k AS (SELECT doc_id, ${floorDivSql("r_e6 * 1000000", "n_docs")} AS gc_e12
-         |        FROM ${p}r$k CROSS JOIN ${p}n),
-         |${p}g$k AS (SELECT e.f, CAST(SUM(gc.gc_e12) AS BIGINT) AS g_e12
-         |       FROM ${p}ex e JOIN ${p}gc$k gc USING (doc_id) GROUP BY 1),
-         |$update""".stripMargin
-    }.mkString(",\n")
-    val footer =
-      s"""${p}sc AS (SELECT e.doc_id, CAST(SUM(w.w_e6) AS BIGINT) AS score_e6
-         |       FROM ${p}ex e JOIN ${p}w$iters w USING (f) GROUP BY 1),
-         |${p}out AS (SELECT l.doc_id, l.is_target, sc.score_e6
-         |       FROM ${p}lab l JOIN ${p}sc sc USING (doc_id))""".stripMargin
-    // MATERIALIZED pragma: see OracleSql.materializeCtes (the feature
-    // CTE feeds two stages per iteration, each weight stage the next)
-    (OracleSql.materializeCtes(s"$header,\n$iterations,\n$footer"),
-      s"${p}out")
+    val key = SqlKey(keyed = false)
+    val stages = Seq(
+      featureStages(p, src, targetExpr, "is_target", "targetExpr", numBuckets, bigrams),
+      s"""${p}lab AS (SELECT doc_id, is_target,
+         |               CASE WHEN is_target THEN 1000000 ELSE 0 END AS y_e6 FROM ${p}t)""".stripMargin,
+      iterationStages(p, key, iters, etaNum, etaDen),
+      scoreStages(p, key, s"${p}w$iters"),
+      s"""${p}out AS (SELECT l.doc_id, l.is_target, sc.score_e6
+         |       FROM ${p}lab l JOIN ${p}sc sc USING (doc_id))""".stripMargin)
+    (OracleSql.materializeCtes(stages.mkString(",\n")), s"${p}out")
   }
 }

@@ -11,7 +11,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, max, struct}
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 
 /**
  * The on-disk commit protocol every streaming maintainer shares: the
@@ -467,6 +467,25 @@ private[graft] object CommitStore {
       spark: SparkSession, storePath: String, ids: Seq[Long], leaf: String = ""): DataFrame = {
     val paths = ids.map(dataDir(storePath, _, leaf))
     spark.read.schema(footerSchema(spark, paths)).parquet(paths: _*)
+  }
+
+  /** One multi-root read of partition-style batch roots `<base>/b=<id>`
+    * (non-empty, one shared `<base>`), each written by
+    * `partitionBy(partCol)`: a single scan node under the footer schema
+    * plus the INT `partCol` (the type partition inference gives the
+    * stores' cell ids), so building the read submits no job. The
+    * `basePath` option makes the `b=` roots legal (multi-root partition
+    * discovery rejects them as a conflicting structure otherwise); the `b`
+    * column it then discovers is dropped. */
+  def readPartitionedChain(
+      spark: SparkSession, roots: Seq[String], partCol: String): DataFrame = {
+    val (fs, first) = fsOf(spark, roots.head)
+    val leaves = roots.flatMap { r =>
+      Option(fs.globStatus(new Path(r, s"$partCol=*"))).toSeq.flatten.map(_.getPath.toString)
+    }
+    val schema = footerSchema(spark, leaves).add("b", LongType).add(partCol, IntegerType)
+    spark.read.schema(schema).option("basePath", first.getParent.toString)
+      .parquet(roots: _*).drop("b")
   }
 
   /** [[readChain]] over every committed batch; None before the first

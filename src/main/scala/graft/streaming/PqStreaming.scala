@@ -66,19 +66,15 @@ object PqStreaming {
     CommitStore.commitMarker(fs, root, batchId)
   }
 
-  /** The committed index: union of committed batch directories, schema
-    * (cand_id, codes, cell). Empty-schema DataFrame before the first
-    * commit. Orphan (uncommitted) directories are never read. */
-  def committedIndex(spark: SparkSession, storePath: String): DataFrame =
-    // union, not a multi-root read: the roots are partition-style `b=N`
-    // directories holding cell=* subdirs — multi-root discovery rejects
-    // that as a conflicting structure. rebuildIndex is this store's
-    // chain-length bound (it collapses to one batch tree), so the
-    // O(batches) plan between rebuilds is acceptable
-    committedBatches(spark, storePath)
-      .map(id => spark.read.parquet(CommitStore.dataDir(storePath, id)))
-      .reduceOption(_ unionByName _)
-      .getOrElse(spark.emptyDataFrame)
+  /** The committed index: one read of the committed batch directories,
+    * schema (cand_id, codes, cell). Empty-schema DataFrame before the
+    * first commit. Orphan (uncommitted) directories are never read. */
+  def committedIndex(spark: SparkSession, storePath: String): DataFrame = {
+    val ids = committedBatches(spark, storePath)
+    if (ids.isEmpty) spark.emptyDataFrame
+    else CommitStore.readPartitionedChain(
+      spark, ids.map(id => CommitStore.dataDir(storePath, id)), "cell")
+  }
 
   /**
    * One-call offline rebuild of a committed index store into a FRESH

@@ -426,7 +426,7 @@ object TopnStreaming {
     }
   }
 
-  /** Union of vector snapshots from batches BEFORE `beforeBatch` (the
+  /** The vector snapshots of batches BEFORE `beforeBatch`, in one read (the
     * resident set a batch pairs against): (doc_id, vec, cell) with `cell`
     * the partition column, so a cell filter prunes directories. None when
     * no snapshot exists. */
@@ -434,19 +434,11 @@ object TopnStreaming {
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       beforeBatch: Long): Option[DataFrame] = {
-    val (fs, root) = CommitStore.fsOf(spark, s"$storePath/vectors")
-    if (!fs.exists(root)) return None
-    val dirs = fs.listStatus(root).toSeq.filter(_.isDirectory).flatMap { st =>
-      scala.util.Try(st.getPath.getName.stripPrefix("b=").toLong).toOption
-        .filter(_ < beforeBatch).map(_ => st.getPath.toString)
-    }
-    if (dirs.isEmpty) None
-    // union, not a multi-root read: the roots are partition-style `b=N`
-    // directories, which multi-root partition discovery rejects as a
-    // conflicting structure (CommitStore.readChain's callers read
-    // non-partition-named leaves); the vectors chain is bounded by the
-    // snapshot fold, so the O(batches) plan is acceptable here
-    else Some(dirs.map(spark.read.parquet(_)).reduce(_ unionByName _))
+    val (fs, root) = CommitStore.fsOf(spark, storePath)
+    val ids = CommitStore.committedIds(fs, root, "vectors", "b=").filter(_ < beforeBatch)
+    if (ids.isEmpty) None
+    else Some(CommitStore.readPartitionedChain(
+      spark, ids.map(id => s"$storePath/vectors/b=$id"), "cell"))
   }
 
   /**

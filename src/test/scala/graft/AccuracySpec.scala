@@ -63,11 +63,43 @@ class AccuracySpec extends AnyFunSuite {
     assert(rows === Seq(("0", 15L), ("1", 15L), ("2", 14L)))
   }
 
-  test("topn_delta under eviction: heavy movers surface, freqs inherit the overestimate bound") {
+  /** topn_delta over bounded sketches of two item sequences: each
+    * reported row as (item, freq_a, freq_b, delta) with both sides' true
+    * counts and loss bounds. One partition adds in sequence order. */
+  private def boundedDelta(a: Seq[String], b: Seq[String], n: Int, k: Int,
+      partitions: Int): Seq[(String, Long, Long, Long, Long, Long, Long, Long)] = {
+    def sketch(items: Seq[String], name: String) =
+      spark.sparkContext.parallelize(items, partitions).toDF("t")
+        .agg(TopnFunctions.topn_add_agg_bounds($"t", n).as(name))
+    val rows = sketch(a, "sa").crossJoin(sketch(b, "sb"))
+      .select(explode(TopnFunctions.topn_delta($"sa.entries", $"sb.entries", k)).as("r"),
+        $"sa.loss_bound".as("la"), $"sb.loss_bound".as("lb"))
+      .select($"r.item", $"r.freq_a", $"r.freq_b", $"r.delta", $"la", $"lb")
+      .as[(String, Long, Long, Long, Long, Long)].collect().toSeq
+    val trueA = a.groupBy(identity).view.mapValues(_.size.toLong).toMap
+    val trueB = b.groupBy(identity).view.mapValues(_.size.toLong).toMap
+    rows.map { case (item, fa, fb, d, la, lb) =>
+      (item, fa, fb, d, trueA.getOrElse(item, 0L), la, trueB.getOrElse(item, 0L), lb)
+    }
+  }
+
+  /** The sketch only undercounts: on each side, reported <= true <=
+    * reported + that sketch's loss_bound (absent items report 0). */
+  private def assertUndercount(
+      rows: Seq[(String, Long, Long, Long, Long, Long, Long, Long)]): Unit =
+    rows.foreach { case (item, fa, fb, d, ta, la, tb, lb) =>
+      assert(fa <= ta && ta <= fa + la,
+        s"$item: side a reports $fa of $ta true with loss bound $la")
+      assert(fb <= tb && tb <= fb + lb,
+        s"$item: side b reports $fb of $tb true with loss bound $lb")
+      assert(d === fb - fa)
+    }
+
+  test("topn_delta under eviction: heavy movers surface, freqs only undercount") {
     // two zipf-skewed periods over 20k distinct items at n=500 (heavy
     // eviction): period B doubles the volume of ten designated movers.
-    // SpaceSaving guarantees f_est ∈ [f_true, f_true + err] per sketch,
-    // so each delta is within ±(err_a + err_b) of truth and the LARGE
+    // Each sketch only undercounts, f_est in [f_true - loss, f_true], so
+    // each delta is within ±(loss_a + loss_b) of truth and the LARGE
     // planted movers must still dominate the delta ranking.
     def period(mult: Map[String, Int]): Seq[String] = {
       val head = (0 until 100).flatMap { i =>
@@ -78,15 +110,8 @@ class AccuracySpec extends AnyFunSuite {
       new scala.util.Random(11).shuffle(head ++ tail)
     }
     val movers = (0 until 10).map(i => s"hot$i")
-    val a = spark.sparkContext.parallelize(period(Map.empty), 8).toDF("t")
-      .agg(TopnFunctions.topn_add_agg($"t", 500).as("s")).select($"s".as("sa"))
-    val b = spark.sparkContext
-      .parallelize(period(movers.map(_ -> 2).toMap), 8).toDF("t")
-      .agg(TopnFunctions.topn_add_agg($"t", 500).as("s")).select($"s".as("sb"))
-    val delta = a.crossJoin(b)
-      .select(explode(TopnFunctions.topn_delta($"sa", $"sb", 10)).as("r"))
-      .select($"r.item", $"r.freq_a", $"r.freq_b", $"r.delta")
-      .as[(String, Long, Long, Long)].collect()
+    val delta = boundedDelta(period(Map.empty), period(movers.map(_ -> 2).toMap),
+      n = 500, k = 10, partitions = 8)
     // the LARGEST planted movers' true deltas (2000/(i+1) extra copies)
     // dwarf the eviction error at this budget and must surface; the
     // smallest movers (hot8/hot9, true delta ~200-220) sit near the
@@ -95,20 +120,23 @@ class AccuracySpec extends AnyFunSuite {
     val found = delta.map(_._1).toSet
     val bigMovers = (0 until 5).map(i => s"hot$i").toSet
     assert(bigMovers.subsetOf(found),
-      s"the five largest planted movers must surface; got ${delta.toSeq}")
-    // every reported frequency respects the SpaceSaving overestimate
-    // bound relative to the TRUE counts (never an underestimate)
-    val trueA = period(Map.empty).groupBy(identity).view.mapValues(_.size.toLong).toMap
-    val trueB = period(movers.map(_ -> 2).toMap)
-      .groupBy(identity).view.mapValues(_.size.toLong).toMap
-    delta.foreach { case (item, fa, fb, d) =>
-      assert(fa >= trueA.getOrElse(item, 0L) &&
-        fb >= trueB.getOrElse(item, 0L),
-        s"$item: sketch frequencies must never underestimate")
-      assert(d === fb - fa)
-    }
+      s"the five largest planted movers must surface; got $delta")
+    assertUndercount(delta)
     // and the top mover is the biggest planted one
     assert(delta.head._1 === "hot0",
       s"hot0 moves by ~2000 — it must rank first; got ${delta.head}")
+  }
+
+  test("topn_delta reports an evicted mover below its true count, within its loss bound") {
+    // n = 1 in one partition: the fourth distinct item prunes to two
+    // counters, dropping m's first occurrence; m re-enters and restarts
+    // from its new increments, so side a reports it below its true 6
+    val a = Seq("m", "x", "x", "y", "y", "z") ++ Seq.fill(5)("m")
+    val b = Seq.fill(10)("m")
+    val delta = boundedDelta(a, b, n = 1, k = 1, partitions = 1)
+    val (item, fa, _, _, ta, _, _, _) = delta.head
+    assert(item === "m" && fa < ta,
+      s"the fixture must report an evicted mover below its true count; got $delta")
+    assertUndercount(delta)
   }
 }

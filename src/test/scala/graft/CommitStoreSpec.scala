@@ -184,6 +184,44 @@ class CommitStoreSpec extends AnyFunSuite {
     val (hwm, hwmJobs) = jobsDuring(StreamWatermark.committedHwm(spark, wm))
     assert(hwmJobs === 0)
     assert(hwm === Some(1234L))
+
+    // the two cell-partitioned stores, `b=<id>/cell=<c>` per batch: the
+    // PQ index and the semantic store's vector snapshots, 8 batches each
+    import graft.pipeline.{IVF, Pq, SemDedup}
+    val rnd = new scala.util.Random(23)
+    val base = (0L until 160L).map(i => (i, Seq.fill(16)(rnd.nextGaussian().toFloat)))
+    val vecs = base ++ base.take(8).map { case (i, v) =>
+      (1000L + i, v.map(x => x + (rnd.nextGaussian() * 1e-3).toFloat))
+    }
+    val vecDf = vecs.toDF("vec_id", "embedding")
+    val ivf = IVF.train(vecDf, "vec_id", "embedding", k = 4, sampleSize = 200)
+    val pq = Pq.train(vecDf, "vec_id", "embedding", m = 4, ks = 8, sampleSize = 200)
+    val (pqStore, semStore) = (s"$root/pq", s"$root/sem")
+    for (b <- 0 until 8) {
+      val batch = vecs.filter(_._1 % 8 == b).toDF("vec_id", "embedding")
+      graft.streaming.PqStreaming.appendBatch(batch, b, "vec_id", "embedding", pq, ivf, pqStore)
+      TopnStreaming.semanticBatch(batch, b, semStore, "vec_id", "embedding", ivf,
+        tau = 0.9, scope = "jobs-scope")
+      if (Set(0, 3, 7)(b)) {
+        val (index, indexJobs) =
+          jobsDuring(graft.streaming.PqStreaming.committedIndex(spark, pqStore))
+        assert(indexJobs === 0, s"committedIndex after ${b + 1} batches")
+        // the per-batch inferred reads it replaces
+        val inferred = (0 to b).map(i => spark.read.parquet(CommitStore.dataDir(pqStore, i)))
+          .reduce(_ unionByName _)
+        def rows(df: org.apache.spark.sql.DataFrame) =
+          df.select(to_json(struct(df.columns.map(col): _*))).as[String].collect().sorted.toSeq
+        assert(index.schema === inferred.schema)
+        assert(rows(index) === rows(inferred))
+        val (labels, labelJobs) =
+          jobsDuring(TopnStreaming.committedSemanticLabels(spark, semStore, ivf))
+        assert(labelJobs === 0, s"committedSemanticLabels after ${b + 1} batches")
+        val seen = vecs.filter(_._1 % 8 <= b).toDF("vec_id", "embedding")
+        assert(labels.as[(Long, Int, Long, Boolean)].collect().toSet ===
+          SemDedup.labels(seen, "vec_id", "embedding", ivf, tau = 0.9)
+            .as[(Long, Int, Long, Boolean)].collect().toSet)
+      }
+    }
   }
 
   private def files(root: String): Seq[String] = {

@@ -964,6 +964,32 @@ class ScoringSpec extends AnyFunSuite {
     assert(runMulti(docs, 64, partitions = 1) === runMulti(docs, 64, partitions = 7))
   }
 
+  test("binary training equals the target head of one-vs-rest over a target/rest label") {
+    import graft.pipeline.Classifier
+    // the binary model is one head of one-vs-rest: same targets, clamp,
+    // floor divisions and bucket space; a NULL isTarget trains as 0, i.e.
+    // as "rest"
+    val docs = Seq(
+      (1L, "good clean prose good clean", Some(true)),
+      (2L, "good clean text here", Some(true)),
+      (3L, "spam spam spam buy now", Some(false)),
+      (4L, "good clean prose mostly", None),
+      (5L, "buy spam now now now clean", Some(false)),
+      (6L, "", None),
+      (7L, "clean prose here now", Some(true))).toDF("doc_id", "text", "tgt")
+    val labeled = docs.withColumn("lbl", when($"tgt", "t").otherwise("r"))
+    for (bigrams <- Seq(false, true)) {
+      val binary = Classifier.train(docs, "doc_id", "text", $"tgt",
+        numBuckets = 32, iters = 4, etaNum = 3L, etaDen = 50L, bigrams = bigrams)
+      val head = Classifier.trainMulti(labeled, "doc_id", "text", "lbl",
+        numBuckets = 32, iters = 4, etaNum = 3L, etaDen = 50L, bigrams = bigrams)
+        .filter($"cls" === "t").select($"f", $"w_e6")
+      val got = binary.as[(Long, Long)].collect().sorted.toSeq
+      assert(got.exists(_._2 != 0L), "premise: training moved the weights")
+      assert(got === head.as[(Long, Long)].collect().sorted.toSeq, s"bigrams=$bigrams")
+    }
+  }
+
   test("multi-class argmax ties break by class name ascending") {
     // symmetric corpus: classes c1/c2 see mirror-identical features, so
     // their trained weights coincide and every score ties — the pinned
