@@ -15,8 +15,13 @@ import org.apache.spark.sql.functions._
  * assistant turns carry loss, so a document's mask is a LIST of
  * intervals, one per assistant turn. [[renderConversations]] produces
  * that list together with the rendered text, and
- * [[packMaskedIntervals]] generalizes the fragment tiling to clip every
- * interval into sequence coordinates.
+ * [[packMaskedIntervals]] clips every interval into sequence coordinates.
+ *
+ * Packing here is not a second path: one tiling
+ * ([[Sampling.tileFragments]]) and one window builder
+ * ([[Sampling.buildWindows]]) serve every packed layout, and a prompt
+ * prefix is just the one-interval list [(prompt_len, n - prompt_len)].
+ * This object adds only the interval check and the clip.
  *
  * Everything is exact integer arithmetic over whitespace tokens
  * (`<|role|>` headers are single tokens by construction), so the whole
@@ -24,10 +29,9 @@ import org.apache.spark.sql.functions._
  * ANSI SQL; the `chat_sft_pack` oracle does exactly that.
  *
  * Scale shape: one shuffle by conversation id for the ordered rebuild
- * (per-group state is one conversation — bounded), then
- * [[Sampling.packMaskedSequences]]'s two-pass prefix sum + bounded
- * per-row explode. No corpus-wide window, no driver state; interval
- * lists are bounded by turns-per-conversation.
+ * (per-group state is one conversation — bounded), then the tiling's
+ * two-pass prefix sum + bounded per-row explode. No corpus-wide window,
+ * no driver state; interval lists are bounded by turns-per-conversation.
  */
 object Chat {
 
@@ -103,17 +107,18 @@ object Chat {
   /**
    * [[Sampling.packMaskedSequences]] generalized to per-document interval
    * masks: tile the `totalLenCol` token stream into `seqLen` windows
-   * (same global two-pass prefix sum + bounded fragment explode) and clip
-   * each document's `intervalsCol` (`array<struct<off, len>>`, ascending
-   * non-overlapping, in document coordinates) into each fragment. Per
-   * fragment emits `loss_ivs`: the overlapping intervals re-based to
-   * SEQUENCE coordinates — a training job ORs a sequence's fragment
-   * interval lists into its loss mask; every masked token of every
-   * document lands in exactly one interval.
+   * ([[Sampling.tileFragments]], the tiling behind every packed layout)
+   * and clip each document's `intervalsCol` (`array<struct<off, len>>`,
+   * ascending non-overlapping, in document coordinates) into each
+   * fragment. Per fragment emits (seq_id, frag_start, frag_len, seq_off)
+   * and `loss_ivs`: the overlapping intervals re-based to SEQUENCE
+   * coordinates — a training job ORs a sequence's fragment interval lists
+   * into its loss mask; every masked token of every document lands in
+   * exactly one interval.
    *
    * Malformed interval lists (negative length, out of [0, total_len),
    * overlapping or out of order) raise per-row rather than producing a
-   * silently wrong mask.
+   * silently wrong mask; so does a negative total length.
    */
   def packMaskedIntervals(
       df: DataFrame,
@@ -124,8 +129,7 @@ object Chat {
     packMaskedIntervalsFrom(df, idCol, intervalsCol, totalLenCol, seqLen, 0L)
 
   /** [[packMaskedIntervals]] with the token stream starting at
-    * `startOffset` — the incremental-ingest hook (the
-    * [[Sampling.packMaskedSequencesFrom]] contract): a batch of NEW
+    * `startOffset` — the incremental-ingest hook: a batch of NEW
     * conversations appended to a stream whose committed length is
     * `startOffset` lays out exactly as it would have in one global run,
     * because window coordinates are pure functions of the GLOBAL stream
@@ -137,40 +141,31 @@ object Chat {
       totalLenCol: String,
       seqLen: Long,
       startOffset: Long): DataFrame = {
-    require(seqLen > 0, s"seqLen must be positive, got $seqLen")
     // the doc-coordinate interval column is CONSUMED (replaced by the
     // clipped sequence-coordinate `loss_ivs`), so intervalsCol may itself
     // be named loss_ivs — renderConversations' output feeds in directly
     require(intervalsCol == "loss_ivs" || !df.columns.contains("loss_ivs"),
       "input already has a 'loss_ivs' column; rename it — " +
         "packMaskedIntervals emits the clipped intervals as loss_ivs")
-    require(!df.columns.contains("__graft_p0"),
-      "input already has a '__graft_p0' column; rename it — " +
-        "packMaskedIntervals uses it internally")
-    val w = s"COALESCE(CAST(`$totalLenCol` AS BIGINT), 0L)"
+    // the row check, ahead of the tiling (so it raises in the prefix
+    // sum's first pass): ascending, non-overlapping, non-negative
+    // intervals ending within the total length, which a negative length
+    // fails — the tiling's own length check below never fires first
+    val error =
+      s"""CONCAT('packMaskedIntervals: intervals of ', CAST(`$idCol` AS STRING),
+         |  ' must be ascending, non-overlapping and within [0, total_len)')""".stripMargin
     val checked = df.withColumn(intervalsCol, expr(
       s"""IF(aggregate(`$intervalsCol`,
          |       named_struct('prev', 0L, 'ok', TRUE),
          |       (a, iv) -> named_struct(
          |         'prev', iv.off + iv.len,
          |         'ok', a.ok AND iv.len >= 0 AND iv.off >= a.prev),
-         |       a -> a.ok AND a.prev <= $w),
+         |       a -> a.ok AND a.prev <= ${Sampling.lenSql(totalLenCol)}),
          |   `$intervalsCol`,
-         |   raise_error(CONCAT('packMaskedIntervals: intervals of ',
-         |     CAST(`$idCol` AS STRING),
-         |     ' must be ascending, non-overlapping and within [0, total_len)')))""".stripMargin))
-    Sampling.packMaskedSequencesFrom(
-        checked.withColumn("__graft_p0", lit(0L)),
-        idCol, "__graft_p0", totalLenCol, seqLen, startOffset)
-      .drop("__graft_p0", "loss_off", "loss_len")
-      .withColumn("loss_ivs", expr(
-        s"""transform(
-           |  filter(`$intervalsCol`, iv ->
-           |    iv.off < frag_start + frag_len AND iv.off + iv.len > frag_start),
-           |  iv -> named_struct(
-           |    'loss_off', seq_off + GREATEST(iv.off, frag_start) - frag_start,
-           |    'loss_len', LEAST(iv.off + iv.len, frag_start + frag_len)
-           |                - GREATEST(iv.off, frag_start)))""".stripMargin))
+         |   raise_error($error))""".stripMargin))
+    Sampling.tileFragments(checked, idCol, totalLenCol, seqLen, startOffset,
+        "packMaskedIntervals", Sampling.FragCols)(w => (s"$w < 0", error))
+      .withColumn("loss_ivs", Sampling.clipIntervals(intervalsCol))
       .drop(Seq(intervalsCol).filter(_ != "loss_ivs"): _*)
   }
 
@@ -182,9 +177,10 @@ object Chat {
    * ids of the rendered text), packed into fixed `seqLen` windows of
    * `input_ids` + `doc_starts` + `loss_intervals` (in-window
    * coordinates, stream-ordered, non-overlapping — the loader ORs them
-   * into the loss mask). The schema is IDENTICAL to
-   * [[Sampling.packMaskedTokenIds]]'s, so everything downstream —
-   * shard export, the streaming store, readers — consumes either
+   * into the loss mask). This is [[Sampling.buildWindows]] over
+   * [[packMaskedIntervals]]' fragments, so the schema is IDENTICAL to
+   * [[Sampling.packMaskedTokenIds]]'s and everything downstream — shard
+   * export, the streaming store, readers — consumes either
    * interchangeably. Same scale shape: one prefix sum, bounded explode,
    * one hash agg by window.
    */
@@ -209,49 +205,10 @@ object Chat {
       intervalsCol: String,
       seqLen: Long,
       startOffset: Long): DataFrame = {
-    require(seqLen > 0 && seqLen <= Int.MaxValue,
-      s"seqLen must be in (0, 2^31) (array slices are Int-indexed; " +
-        s"per-DOCUMENT token counts share the same 2^31 bound), got $seqLen")
-    Seq("__graft_ids", "__graft_n", "__graft_sorted").foreach { c =>
-      require(!docs.columns.contains(c),
-        s"input already has a '$c' column; rename it — packTokenIds uses it internally")
-    }
-    val d = docs.select(col(idCol), col(intervalsCol),
-        col(idsCol).cast("array<long>").as("__graft_ids"))
-      .withColumn("__graft_n", size(col("__graft_ids")).cast("long"))
-    packMaskedIntervalsFrom(d, idCol, intervalsCol, "__graft_n", seqLen,
-        startOffset)
-      .select(col(idCol).as("__graft_id"), col("seq_id"),
-        slice(col("__graft_ids"),
-          (col("frag_start") + lit(1)).cast("int"),
-          col("frag_len").cast("int")).as("__graft_frag"),
-        col("frag_start"), col("seq_off"), col("loss_ivs"))
-      .groupBy(col("seq_id"))
-      .agg(
-        array_sort(collect_list(struct(
-          col("__graft_id").as("__i"),
-          col("__graft_frag").as("__ids"),
-          col("frag_start").as("__fs"),
-          col("seq_off").as("__so"),
-          col("loss_ivs").as("__ivs")))).as("__graft_sorted"))
-      .select(col("seq_id"),
-        expr("element_at(__graft_sorted, 1).__so").as("row_base"),
-        expr("CAST(aggregate(__graft_sorted, 0L, (n, s) -> n + size(s.__ids)) AS BIGINT)")
-          .as("n_tokens"),
-        flatten(transform(col("__graft_sorted"), s => s.getField("__ids")))
-          .as("input_ids"),
-        expr("""aggregate(__graft_sorted,
-          |  named_struct('off', element_at(__graft_sorted, 1).__so,
-          |               'starts', CAST(array() AS ARRAY<BIGINT>)),
-          |  (acc, s) -> named_struct(
-          |    'off', acc.off + CAST(size(s.__ids) AS BIGINT),
-          |    'starts', IF(s.__fs = 0L, array_append(acc.starts, acc.off),
-          |                 acc.starts)),
-          |  acc -> acc.starts)""".stripMargin).as("doc_starts"),
-        // fragments sort in stream order and each fragment's clipped
-        // list is ascending, so the flattened list IS the window's
-        // interval order (clipping never emits empty intervals)
-        flatten(transform(col("__graft_sorted"), s => s.getField("__ivs")))
-          .as("loss_intervals"))
+    val d = Sampling.tokenDocs(docs, idCol, col(idsCol).cast("array<long>"),
+      seqLen, "packTokenIds", col(intervalsCol))
+    Sampling.buildWindows(
+      packMaskedIntervalsFrom(d, idCol, intervalsCol, "__graft_n", seqLen, startOffset),
+      idCol, col("loss_ivs"))
   }
 }

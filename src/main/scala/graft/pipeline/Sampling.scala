@@ -377,6 +377,199 @@ object Sampling {
       .drop("__graft_run")
   }
 
+  // ---- sequence packing: one tiling, one window builder -----------------
+  //
+  // Every packed layout below is the same two steps. [[tileFragments]]
+  // cuts the corpus' token stream into fixed windows (one prefix sum, one
+  // bounded per-document fragment explode); [[buildWindows]] turns the
+  // fragments into materialized windows (one hash aggregation by seq_id).
+  // A loss mask is a list of intervals per document: a prompt prefix is
+  // the one-interval case, an unmasked layout the empty list. The public
+  // packers differ only in their per-row check and the intervals they clip.
+
+  /** The fragment columns [[tileFragments]] can append, in output order. */
+  private[graft] val FragCols = Seq("seq_id", "frag_start", "frag_len", "seq_off")
+
+  /** A length column as the tiling reads it: BIGINT, NULL counted as 0
+    * (runningSum's null-weight-as-0 contract). */
+  private[graft] def lenSql(c: String): String = s"COALESCE(CAST(`$c` AS BIGINT), 0L)"
+
+  /**
+   * The one fragment tiling: the rows of `df`, walked in `idCol` order,
+   * are one token stream of `lenCol` tokens each, starting at global
+   * stream token `startOffset`, cut into `seqLen`-token windows. A row
+   * repeats once per window it overlaps, with `seq_id` (the window,
+   * covering stream tokens [seq_id·seqLen, (seq_id+1)·seqLen)),
+   * `frag_start`/`frag_len` (the fragment's document tokens
+   * [frag_start, frag_start + frag_len), 0-based) and `seq_off` (the
+   * fragment's offset inside its window). Of these it appends the ones in
+   * `appends`, the caller's full list of appended columns, which must be
+   * absent from `df`. Zero-length rows emit nothing. `check(len)` gives
+   * the per-row (condition, message) SQL that raises instead; it must
+   * cover a negative length, which would corrupt the stream layout.
+   *
+   * Every coordinate is a function of the GLOBAL stream position, so a
+   * batch appended at `startOffset` lays out exactly as it would in one
+   * run over the whole corpus. Exact integer arithmetic throughout (DIV,
+   * never `/`), replayable by any engine. Scale shape: one two-pass
+   * [[graft.operators.PrefixSum.runningSum]] (an O(#partitions) offset
+   * table, never a single-partition window), then a per-row explode of at
+   * most ceil(len/seqLen)+1 fragments. Requires globally unique ids.
+   */
+  private[graft] def tileFragments(
+      df: DataFrame,
+      idCol: String,
+      lenCol: String,
+      seqLen: Long,
+      startOffset: Long,
+      who: String,
+      appends: Seq[String])(check: String => (String, String)): DataFrame = {
+    require(seqLen > 0, s"seqLen must be positive, got $seqLen")
+    require(startOffset >= 0, s"startOffset must be >= 0, got $startOffset")
+    appends.foreach { c =>
+      require(!df.columns.contains(c),
+        s"input already has a '$c' column; rename it — $who appends it")
+    }
+    require(!df.columns.contains("__graft_run"),
+      s"input already has a '__graft_run' column; rename it — $who uses it internally")
+    val run0 = graft.operators.PrefixSum
+      .runningSum(df, idCol, lenCol, outCol = "__graft_run")
+    val run =
+      if (startOffset == 0L) run0
+      else run0.withColumn("__graft_run", col("__graft_run") + lit(startOffset))
+    val w = lenSql(lenCol)
+    val (bad, error) = check(w)
+    val frags = run.withColumn("__graft_f", explode(expr(
+      s"""CASE
+         |  WHEN $bad THEN raise_error($error)
+         |  WHEN $w = 0 THEN CAST(array() AS ARRAY<STRUCT<seq_id: BIGINT, frag_start: BIGINT, frag_len: BIGINT, seq_off: BIGINT>>)
+         |  ELSE transform(
+         |    sequence((__graft_run - $w) DIV ${seqLen}L,
+         |             (__graft_run - 1L) DIV ${seqLen}L),
+         |    s -> named_struct(
+         |      'seq_id', s,
+         |      'frag_start', GREATEST(0L, s * ${seqLen}L - (__graft_run - $w)),
+         |      'frag_len',
+         |        LEAST($w, (s + 1L) * ${seqLen}L - (__graft_run - $w))
+         |          - GREATEST(0L, s * ${seqLen}L - (__graft_run - $w)),
+         |      'seq_off', GREATEST(0L, (__graft_run - $w) - s * ${seqLen}L)))
+         |END""".stripMargin)))
+    FragCols.filter(appends.contains)
+      .foldLeft(frags)((d, c) => d.withColumn(c, col(s"__graft_f.$c")))
+      .drop("__graft_run", "__graft_f")
+  }
+
+  /** [[packSequences]]' row check: a negative weight. */
+  private def negativeWeight(w: String): (String, String) =
+    (s"$w < 0", s"CONCAT('packSequences: negative weight ', CAST($w AS STRING))")
+
+  /** The SFT row check: 0 <= prompt_len <= total_len. */
+  private def promptCheck(promptLenCol: String)(w: String): (String, String) = {
+    val p = lenSql(promptLenCol)
+    (s"$w < 0 OR $p < 0 OR $p > $w",
+      s"""CONCAT('packMaskedSequences: need 0 <= prompt_len <= total_len, got (',
+         |  CAST($p AS STRING), ', ', CAST($w AS STRING), ')')""".stripMargin)
+  }
+
+  /** Loss intervals `ivsCol` (`array<struct<off, len>>` in document
+    * coordinates) clipped to a [[tileFragments]] row's fragment and
+    * re-based to its window: the overlapping intervals as
+    * `array<struct<loss_off, loss_len>>`, never an empty one. */
+  private[graft] def clipIntervals(ivsCol: String): Column = expr(
+    s"""transform(
+       |  filter(`$ivsCol`, iv ->
+       |    iv.off < frag_start + frag_len AND iv.off + iv.len > frag_start),
+       |  iv -> named_struct(
+       |    'loss_off', seq_off + GREATEST(iv.off, frag_start) - frag_start,
+       |    'loss_len', LEAST(iv.off + iv.len, frag_start + frag_len)
+       |                - GREATEST(iv.off, frag_start)))""".stripMargin)
+
+  /** No loss mask: the builder's intervals for an unmasked layout. */
+  private val NoIntervals =
+    expr("CAST(array() AS ARRAY<STRUCT<loss_off: BIGINT, loss_len: BIGINT>>)")
+
+  /** The window builder's documents: `idCol`, the `keep` columns, the
+    * token array `toks` as `__graft_toks` and its length as `__graft_n`.
+    * A single document's token count must stay below 2^31 (array slices
+    * are Int-indexed); the packed stream is unbounded. */
+  private[graft] def tokenDocs(
+      docs: DataFrame,
+      idCol: String,
+      toks: Column,
+      seqLen: Long,
+      who: String,
+      keep: Column*): DataFrame = {
+    require(seqLen > 0 && seqLen <= Int.MaxValue,
+      s"seqLen must be in (0, 2^31) (array slices are Int-indexed; " +
+        s"per-DOCUMENT token counts share the same 2^31 bound), got $seqLen")
+    Seq("__graft_toks", "__graft_n", "__graft_sorted").foreach { c =>
+      require(!docs.columns.contains(c),
+        s"input already has a '$c' column; rename it — $who uses it internally")
+    }
+    docs.select((col(idCol) +: keep) :+ toks.as("__graft_toks"): _*)
+      .withColumn("__graft_n", size(col("__graft_toks")).cast("long"))
+  }
+
+  /**
+   * The one window builder: [[tileFragments]] rows (all four fragment
+   * columns) of [[tokenDocs]] documents become one row per `seq_id` by ONE
+   * hash aggregation; a group holds only the few documents overlapping
+   * one window, so every rebuilt array is bounded by seqLen. `ivs` is the
+   * fragment's loss intervals in window coordinates ([[clipIntervals]]).
+   * Output: (seq_id, row_base, n_tokens, input_ids, doc_starts,
+   * loss_intervals) — `row_base` is the in-window offset of the row's
+   * first token (0 unless the row continues a window an earlier batch
+   * left partial), `input_ids` the window's tokens in stream order (of the
+   * token array's element type), `doc_starts` the in-window offsets where
+   * a document's token 0 lands, `loss_intervals` the fragments' intervals
+   * in stream order. No global position is needed: a row's fragments tile
+   * contiguously from row_base in id order, so an offset is row_base plus
+   * the exclusive prefix sum of fragment lengths (a bounded `aggregate`
+   * fold over the sorted fragment structs).
+   */
+  private[graft] def buildWindows(frags: DataFrame, idCol: String, ivs: Column): DataFrame =
+    frags
+      .select(col(idCol).as("__graft_id"), col("seq_id"),
+        slice(col("__graft_toks"),
+          (col("frag_start") + lit(1)).cast("int"),
+          col("frag_len").cast("int")).as("__graft_frag"),
+        col("frag_start"), col("seq_off"), ivs.as("__graft_ivs"))
+      .groupBy(col("seq_id"))
+      .agg(
+        // struct sort orders by the leading __i field (ids are unique
+        // within a sequence, so the tail fields never tie-break)
+        array_sort(collect_list(struct(
+          col("__graft_id").as("__i"),
+          col("__graft_frag").as("__ids"),
+          col("frag_start").as("__fs"),
+          col("seq_off").as("__so"),
+          col("__graft_ivs").as("__ivs")))).as("__graft_sorted"))
+      .select(col("seq_id"),
+        expr("element_at(__graft_sorted, 1).__so").as("row_base"),
+        expr("CAST(aggregate(__graft_sorted, 0L, (n, s) -> n + size(s.__ids)) AS BIGINT)")
+          .as("n_tokens"),
+        flatten(transform(col("__graft_sorted"), s => s.getField("__ids")))
+          .as("input_ids"),
+        expr("""aggregate(__graft_sorted,
+          |  named_struct('off', element_at(__graft_sorted, 1).__so,
+          |               'starts', CAST(array() AS ARRAY<BIGINT>)),
+          |  (acc, s) -> named_struct(
+          |    'off', acc.off + CAST(size(s.__ids) AS BIGINT),
+          |    'starts', IF(s.__fs = 0L, array_append(acc.starts, acc.off),
+          |                 acc.starts)),
+          |  acc -> acc.starts)""".stripMargin).as("doc_starts"),
+        // fragments sort in stream order and each fragment's clipped list
+        // is ascending, so the flattened list IS the window's interval order
+        flatten(transform(col("__graft_sorted"), s => s.getField("__ivs")))
+          .as("loss_intervals"))
+
+  /** Unmasked windows of [[tokenDocs]] documents from stream token 0. */
+  private def unmaskedWindows(d: DataFrame, idCol: String, seqLen: Long): DataFrame =
+    buildWindows(
+      tileFragments(d, idCol, "__graft_n", seqLen, 0L, "packSequences", FragCols)(
+        negativeWeight),
+      idCol, NoIntervals)
+
   /**
    * LLM-training sequence packing WITH document splitting — example
    * packing: the corpus, walked in `idCol` order, becomes one token
@@ -391,57 +584,18 @@ object Sampling {
    * tokens [seq_id·seqLen, (seq_id+1)·seqLen) and the fragment covers
    * document tokens [frag_start, frag_start + frag_len) (0-based).
    * Every token of every document lands in exactly ONE fragment;
-   * zero-weight docs emit no rows. Exact integer arithmetic throughout —
-   * the layout is a pure function of (ids, weights, seqLen), replayable
-   * by any engine.
-   *
-   * Scale shape: one [[graft.operators.PrefixSum.runningSum]] (two-pass,
-   * O(#partitions) offset table — never a single-partition window), then
-   * a per-row bounded explode of at most ceil(weight/seqLen)+1 fragment
-   * structs. No corpus-wide window, no driver state. Requires
-   * non-negative weights (a negative weight would corrupt the stream
-   * layout — raises per row) and globally unique ids.
+   * zero-weight docs emit no rows. This is [[tileFragments]] itself: a
+   * pure function of (ids, weights, seqLen), one two-pass prefix sum and
+   * a bounded explode. Requires non-negative weights (a negative weight
+   * raises per row) and globally unique ids.
    */
   def packSequences(
       df: DataFrame,
       idCol: String,
       weightCol: String,
-      seqLen: Long): DataFrame = {
-    require(seqLen > 0, s"seqLen must be positive, got $seqLen")
-    Seq("seq_id", "frag_start", "frag_len").foreach { c =>
-      require(!df.columns.contains(c),
-        s"input already has a '$c' column; rename it — packSequences appends it")
-    }
-    require(!df.columns.contains("__graft_run"),
-      "input already has a '__graft_run' column; rename it — " +
-        "packSequences uses it internally")
-    val run = graft.operators.PrefixSum
-      .runningSum(df, idCol, weightCol, outCol = "__graft_run")
-    // exact long arithmetic via DIV (the packByBudget doctrine); w/start
-    // guarded non-negative so the stream layout cannot silently corrupt
-    val w = s"COALESCE(CAST(`$weightCol` AS BIGINT), 0L)"
-    run
-      .withColumn("__graft_frag", expr(
-        s"""CASE
-           |  WHEN $w < 0 THEN raise_error(CONCAT(
-           |    'packSequences: negative weight ', CAST($w AS STRING)))
-           |  WHEN $w = 0 THEN CAST(array() AS ARRAY<STRUCT<seq_id: BIGINT, frag_start: BIGINT, frag_len: BIGINT>>)
-           |  ELSE transform(
-           |    sequence((__graft_run - $w) DIV ${seqLen}L,
-           |             (__graft_run - 1L) DIV ${seqLen}L),
-           |    s -> named_struct(
-           |      'seq_id', s,
-           |      'frag_start', GREATEST(0L, s * ${seqLen}L - (__graft_run - $w)),
-           |      'frag_len',
-           |        LEAST($w, (s + 1L) * ${seqLen}L - (__graft_run - $w))
-           |          - GREATEST(0L, s * ${seqLen}L - (__graft_run - $w))))
-           |END""".stripMargin))
-      .withColumn("__graft_f", explode(col("__graft_frag")))
-      .withColumn("seq_id", col("__graft_f.seq_id"))
-      .withColumn("frag_start", col("__graft_f.frag_start"))
-      .withColumn("frag_len", col("__graft_f.frag_len"))
-      .drop("__graft_run", "__graft_frag", "__graft_f")
-  }
+      seqLen: Long): DataFrame =
+    tileFragments(df, idCol, weightCol, seqLen, 0L, "packSequences",
+      Seq("seq_id", "frag_start", "frag_len"))(negativeWeight)
 
   /**
    * [[packSequences]] for SFT / instruction-tuning corpora: each document
@@ -463,80 +617,25 @@ object Sampling {
    * lands in exactly one interval, prompt tokens in none. Exact integer
    * arithmetic throughout (DuckDB-replayable); per-row raise on negative
    * lengths or `prompt_len > total_len`. Same scale shape as
-   * [[packSequences]]: one two-pass prefix sum + a bounded per-row
-   * fragment explode — no corpus-wide window, no driver state.
+   * [[packSequences]].
    */
   def packMaskedSequences(
       df: DataFrame,
       idCol: String,
       promptLenCol: String,
       totalLenCol: String,
-      seqLen: Long): DataFrame =
-    packMaskedSequencesFrom(df, idCol, promptLenCol, totalLenCol, seqLen, 0L)
-
-  /** [[packMaskedSequences]] with the token stream starting at
-    * `startOffset` instead of 0 — the incremental-ingest hook: a batch of
-    * NEW documents appended to a stream whose committed length is
-    * `startOffset` lays out exactly as it would have in one global run
-    * (seq ids and in-sequence offsets are functions of the GLOBAL stream
-    * position). [[graft.streaming.ShardStreaming]] drives it per
-    * micro-batch. */
-  private[graft] def packMaskedSequencesFrom(
-      df: DataFrame,
-      idCol: String,
-      promptLenCol: String,
-      totalLenCol: String,
-      seqLen: Long,
-      startOffset: Long): DataFrame = {
-    require(seqLen > 0, s"seqLen must be positive, got $seqLen")
-    require(startOffset >= 0, s"startOffset must be >= 0, got $startOffset")
-    Seq("seq_id", "frag_start", "frag_len", "seq_off", "loss_off", "loss_len")
-      .foreach { c =>
-        require(!df.columns.contains(c),
-          s"input already has a '$c' column; rename it — packMaskedSequences appends it")
-      }
-    require(!df.columns.contains("__graft_run"),
-      "input already has a '__graft_run' column; rename it — " +
-        "packMaskedSequences uses it internally")
-    val run0 = graft.operators.PrefixSum
-      .runningSum(df, idCol, totalLenCol, outCol = "__graft_run")
-    val run =
-      if (startOffset == 0L) run0
-      else run0.withColumn("__graft_run", col("__graft_run") + lit(startOffset))
-    val w = s"COALESCE(CAST(`$totalLenCol` AS BIGINT), 0L)"
-    val p = s"COALESCE(CAST(`$promptLenCol` AS BIGINT), 0L)"
-    run
-      .withColumn("__graft_frag", expr(
-        s"""CASE
-           |  WHEN $w < 0 OR $p < 0 OR $p > $w THEN raise_error(CONCAT(
-           |    'packMaskedSequences: need 0 <= prompt_len <= total_len, got (',
-           |    CAST($p AS STRING), ', ', CAST($w AS STRING), ')'))
-           |  WHEN $w = 0 THEN CAST(array() AS ARRAY<STRUCT<seq_id: BIGINT, frag_start: BIGINT, frag_len: BIGINT, seq_off: BIGINT>>)
-           |  ELSE transform(
-           |    sequence((__graft_run - $w) DIV ${seqLen}L,
-           |             (__graft_run - 1L) DIV ${seqLen}L),
-           |    s -> named_struct(
-           |      'seq_id', s,
-           |      'frag_start', GREATEST(0L, s * ${seqLen}L - (__graft_run - $w)),
-           |      'frag_len',
-           |        LEAST($w, (s + 1L) * ${seqLen}L - (__graft_run - $w))
-           |          - GREATEST(0L, s * ${seqLen}L - (__graft_run - $w)),
-           |      'seq_off', GREATEST(0L, (__graft_run - $w) - s * ${seqLen}L)))
-           |END""".stripMargin))
-      .withColumn("__graft_f", explode(col("__graft_frag")))
-      .withColumn("seq_id", col("__graft_f.seq_id"))
-      .withColumn("frag_start", col("__graft_f.frag_start"))
-      .withColumn("frag_len", col("__graft_f.frag_len"))
-      .withColumn("seq_off", col("__graft_f.seq_off"))
+      seqLen: Long): DataFrame = {
+    val p = lenSql(promptLenCol)
+    tileFragments(df, idCol, totalLenCol, seqLen, 0L, "packMaskedSequences",
+        FragCols ++ Seq("loss_off", "loss_len"))(promptCheck(promptLenCol))
       // loss interval: overlap of the fragment with the response span
       // [prompt_len, total_len), re-based to sequence coordinates — pure
-      // projections over the exploded layout, so the mask arithmetic is
+      // projections over the tiled layout, so the mask arithmetic is
       // independently readable (and replayable) from the fragment fields
       .withColumn("loss_len",
         expr(s"GREATEST(0L, frag_start + frag_len - GREATEST(frag_start, $p))"))
       .withColumn("loss_off",
         expr(s"seq_off + LEAST(frag_len, GREATEST(0L, $p - frag_start))"))
-      .drop("__graft_run", "__graft_frag", "__graft_f")
   }
 
   /**
@@ -545,44 +644,23 @@ object Sampling {
    * assembled in stream order from the fragments of every document it
    * overlaps (the final sequence may be partial). Output: (seq_id,
    * n_tokens, seq_text). The tokenization is [[TextAnalysis.tokens]];
-   * fragments slice the token array by the exact layout offsets, and the
-   * per-sequence reassembly is the position-ordered rebuild idiom keyed
-   * by `idCol` (stream order within a sequence IS document order).
-   *
-   * Scale shape: [[packSequences]]' prefix sum + bounded explode, one
-   * hash aggregation by seq_id; each group holds at most the few
-   * documents overlapping one context window, and the rebuilt text is
-   * bounded by seqLen tokens.
+   * the windows are [[buildWindows]]' over string tokens, joined with
+   * single spaces. Same scale shape and per-document bound as
+   * [[packTokenIds]].
    */
   def assembleSequences(
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      seqLen: Long): DataFrame = {
-    require(seqLen <= Int.MaxValue,
-      s"seqLen must fit an array slice (<= 2^31-1), got $seqLen")
-    require(!docs.columns.contains("__graft_toks"),
-      "input already has a '__graft_toks' column; rename it — " +
-        "assembleSequences uses it internally")
-    val toked = docs.select(col(idCol),
-      graft.pipeline.TextAnalysis.tokens(col(textCol)).as("__graft_toks"))
-      .withColumn("__graft_n", size(col("__graft_toks")).cast("long"))
-    packSequences(toked, idCol, "__graft_n", seqLen)
-      .select(col(idCol).as("__graft_id"), col("seq_id"),
-        array_join(slice(col("__graft_toks"),
-          (col("frag_start") + lit(1)).cast("int"),
-          col("frag_len").cast("int")), " ").as("__graft_piece"),
-        col("frag_len"))
-      .groupBy(col("seq_id"))
-      .agg(
-        sum(col("frag_len")).as("n_tokens"),
-        array_join(
-          transform(
-            array_sort(collect_list(struct(
-              col("__graft_id").as("__i"), col("__graft_piece").as("__p")))),
-            s => s.getField("__p")),
-          " ").as("seq_text"))
-  }
+      seqLen: Long): DataFrame =
+    unmaskedWindows(
+      tokenDocs(docs, idCol, graft.pipeline.TextAnalysis.tokens(col(textCol)),
+        seqLen, "assembleSequences"),
+      idCol, seqLen)
+      // every window holds tokens, so the COALESCE changes no value; it
+      // keeps seq_text typed non-null
+      .select(col("seq_id"), col("n_tokens"),
+        coalesce(array_join(col("input_ids"), " "), lit("")).as("seq_text"))
 
   /**
    * Packed TOKEN-ID training sequences — the GPT-pretraining deliverable:
@@ -608,58 +686,21 @@ object Sampling {
    * slices are Int-indexed — Spark arrays themselves cap at ~2^31
    * elements); a longer document fails the slice's ANSI Int cast at
    * runtime. The packed STREAM is unbounded — only per-document length
-   * is capped. [[assembleSequences]] shares the same per-document bound.
+   * is capped.
    *
-   * Scale shape: [[packSequences]]' two-pass prefix sum + bounded
-   * fragment explode, a per-fragment array slice, then ONE hash
-   * aggregation by seq_id; each group holds only the few documents
-   * overlapping one context window, so the rebuilt arrays are bounded by
-   * seqLen. The in-window offsets need no global position: windows are
-   * tiled contiguously from 0 by construction, so offset = the exclusive
-   * in-group prefix sum of fragment lengths in id order (computed by a
-   * bounded `aggregate` fold over the sorted fragment structs).
+   * Scale shape: [[tileFragments]]' two-pass prefix sum + bounded
+   * fragment explode, a per-fragment array slice, then [[buildWindows]]'
+   * ONE hash aggregation by seq_id.
    */
   def packTokenIds(
       docs: DataFrame,
       idCol: String,
       idsCol: String,
-      seqLen: Long): DataFrame = {
-    require(seqLen > 0 && seqLen <= Int.MaxValue,
-      s"seqLen must be in (0, 2^31) (array slices are Int-indexed; " +
-        s"per-DOCUMENT token counts share the same 2^31 bound), got $seqLen")
-    Seq("__graft_ids", "__graft_n", "__graft_sorted").foreach { c =>
-      require(!docs.columns.contains(c),
-        s"input already has a '$c' column; rename it — packTokenIds uses it internally")
-    }
-    val d = docs.select(col(idCol), col(idsCol).cast("array<long>").as("__graft_ids"))
-      .withColumn("__graft_n", size(col("__graft_ids")).cast("long"))
-    packSequences(d, idCol, "__graft_n", seqLen)
-      .select(col(idCol).as("__graft_id"), col("seq_id"),
-        slice(col("__graft_ids"),
-          (col("frag_start") + lit(1)).cast("int"),
-          col("frag_len").cast("int")).as("__graft_frag"),
-        col("frag_start"))
-      .groupBy(col("seq_id"))
-      .agg(
-        // struct sort orders by the leading __i field (ids are unique
-        // within a sequence, so the tail fields never tie-break)
-        array_sort(collect_list(struct(
-          col("__graft_id").as("__i"),
-          col("__graft_frag").as("__ids"),
-          col("frag_start").as("__fs")))).as("__graft_sorted"))
-      .select(col("seq_id"),
-        expr("CAST(aggregate(__graft_sorted, 0L, (n, s) -> n + size(s.__ids)) AS BIGINT)")
-          .as("n_tokens"),
-        flatten(transform(col("__graft_sorted"), s => s.getField("__ids")))
-          .as("input_ids"),
-        expr("""aggregate(__graft_sorted,
-          |  named_struct('off', 0L, 'starts', CAST(array() AS ARRAY<BIGINT>)),
-          |  (acc, s) -> named_struct(
-          |    'off', acc.off + CAST(size(s.__ids) AS BIGINT),
-          |    'starts', IF(s.__fs = 0L, array_append(acc.starts, acc.off),
-          |                 acc.starts)),
-          |  acc -> acc.starts)""".stripMargin).as("doc_starts"))
-  }
+      seqLen: Long): DataFrame =
+    unmaskedWindows(
+      tokenDocs(docs, idCol, col(idsCol).cast("array<long>"), seqLen, "packTokenIds"),
+      idCol, seqLen)
+      .select(col("seq_id"), col("n_tokens"), col("input_ids"), col("doc_starts"))
 
   /**
    * [[packTokenIds]] for SFT corpora — the materialized deliverable of
@@ -670,8 +711,10 @@ object Sampling {
    * in in-window coordinates, stream-ordered and non-overlapping — the
    * loader ORs them into the loss mask. Every response id of every
    * document is covered by exactly one interval across all windows,
-   * prompt ids by none. Same per-document 2^31 bound and scale shape as
-   * [[packTokenIds]] (one prefix sum, bounded explode, one hash agg).
+   * prompt ids by none. The response span is the one loss interval
+   * [prompt_len, total_len), so this is [[Chat.packTokenIds]] over
+   * single-prefix intervals, row for row. Same per-document 2^31 bound
+   * and scale shape as [[packTokenIds]].
    */
   def packMaskedTokenIds(
       docs: DataFrame,
@@ -702,54 +745,18 @@ object Sampling {
       promptLenCol: String,
       seqLen: Long,
       startOffset: Long): DataFrame = {
-    require(seqLen > 0 && seqLen <= Int.MaxValue,
-      s"seqLen must be in (0, 2^31) (array slices are Int-indexed; " +
-        s"per-DOCUMENT token counts share the same 2^31 bound), got $seqLen")
-    Seq("__graft_ids", "__graft_n", "__graft_sorted").foreach { c =>
-      require(!docs.columns.contains(c),
-        s"input already has a '$c' column; rename it — packMaskedTokenIds uses it internally")
-    }
-    val d = docs.select(col(idCol), col(promptLenCol),
-        col(idsCol).cast("array<long>").as("__graft_ids"))
-      .withColumn("__graft_n", size(col("__graft_ids")).cast("long"))
-    packMaskedSequencesFrom(d, idCol, promptLenCol, "__graft_n", seqLen,
-        startOffset)
-      .select(col(idCol).as("__graft_id"), col("seq_id"),
-        slice(col("__graft_ids"),
-          (col("frag_start") + lit(1)).cast("int"),
-          col("frag_len").cast("int")).as("__graft_frag"),
-        col("frag_start"), col("seq_off"), col("loss_off"), col("loss_len"))
-      .groupBy(col("seq_id"))
-      .agg(
-        array_sort(collect_list(struct(
-          col("__graft_id").as("__i"),
-          col("__graft_frag").as("__ids"),
-          col("frag_start").as("__fs"),
-          col("seq_off").as("__so"),
-          col("loss_off").as("__lo"),
-          col("loss_len").as("__ll")))).as("__graft_sorted"))
-      .select(col("seq_id"),
-        // the row's tokens tile contiguously from the FIRST fragment's
-        // in-window offset — 0 for a window this batch opened, the
-        // continuation point for a window a previous batch left partial
-        expr("element_at(__graft_sorted, 1).__so").as("row_base"),
-        expr("CAST(aggregate(__graft_sorted, 0L, (n, s) -> n + size(s.__ids)) AS BIGINT)")
-          .as("n_tokens"),
-        flatten(transform(col("__graft_sorted"), s => s.getField("__ids")))
-          .as("input_ids"),
-        expr("""aggregate(__graft_sorted,
-          |  named_struct('off', element_at(__graft_sorted, 1).__so,
-          |               'starts', CAST(array() AS ARRAY<BIGINT>)),
-          |  (acc, s) -> named_struct(
-          |    'off', acc.off + CAST(size(s.__ids) AS BIGINT),
-          |    'starts', IF(s.__fs = 0L, array_append(acc.starts, acc.off),
-          |                 acc.starts)),
-          |  acc -> acc.starts)""".stripMargin).as("doc_starts"),
-        // stream order == ascending loss_off (windows tile contiguously),
-        // so the sorted struct list IS the interval order
-        expr("""filter(transform(__graft_sorted,
-          |  s -> named_struct('loss_off', s.__lo, 'loss_len', s.__ll)),
-          |  x -> x.loss_len > 0L)""".stripMargin).as("loss_intervals"))
+    val p = lenSql(promptLenCol)
+    val d = tokenDocs(docs, idCol, col(idsCol).cast("array<long>"), seqLen,
+        "packMaskedTokenIds", col(promptLenCol))
+      // the response span [prompt_len, n) as the one loss interval, kept
+      // when non-empty
+      .withColumn("__graft_resp", expr(
+        s"""filter(array(named_struct('off', $p, 'len', ${lenSql("__graft_n")} - $p)),
+           |  iv -> iv.len > 0L)""".stripMargin))
+    buildWindows(
+      tileFragments(d, idCol, "__graft_n", seqLen, startOffset,
+        "packMaskedTokenIds", FragCols)(promptCheck(promptLenCol)),
+      idCol, clipIntervals("__graft_resp"))
   }
 
   /**
@@ -777,18 +784,9 @@ object Sampling {
       idCol: String,
       weightCol: String,
       path: String,
-      tokensPerShard: Long): DataFrame = {
-    val binned = packByBudget(df, idCol, weightCol, tokensPerShard)
-    binned
-      .repartition(col("bin"))
-      .sortWithinPartitions(col("bin"), col(idCol))
-      .write.mode("overwrite").partitionBy("bin").parquet(path)
-    df.sparkSession.read.parquet(path)
-      .groupBy(col("bin").cast("long").as("bin"))
-      .agg(count(lit(1)).as("docs"),
-        sum(coalesce(col(weightCol).cast("long"), lit(0L))).as("weight"))
-      .orderBy(col("bin"))
-  }
+      tokensPerShard: Long): DataFrame =
+    writeShards(packByBudget(df, idCol, weightCol, tokensPerShard),
+      idCol, weightCol, path, Seq("bin"))
 
   /**
    * [[exportShards]] for a SPLIT corpus — the sink end of a chain that
@@ -813,7 +811,6 @@ object Sampling {
       path: String,
       tokensPerShard: Long): DataFrame = {
     require(df.columns.contains(splitCol), s"missing column '$splitCol'")
-    val spark = df.sparkSession
     val rawSplits = df.select(col(splitCol).cast("string")).distinct()
       .collect().map(r => Option(r.getString(0)))
     // a NULL split name must fail, not silently export into no shard: the
@@ -832,15 +829,29 @@ object Sampling {
       packByBudget(df.filter(col(splitCol) === sName),
         idCol, weightCol, tokensPerShard)
     }.reduce(_ unionByName _)
+    writeShards(binned, idCol, weightCol, path, Seq(splitCol, "bin"))
+  }
+
+  /** Both exports' write: one shuffle on the shard key `keys` (`bin`
+    * last), so each shard is written by one task as one file set, rows in
+    * (keys, id) order under `path/<key>=<v>/...`; then the manifest
+    * (keys, docs, weight) aggregated from the files just written — the
+    * leading keys read back as strings, `bin` as long. */
+  private def writeShards(
+      binned: DataFrame,
+      idCol: String,
+      weightCol: String,
+      path: String,
+      keys: Seq[String]): DataFrame = {
     binned
-      .repartition(col(splitCol), col("bin"))
-      .sortWithinPartitions(col(splitCol), col("bin"), col(idCol))
-      .write.mode("overwrite").partitionBy(splitCol, "bin").parquet(path)
-    spark.read.parquet(path)
-      .groupBy(col(splitCol).cast("string").as(splitCol),
-        col("bin").cast("long").as("bin"))
+      .repartition(keys.map(col): _*)
+      .sortWithinPartitions((keys :+ idCol).map(col): _*)
+      .write.mode("overwrite").partitionBy(keys: _*).parquet(path)
+    binned.sparkSession.read.parquet(path)
+      .groupBy(keys.init.map(k => col(k).cast("string").as(k)) :+
+        col("bin").cast("long").as("bin"): _*)
       .agg(count(lit(1)).as("docs"),
         sum(coalesce(col(weightCol).cast("long"), lit(0L))).as("weight"))
-      .orderBy(col(splitCol), col("bin"))
+      .orderBy(keys.map(col): _*)
   }
 }

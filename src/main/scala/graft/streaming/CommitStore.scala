@@ -34,8 +34,9 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
  *  - One keyed store: the rollup and label stores' manifests map keys to
  *    data directories ([[readKeys]], [[Batch.commitKeys]],
  *    [[committedKeyed]]).
- *  - One layout spelling: [[dataDir]]; chain reads take the store path,
- *    the batch ids and the leaf ([[readChain]], [[committedChain]]).
+ *  - One layout spelling: [[dataDir]] (and [[vectorsDir]], the semantic
+ *    store's vector snapshots); chain reads take the store path, the batch
+ *    ids and the leaf ([[readChain]], [[committedChain]]).
  *
  * Layout:
  * {{{
@@ -84,6 +85,7 @@ private[graft] object CommitStore {
 
   private val ManifestDir = "_manifests"
   private val MarkerDir = "_committed"
+  private val VectorsDir = "vectors"
 
   def fsOf(spark: SparkSession, path: String): (FileSystem, Path) = {
     val p = new Path(path)
@@ -94,6 +96,16 @@ private[graft] object CommitStore {
     * `storePath/data/b=<id>[/leaf]`. */
   def dataDir(storePath: String, id: Long, leaf: String = ""): String =
     if (leaf.isEmpty) s"$storePath/data/b=$id" else s"$storePath/data/b=$id/$leaf"
+
+  /** The semantic store's vector snapshot of batch `id`:
+    * `storePath/vectors/b=<id>`, written beside its `labels/` store. */
+  def vectorsDir(storePath: String, id: Long): String = s"$storePath/$VectorsDir/b=$id"
+
+  /** Batch ids with a [[vectorsDir]] snapshot under `storePath`, ascending. */
+  def vectorIds(spark: SparkSession, storePath: String): Seq[Long] = {
+    val (fs, root) = fsOf(spark, storePath)
+    committedIds(fs, root, VectorsDir, "b=")
+  }
 
   /** The store's checkpoint identity: a digest of the checkpoint location,
     * or a fresh id per call without one. */

@@ -383,7 +383,7 @@ object TopnStreaming {
       val norm = batch.select(col(idCol).as("doc_id"), col(vecCol).as("vec"))
       norm.withColumn("cell", cellOf(col("vec")))
         .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$storePath/vectors/b=$batchId")
+        .parquet(CommitStore.vectorsDir(storePath, batchId))
 
       // 2. new edges: pairs within the batch plus batch×resident pairs in
       // shared cells. The touched-cell list is at most the model's k cells
@@ -434,11 +434,10 @@ object TopnStreaming {
       spark: org.apache.spark.sql.SparkSession,
       storePath: String,
       beforeBatch: Long): Option[DataFrame] = {
-    val (fs, root) = CommitStore.fsOf(spark, storePath)
-    val ids = CommitStore.committedIds(fs, root, "vectors", "b=").filter(_ < beforeBatch)
+    val ids = CommitStore.vectorIds(spark, storePath).filter(_ < beforeBatch)
     if (ids.isEmpty) None
     else Some(CommitStore.readPartitionedChain(
-      spark, ids.map(id => s"$storePath/vectors/b=$id"), "cell"))
+      spark, ids.map(CommitStore.vectorsDir(storePath, _)), "cell"))
   }
 
   /**

@@ -207,6 +207,72 @@ class ChatSpec extends AnyFunSuite {
       "a prompt prefix is the one-interval special case — identical output")
   }
 
+  test("one tiling, one window builder: the packers agree across seqLen and offsets") {
+    val r = new Random(59)
+    // (id, ids, prompt_len): zero-length docs, prompt 0 and prompt = n
+    val docs = (0L until 40L).map { i =>
+      val n = r.nextInt(4) match { case 0 => 0; case _ => 1 + r.nextInt(12) }
+      val p = r.nextInt(3) match {
+        case 0 => 0L
+        case 1 => n.toLong
+        case _ => r.nextLong(n + 1L)
+      }
+      (i, Seq.fill(n)(r.nextLong(1000L)), p)
+    }
+    def prefixIvs(ds: Seq[(Long, Seq[Long], Long)]) =
+      ds.map { case (i, ids, p) =>
+        (i, ids, Seq((p, ids.size - p)).filter(_._2 > 0).map { case (o, l) => IvRow(o, l) })
+      }.toDF("doc_id", "ids", "ivs")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"seq_id", $"row_base", $"n_tokens", $"input_ids", $"doc_starts",
+          to_json($"loss_intervals").as("li"))
+        .orderBy($"seq_id")
+        .as[(Long, Long, Long, Seq[Long], Seq[Long], String)].collect().toSeq
+    // two batches: the second starts mid-window, so its first row
+    // continues a window the first left partial
+    val (b1, b2) = docs.partition(_._1 < 20L)
+    val committed = b1.map(_._2.size.toLong).sum
+    for (seqLen <- Seq(1L, 3L, 5L, 7L, 9L)) {
+      // (a) a prompt prefix is the one-interval list, row_base included
+      for ((batch, off) <- Seq((b1, 0L), (b2, committed), (b2, committed + 4L))) {
+        val a = rows(Sampling.packMaskedTokenIdsFrom(
+          batch.toDF("doc_id", "ids", "prompt_len"), "doc_id", "ids", "prompt_len",
+          seqLen, off))
+        assert(a == rows(Chat.packTokenIdsFrom(prefixIvs(batch), "doc_id", "ids", "ivs",
+          seqLen, off)), s"seqLen $seqLen offset $off")
+        if (off % seqLen != 0) assert(a.head._2 == off % seqLen, "row_base carried")
+      }
+      // (b) packSequences' fragments are packMaskedSequences' fragment columns
+      val lens = docs.map { case (i, ids, p) => (i, p, ids.size.toLong) }
+        .toDF("doc_id", "prompt_len", "n")
+      def frags(df: org.apache.spark.sql.DataFrame) =
+        df.select($"doc_id", $"seq_id", $"frag_start", $"frag_len")
+          .orderBy($"doc_id", $"seq_id").as[(Long, Long, Long, Long)].collect().toSeq
+      assert(frags(Sampling.packSequences(lens, "doc_id", "n", seqLen)) ==
+        frags(Sampling.packMaskedSequences(lens, "doc_id", "prompt_len", "n", seqLen)))
+      // (c) no mask is prompt_len 0
+      val noPrompt = docs.map { case (i, ids, _) => (i, ids, 0L) }
+        .toDF("doc_id", "ids", "prompt_len")
+      def windows(df: org.apache.spark.sql.DataFrame) =
+        df.select($"seq_id", $"n_tokens", $"input_ids", $"doc_starts").orderBy($"seq_id")
+          .as[(Long, Long, Seq[Long], Seq[Long])].collect().toSeq
+      assert(windows(Sampling.packTokenIds(noPrompt, "doc_id", "ids", seqLen)) ==
+        windows(Sampling.packMaskedTokenIds(noPrompt, "doc_id", "ids", "prompt_len", seqLen)))
+      // (d) the text windows are the stream's tokens at [s·L, (s+1)·L)
+      val texts = docs.map { case (i, ids, _) => (i, ids.map(t => s"w$t").mkString(" ")) }
+      val tokens = texts.flatMap(_._2.trim.split("\\s+").toSeq)
+      val want = tokens.grouped(seqLen.toInt).zipWithIndex
+        .map { case (ts, s) => (s.toLong, ts.mkString(" ")) }.toSeq
+      assert(Sampling.assembleSequences(texts.toDF("doc_id", "text"), "doc_id", "text", seqLen)
+        .select($"seq_id", $"seq_text").orderBy($"seq_id")
+        .as[(Long, String)].collect().toSeq == want)
+    }
+    val e = intercept[Exception](Sampling.packMaskedTokenIds(
+      Seq((1L, Seq(1L, 2L), 3L)).toDF("doc_id", "ids", "prompt_len"),
+      "doc_id", "ids", "prompt_len", 4L).collect())
+    assert(e.getMessage.contains("prompt_len <= total_len"))
+  }
+
   test("seqLen must be positive") {
     val df = Seq((1L, 3L)).toDF("id", "n")
       .withColumn("ivs", expr("CAST(array() AS ARRAY<STRUCT<off: BIGINT, len: BIGINT>>)"))
